@@ -626,7 +626,7 @@ object SparkEntry {
         .toDF("statistic", "n1", "n2")
     }),
 
-    // drift: sketch-based KS (t-digest) — the unbounded-scale path; its
+    // drift: sketch-based KS (KLL) — the unbounded-scale path; its
     // statistic is approximate, so the exact form above is its oracle-side
     // twin rather than a DuckDB query
     "v_drift_ks_sketch" -> ((s, dir) => {
@@ -638,10 +638,11 @@ object SparkEntry {
         .toDF("group1", "group2", "statistic", "p_value", "n1", "n2")
     }),
 
-    // ORACLED accuracy pin for the sketch path: the t-digest KS statistic
-    // must sit within a fixed tolerance of the exact distributed KS on the
-    // same split — converts the approximate twin's "no oracle" into a
-    // closed-form single-row assertion (both legs deterministic).
+    // ORACLED accuracy pin for the sketch path: the KLL KS statistic must
+    // sit within a fixed tolerance of the exact distributed KS on the same
+    // split — converts the approximate twin's "no oracle" into a
+    // closed-form single-row assertion. KLL is randomised, but its stated
+    // bound |D̂ − D| ≤ 2ε ≈ 0.014 (k = 400, see Drift) is inside the 0.02.
     "v_drift_ks_sketch_err" -> ((s, dir) => {
       import s.implicits._
       val orders = t(s, dir, "orders")
@@ -1014,7 +1015,7 @@ object SparkEntry {
     "d_simhash_near_precision" ->
       "SELECT CAST(0 AS BIGINT) AS n_below_floor, CAST(1 AS BIGINT) AS has_pairs",
 
-    // sketch-KS accuracy pin: t-digest statistic within tolerance of exact
+    // sketch-KS accuracy pin: KLL statistic within tolerance of exact (2ε ≈ 0.014 < 0.02)
     "v_drift_ks_sketch_err" ->
       "SELECT CAST(1 AS BIGINT) AS within_tol, CAST(1 AS BIGINT) AS has_rows",
     // gamma p-value vs the independent Wilson-Hilferty approximation on the

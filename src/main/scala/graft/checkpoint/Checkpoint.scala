@@ -3,8 +3,7 @@ package graft.checkpoint
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.compile.ValidationPlan
-import graft.exec.{Drift, ValidationRunner}
-import graft.functions.TDigest
+import graft.exec.{Drift, QuantileSketch, ValidationRunner}
 
 /**
  * Partition-lineage checkpointing: a killed validation run resumes from the
@@ -64,27 +63,18 @@ final class CheckpointManager(root: String) extends Serializable {
   def runResumable(df: DataFrame, bucketCol: String, allBuckets: Seq[Int],
       outputs: DataFrame => Map[String, DataFrame], batches: Int = 1): Unit = {
     val spark = df.sparkSession
-    val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
-    val savedMode = spark.conf.getOption(overwriteModeKey)
-    spark.conf.set(overwriteModeKey, "dynamic")
-    try {
-      val done = committedBuckets(spark)
-      val todo = allBuckets.filterNot(done)
-      todo.grouped(math.max(1, batches)).foreach { group =>
-        val batch = df.where(col(bucketCol).isin(group.map(Integer.valueOf): _*))
-        outputs(batch).foreach { case (name, out) =>
-          out.withColumn("bucket", col(bucketCol).cast("int"))
-            .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(outPath(name))
-        }
-        // commit marker LAST: crash before this line → bucket re-runs idempotently
-        commitLineage(spark, group)
+    val done = committedBuckets(spark)
+    val todo = allBuckets.filterNot(done)
+    todo.grouped(math.max(1, batches)).foreach { group =>
+      val batch = df.where(col(bucketCol).isin(group.map(Integer.valueOf): _*))
+      outputs(batch).foreach { case (name, out) =>
+        // per-writer option, never the session conf: other jobs share it
+        out.withColumn("bucket", col(bucketCol).cast("int"))
+          .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bucket").parquet(outPath(name))
       }
-    } finally {
-      // session conf is shared state — restore what we found
-      savedMode match {
-        case Some(m) => spark.conf.set(overwriteModeKey, m)
-        case None => spark.conf.unset(overwriteModeKey)
-      }
+      // commit marker LAST: crash before this line → bucket re-runs idempotently
+      commitLineage(spark, group)
     }
   }
 
@@ -152,9 +142,11 @@ final class CheckpointManager(root: String) extends Serializable {
 /**
  * The full checkpointed validation job: per bucket, commits (violations,
  * summary, sketches) atomically-enough (lineage last), where `sketches` are
- * per-bucket t-digest accumulators over the configured numeric columns —
- * resumable drift state: merging the committed per-bucket sketches
- * reconstructs the whole-run digest without touching processed data again.
+ * per-bucket KLL sketches (Spark's `kll_sketch_agg_double`, k = [[Drift.K]])
+ * over the configured numeric columns — resumable drift state: merging the
+ * committed per-bucket sketches reconstructs the whole-run sketch without
+ * touching processed data again, within the rank-error bound stated on
+ * [[Drift]].
  */
 object ValidationCheckpoint {
 
@@ -188,18 +180,17 @@ object ValidationCheckpoint {
       val base = Map("violations" -> violations, "summary" -> summary)
       if (sketchCols.isEmpty) base
       else {
-        val aggs = sketchCols.map(sc => Drift.tdigest(sc.column).as(s"sketch_${sc.name}"))
+        val aggs = sketchCols.map(sc => Drift.kllSketch(sc.column).as(s"sketch_${sc.name}"))
         val sketches = batch.groupBy(col(bucketCol)).agg(aggs.head, aggs.tail: _*)
         base + ("sketches" -> sketches)
       }
     }, batches)
   }
 
-  /** Merge the committed per-bucket sketches for `name` into one digest. */
-  def mergedSketch(spark: SparkSession, mgr: CheckpointManager, name: String): TDigest = {
-    val rows = mgr.read(spark, "sketches").select(s"sketch_$name").collect()
-    val merged = new TDigest(100)
-    rows.foreach(r => merged.merge(TDigest.deserialize(r.getAs[Array[Byte]](0))))
-    merged
-  }
+  /** Merge the committed per-bucket sketches for `name` into one sketch
+    * (one `kll_merge_agg_double` over the `sketches` table). */
+  def mergedSketch(spark: SparkSession, mgr: CheckpointManager, name: String): QuantileSketch =
+    QuantileSketch.fromBytes(mgr.read(spark, "sketches")
+      .agg(kll_merge_agg_double(col(s"sketch_$name"), Drift.K))
+      .collect()(0).getAs[Array[Byte]](0))
 }

@@ -1,65 +1,81 @@
 package graft.exec
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.datasketches.kll.KllDoublesSketch
+import org.apache.datasketches.memory.Memory
+import org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TDigest
+
+/**
+ * A KLL quantile sketch as produced by Spark's `kll_sketch_agg_double` /
+ * `kll_merge_agg_double`: the one quantile-sketch type the engine hands
+ * out, so no caller depends on the datasketches byte format. An empty
+ * sketch (no non-null input) answers NaN.
+ */
+final class QuantileSketch(private val kll: KllDoublesSketch) {
+  def totalWeight: Double = kll.getN.toDouble
+  /** Fraction of the input ≤ x. */
+  def cdf(x: Double): Double = if (kll.isEmpty) Double.NaN else kll.getRank(x, INCLUSIVE)
+  /** Smallest retained item whose rank reaches q ∈ [0, 1]. */
+  def quantile(q: Double): Double = if (kll.isEmpty) Double.NaN else kll.getQuantile(q, INCLUSIVE)
+  /** The retained items: the jump points of the sketch's step CDF. */
+  private[exec] def items: Array[Double] =
+    if (kll.isEmpty) Array.empty else kll.getSortedView.getQuantiles
+}
+
+object QuantileSketch {
+  /** Reads the bytes of a KLL sketch column (the aggregates never yield NULL). */
+  def fromBytes(bytes: Array[Byte]): QuantileSketch =
+    new QuantileSketch(KllDoublesSketch.heapify(Memory.wrap(bytes)))
+}
 
 /**
  * Distribution-drift checks (north rule: "distribution-drift checks via
- * two-sample KS/chi-square over t-digest quantile sketches"). The reference
- * has no statistical layer — this generalizes its per-value validation to
+ * two-sample KS/chi-square over quantile sketches"). The reference has no
+ * statistical layer — this generalizes its per-value validation to
  * population-level validation (SURVEY.md §2.D).
  *
- * Execution shape: the t-digest aggregator is a typed `Aggregator`
- * (registered with `functions.udaf`), so Spark runs it as a partial+final
- * hash aggregate — per-partition sketches merged on the driver side of the
- * exchange, one shuffle of ~KB-sized sketch buffers regardless of input
- * row count. The KS/χ² statistics are computed driver-side from the merged
- * sketches (two tiny structs), never from raw data.
+ * Execution shape: the sketches are Spark's built-in KLL aggregates
+ * (`kll_sketch_agg_double`, Karnin–Lang–Liberty), a partial+final hash
+ * aggregate — one shuffle of ~KB-sized sketches regardless of input row
+ * count. The KS/χ² statistics are computed driver-side from the sketches,
+ * never from raw data.
+ *
+ * Error bound, stated up front: at k = [[K]] each sketch's CDF estimate is
+ * within ε = `KllSketch.getNormalizedRankError(400, false)` ≈ 0.0068 of the
+ * true rank (datasketches' a-priori bound, 99% confidence). D̂ and D are
+ * sups of |F̂a − F̂b| and |Fa − Fb|, so the sketch KS statistic satisfies
+ * |D̂ − D| ≤ 2ε ≈ 0.014 against the exact [[ksTestExact]]. KLL compaction
+ * is randomised: answers are within the bound, not bit-identical across
+ * runs.
  */
 object Drift {
 
-  /** Typed t-digest aggregator: Double column → serialized sketch bytes.
-    * Input is boxed so NULL values are skipped (an unboxed Double input
-    * crashes on nullable columns with "Null value appeared in non-nullable
-    * field" — callers like the checkpointed sketch path pass arbitrary
-    * user columns). */
-  class TDigestAggregator(compression: Double)
-      extends Aggregator[java.lang.Double, TDigest, Array[Byte]] {
-    override def zero: TDigest = new TDigest(compression)
-    override def reduce(b: TDigest, a: java.lang.Double): TDigest = {
-      if (a != null) b.add(a.doubleValue()); b
-    }
-    override def merge(b1: TDigest, b2: TDigest): TDigest = { b1.merge(b2); b1 }
-    override def finish(r: TDigest): Array[Byte] = r.serialize()
-    override def bufferEncoder: Encoder[TDigest] = Encoders.kryo[TDigest]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
+  /** KLL accuracy parameter for every sketch the engine builds. */
+  val K = 400
 
-  /** t-digest as a `Column` aggregate usable in `df.groupBy(...).agg(...)`;
-    * null input values are skipped (SQL aggregate semantics). */
-  def tdigest(c: Column, compression: Double = 100.0): Column =
-    udaf(new TDigestAggregator(compression), Encoders.DOUBLE)
-      .apply(c.cast("double"))
+  /** KLL sketch of a numeric column (cast to double; nulls skipped). */
+  def kllSketch(c: Column): Column = kll_sketch_agg_double(c.cast("double"), K)
 
-  /** Per-group sketches: one row per group, sketch bytes column. */
-  def sketchByGroup(df: DataFrame, valueCol: String, groupCol: String,
-      compression: Double = 100.0): Map[String, TDigest] =
-    df.where(col(valueCol).isNotNull)
-      .groupBy(col(groupCol).cast("string").as("g"))
-      .agg(tdigest(col(valueCol), compression).as("sketch"))
+  /** Per-group sketches: one sketch per distinct value of `groupCol`. */
+  def sketchByGroup(df: DataFrame, valueCol: String,
+      groupCol: String): Map[String, QuantileSketch] =
+    df.groupBy(col(groupCol).cast("string").as("g"))
+      .agg(kllSketch(col(valueCol)).as("sketch"))
       .collect()
-      .map(r => r.getString(0) -> TDigest.deserialize(r.getAs[Array[Byte]](1)))
+      .map(r => r.getString(0) -> QuantileSketch.fromBytes(r.getAs[Array[Byte]](1)))
       .toMap
 
-  /** Two-sample KS statistic from two digests: sup |cdf_a - cdf_b| over probe points. */
-  def ksStatistic(a: TDigest, b: TDigest, probes: Int = 512): Double = {
-    // probe at quantiles of both digests (covers both supports)
-    val qs = (0 to probes).map(_.toDouble / probes)
-    val points = (qs.map(a.quantile) ++ qs.map(b.quantile)).filterNot(_.isNaN).distinct
-    if (points.isEmpty) return Double.NaN
-    points.map(x => math.abs(a.cdf(x) - b.cdf(x))).max
+  /**
+   * Two-sample KS statistic from two sketches: sup |F̂a − F̂b| over the union
+   * of both sketches' retained items. Both estimates are right-continuous
+   * step functions jumping only at those items, so this is their exact
+   * supremum distance.
+   */
+  def ksStatistic(a: QuantileSketch, b: QuantileSketch): Double = {
+    val points = a.items ++ b.items
+    if (points.isEmpty) Double.NaN
+    else points.foldLeft(0.0)((d, x) => math.max(d, math.abs(a.cdf(x) - b.cdf(x))))
   }
 
   /**
@@ -87,9 +103,9 @@ object Drift {
 
   /** Two-sample KS over a numeric column between two groups of `groupCol`. */
   def ksTest(df: DataFrame, valueCol: String, groupCol: String,
-      g1: String, g2: String, compression: Double = 200.0): KsResult = {
+      g1: String, g2: String): KsResult = {
     val sketches = sketchByGroup(
-      df.where(col(groupCol).cast("string").isin(g1, g2)), valueCol, groupCol, compression)
+      df.where(col(groupCol).cast("string").isin(g1, g2)), valueCol, groupCol)
     val (a, b) = (sketches(g1), sketches(g2))
     val d = ksStatistic(a, b)
     KsResult(g1, g2, d, ksPValue(d, a.totalWeight, b.totalWeight), a.totalWeight, b.totalWeight)
@@ -101,7 +117,7 @@ object Drift {
    * per-distinct-value counts. The per-value aggregation is fully
    * distributed (partial-agg groupBy); the cumulative step is a global-order
    * window over DISTINCT values — a single task over the distinct-value set,
-   * so this is the bounded-cardinality / audit path. [[ksTest]] (t-digest
+   * so this is the bounded-cardinality / audit path. [[ksTest]] (KLL
    * sketches) is the unbounded-scale path; this exact form is its oracle.
    */
   def ksTestExact(df: DataFrame, valueCol: String, groupCol: String,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
 import graft.compile.ValidationPlan
 import graft.exec.ValidationRunner
@@ -41,6 +41,13 @@ object ValidateStream {
         sum(col("valid").cast("long")).as("n_valid"),
         sum((!col("valid")).cast("long")).as("n_invalid"))
 
+  /** No TTL → NoTimeout: a processing-time timeout keeps planning
+    * timeout-firing micro-batches after the data is exhausted, so an
+    * `AvailableNow` query would never terminate. */
+  private def stateTimeout(stateTtl: Option[java.time.Duration]): GroupStateTimeout =
+    if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
+    else GroupStateTimeout.NoTimeout()
+
   /**
    * Streaming first-seen dedup: keeps the first document per `doc_id` across
    * micro-batches via keyed state (`KeyValueGroupedDataset.flatMapGroupsWithState`)
@@ -54,15 +61,14 @@ object ValidateStream {
    */
   def dedupFirstSeen(stream: DataFrame, docKey: String,
       stateTtl: Option[java.time.Duration] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode => OM}
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode => OM}
     import org.apache.spark.sql.{Encoders, Row}
     implicit val rowEnc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(stream.schema)
     implicit val strEnc = Encoders.STRING
     implicit val boolEnc = Encoders.scalaBoolean
     stream
       .groupByKey((r: Row) => r.getAs[String](docKey))
-      .flatMapGroupsWithState[Boolean, Row](
-        OM.Append(), GroupStateTimeout.ProcessingTimeTimeout()) {
+      .flatMapGroupsWithState[Boolean, Row](OM.Append(), stateTimeout(stateTtl)) {
         (_: String, rows: Iterator[Row], state: GroupState[Boolean]) =>
           if (state.hasTimedOut) {
             state.remove() // TTL eviction: key forgotten, state bounded
@@ -112,7 +118,7 @@ object ValidateStream {
       numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
       threshold: Double = 0.7, maxBucket: Int = 1000,
       stateTtl: Option[java.time.Duration] = None): org.apache.spark.sql.Dataset[NearDupHit] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode => OM}
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode => OM}
     import org.apache.spark.sql.types.LongType
     val spark = stream.sparkSession
     import spark.implicits._
@@ -130,16 +136,10 @@ object ValidateStream {
           graft.ops.Dedup.bandKeyCols(col("sig"), numHashes, bands): _*)).as("bucket"),
         col("id"), col("sig"))
       .as[BandedDoc]
-    // no TTL → NoTimeout: skips the extra timeout-processing micro-batch
-    // entirely (with AvailableNow that batch plans after the data is
-    // exhausted and serves nothing here)
-    val timeoutConf =
-      if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
     banded
       .groupByKey(_.bucket)
       .flatMapGroupsWithState[BucketState, NearDupHit](
-        OM.Append(), timeoutConf) {
+        OM.Append(), stateTimeout(stateTtl)) {
         (_: Long, rows: Iterator[BandedDoc], state: GroupState[BucketState]) =>
           if (state.hasTimedOut) {
             state.remove()

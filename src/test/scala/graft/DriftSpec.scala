@@ -1,8 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.exec.Drift
-import graft.functions.TDigest
+import org.apache.datasketches.kll.{KllDoublesSketch, KllSketch}
+import graft.exec.{Drift, QuantileSketch}
 
 class DriftSpec extends SparkTestBase {
 
@@ -15,62 +15,78 @@ class DriftSpec extends SparkTestBase {
     }
   }
 
-  test("tdigest quantiles accurate on uniform data") {
+  private def sketch(xs: Iterable[Double]): QuantileSketch = new QuantileSketch(kll(xs))
+
+  private def kll(xs: Iterable[Double]): KllDoublesSketch = {
+    val k = KllDoublesSketch.newHeapInstance(Drift.K)
+    xs.foreach(k.update)
+    k
+  }
+
+  private def aggBytes(df: org.apache.spark.sql.DataFrame): Array[Byte] =
+    df.agg(Drift.kllSketch(col("x"))).collect()(0).getAs[Array[Byte]](0)
+
+  test("KLL quantiles accurate on uniform data") {
     val xs = lcg(20000, 42)
-    val d = TDigest.fromValues(xs)
+    val k = kll(xs)
+    val d = new QuantileSketch(k)
     for (q <- Seq(0.01, 0.25, 0.5, 0.75, 0.99)) {
       assert(math.abs(d.quantile(q) - q) < 0.02, s"q=$q got ${d.quantile(q)}")
     }
-    assert(d.centroidCount < 500, s"compression bound: ${d.centroidCount}")
+    // KLL keeps O(k) items (about 3k at k = 400), far below the input size
+    assert(k.getNumRetained < xs.size / 10, s"space bound: ${k.getNumRetained}")
   }
 
-  test("tdigest merge associativity: split-merge equals whole") {
+  test("KLL merge associativity: split-merge equals whole") {
     val xs = lcg(10000, 7)
-    val whole = TDigest.fromValues(xs)
-    val parts = xs.grouped(1000).map(TDigest.fromValues(_)).toSeq
-    val merged = new TDigest(100)
-    parts.foreach(merged.merge)
+    val whole = sketch(xs)
+    val parts = KllDoublesSketch.newHeapInstance(Drift.K)
+    xs.grouped(1000).foreach(p => parts.merge(kll(p)))
+    val merged = new QuantileSketch(parts)
     for (q <- Seq(0.1, 0.5, 0.9)) {
       assert(math.abs(whole.quantile(q) - merged.quantile(q)) < 0.02)
     }
     assert(math.abs(merged.totalWeight - 10000.0) < 1e-9)
   }
 
-  test("tdigest serialization roundtrip") {
-    val d = TDigest.fromValues(lcg(5000, 3))
-    val d2 = TDigest.deserialize(d.serialize())
+  test("KLL sketch bytes roundtrip through parquet") {
+    val spark0 = spark
+    import spark0.implicits._
+    val bytes = aggBytes(lcg(5000, 3).toDF("x"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-kll-rt").toString + "/s"
+    Seq(bytes).toDF("sketch").write.parquet(dir)
+    val d = QuantileSketch.fromBytes(bytes)
+    val d2 = QuantileSketch.fromBytes(spark.read.parquet(dir).collect()(0).getAs[Array[Byte]](0))
     assert(d2.totalWeight === d.totalWeight)
-    for (q <- Seq(0.25, 0.5, 0.75)) assert(d2.quantile(q) === d.quantile(q))
+    for (x <- Seq(0.1, 0.25, 0.5, 0.75, 0.9)) assert(d2.cdf(x) === d.cdf(x))
   }
 
-  test("distributed tdigest agg equals local digest (local[1] vs local[4] agree)") {
+  test("distributed KLL agg equals local sketch (local[1] vs local[4] agree)") {
     val spark0 = spark
     import spark0.implicits._
     val xs = lcg(8000, 11)
     val df = xs.toDF("x").repartition(8)
-    val bytes = df.agg(Drift.tdigest(col("x"))).collect()(0).getAs[Array[Byte]](0)
-    val dist = TDigest.deserialize(bytes)
-    val local = TDigest.fromValues(xs)
+    val dist = QuantileSketch.fromBytes(aggBytes(df))
+    val local = sketch(xs)
     for (q <- Seq(0.1, 0.5, 0.9))
       assert(math.abs(dist.quantile(q) - local.quantile(q)) < 0.02)
     // partitioning must not change the answer materially
-    val bytes1 = df.coalesce(1).agg(Drift.tdigest(col("x"))).collect()(0).getAs[Array[Byte]](0)
-    val one = TDigest.deserialize(bytes1)
+    val one = QuantileSketch.fromBytes(aggBytes(df.coalesce(1)))
     for (q <- Seq(0.1, 0.5, 0.9))
       assert(math.abs(dist.quantile(q) - one.quantile(q)) < 0.02)
   }
 
   test("KS: same distribution → small statistic, large p") {
-    val a = TDigest.fromValues(lcg(10000, 1))
-    val b = TDigest.fromValues(lcg(10000, 2))
+    val a = sketch(lcg(10000, 1))
+    val b = sketch(lcg(10000, 2))
     val d = Drift.ksStatistic(a, b)
     assert(d < 0.05, s"d=$d")
     assert(Drift.ksPValue(d, 10000, 10000) > 0.001)
   }
 
   test("KS: shifted distribution detected") {
-    val a = TDigest.fromValues(lcg(10000, 1))
-    val b = TDigest.fromValues(lcg(10000, 2).map(_ + 0.3))
+    val a = sketch(lcg(10000, 1))
+    val b = sketch(lcg(10000, 2).map(_ + 0.3))
     val d = Drift.ksStatistic(a, b)
     assert(d > 0.25, s"d=$d")
     assert(Drift.ksPValue(d, 10000, 10000) < 1e-6)
@@ -112,12 +128,11 @@ class DriftSpec extends SparkTestBase {
     assert(math.abs(r.statistic - expected) < 1e-9)
   }
 
-  test("tdigest skips nulls in nullable input columns (no crash, weight = non-null count)") {
+  test("KLL skips nulls in nullable input columns (no crash, weight = non-null count)") {
     val spark0 = spark
     import spark0.implicits._
     val df = Seq[java.lang.Double](1.0, null, 2.0, null, 3.0).toDF("x")
-    val bytes = df.agg(Drift.tdigest(col("x"))).collect()(0).getAs[Array[Byte]](0)
-    val d = TDigest.deserialize(bytes)
+    val d = QuantileSketch.fromBytes(aggBytes(df))
     assert(d.totalWeight === 3.0)
     assert(math.abs(d.quantile(0.5) - 2.0) < 1e-9)
   }
@@ -132,12 +147,25 @@ class DriftSpec extends SparkTestBase {
     assert(math.abs(r.statistic - 1.0 / 3.0) < 1e-12)
     assert(r.n1 === 3.0 && r.n2 === 3.0)
 
-    // on a larger sample the t-digest sketch statistic must approximate the exact one
+    // on a larger sample the KLL sketch statistic must approximate the exact one
     val big = (lcg(4000, 1).map(("a", _)) ++ lcg(4000, 2).map(x => ("b", x + 0.2))).toDF("g", "x")
     val exact = Drift.ksTestExact(big, "x", "g", "a", "b")
     val approx = Drift.ksTest(big, "x", "g", "a", "b")
     assert(math.abs(exact.statistic - approx.statistic) < 0.03,
       s"exact=${exact.statistic} sketch=${approx.statistic}")
+  }
+
+  test("KLL KS statistic within the stated 2*eps bound of exact KS (10k vs 10k)") {
+    val spark0 = spark
+    import spark0.implicits._
+    val df = (lcg(10000, 5).map(("a", _)) ++ lcg(10000, 6).map(("b", _))).toDF("g", "x")
+      .repartition(4)
+    val eps = KllSketch.getNormalizedRankError(Drift.K, false)
+    val exact = Drift.ksTestExact(df, "x", "g", "a", "b")
+    val approx = Drift.ksTest(df, "x", "g", "a", "b")
+    assert(math.abs(approx.statistic - exact.statistic) <= 2 * eps,
+      s"exact=${exact.statistic} sketch=${approx.statistic} 2eps=${2 * eps}")
+    assert(approx.n1 === 10000.0 && approx.n2 === 10000.0)
   }
 
   test("chi2 p-value (regularized gamma) cross-checks against Wilson-Hilferty") {

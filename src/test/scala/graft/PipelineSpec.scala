@@ -94,7 +94,7 @@ class PipelineSpec extends SparkTestBase {
             .join(df.select("doc_id", "bucket"), "doc_id"),
           "summary" -> ValidationRunner.summary(v, Seq("bucket")),
           "sketches" -> df.groupBy(col("bucket"))
-            .agg(graft.exec.Drift.tdigest(size(col("spans")).cast("double")).as("sketch_nspans")))
+            .agg(graft.exec.Drift.kllSketch(size(col("spans"))).as("sketch_nspans")))
       })
     } catch { case _: RuntimeException => () }
     assert(mgr.committedBuckets(spark).size === 1)
@@ -103,11 +103,11 @@ class PipelineSpec extends SparkTestBase {
     ValidationCheckpoint.run(docs, plan, mgr, "bucket", Seq(0, 1, 2, 3), "doc_id", sketchCols)
     assert(mgr.committedBuckets(spark) === Set(0, 1, 2, 3))
 
-    // merged per-bucket sketches ≈ one-shot digest over all docs
+    // merged per-bucket sketches ≈ one-shot sketch over all docs
     val merged = ValidationCheckpoint.mergedSketch(spark, mgr, "nspans")
     assert(merged.totalWeight === 2000.0)
-    val oneShot = graft.functions.TDigest.deserialize(
-      docs.agg(graft.exec.Drift.tdigest(size(col("spans")).cast("double")))
+    val oneShot = graft.exec.QuantileSketch.fromBytes(
+      docs.agg(graft.exec.Drift.kllSketch(size(col("spans"))))
         .collect()(0).getAs[Array[Byte]](0))
     for (q <- Seq(0.25, 0.5, 0.75))
       assert(math.abs(merged.quantile(q) - oneShot.quantile(q)) <= 1.0) // n_spans ∈ 1..7
@@ -145,6 +145,33 @@ class PipelineSpec extends SparkTestBase {
       df => Map("echo" -> df.select("doc_id", "bucket")))
     assert(spark.conf.get(key) === "static")
     before match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
+  }
+
+  test("checkpoint: session conf untouched; half run + resume keeps every bucket") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-conf2").toString
+    val mgr = new CheckpointManager(root)
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val docs = Docs.generate(spark, 200, 2)
+        .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
+      val seen = scala.collection.mutable.ArrayBuffer[Option[String]]()
+      def process(df: org.apache.spark.sql.DataFrame) = {
+        seen += spark.conf.getOption(key)
+        Map("counts" -> df.groupBy("bucket").count())
+      }
+      mgr.runResumable(docs, "bucket", Seq(0, 1), process) // half run
+      mgr.runResumable(docs, "bucket", Seq(0, 1, 2, 3), process) // resume
+      assert(seen.size === 4 && seen.forall(_.contains("static")), s"conf seen mid-run: $seen")
+      // a static overwrite by the resume would have wiped buckets 0 and 1
+      val out = mgr.read(spark, "counts").collect()
+      assert(out.map(_.getAs[Int]("bucket")).toSet === Set(0, 1, 2, 3))
+      assert(out.map(_.getAs[Long]("count")).sum === 200L)
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("checkpoint: resuming with a DIFFERENT spec fails fast (spec fingerprint)") {
@@ -629,7 +656,7 @@ class PipelineSpec extends SparkTestBase {
       val q = deduped.writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "AvailableNow first-seen dedup did not terminate")
     }
     runOnce()
     val firstCount = spark.read.parquet(outDir).count()

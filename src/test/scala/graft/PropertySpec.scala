@@ -2,8 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import graft.functions.TDigest
-import graft.exec.Drift
+import org.apache.datasketches.kll.KllDoublesSketch
+import graft.exec.{Drift, QuantileSketch}
 
 /**
  * Property tests (SURVEY.md §5d): sketch merge associativity / partition
@@ -21,27 +21,35 @@ class PropertySpec extends AnyFunSuite {
   private val valuesGen: Gen[List[Double]] =
     Gen.choose(50, 400).flatMap(n => Gen.listOfN(n, Gen.choose(-1000.0, 1000.0)))
 
-  test("tdigest: any split of the input merges to the same quantiles") {
+  private def kll(xs: Iterable[Double]): KllDoublesSketch = {
+    val k = KllDoublesSketch.newHeapInstance(Drift.K)
+    xs.foreach(k.update)
+    k
+  }
+
+  test("KLL: any split of the input merges to the same quantiles") {
     check("merge-split", Prop.forAll(valuesGen, Gen.choose(1, 10)) { (xs, parts) =>
-      val whole = TDigest.fromValues(xs)
+      val whole = new QuantileSketch(kll(xs))
       val chunkSize = math.max(1, xs.size / parts)
-      val merged = new TDigest(100)
-      xs.grouped(chunkSize).foreach(c => merged.merge(TDigest.fromValues(c)))
+      val merged = KllDoublesSketch.newHeapInstance(Drift.K)
+      xs.grouped(chunkSize).foreach(c => merged.merge(kll(c)))
+      val m = new QuantileSketch(merged)
       val range = xs.max - xs.min + 1e-9
       val qOk = Seq(0.25, 0.5, 0.75).forall { q =>
         val exact = xs.sorted.apply(math.min(xs.size - 1, (q * xs.size).toInt))
         math.abs(whole.quantile(q) - exact) / range < 0.12 &&
-          math.abs(merged.quantile(q) - exact) / range < 0.12
+          math.abs(m.quantile(q) - exact) / range < 0.12
       }
-      math.abs(whole.totalWeight - merged.totalWeight) < 1e-9 &&
-        merged.min == xs.min && merged.max == xs.max && qOk
+      math.abs(whole.totalWeight - m.totalWeight) < 1e-9 &&
+        merged.getMinItem == xs.min && merged.getMaxItem == xs.max && qOk
     })
   }
 
-  test("tdigest: serialization is lossless w.r.t. quantiles and weight") {
+  test("KLL: heapify round-trip is lossless w.r.t. quantiles and weight") {
     check("serde", Prop.forAll(valuesGen) { xs =>
-      val d = TDigest.fromValues(xs)
-      val rt = TDigest.deserialize(d.serialize())
+      val k = kll(xs)
+      val d = new QuantileSketch(k)
+      val rt = QuantileSketch.fromBytes(k.toByteArray)
       rt.totalWeight == d.totalWeight &&
         Seq(0.1, 0.5, 0.9).forall(q => rt.quantile(q) == d.quantile(q))
     })
@@ -49,7 +57,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("cdf is monotone and bounded") {
     check("cdf-monotone", Prop.forAll(valuesGen) { xs =>
-      val d = TDigest.fromValues(xs)
+      val d = new QuantileSketch(kll(xs))
       val probes = (0 to 20).map(i => xs.min + (xs.max - xs.min) * i / 20.0)
       val cdfs = probes.map(d.cdf)
       cdfs.forall(c => c >= 0.0 && c <= 1.0) &&
@@ -59,8 +67,8 @@ class PropertySpec extends AnyFunSuite {
 
   test("KS statistic is symmetric and zero against self") {
     check("ks-symmetric", Prop.forAll(valuesGen, valuesGen) { (xs, ys) =>
-      val a = TDigest.fromValues(xs)
-      val b = TDigest.fromValues(ys)
+      val a = new QuantileSketch(kll(xs))
+      val b = new QuantileSketch(kll(ys))
       math.abs(Drift.ksStatistic(a, b) - Drift.ksStatistic(b, a)) < 1e-12 &&
         Drift.ksStatistic(a, a) < 1e-12
     })
