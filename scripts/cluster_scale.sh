@@ -71,8 +71,8 @@ submit() { # $1=cores_max $2=shuffle_partitions $3=outJson
   grep -o '{.*}' "$3"; echo
 }
 
-# Per-mode leg filenames: two concurrent invocations (e.g. the hunter's
-# validate and a manual dedup) share LOGD, and a mode-less reporter once
+# Per-mode leg filenames: two concurrent invocations (e.g. a validate
+# and a dedup run) share LOGD, and a mode-less reporter once
 # read the OTHER run's legs into a mislabeled artifact.
 submit 8  8  "$LOGD/n1_a_$MODE.json"
 submit 32 32 "$LOGD/n4_a_$MODE.json"
@@ -103,7 +103,7 @@ if "control_docs_per_sec" in n1 and "control_docs_per_sec" in n4:
     out["control_scaling_efficiency"] = (
         n4["control_docs_per_sec"] / n1["control_docs_per_sec"]) / 4
 path = f"BENCH/bench_r6_cluster_{mode}.json"
-# Keep the best artifact across hunter reruns — but per the r5 ADVICE,
+# Keep the best artifact across reruns — but per the r5 ADVICE,
 # never let a depressed-baseline run ratchet the headline: efficiency is
 # (n4/n1)/4, so a run whose 1-executor leg degraded inflates it. Replace
 # only when efficiency improves AND the new n1 throughput is within 20%

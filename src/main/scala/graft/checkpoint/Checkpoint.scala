@@ -38,15 +38,13 @@ final class CheckpointManager(root: String) extends Serializable {
   private def outPath(name: String) = s"$root/$name"
 
   def committedBuckets(spark: SparkSession): Set[Int] = {
-    try {
-      spark.read.parquet(lineagePath).select("bucket").collect().map(_.getInt(0)).toSet
-    } catch {
-      // ONLY "no lineage yet" may mean an empty set; any other failure
-      // (corrupt file, transient IO) must propagate — treating it as "no
-      // lineage" would silently reprocess every bucket.
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "PATH_NOT_FOUND" => Set.empty
-    }
+    // ONLY "no lineage yet" means an empty set; any other failure (corrupt
+    // file, transient IO) propagates — treating it as "no lineage" would
+    // silently reprocess every bucket. Checking first (instead of catching
+    // PATH_NOT_FOUND) keeps a fresh root from logging a stack trace.
+    val lineage = new org.apache.hadoop.fs.Path(lineagePath)
+    if (!lineage.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lineage)) Set.empty
+    else spark.read.parquet(lineagePath).select("bucket").collect().map(_.getInt(0)).toSet
   }
 
   /**

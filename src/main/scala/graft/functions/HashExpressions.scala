@@ -590,63 +590,6 @@ case class SignBits(child: Expression, bits: Int, seed: Int) extends UnaryExpres
     copy(child = newChild)
 }
 
-/**
- * Count of positionally-equal elements between two `array<int>` columns —
- * the MinHash signature-agreement count, codegen'd. Exact semantics of the
- * r3 HOF form `aggregate(zip_with(a, b, _ === _ cast int), 0, _ + _)`
- * restricted to the non-null equal-length signatures produced by
- * [[MinHashSignature]]: either side null → null; a null ELEMENT pair slot
- * counts as not-equal (the HOF yielded null for the slot and aggregate's
- * `+` then nulled the total — but all-null signatures are filtered before
- * use, so the reachable domain agrees).
- */
-case class IntArrayEqCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(IntegerType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"IntArrayEqCount requires (array<int>, array<int>), got $other")
-    }
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var eq = 0
-    var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getInt(i) == b.getInt(i)) eq += 1
-      i += 1
-    }
-    eq
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val eq = ctx.freshName("eq")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $eq = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i) && $a.getInt($i) == $b.getInt($i)) $eq++;
-         |}
-         |${ev.value} = $eq;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IntArrayEqCount =
-    copy(left = newLeft, right = newRight)
-}
-
 object HashExpressions {
   /** Codegen'd sign-bit LSH bucket over an embedding column. */
   def signBitsNative(vec: Column, bits: Int, seed: Int): Column =
@@ -688,14 +631,4 @@ object HashExpressions {
     * vectors. */
   def cosinePairs(items: Column, threshold: Double): Column =
     GraftBridge.column(CosinePairs(GraftBridge.expression(items), threshold))
-
-  /** Per-bucket UNVERIFIED candidate pair generator over a bare `array<id>`
-    * column (narrow-shuffle banding; verify by re-join). */
-  def idPairs(ids: Column): Column =
-    GraftBridge.column(IdPairs(GraftBridge.expression(ids)))
-
-  /** Codegen'd count of positionally-equal slots between two `array<int>`
-    * signatures. */
-  def intArrayEqCount(a: Column, b: Column): Column =
-    GraftBridge.column(IntArrayEqCount(GraftBridge.expression(a), GraftBridge.expression(b)))
 }

@@ -60,7 +60,7 @@ abstract class VerifiedPairsBase extends Expression with Generator with CodegenF
   protected final def structType: StructType =
     child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
 
-  /** Id (first output) column type; IdPairs overrides for bare-id input. */
+  /** Id (first output) column type. */
   protected def idTypeOf: DataType = structType.fields(0).dataType
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -167,55 +167,6 @@ case class MinhashPairs(child: Expression, numHashes: Int, threshold: Double)
   }
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): MinhashPairs =
-    copy(child = newChildren.head)
-}
-
-/**
- * UNVERIFIED candidate pairs from one LSH bucket holding bare ids
- * (`array<id>`): emits every ordered (id_a, id_b) pair. The narrow-shuffle
- * leg of `Dedup.minhashNearDups(carrySig = false)`: banding shuffles only
- * (bucket, id) rows and verification re-joins signatures afterwards —
- * the score column is a constant TRUE placeholder so the generator family
- * shares one output arity.
- */
-case class IdPairs(child: Expression) extends VerifiedPairsBase {
-
-  override protected def scoreName: String = "cand"
-  override protected def scoreType: DataType = BooleanType
-  override protected def payloadCheck(dt: DataType): Boolean = true
-
-  // child is array<id>, not array<struct<id, payload>>
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType |
-                   StringType | BinaryType | DateType | TimestampType | BooleanType |
-                   (_: DecimalType), _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"IdPairs requires array<atomic id>, got $other")
-  }
-
-  override protected def idTypeOf: DataType =
-    child.dataType.asInstanceOf[ArrayType].elementType
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) return Iterator.empty
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n < 2) return Iterator.empty
-    val ids = new Array[Any](n)
-    var m = 0
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        ids(m) = copyId(arr.get(i, idTypeOf))
-        m += 1
-      }
-      i += 1
-    }
-    pairIterator(m, (i, j) => emit(ids(i), ids(j), true))
-  }
-
-  override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): IdPairs =
     copy(child = newChildren.head)
 }
 

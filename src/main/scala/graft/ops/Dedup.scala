@@ -25,33 +25,8 @@ import graft.functions.{Text, Vectors}
  */
 object Dedup {
 
-  /**
-   * Cap LSH bucket sizes on an EXPLODED (row-per-bucket-member) frame: drop
-   * all rows of any bucket whose size exceeds `cap`. A hot bucket —
-   * templated/duplicated corpora make these common — otherwise goes
-   * quadratic on one reducer at scale (a bucket of size s produces s²/2
-   * candidate pairs).
-   *
-   * The near-dup pipelines no longer need this aggregate+join form: since
-   * round 4 they collect each bucket with `collect_list` and cap via a free
-   * `size(items) <= cap` filter (see [[minhashNearDups]]). This form
-   * remains for callers capping a frame they keep exploded.
-   *
-   * Dropping a bucket loses its candidate pairs by design: buckets past any
-   * sane cap are dominated by exact duplicates, which [[exactDedup]] must
-   * remove first (the Manku WWW'07 pipeline ordering). Use
-   * [[overflowBuckets]] to report what was dropped.
-   */
-  def capBuckets(df: DataFrame, keyCols: Seq[String], cap: Int): DataFrame = {
-    if (cap <= 0) return df // 0/negative = uncapped
-    val keys = keyCols.map(col)
-    val small = df.groupBy(keys: _*).agg(count(lit(1)).as("_bsz"))
-      .where(col("_bsz") <= cap).drop("_bsz")
-    df.join(small, keyCols)
-  }
-
   /** Buckets larger than `cap` with their sizes — the dropped-candidate
-    * report for a capped LSH join. */
+    * report for a capped LSH pipeline. */
   def overflowBuckets(df: DataFrame, keyCols: Seq[String], cap: Int): DataFrame =
     df.groupBy(keyCols.map(col): _*).agg(count(lit(1)).as("bucket_size"))
       .where(col("bucket_size") > cap)
@@ -149,6 +124,18 @@ object Dedup {
           .cast(IntegerType)))
     }: _*)
 
+  /** One LSH band key per band: xxhash64 over (band index, the band's
+    * signature slots) — band index hashed INTO the key so one long keys
+    * the whole table set. Shared by the batch pipeline and the streaming
+    * near-dup operator ([[graft.streaming.ValidateStream.nearDupPairs]]). */
+  private[graft] def bandKeyCols(sig: Column, numHashes: Int, bands: Int): Seq[Column] = {
+    val rowsPerBand = numHashes / bands
+    (0 until bands).map { b =>
+      xxhash64(lit(b) +: (0 until rowsPerBand)
+        .map(r => element_at(sig, b * rowsPerBand + r + 1)): _*)
+    }
+  }
+
   /**
    * MinHash + LSH banding near-dup candidate pairs: signature split into
    * `bands` bands of rows; docs sharing any band bucket are candidates;
@@ -180,38 +167,10 @@ object Dedup {
    *
    * At cluster scale nothing here needs persistence or checkpointing: the
    * output is a plain DataFrame — write it to a table for durability.
-   *
-   * `carrySig` picks the shuffle-width tradeoff:
-   *  - `true` (default): the banding shuffle carries (bucket, id, sig) —
-   *    ~`bands`× the signature bytes per doc through ONE exchange, zero
-   *    recomputation. Right when the corpus fits one pass and bandwidth per
-   *    PASS dominates (single box, small-to-mid clusters).
-   *  - `false`: the banding shuffle carries only (bucket, id) — ~6% of the
-   *    wide variant's bytes — and candidates are verified by TWO re-joins
-   *    against the signature projection, which is recomputed per join side
-   *    (signatures are cheap one-pass codegen; recompute ≪ shuffling them).
-   *    The joins are left to the planner: with a small candidate set AQE
-   *    converts them to broadcasts and the signature sides stream with no
-   *    shuffle at all. Right at 10^12-doc scale where the wide variant's
-   *    `bands`·sig·n shuffle is petabytes but candidates are merely
-   *    billions.
    */
-  /** One LSH band key per band: xxhash64 over (band index, the band's
-    * signature slots) — band index hashed INTO the key so one long keys
-    * the whole table set. Shared by the batch pipeline and the streaming
-    * near-dup operator ([[graft.streaming.ValidateStream.nearDupPairs]]). */
-  private[graft] def bandKeyCols(sig: Column, numHashes: Int, bands: Int): Seq[Column] = {
-    val rowsPerBand = numHashes / bands
-    (0 until bands).map { b =>
-      xxhash64(lit(b) +: (0 until rowsPerBand)
-        .map(r => element_at(sig, b * rowsPerBand + r + 1)): _*)
-    }
-  }
-
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      threshold: Double = 0.7, maxBucket: Int = 100000,
-      carrySig: Boolean = true): DataFrame = {
+      threshold: Double = 0.7, maxBucket: Int = 100000): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // fused tokens→signature expression: one codegen pass, no intermediate
     // shingle array to materialize or dedup. Null-text docs are dropped
@@ -226,37 +185,16 @@ object Dedup {
     // literals, so each slot is an O(1) element_at on the materialized sig
     // column.
     val bandKeys = bandKeyCols(col("sig"), numHashes, bands)
-    if (carrySig) {
-      val banded = withSig.select(col("id"), col("sig"),
-        explode(array(bandKeys: _*)).as("bucket"))
-      val buckets = banded.groupBy("bucket")
-        .agg(collect_list(struct(col("id"), col("sig"))).as("items"))
-      val capped = if (maxBucket > 0) buckets.where(size(col("items")) <= maxBucket) else buckets
-      capped
-        .select(graft.functions.HashExpressions
-          .minhashPairs(col("items"), numHashes, threshold)
-          .as(Seq("id_a", "id_b", "sig_sim")))
-        .dropDuplicates("id_a", "id_b") // same pair may collide in several bands
-    } else {
-      // narrow leg: column pruning drops sig from the shuffle (band keys
-      // are computed from it map-side, then only (bucket, id) moves)
-      val banded = withSig.select(col("id"), explode(array(bandKeys: _*)).as("bucket"))
-      val buckets = banded.groupBy("bucket").agg(collect_list(col("id")).as("ids"))
-      val capped = if (maxBucket > 0) buckets.where(size(col("ids")) <= maxBucket) else buckets
-      val cands = capped
-        .select(graft.functions.HashExpressions.idPairs(col("ids"))
-          .as(Seq("id_a", "id_b", "cand")))
-        .dropDuplicates("id_a", "id_b")
-        .select("id_a", "id_b")
-      cands
-        .join(withSig.select(col("id").as("id_a"), col("sig").as("sig_a")), "id_a")
-        .join(withSig.select(col("id").as("id_b"), col("sig").as("sig_b")), "id_b")
-        .withColumn("sig_sim",
-          graft.functions.HashExpressions.intArrayEqCount(col("sig_a"), col("sig_b"))
-            .cast(DoubleType) / lit(numHashes))
-        .where(col("sig_sim") >= threshold)
-        .select("id_a", "id_b", "sig_sim")
-    }
+    val banded = withSig.select(col("id"), col("sig"),
+      explode(array(bandKeys: _*)).as("bucket"))
+    val buckets = banded.groupBy("bucket")
+      .agg(collect_list(struct(col("id"), col("sig"))).as("items"))
+    val capped = if (maxBucket > 0) buckets.where(size(col("items")) <= maxBucket) else buckets
+    capped
+      .select(graft.functions.HashExpressions
+        .minhashPairs(col("items"), numHashes, threshold)
+        .as(Seq("id_a", "id_b", "sig_sim")))
+      .dropDuplicates("id_a", "id_b") // same pair may collide in several bands
   }
 
   /**

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /**
  * ANN-plane scaling probe at VOLUME — the standalone twin of the ANN/IVF
- * phase in [[graft.Bench]], runnable on its own so quiet-window hunting
+ * phase in [[graft.Bench]], runnable on its own so an ANN-plane reading
  * does not pay the ~10 min validate+dedup phases first.
  *
  * Why this exists: at the default bench size (100k docs) the whole IVF
@@ -90,9 +90,8 @@ object AnnScaleProbe {
 
     // SKIP_LSH=1 → IVF-only timed legs: the fixed-bits LSH legs dominate
     // wall-clock at 10^6 docs (its per-cell lists grow ~n/2^bits — the
-    // collapse the first 1M artifact demonstrates), so quiet-window
-    // re-hunts of the IVF design point shouldn't pay ~15 min for a number
-    // already on record
+    // collapse the first 1M artifact demonstrates), so re-reading the IVF
+    // design point shouldn't pay ~15 min for a number already on record
     val skipLsh = sys.env.get("SPARK_GRAFT_SKIP_LSH").contains("1")
     // SKIP_PQ=1 → skip the compressed-domain full-scan legs (they score
     // every (doc, query) pair by ADC — the heaviest timed legs at 10^6)
@@ -116,14 +115,26 @@ object AnnScaleProbe {
     val pqCodesFingerprint = {
       val p = DedupCorpus.AnnProbe
       s"ivf${ivfCells}x${p.ivfSampleN(nAnn)}x${p.IvfIters}-" +
-        s"pq${p.PqM}x${p.PqSampleN}x${p.PqIters}"
+        s"pq${p.PqM}x${p.PqCodes}x${p.PqSampleN}x${p.PqIters}"
     }
-    val pqCodesPath = if (skipPq) null else
+    val pqCodesPath = if (skipPq) null else {
+      // indexes under any other fingerprint are stale: drop them (they hold
+      // ramdisk headroom) from the corpus dir and from materialize's /tmp
+      // fallback, sparing the current index and its in-flight builds
+      val prefix = new java.io.File(path).getName + "-ivfpq-"
+      val current = prefix + pqCodesFingerprint
+      for {
+        dir <- Seq(new java.io.File(path).getParentFile, new java.io.File("/tmp")).distinct
+        f <- Option(dir.listFiles).getOrElse(Array.empty[java.io.File])
+        name = f.getName
+        if name.startsWith(prefix) && name != current && !name.startsWith(current + "_build_")
+      } DedupCorpus.deleteTree(f)
       DedupCorpus.materialize(s"$path-ivfpq-$pqCodesFingerprint",
           expectedBytes = nAnn * 32L) { tmp =>
         DedupCorpus.AnnProbe.encodeIvfPq(spark.read.parquet(path), cents, pqModel)
           .write.mode("overwrite").parquet(tmp)
       }
+    }
     def pqLeg(width: Int): Unit = {
       spark.conf.set("spark.sql.shuffle.partitions",
         if (width > 0) width.toString else cpus.toString)
@@ -180,7 +191,7 @@ object AnnScaleProbe {
       s""""lsh_docs_per_sec":$lshF,"lsh_docs_per_sec_8wide":$lsh8,"lsh_scaling_efficiency":${eff(lshF, lsh8)},"lsh_recall":$lshRecall,""" +
       s""""ivf_cells":$ivfCells,"ivf_nprobe":${DedupCorpus.AnnProbe.IvfProbes},"ivf_train_sec":$ivfTrainSec,""" +
       s""""ivf_docs_per_sec":$ivfF,"ivf_docs_per_sec_8wide":$ivf8,"ivf_scaling_efficiency":${eff(ivfF, ivf8)},"ivf_recall":$ivfRecall,""" +
-      s""""ivfpq_m":${DedupCorpus.AnnProbe.PqM},"ivfpq_rerank":${DedupCorpus.AnnProbe.IvfPqRerank},"ivfpq_train_sec":$pqTrainSec,""" +
+      s""""ivfpq_m":${DedupCorpus.AnnProbe.PqM},"ivfpq_rerank":${DedupCorpus.AnnProbe.IvfPqRefine},"ivfpq_train_sec":$pqTrainSec,""" +
       s""""ivfpq_docs_per_sec":$pqF,"ivfpq_docs_per_sec_8wide":$pq8,"ivfpq_scaling_efficiency":${eff(pqF, pq8)},"ivfpq_recall":$pqRecall,""" +
       s""""ann_k":${DedupCorpus.AnnProbe.K},"trials":3}""")
     spark.stop()

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /**
  * Per-query optimization harness (guide §1): times individual SparkEntry
@@ -68,10 +68,12 @@ object BenchExtra {
         } catch { case e: Throwable => System.err.println(s"[explain] $name: ${e.getMessage}") }
       }
       val warm = timeIt(fn(spark, sfDir).count())
+      // listener events are async: drain the bus so the warm-up's events
+      // land before the reset and the trials' events before the read
+      GraftBridge.drainListenerBus(spark.sparkContext)
       jobs.set(0); stages.set(0); tasks.set(0)
       val ts = (1 to trials).map(_ => timeIt(fn(spark, sfDir).count()))
-      // listener events are async; small settle for accurate counts
-      Thread.sleep(100)
+      GraftBridge.drainListenerBus(spark.sparkContext)
       val (j, st, tk) = (jobs.get / trials, stages.get / trials, tasks.get / trials)
       System.err.println(f"[extra] $name%-28s min=${ts.min}%.3f med=${ts.sorted.apply(ts.size / 2)}%.3f warm=$warm%.3f  jobs=$j stages=$st tasks=$tk")
       (name, ts.min)

@@ -46,7 +46,7 @@ object ClusterBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val (secs, extra) = mode match {
+    val (secs, corpus, extra) = mode match {
       case "validate" =>
         val partitions = 256
         // validate a MATERIALIZED parquet table — the production shape
@@ -55,21 +55,13 @@ object ClusterBench {
         // in-JVM numbers are comparable. Inline generation (the previous
         // form) spent 60-75% of the timed path in the interpreted
         // span-building generator — harness cost, not engine cost.
-        // Same canonical path as Bench (corpus reused across protocols);
-        // temp-dir + atomic rename so concurrent JVMs race safely.
-        val docsPath = s"${DedupCorpus.benchRoot}/graft_bench_docs_$nDocs"
-        if (!new java.io.File(s"$docsPath/_SUCCESS").exists()) {
-          val tmp = s"${docsPath}_build_${java.util.UUID.randomUUID().toString.take(8)}"
+        // Same canonical path as Bench (corpus reused across protocols),
+        // written once with materialize's temp+rename; ~19 B/doc of
+        // parquet (64M docs measured 1.2 GB).
+        val docsPath = DedupCorpus.materialize(
+            s"${DedupCorpus.benchRoot}/graft_bench_docs_$nDocs", expectedBytes = nDocs * 20L) { tmp =>
           Docs.generate(spark, nDocs, numPartitions = partitions, corruptEvery = 1000)
             .write.mode("overwrite").parquet(tmp)
-          if (!new java.io.File(tmp).renameTo(new java.io.File(docsPath))) {
-            def rm(f: java.io.File): Unit = {
-              Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-            }
-            rm(new java.io.File(tmp))
-            require(new java.io.File(s"$docsPath/_SUCCESS").exists(),
-              s"docs materialization race left no usable table at $docsPath")
-          }
         }
         def job(): Long = {
           val docs = spark.read.parquet(docsPath)
@@ -104,7 +96,7 @@ object ClusterBench {
         val ctrl = (1 to 2).map { _ =>
           val t0 = System.nanoTime(); ctrlJob(); (System.nanoTime() - t0) / 1e9
         }.min
-        (trials, s""","control_sec":$ctrl,"control_docs_per_sec":${ctrlDocs / ctrl}""")
+        (trials, docsPath, s""","control_sec":$ctrl,"control_docs_per_sec":${ctrlDocs / ctrl}""")
       case "dedup" =>
         val path = DedupCorpus.ensure(spark, nDocs)
         var pairs = (0L, 0L)
@@ -140,7 +132,7 @@ object ClusterBench {
         val ctrl = (1 to 2).map { _ =>
           val t0 = System.nanoTime(); ctrlJob(); (System.nanoTime() - t0) / 1e9
         }.min
-        (trials, s""","minhash_pairs":${pairs._1},"simhash_pairs":${pairs._2},"expected_cluster_pairs":$expected,"control_sec":$ctrl,"control_docs_per_sec":${nDocs / ctrl}""")
+        (trials, path, s""","minhash_pairs":${pairs._1},"simhash_pairs":${pairs._2},"expected_cluster_pairs":$expected,"control_sec":$ctrl,"control_docs_per_sec":${nDocs / ctrl}""")
     }
 
     // prove the topology in-artifact: executor JVMs actually granted
@@ -154,7 +146,7 @@ object ClusterBench {
     val sec = secs.min
     spark.stop()
     val json =
-      s"""{"mode":"$mode","master":"$master","executors":$executors,"cores_max":"$coresMax","executor_cores":"$execCores","shuffle_partitions":$shufflePartitions,"docs":$nDocs,"sec":$sec,"docs_per_sec":${nDocs / sec},"trials":[${secs.mkString(",")}]$extra}"""
+      s"""{"mode":"$mode","master":"$master","executors":$executors,"cores_max":"$coresMax","executor_cores":"$execCores","shuffle_partitions":$shufflePartitions,"docs":$nDocs,"corpus":"$corpus","sec":$sec,"docs_per_sec":${nDocs / sec},"trials":[${secs.mkString(",")}]$extra}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
     println(json)
   }

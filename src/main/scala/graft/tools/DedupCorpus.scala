@@ -57,10 +57,6 @@ object DedupCorpus {
     * path so probes never reuse a stale /tmp corpus from another checkout. */
   private val FormulaVersion = 2 // v2 = nonlinear (seed, i) token mix
 
-  /** Materialize (once) and return the path of the n-doc probe corpus.
-    * Race-safe across concurrent JVMs (the two-JVM scaling protocol):
-    * writes to a private temp dir, then atomically renames into place —
-    * the loser of the rename just uses the winner's corpus. */
   /**
    * Root for materialized bench corpora: the ramdisk when available. The
    * scaling protocols' documented input shape is "page-cache-warm local
@@ -102,10 +98,7 @@ object DedupCorpus {
       write(tmp)
       if (!new java.io.File(tmp).renameTo(new java.io.File(target))) {
         // another JVM won the rename; discard ours
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(new java.io.File(tmp))
+        deleteTree(new java.io.File(tmp))
         require(done(target),
           s"corpus materialization race left no usable corpus at $target")
       }
@@ -113,6 +106,11 @@ object DedupCorpus {
     target
   }
 
+  private[tools] def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(deleteTree)); f.delete(): Unit
+  }
+
+  /** Materialize (once) and return the path of the n-doc probe corpus. */
   def ensure(spark: SparkSession, n: Long, degen: Long = 20000L): String =
     // ~200 B of text per doc; parquet compresses but budget the raw size
     materialize(s"$benchRoot/graft_dedup_corpus_v${FormulaVersion}_${n}_$degen",
@@ -121,7 +119,7 @@ object DedupCorpus {
     }
 
   /** THE probe parameterization — one definition shared by `graft.Bench`,
-    * `ScaleBench dedup`, `ABDedup`, and `StageProfile`, so the numbers the
+    * `ScaleBench dedup` and `ClusterBench dedup`, so the numbers the
     * BASELINE compares across protocols are of the same job by
     * construction. */
   object Probe {
@@ -189,7 +187,7 @@ object DedupCorpus {
     }
   }
 
-  /** ANN probe parameterization shared by Bench and any A/B tool. */
+  /** ANN probe parameterization shared by Bench and AnnScaleProbe. */
   object AnnProbe {
     val K = 10
     val Bits = 6
@@ -223,29 +221,15 @@ object DedupCorpus {
       graft.ops.Ann.ivfTopK(docs, queries(docs), "doc_id", "vec", "doc_id", "vec",
         k = K, centroids = cents, nProbe = nProbe)
 
-    // ---- PQ at the probe's dims: 32-dim float (128 B) → m = 8 codes.
-    // The timed leg is the compressed-domain ADC scan over a PERSISTED
-    // codes table + exact re-rank of the ADC top 10K — the production
-    // shape (codes encoded once, amortized like IVF training). Rerank is
-    // 10×K because the probe corpus is CLUSTERED: duplicate clusters put
-    // many near-tied scores around the top-k boundary, and the ADC
-    // quantization error (~0.03 cosine) cannot order ties — the refine
-    // stage can (rerank=3K read 0.69 recall here; 10K reads ~1.0 at the
-    // cost of 100 exact cosines per query).
+    // ---- PQ at the probe's dims: 32-dim float (128 B) → m = 8 codes of
+    // one byte each (`PqCodes` codewords per subspace).
     val PqM = 8
-    val PqRerank = 10 * K
+    val PqCodes = 256
     val PqSampleN = 20000
     val PqIters = 5
     def trainPq(docs: DataFrame): graft.ops.Pq.PqModel =
-      graft.ops.Pq.train(docs, "doc_id", "vec", m = PqM, sampleN = PqSampleN,
-        iters = PqIters)
-    def pq(docs: DataFrame, model: graft.ops.Pq.PqModel): DataFrame =
-      graft.ops.Pq.topK(docs, queries(docs), "doc_id", "vec", "doc_id", "vec",
-        k = K, model, rerank = PqRerank)
-    def pqFromCodes(codes: DataFrame, docs: DataFrame,
-        model: graft.ops.Pq.PqModel): DataFrame =
-      graft.ops.Pq.topKFromCodes(codes, docs, queries(docs), "doc_id", "vec",
-        "doc_id", "vec", k = K, model, rerank = PqRerank)
+      graft.ops.Pq.train(docs, "doc_id", "vec", m = PqM, codesPerSub = PqCodes,
+        sampleN = PqSampleN, iters = PqIters)
 
     // ---- IVF×PQ: both dials composed (candidate count = nProbe·√n via
     // IVF cells, candidate bytes = m codes via PQ, exact re-rank on top).
@@ -254,7 +238,7 @@ object DedupCorpus {
     // within the ADC error band of the rank-K boundary — the full-scan PQ
     // leg measured recall 0.139 at 1M docs because of exactly this), and
     // 1000 exact cosines per query is still ~0.1% of the corpus.
-    val IvfPqRerank = 1000
+    val IvfPqRefine = 1000
     def encodeIvfPq(docs: DataFrame, cents: Array[Array[Double]],
         model: graft.ops.Pq.PqModel): DataFrame =
       graft.ops.Pq.encodeWithCells(docs, "doc_id", "vec", cents, model)
@@ -262,7 +246,7 @@ object DedupCorpus {
         cents: Array[Array[Double]], model: graft.ops.Pq.PqModel): DataFrame =
       graft.ops.Pq.ivfPqFromCodes(enc, docs, queries(docs), "doc_id", "vec",
         "doc_id", "vec", k = K, cents, nProbe = IvfProbes, model,
-        rerank = IvfPqRerank)
+        rerank = IvfPqRefine)
   }
 
   /** True exact-duplicate pair count outside the degenerate shard. */

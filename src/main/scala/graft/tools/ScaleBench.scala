@@ -60,7 +60,7 @@ object ScaleBench {
     val sec = secs.min
     val expected = DedupCorpus.expectedClusterPairs(nDocs)
     spark.stop()
-    val json = s"""{"cores":$cores,"docs":$nDocs,"sec":$sec,"docs_per_sec":${nDocs / sec},"minhash_pairs":${pairs._1},"simhash_pairs":${pairs._2},"expected_cluster_pairs":$expected,"trials":[${secs.mkString(",")}]}"""
+    val json = s"""{"cores":$cores,"docs":$nDocs,"corpus":"$path","sec":$sec,"docs_per_sec":${nDocs / sec},"minhash_pairs":${pairs._1},"simhash_pairs":${pairs._2},"expected_cluster_pairs":$expected,"trials":[${secs.mkString(",")}]}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
     println(json)
   }
@@ -136,7 +136,8 @@ object ScaleBench {
     }
     val sec = secs.min
     spark.stop()
-    val json = s"""{"cores":$cores,"docs":$nDocs,"sec":$sec,"docs_per_sec":${nDocs / sec},"partitions":$partitions,"trials":[${secs.mkString(",")}]}"""
+    // docs are generated inline, so no materialized corpus backs this run
+    val json = s"""{"cores":$cores,"docs":$nDocs,"corpus":null,"sec":$sec,"docs_per_sec":${nDocs / sec},"partitions":$partitions,"trials":[${secs.mkString(",")}]}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outJson), json)
     println(json)
   }

@@ -12,6 +12,10 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Block until every event posted so far has reached the listeners
+    * (`SparkContext.listenerBus` is `private[spark]`). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Register a SQL function builder into an EXISTING session's registry
     * (the post-hoc form of `SparkSessionExtensions.injectFunction`). */
   def registerFunction(spark: SparkSession, name: String, usage: String,

@@ -370,18 +370,6 @@ class DedupSpec extends SparkTestBase {
       "minhashNearDups left a DataFrame pinned in the cache manager")
   }
 
-  test("minhash narrow (carrySig=false) equals wide variant exactly") {
-    val docs = graft.tools.DedupCorpus.generate(spark, 2000, 8, degen = 300)
-    def run(carry: Boolean) =
-      Dedup.minhashNearDups(docs, "doc_id", "text", numHashes = 32, bands = 8,
-          threshold = 0.9, maxBucket = 60, carrySig = carry)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val wide = run(true)
-    val narrow = run(false)
-    assert(wide === narrow)
-    assert(wide.nonEmpty) // the exact-dup clusters at minimum
-  }
-
   test("near-dup plans are one wide shuffle + a pairs-only dedup exchange") {
     val df = corpus(30)
     for ((name, plan) <- Seq(

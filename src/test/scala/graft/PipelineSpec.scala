@@ -629,7 +629,7 @@ class PipelineSpec extends SparkTestBase {
         .option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "AvailableNow windowed summary did not terminate")
     }
     runOnce()
     // append-mode windowed agg emits only watermark-closed windows; a second
@@ -731,7 +731,7 @@ class PipelineSpec extends SparkTestBase {
       val q = hits.toDF.writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+      assert(q.awaitTermination(120000), "AvailableNow near-dup pairs did not terminate")
     }
     runOnce()
     assert(spark.read.parquet(outDir).count() === 0, "distinct docs must not pair")
@@ -764,13 +764,13 @@ class PipelineSpec extends SparkTestBase {
     val validated = graft.streaming.ValidateStream.validate(stream, plan)
     val q = graft.streaming.ValidateStream
       .writeViolations(validated, "doc_id", outDir, ckpt).start()
-    q.awaitTermination(60000)
+    assert(q.awaitTermination(60000), "AvailableNow violations sink did not terminate")
     val written = spark.read.parquet(outDir)
     assert(written.count() === 4)
     // re-run with same checkpoint: no duplicates
     val q2 = graft.streaming.ValidateStream
       .writeViolations(validated, "doc_id", outDir, ckpt).start()
-    q2.awaitTermination(60000)
+    assert(q2.awaitTermination(60000), "AvailableNow violations sink re-run did not terminate")
     assert(spark.read.parquet(outDir).count() === 4)
   }
 

@@ -6,8 +6,9 @@ import graft.exec.ValidationRunner
 /**
  * Physical-plan regression guards: the scale properties the 100-TB design
  * depends on, pinned as tests so a refactor cannot silently lose them.
- * (`explain("formatted")` review found these once — PlanAudit; these tests
- * keep them found.)
+ * (`explain("formatted")` review found these once — `tools.BenchExtra`
+ * writes those plans for every query via `SPARK_GRAFT_EXPLAIN_DIR`; these
+ * tests keep them found.)
  */
 class PlanGuardSpec extends SparkTestBase {
 
