@@ -66,10 +66,15 @@ class PipelineSpec extends SparkTestBase {
     var fourth = 0
     mgr.runResumable(docs, "bucket", Seq(0, 1, 2, 3), df => { fourth += 1; process(df) })
     assert(fourth === 0) // resume unaffected by the torn staging file
-    // every published lineage file is a complete single-file commit
-    val lineageFiles = new java.io.File(s"$root/lineage")
-      .listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(lineageFiles.nonEmpty && lineageFiles.forall(_.getName.startsWith("commit-")))
+    // every entry in lineage/ is a published commit marker (or its local-FS
+    // checksum sidecar), and the markers name exactly the committed buckets
+    val (markers, sidecars) = new java.io.File(s"$root/lineage").listFiles().toSeq
+      .partition(!_.getName.startsWith("."))
+    assert(markers.nonEmpty && markers.forall(_.getName.startsWith("commit-")))
+    assert(sidecars.map(_.getName).toSet.subsetOf(markers.map(f => s".${f.getName}.crc").toSet))
+    import scala.jdk.CollectionConverters._
+    val ids = markers.flatMap(f => java.nio.file.Files.readAllLines(f.toPath).asScala.map(_.trim.toInt))
+    assert(ids.sorted === Seq(0, 1, 2, 3))
   }
 
   test("checkpoint: sketch accumulators survive crash-resume and merge to the whole-run digest") {

@@ -10,6 +10,8 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
+  val LogLevel = "WARN"
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -19,7 +21,7 @@ object SparkTestBase {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    s.sparkContext.setLogLevel(LogLevel)
     s
   }
 }
