@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.spec._
 import graft.compile.SpecCompiler
-import graft.exec.ValidationRunner
+import graft.exec.{Par, ValidationRunner}
 import graft.io.Docs
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
@@ -92,22 +92,6 @@ object SparkEntry {
       .where(col("tk_a") === col("tk_b"))
       .select("id_a", "id_b")
     (withDups, verified)
-  }
-
-  /** Run two independent driver actions on concurrent threads (guide-style
-    * job overlap): wall time becomes max(a, b) instead of a + b. Results
-    * and failures propagate unchanged. */
-  private def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
-    @volatile var a: Option[A] = None
-    @volatile var err: Option[Throwable] = None
-    val t = new Thread(() => {
-      try a = Some(fa) catch { case e: Throwable => err = Some(e) }
-    }, "graft-parallel-leg")
-    t.start()
-    val b = fb
-    t.join()
-    err.foreach(e => throw e)
-    (a.get, b)
   }
 
   /** Flagship: validate the canonical interleaved-doc domain + the driver's
@@ -489,11 +473,11 @@ object SparkEntry {
       // 0.95 at sf0.01). The clustered 100k bench corpus shows the real
       // dial: recall ≥0.9 at nProbe=8 ≪ √n cells (BENCH ivf_nprobe_recall).
       // the brute oracle is independent of the IVF leg's count+train+probe
-      // chain — run the two legs on concurrent threads (sets are ≤100 rows)
-      val (bruteSet, ivfSet) = inParallel(
-        neighborSet(graft.ops.Ann.bruteTopK(docs, queries, "vec_id", "embedding",
+      // chain — run the two legs concurrently (sets are ≤100 rows)
+      val Seq(bruteSet, ivfSet) = Par.run(s.sparkContext, "s_ann_ivf_recall", Seq(
+        () => neighborSet(graft.ops.Ann.bruteTopK(docs, queries, "vec_id", "embedding",
           "vec_id", "embedding", k = 5)),
-        {
+        () => {
           val n = docs.count()
           val nCells = math.max(4, math.round(math.sqrt(n.toDouble)).toInt)
           val nProbe = math.max(8, (nCells * 3 + 3) / 4)
@@ -501,7 +485,7 @@ object SparkEntry {
             nCells = nCells, sampleN = math.max(nCells * 40, 2000), iters = 10)
           neighborSet(graft.ops.Ann.ivfTopK(docs, queries, "vec_id", "embedding",
             "vec_id", "embedding", k = 5, centroids = cents, nProbe = nProbe))
-        })
+        }))
       val total = bruteSet.size
       val recall = if (total == 0) 0.0 else ivfSet.intersect(bruteSet).size.toDouble / total
       Seq(((if (recall >= 0.9) 1L else 0L), (if (total > 0) 1L else 0L)))
@@ -519,14 +503,14 @@ object SparkEntry {
       val docs = t(s, dir, "embeddings")
       val queries = docs.where(col("vec_id") < 20)
       // brute oracle runs concurrently with PQ train + compressed scan
-      val (bruteSet, pqSet) = inParallel(
-        neighborSet(graft.ops.Ann.bruteTopK(docs, queries, "vec_id", "embedding",
+      val Seq(bruteSet, pqSet) = Par.run(s.sparkContext, "s_ann_pq_recall", Seq(
+        () => neighborSet(graft.ops.Ann.bruteTopK(docs, queries, "vec_id", "embedding",
           "vec_id", "embedding", k = 5)),
-        {
+        () => {
           val model = graft.ops.Pq.train(docs, "vec_id", "embedding", m = 8, iters = 10)
           neighborSet(graft.ops.Pq.topK(docs, queries, "vec_id", "embedding",
             "vec_id", "embedding", k = 5, model, rerank = 25))
-        })
+        }))
       val total = bruteSet.size
       val recall = if (total == 0) 0.0 else pqSet.intersect(bruteSet).size.toDouble / total
       Seq(((if (recall >= 0.9) 1L else 0L), (if (total > 0) 1L else 0L)))
@@ -648,9 +632,9 @@ object SparkEntry {
       val orders = t(s, dir, "orders")
         .withColumn("grp", when(col("o_orderstatus") === "F", "a").otherwise("b"))
       // the sketch and exact legs are independent jobs — overlap them
-      val (sk, ex) = inParallel(
-        graft.exec.Drift.ksTest(orders, "o_totalprice", "grp", "a", "b"),
-        graft.exec.Drift.ksTestExact(orders, "o_totalprice", "grp", "a", "b"))
+      val Seq(sk, ex) = Par.run(s.sparkContext, "v_drift_ks_sketch_err", Seq(
+        () => graft.exec.Drift.ksTest(orders, "o_totalprice", "grp", "a", "b"),
+        () => graft.exec.Drift.ksTestExact(orders, "o_totalprice", "grp", "a", "b")))
       Seq(((if (math.abs(sk.statistic - ex.statistic) <= 0.02) 1L else 0L),
         (if (ex.n1 > 0 && ex.n2 > 0) 1L else 0L)))
         .toDF("within_tol", "has_rows")

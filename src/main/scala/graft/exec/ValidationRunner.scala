@@ -117,62 +117,47 @@ object ValidationRunner {
       .toDF("field", "n_present", "n_docs")
   }
 
+  /** The five stats aggregates of column `c`, aliased `<c>__<stat>`. */
+  private def statAggs(c: String, exactDistinct: Boolean): Seq[Column] = Seq(
+    count(lit(1)).as(s"${c}__cnt"),
+    sum(col(c).isNull.cast(LongType)).as(s"${c}__nulls"),
+    min(col(c).cast(StringType)).as(s"${c}__min"),
+    max(col(c).cast(StringType)).as(s"${c}__max"),
+    (if (exactDistinct) count_distinct(col(c)) else approx_count_distinct(col(c)))
+      .as(s"${c}__distinct"))
+
   /**
-   * Per-column stats in one pass: count / null-count / min / max /
-   * approx-distinct (HyperLogLog++) — SURVEY.md §2.D row 1-2. One job, one
-   * final aggregate; output long-format (one row per column) so the report
-   * schema is stable regardless of the input schema.
-   *
-   * All metrics are computed in a single `agg` (Catalyst fuses them into one
-   * partial+final hash aggregate), then unpivoted driver-side from the one
-   * result row — NOT one job per column.
+   * Per-column stats: count / null-count / min / max / distinct (SURVEY.md
+   * §2.D row 1-2), long-format (one row per column) so the report schema is
+   * stable regardless of the input schema. Approximate distincts (HLL++)
+   * take ONE job for all columns; `exactDistinct = true` takes one job per
+   * column, overlapped through [[Par]].
    */
   def columnStats(df: DataFrame, cols: Seq[String], exactDistinct: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    def aggsFor(c: String): Seq[Column] = Seq(
-      count(lit(1)).as(s"${c}__cnt"),
-      sum(col(c).isNull.cast(LongType)).as(s"${c}__nulls"),
-      min(col(c).cast(StringType)).as(s"${c}__min"),
-      max(col(c).cast(StringType)).as(s"${c}__max"),
-      (if (exactDistinct) count_distinct(col(c)) else approx_count_distinct(col(c)))
-        .as(s"${c}__distinct"))
     val stats: Seq[(String, Seq[Any])] =
       if (!exactDistinct) {
         // HLL sketches partial-aggregate, so ONE pass over all columns is
         // strictly cheapest — the production path at unbounded scale.
-        val aggs = cols.flatMap(aggsFor)
-        val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-        cols.zipWithIndex.map { case (c, i) => c -> (0 until 5).map(j => row.get(i * 5 + j)) }
+        val aggs = cols.flatMap(statAggs(_, exactDistinct))
+        cols.zip(df.agg(aggs.head, aggs.tail: _*).collect()(0).toSeq.grouped(5))
       } else {
         // EXACT distincts over N columns in one agg make Catalyst Expand
         // every input row N-fold before the first shuffle — at 10^12 rows
         // that N× row blowup is the dominant cost of the audit path. N
         // per-column aggregates read the SAME total bytes from columnar
         // storage (each column scanned once, pruned to itself) with no
-        // Expand; submitting them from concurrent driver threads overlaps
-        // their stages, so wall time is max, not sum.
-        val out = new Array[Seq[Any]](cols.size)
-        @volatile var err: Option[Throwable] = None
-        val threads = cols.zipWithIndex.map { case (c, i) =>
-          val t = new Thread(() => {
-            try {
-              val a = aggsFor(c)
-              val row = df.select(col(c)).agg(a.head, a.tail: _*).collect()(0)
-              out(i) = (0 until 5).map(row.get)
-            } catch { case e: Throwable => err = Some(e) }
-          }, s"colstats-$c")
-          t.start(); t
-        }
-        threads.foreach(_.join())
-        err.foreach(e => throw e)
-        cols.zipWithIndex.map { case (c, i) => c -> out(i) }
+        // Expand; running them as concurrent Par legs overlaps their
+        // stages, so wall time is max, not sum, up to Par.MaxInFlight.
+        cols.zip(Par.run(spark.sparkContext, "columnStats", cols.map(c => () => {
+          val a = statAggs(c, exactDistinct)
+          df.select(col(c)).agg(a.head, a.tail: _*).collect()(0).toSeq
+        })))
       }
     stats.map { case (c, s) =>
       (c, s(0).asInstanceOf[Long], s(1).asInstanceOf[Long],
-        Option(s(2)).map(_.toString).orNull,
-        Option(s(3)).map(_.toString).orNull,
-        s(4).asInstanceOf[Long])
+        s(2).asInstanceOf[String], s(3).asInstanceOf[String], s(4).asInstanceOf[Long])
     }.toDF("column", "cnt", "nulls", "min_s", "max_s", "n_distinct")
   }
 
@@ -185,15 +170,7 @@ object ValidationRunner {
    */
   def columnStatsByGroup(df: DataFrame, groupCol: String, cols: Seq[String],
       exactDistinct: Boolean = false): DataFrame = {
-    val aggs: Seq[Column] = cols.flatMap { c =>
-      Seq(
-        count(lit(1)).as(s"${c}__cnt"),
-        sum(col(c).isNull.cast(LongType)).as(s"${c}__nulls"),
-        min(col(c).cast(StringType)).as(s"${c}__min"),
-        max(col(c).cast(StringType)).as(s"${c}__max"),
-        (if (exactDistinct) count_distinct(col(c)) else approx_count_distinct(col(c)))
-          .as(s"${c}__distinct"))
-    }
+    val aggs = cols.flatMap(statAggs(_, exactDistinct))
     val wide = df.groupBy(col(groupCol)).agg(aggs.head, aggs.tail: _*)
     // unpivot: one struct per column, exploded distributedly
     val entries = cols.map { c =>

@@ -44,10 +44,11 @@ object Dedup {
    * skewed exact-dup group (boilerplate/templated pages — 10⁸ rows of one
    * text at web scale) would land a window's whole group on ONE task's
    * sort, while `groupBy(hash)` collapses the dup mass map-side before the
-   * shuffle. The removal set (non-representative members of dup groups) is
-   * the duplicated mass — a few percent of a real corpus — so the final
-   * anti-join broadcasts under AQE and the full rows (text included) are
-   * never shuffled at all; the two narrow passes shuffle only (hash, id).
+   * shuffle; the two narrow passes shuffle only (hash, id). The removal
+   * set (the dup mass, a few percent of a real corpus) is far too big to
+   * broadcast at 10¹² rows, and nothing relies on a broadcast: the shape is
+   * safe because the anti-join key is the unique id, so no hot key routes
+   * full rows to one task.
    * `idCol` is assumed unique per row (the dedup key contract; duplicate
    * (text, id) carriers are all representatives of their group).
    */
@@ -61,10 +62,9 @@ object Dedup {
       .agg(min(col("_id")).as("_rep"), count(lit(1)).as("_n"))
       .where(col("_n") > 1)
       .select(col("_ch"), col("_rep"))
-    // removal set = non-representative members of dup groups (the dup MASS,
-    // a few percent of a real corpus → broadcastable); the final anti-join
-    // is keyed on the unique id, so no content-hash hot key ever routes
-    // full rows to one task (the window form's failure mode)
+    // removal set = non-representative members of dup groups; the final
+    // anti-join is keyed on the unique id, so no content-hash hot key ever
+    // routes full rows to one task (the window form's failure mode)
     val removals = narrow.join(dupGroups, "_ch")
       .where(col("_id") =!= col("_rep"))
       .select(col("_id").as(idCol))
@@ -144,26 +144,18 @@ object Dedup {
    *
    * Returns (id_a, id_b, sig_sim) with id_a < id_b, sig_sim ≥ threshold.
    *
-   * ONE-SHUFFLE shape (round 4): the whole pipeline is
+   * ONE-SHUFFLE shape: the whole pipeline is
    *
    *   scan → sig + band keys (one codegen stage) → explode(bands)
    *        → groupBy(bucket).collect_list(struct(id, sig))   [the shuffle]
    *        → size(items) ≤ cap filter → [[graft.functions.MinhashPairs]]
    *        → dropDuplicates(id_a, id_b)                      [pairs-only]
    *
-   * The r3 form (bucketed self-join + cap aggregate-join + two signature
-   * re-joins against a persisted sig table) evaluated the banding pipeline
-   * twice (the join sides differ in projection, so no exchange reuse) and
-   * read the cache ~5×; this form computes each signature exactly once,
-   * caches nothing, and touches each (id, sig) row once per band in a
-   * single exchange. The bucket cap is a free `size` filter on the
-   * collected list (report dropped buckets via [[overflowBuckets]]), and
-   * verification runs inside the generator, so rejected candidates never
-   * materialize as rows. The second (pair-dedup) exchange carries only
-   * verified pairs. Band index is hashed INTO the bucket key, so the key is
-   * a single long; a cross-band key collision merely merges two buckets —
-   * extra candidates are then signature-verified, so the result is
-   * unchanged w.h.p. (2⁻⁶⁴-scale).
+   * Each signature is computed once and nothing is cached. Report buckets
+   * dropped by the cap via [[overflowBuckets]]. Band index is hashed INTO
+   * the bucket key, so the key is a single long; a cross-band key
+   * collision merely merges two buckets — extra candidates are then
+   * signature-verified, so the result is unchanged w.h.p. (2⁻⁶⁴-scale).
    *
    * At cluster scale nothing here needs persistence or checkpointing: the
    * output is a plain DataFrame — write it to a table for durability.
@@ -183,18 +175,22 @@ object Dedup {
     // long-hash codegen computed in the SAME stage as the signature (no
     // separate pass, no cached table to re-read). Band indices are
     // literals, so each slot is an O(1) element_at on the materialized sig
-    // column.
-    val bandKeys = bandKeyCols(col("sig"), numHashes, bands)
-    val banded = withSig.select(col("id"), col("sig"),
-      explode(array(bandKeys: _*)).as("bucket"))
-    val buckets = banded.groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("sig"))).as("items"))
+    // column. The same pair may collide in several bands.
+    bucketPairs(withSig, "sig", bandKeyCols(col("sig"), numHashes, bands), maxBucket,
+      graft.functions.HashExpressions.minhashPairs(_, numHashes, threshold), "sig_sim")
+  }
+
+  /** The bucket → pairs tail all near-dup pipelines share (see the object
+    * doc): `base` is `(id, <payload>)`; `maxBucket <= 0` keeps every bucket;
+    * `pairs` maps a bucket's items to `(id_a, id_b, <metric>)` rows. */
+  private def bucketPairs(base: DataFrame, payload: String, keys: Seq[Column],
+      maxBucket: Int, pairs: Column => Column, metric: String): DataFrame = {
+    val buckets = base.select(col("id"), col(payload), explode(array(keys: _*)).as("bucket"))
+      .groupBy("bucket")
+      .agg(collect_list(struct(col("id"), col(payload))).as("items"))
     val capped = if (maxBucket > 0) buckets.where(size(col("items")) <= maxBucket) else buckets
-    capped
-      .select(graft.functions.HashExpressions
-        .minhashPairs(col("items"), numHashes, threshold)
-        .as(Seq("id_a", "id_b", "sig_sim")))
-      .dropDuplicates("id_a", "id_b") // same pair may collide in several bands
+    capped.select(pairs(col("items")).as(Seq("id_a", "id_b", metric)))
+      .dropDuplicates("id_a", "id_b")
   }
 
   /**
@@ -265,21 +261,12 @@ object Dedup {
     // one key per (k−d)-combination: xxhash64 over (combo index, the combo's
     // block values) — pure long-hash codegen in the signature's stage; the
     // combo index is hashed INTO the key so one long keys the whole table
-    // set (same one-shuffle groupBy + generator shape as
-    // [[minhashNearDups]]; the sig payload here is a single long)
+    // set (the sig payload here is a single long)
     val keys = combos.zipWithIndex.map { case (combo, ci) =>
       xxhash64((lit(ci.toLong) +: combo.map(i => blockVal(col("sig"), i))): _*)
     }
-    val blocked = withSig.select(col("id"), col("sig"),
-      explode(array(keys: _*)).as("bucket"))
-    val buckets = blocked.groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("sig"))).as("items"))
-    val capped = if (maxBucket > 0) buckets.where(size(col("items")) <= maxBucket) else buckets
-    capped
-      .select(graft.functions.HashExpressions
-        .hammingPairs(col("items"), maxHamming)
-        .as(Seq("id_a", "id_b", "hamming")))
-      .dropDuplicates("id_a", "id_b")
+    bucketPairs(withSig, "sig", keys, maxBucket,
+      graft.functions.HashExpressions.hammingPairs(_, maxHamming), "hamming")
   }
 
   /** Pairwise word-set Jaccard similarity for candidate pairs (verification step). */
@@ -328,22 +315,13 @@ object Dedup {
       threshold: Double = 0.95, lshBits: Int = 8, probes: Int = 2,
       maxBucket: Int = 100000): DataFrame = {
     val base = df.select(col(idCol).as("id"), Vectors.normalize(col(vecCol)).as("v"))
-    // probe index hashed INTO the bucket key (same one-shuffle groupBy +
-    // generator shape as [[minhashNearDups]]); cosine of pre-normalized
+    // probe index hashed INTO the bucket key; cosine of pre-normalized
     // vectors = ascending-order dot, computed inside the generator —
     // bit-identical to the Vectors.dot Column form
     val probeKeys = (0 until probes).map(s =>
       xxhash64(lit(s), Vectors.signBits(col("v"), lshBits, seed = 42 + s)))
-    val bucketed = base.select(col("id"), col("v"),
-      explode(array(probeKeys: _*)).as("bucket"))
-    val buckets = bucketed.groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col("v"))).as("items"))
-    val capped = if (maxBucket > 0) buckets.where(size(col("items")) <= maxBucket) else buckets
-    capped
-      .select(graft.functions.HashExpressions
-        .cosinePairs(col("items"), threshold)
-        .as(Seq("id_a", "id_b", "cos")))
-      .dropDuplicates("id_a", "id_b")
+    bucketPairs(base, "v", probeKeys, maxBucket,
+      graft.functions.HashExpressions.cosinePairs(_, threshold), "cos")
   }
 
   /**
@@ -424,7 +402,7 @@ object Dedup {
         iter += 1
       }
       if (!converged) {
-        throw new IllegalArgumentException(
+        throw new NotConverged(
           s"connectedComponents did not converge in $maxIter rounds — raise maxIter " +
             "(component diameter exceeds the bound); an unconverged labeling under-merges")
       }
@@ -526,28 +504,34 @@ object Dedup {
       .localCheckpoint(false) // caller's first action materializes it
   }
 
+  /** Non-convergence of [[connectedComponents]]: the one failure that
+    * [[connectedComponentsAuto]] retries (not, say, a non-numeric id cast). */
+  private final class NotConverged(msg: String) extends IllegalArgumentException(msg)
+
+  private val AutoLpRounds = 8
+
   /**
    * Auto-dispatching components: label propagation first with a SMALL
    * round bound (near-dup graphs are near-cliques — 2-4 rounds typical,
    * and LP's per-round cost is lower than a star round), falling back to
    * [[connectedComponentsStar]] when the bound trips (deep drift chains).
-   * The wasted LP rounds are `lpRounds` cheap label joins — insurance
-   * priced at a few scans of the (node,label) state, never quadratic.
+   * The wasted LP rounds are [[AutoLpRounds]] cheap label joins —
+   * insurance priced at a few scans of the (node,label) state, never
+   * quadratic. Any other failure propagates from the first attempt.
    */
   def connectedComponentsAuto(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", lpRounds: Int = 8): DataFrame =
-    try connectedComponents(pairs, aCol, bCol, maxIter = lpRounds)
+      bCol: String = "id_b"): DataFrame =
+    try connectedComponents(pairs, aCol, bCol, maxIter = AutoLpRounds)
     catch {
-      case _: IllegalArgumentException =>
-        connectedComponentsStar(pairs, aCol, bCol)
+      case _: NotConverged => connectedComponentsStar(pairs, aCol, bCol)
     }
 
   /**
    * Remove near-duplicates given their pair set: keep one representative
    * (the minimum id) per connected component, plus every unpaired doc.
-   * The anti-join side is the REMOVAL set (paired non-representatives) —
-   * at real dup rates a few percent of the corpus, so AQE's broadcast
-   * decision usually makes this a map-side filter over the big table.
+   * The anti-join side is the REMOVAL set (paired non-representatives),
+   * keyed on the unique id: small removal sets broadcast under AQE, large
+   * ones sort-merge without skew.
    * Components come from [[connectedComponentsAuto]], so a pathological
    * pair set (drift chains) degrades to more rounds, never to a wrong
    * or failed labeling.

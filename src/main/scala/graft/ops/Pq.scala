@@ -58,22 +58,14 @@ object Pq {
       val n = math.sqrt(v.map(x => x * x).sum)
       if (n == 0.0) v else v.map(_ / n)
     }
-    // The m subspace quantizers are independent — train them on driver
-    // threads in parallel. Each subspace's Lloyd's run is the exact
-    // sequential computation (deterministic init, fixed iteration order),
-    // so the codebooks are bit-identical to the serial form regardless of
-    // thread scheduling; only the wall time changes (sampleN × codes ×
-    // dsub × iters flops per subspace, serial cost m× that).
-    val codebooks = new Array[Array[Array[Double]]](m)
-    val workers = (0 until m).map { j =>
-      val t = new Thread(() => {
+    // The m subspace quantizers are independent legs; each Lloyd's run is
+    // deterministic, so the codebooks equal the serial form's.
+    val codebooks = graft.exec.Par.run(docs.sparkSession.sparkContext, "Pq.train",
+      (0 until m).map(j => () => {
         val sub = normed.map(v => java.util.Arrays.copyOfRange(v, j * dsub, (j + 1) * dsub))
-        codebooks(j) = Ann.lloyds(sub, math.min(codesPerSub, sub.length), iters)
-      }, s"pq-train-$j")
-      t.start(); t
-    }
-    workers.foreach(_.join())
-    PqModel(m, dsub, codebooks)
+        Ann.lloyds(sub, math.min(codesPerSub, sub.length), iters)
+      }))
+    PqModel(m, dsub, codebooks.toArray)
   }
 
   /** Per-subspace code assignment column for a (normalized) vector column:

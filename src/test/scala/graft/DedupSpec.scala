@@ -151,6 +151,19 @@ class DedupSpec extends SparkTestBase {
     assert(keptChain.count() === 1L)
   }
 
+  test("connectedComponentsAuto does not rerun a failed cast through the star form") {
+    val spark0 = spark
+    import spark0.implicits._
+    // an ANSI cast of a non-numeric id throws an IllegalArgumentException
+    // subclass; only non-convergence may fall back to star
+    val pairs = Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b")
+    val e = intercept[Exception](Dedup.connectedComponentsAuto(pairs).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[NumberFormatException]), e.toString)
+    assert(!e.getStackTrace.exists(_.getMethodName.contains("connectedComponentsStar")),
+      "the cast failure was retried through connectedComponentsStar")
+  }
+
   test("exact dedup: skewed corpus (one group ~10% of rows) keeps min-id representative") {
     val spark0 = spark
     import spark0.implicits._
