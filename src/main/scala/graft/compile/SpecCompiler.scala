@@ -314,57 +314,13 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
    * Exact violation details: `array<struct<rule,path,detail>>` (report
    * path). Repeated record fields whose rules are natively representable
    * compile to [[StructArrayRuleDetail]] (one pass, allocations only when a
-   * rule fires) — the detail twin of the count form's native path; entry
-   * ORDER may differ from the generic concat (absorbed row rules emit
-   * inline per element), so equivalence with [[violationsGeneric]] is as
-   * multisets (what violationRows and the driver's sorted compare consume).
+   * rule fires); entry ORDER may differ from the generic concat (absorbed
+   * row rules emit inline per element), so equivalence with
+   * [[violationsGeneric]] is as multisets (what violationRows and the
+   * driver's sorted compare consume).
    */
-  lazy val violations: Column = {
-    val detailByField: Map[String, (Seq[DetailRule], Set[RowRule])] =
-      rootRecord.fields.flatMap { f =>
-        nativeArrayRules(f).map { baseRules =>
-          val elemFields = resolveDef(unalias(f.tpe)._1)
-            .collect { case RecordDef(_, fs) => fs }.getOrElse(Nil)
-          val base = baseRules.map {
-            case r @ RuleNotNull(f2) => DetailRule(r,
-              s"missing-field:${f.name}.$f2", s"${f.name}[", s"].$f2",
-              "required field is missing")
-            case r @ RuleInSet(f2, _) => DetailRule(r,
-              s"unknown-enum:${f.name}.$f2", s"${f.name}[", s"].$f2")
-            case r @ RuleRange(f2, _, _) => DetailRule(r,
-              s"range:${f.name}.$f2", s"${f.name}[", s"].$f2")
-            case r @ RuleRangeDecimal(f2, _, _) => DetailRule(r,
-              s"range:${f.name}.$f2", s"${f.name}[", s"].$f2")
-            case r @ RuleExactlyOne(_) => DetailRule(r, // not produced by nativeArrayRules
-              s"exactly-one:${f.name}", s"${f.name}[", "]")
-            case r @ RuleIncreasing(fld) => DetailRule(r,
-              s"order:${f.name}", f.name, "", s"$fld must be strictly increasing")
-          }
-          val absorbed = spec.rowRules.flatMap(r =>
-            absorbableRowRule(r, f.name, elemFields).map(ar => r -> ar))
-          val absRules = absorbed.map {
-            case (ExactlyOneOf(n, _), ar) =>
-              DetailRule(ar, s"exactly-one:$n", s"${f.name}[", "]")
-            case (AtMostOneOf(n, _), ar) =>
-              DetailRule(ar, s"at-most-one:$n", s"${f.name}[", "]")
-            case (StrictlyIncreasing(n, _, fld), ar) =>
-              DetailRule(ar, s"order:$n", f.name, "",
-                s"$fld must be strictly increasing")
-          }
-          f.name -> ((base ++ absRules, absorbed.map(_._1).toSet))
-        }
-      }.toMap
-    val absorbedRowRules: Set[RowRule] = detailByField.values.flatMap(_._2).toSet
-    val fieldCols: Seq[Column] = rootRecord.fields.flatMap { f =>
-      detailByField.get(f.name) match {
-        case Some((rules, _)) => Seq(StructArrayRuleDetail.column(col(f.name), rules))
-        case None => fieldVios(DetailEmitter, f, col(f.name), f.name, lit(true), rootSeen)
-      }
-    }
-    val rowCols = spec.rowRules.filterNot(absorbedRowRules)
-      .flatMap(r => rowRuleVios(DetailEmitter, r))
-    DetailEmitter.combine(fieldCols ++ rowCols).as("violations")
-  }
+  lazy val violations: Column =
+    nativeWalk(DetailEmitter, StructArrayRuleDetail.column).as("violations")
 
   /** Generic (HOF) detail form — equivalence-test reference / fallback. */
   lazy val violationsGeneric: Column = rootWalk(DetailEmitter).as("violations")
@@ -378,38 +334,42 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
     rootWalk(DetailEmitter, resolve)
   }
 
-  // ---------- native fast path for the count form ----------
+  // ---------- native rule programs (both forms) ----------
 
   /**
    * Try to compile ALL of a repeated record field's element rules into a
-   * native [[StructArrayRuleCount]] rule program (single codegen'd pass,
-   * no higher-order functions). Conservative: any rule shape the native
-   * counter can't represent bit-exactly → None → generic Column fallback.
+   * native rule program (single pass, no higher-order functions).
+   * Conservative: any rule shape the native expressions can't represent
+   * bit-exactly → None → generic Column fallback.
    */
-  private def nativeArrayRules(f: PField): Option[Seq[ArrayRule]] = {
+  private def nativeArrayRules(f: PField): Option[Seq[DetailRule]] = {
     if (f.mode != Repeated || f.constraints.nonEmpty) return None
     val (base, aliasCs) = unalias(f.tpe)
     if (aliasCs.nonEmpty) return None
     resolveDef(base) match {
       case Some(RecordDef(_, fields)) =>
-        val rules = scala.collection.mutable.ArrayBuffer[ArrayRule]()
+        val rules = scala.collection.mutable.ArrayBuffer[DetailRule]()
+        def elemRule(r: ArrayRule, kind: String, f2: String, detail: String = ""): Unit =
+          rules += DetailRule(r, s"$kind:${f.name}.$f2", s"${f.name}[", s"].$f2", detail)
         fields.foreach { f2 =>
           val (b2, cs2) = unalias(f2.tpe)
           if (cs2.nonEmpty || f2.constraints.nonEmpty) return None // regex/utf8/base64 etc → generic
           f2.mode match {
-            case Required => rules += RuleNotNull(f2.name)
+            case Required =>
+              elemRule(RuleNotNull(f2.name), "missing-field", f2.name, "required field is missing")
             case Optional(None) => ()
             case _ => return None // defaults / nested repeated / flags → generic
           }
           b2 match {
             case PInt(lo, hi) =>
-              if (lo != Long.MinValue || hi != Long.MaxValue) rules += RuleRange(f2.name, lo, hi)
+              if (lo != Long.MinValue || hi != Long.MaxValue)
+                elemRule(RuleRange(f2.name, lo, hi), "range", f2.name)
             case PBool | PFloat | PFloat32 | PString | PBinary | PAny => ()
             case PUInt64 =>
-              rules += RuleRangeDecimal(f2.name,
-                java.math.BigDecimal.ZERO, SpecCompiler.UInt64Max)
+              elemRule(RuleRangeDecimal(f2.name,
+                java.math.BigDecimal.ZERO, SpecCompiler.UInt64Max), "range", f2.name)
             case TypeRef(_) => resolveDef(b2) match {
-              case Some(EnumDef(_, opts)) => rules += RuleInSet(f2.name, opts)
+              case Some(EnumDef(_, opts)) => elemRule(RuleInSet(f2.name, opts), "unknown-enum", f2.name)
               case _ => return None // nested records/variants/lists → generic
             }
             case _ => return None
@@ -420,28 +380,60 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
     }
   }
 
-  /** Is `r` a row rule scoped entirely inside repeated field `arrName`, and
-    * expressible natively? */
-  private def absorbableRowRule(r: RowRule, arrName: String, elemFields: Seq[PField]): Option[ArrayRule] = {
+  /** The native rule for `r` if it is a row rule scoped entirely inside
+    * repeated field `arrName` and expressible natively. */
+  private def absorbableRowRule(r: RowRule, arrName: String, elemFields: Seq[PField]): Option[DetailRule] = {
     def sub(p: String): Option[String] = p.split("\\.", 2) match {
       case Array(h, rest) if h == arrName => Some(rest)
       case _ => None
     }
     r match {
-      case ExactlyOneOf(_, paths) =>
+      case ExactlyOneOf(name, paths) =>
         val subs = paths.flatMap(sub(_))
         if (subs.size == paths.size && subs.forall(s => elemFields.exists(_.name == s)))
-          Some(RuleExactlyOne(subs))
+          Some(DetailRule(RuleExactlyOne(subs), s"exactly-one:$name", s"$arrName[", "]"))
         else None
-      case StrictlyIncreasing(_, arrayPath, field) if arrayPath == arrName =>
+      case StrictlyIncreasing(name, arrayPath, field) if arrayPath == arrName =>
         elemFields.find(_.name == field).flatMap { ef =>
           unalias(ef.tpe) match {
-            case (PInt(_, _), _) => Some(RuleIncreasing(field)) // int/long fields only
+            case (PInt(_, _), _) => // int/long fields only
+              Some(DetailRule(RuleIncreasing(field), s"order:$name", arrName, "",
+                s"$field must be strictly increasing"))
             case _ => None
           }
         }
       case _ => None
     }
+  }
+
+  /** The one native rule map: per natively compiled repeated field, its
+    * element rules followed by the array-scoped row rules it absorbs; and
+    * the set of absorbed row rules, which the row-rule walk then skips. */
+  private lazy val nativeRules: (Map[String, Seq[DetailRule]], Set[RowRule]) = {
+    val perField = rootRecord.fields.flatMap { f =>
+      nativeArrayRules(f).map { base =>
+        val elemFields = resolveDef(unalias(f.tpe)._1)
+          .collect { case RecordDef(_, fs) => fs }.getOrElse(Nil)
+        val absorbed = spec.rowRules.flatMap(r =>
+          absorbableRowRule(r, f.name, elemFields).map(r -> _))
+        (f.name -> (base ++ absorbed.map(_._2)), absorbed.map(_._1))
+      }
+    }
+    (perField.map(_._1).toMap, perField.flatMap(_._2).toSet)
+  }
+
+  /** Root walk with each natively compiled field's rule program evaluated
+    * by `native` instead of the generic emitter. */
+  private def nativeWalk(e: Emitter[Column], native: (Column, Seq[DetailRule]) => Column): Column = {
+    val (byField, absorbed) = nativeRules
+    val fieldCols: Seq[Column] = rootRecord.fields.flatMap { f =>
+      byField.get(f.name) match {
+        case Some(rules) => Seq(native(col(f.name), rules))
+        case None => fieldVios(e, f, col(f.name), f.name, lit(true), rootSeen)
+      }
+    }
+    val rowCols = spec.rowRules.filterNot(absorbed).flatMap(r => rowRuleVios(e, r))
+    e.combine(fieldCols ++ rowCols)
   }
 
   /**
@@ -451,31 +443,8 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
    * the array-scoped row rules they absorb; everything else uses the generic
    * CountEmitter walk. Equivalence with `size(violations)` is property-tested.
    */
-  lazy val violationCount: Column = {
-    val nativeByField: Map[String, (Seq[ArrayRule], Set[RowRule])] =
-      rootRecord.fields.flatMap { f =>
-        nativeArrayRules(f).map { baseRules =>
-          val elemFields = resolveDef(unalias(f.tpe)._1)
-            .collect { case RecordDef(_, fs) => fs }.getOrElse(Nil)
-          val absorbed = spec.rowRules.flatMap(r =>
-            absorbableRowRule(r, f.name, elemFields).map(ar => r -> ar))
-          f.name -> ((baseRules ++ absorbed.map(_._2), absorbed.map(_._1).toSet))
-        }
-      }.toMap
-    val absorbedRowRules: Set[RowRule] = nativeByField.values.flatMap(_._2).toSet
-
-    val fieldCols: Seq[Column] = rootRecord.fields.flatMap { f =>
-      nativeByField.get(f.name) match {
-        case Some((rules, _)) =>
-          Seq(StructArrayRuleCount.column(col(f.name), rules))
-        case None =>
-          fieldVios(CountEmitter, f, col(f.name), f.name, lit(true), rootSeen)
-      }
-    }
-    val rowCols = spec.rowRules.filterNot(absorbedRowRules)
-      .flatMap(r => rowRuleVios(CountEmitter, r))
-    CountEmitter.combine(fieldCols ++ rowCols).cast(LongType).as("violation_count")
-  }
+  lazy val violationCount: Column =
+    nativeWalk(CountEmitter, StructArrayRuleCount.column).cast(LongType).as("violation_count")
 
   /** Generic (HOF) count form — benchmarking/fallback reference. */
   lazy val violationCountGeneric: Column =

@@ -4,66 +4,7 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
-/**
- * Rules evaluable natively over one `array<struct<...>>` column. Field
- * references are by name; ordinals and physical types resolve from the
- * child's (analyzed) dataType at eval/codegen time.
- */
-sealed trait ArrayRule extends Serializable
-/** required field inside each element (`missing-field`). */
-final case class RuleNotNull(field: String) extends ArrayRule
-/** enum membership (`unknown-enum` / `unknown-value`). */
-final case class RuleInSet(field: String, values: Seq[String]) extends ArrayRule
-/** numeric range (`range`), evaluated in long space (int/long fields). */
-final case class RuleRange(field: String, lo: Long, hi: Long) extends ArrayRule
-/** numeric range over a DecimalType field (`range`) — the PUInt64 path:
-  * full-uint64 bounds don't fit long space (NOTES #7 retired). */
-final case class RuleRangeDecimal(field: String,
-    lo: java.math.BigDecimal, hi: java.math.BigDecimal) extends ArrayRule
-/** exactly one of the fields non-null per element (`exactly-one`). */
-final case class RuleExactlyOne(fields: Seq[String]) extends ArrayRule
-/** strictly increasing field across elements — ONE violation per row (`order`). */
-final case class RuleIncreasing(field: String) extends ArrayRule
-
-/**
- * How a [[RuleRangeDecimal]] binds to the field's PHYSICAL type. The rule
- * is chosen from the spec (PUInt64), but the bound column may carry the
- * field as DecimalType (our readers) or as an integral type (a user-built
- * DataFrame holding uint64 in a long — the generic emitter's
- * decimal-literal compare accepted that via implicit numeric promotion, so
- * the native path must too, not fail at eval). For integral fields the
- * decimal compare reduces EXACTLY to a clamped long compare:
- * `x < lo || x > hi` ⇔ `x < ceil(lo) || x > floor(hi)` with bounds clamped
- * to long range; a rule window entirely outside long space means every
- * non-null value violates (encoded as the empty window lo=MaxValue,
- * hi=MinValue, for which one of the two compares always fires).
- */
-private[compile] object DecimalRuleBinding {
-  sealed trait Binding extends Serializable
-  final case class AsDecimal(precision: Int, scale: Int, lo: Decimal, hi: Decimal) extends Binding
-  final case class AsLong(lo: Long, hi: Long) extends Binding
-
-  def bind(fieldType: DataType, fieldName: String,
-      lo: java.math.BigDecimal, hi: java.math.BigDecimal): Binding = fieldType match {
-    case d: DecimalType => AsDecimal(d.precision, d.scale, Decimal(lo), Decimal(hi))
-    case LongType | IntegerType | ShortType | ByteType =>
-      val loC = lo.setScale(0, java.math.RoundingMode.CEILING)
-      val hiC = hi.setScale(0, java.math.RoundingMode.FLOOR)
-      val minL = java.math.BigDecimal.valueOf(Long.MinValue)
-      val maxL = java.math.BigDecimal.valueOf(Long.MaxValue)
-      if (loC.compareTo(maxL) > 0 || hiC.compareTo(minL) < 0 || loC.compareTo(hiC) > 0)
-        AsLong(Long.MaxValue, Long.MinValue) // empty window
-      else AsLong(
-        if (loC.compareTo(minL) <= 0) Long.MinValue else loC.longValueExact,
-        if (hiC.compareTo(maxL) >= 0) Long.MaxValue else hiC.longValueExact)
-    case other => throw new IllegalArgumentException(
-      s"RuleRangeDecimal field $fieldName: expected decimal or integral, got $other")
-  }
-}
 
 /**
  * Native codegen'd violation COUNTER for a struct-array column: evaluates a
@@ -73,188 +14,89 @@ private[compile] object DecimalRuleBinding {
  * This is the hot inner loop of interleaved-doc validation (per-span rules
  * run ~n_spans × n_rules per document); the generic Column formulation goes
  * through Spark's interpreted HOFs (transform/aggregate are CodegenFallback).
- * Semantics are EXACTLY the generic CountEmitter's (property-tested
- * equivalence, including containsNull=true arrays and null ordered fields):
- *  - per-element rules count per element; null array ≡ empty;
- *  - a null ELEMENT counts only its RuleExactlyOne rules (field access on a
- *    null struct is null → the count of non-null options is 0 ≠ 1), never
- *    RuleNotNull (the generic walk guards record rules with `isNotNull`);
- *  - RuleIncreasing counts at most once per row and compares ADJACENT pairs
- *    only: a pair violates iff both elements are non-null and both field
- *    values are non-null and next ≤ current (the generic zip_with yields
- *    null — not a violation — for any pair touching a null), so a null
- *    element or null field value breaks the comparison chain.
+ *
+ * The rule semantics live in [[StructArrayRuleDetail]], built over the same
+ * child and rules: `eval` is the number of entries its interpreted loop
+ * produces (`count == size(violations)` by construction), and the generated
+ * Java reads its ordinals, enum sets and decimal bindings from it, so the
+ * two evaluators cannot bind a field differently.
  */
-case class StructArrayRuleCount(child: Expression, rules: Seq[ArrayRule])
+case class StructArrayRuleCount(child: Expression, rules: Seq[DetailRule])
     extends UnaryExpression {
 
   override def dataType: DataType = IntegerType
   override def nullable: Boolean = false
 
-  private lazy val structType: StructType =
-    child.dataType.asInstanceOf[ArrayType].elementType.asInstanceOf[StructType]
-  private def ord(f: String): Int = structType.fieldIndex(f)
-  private def isLongField(f: String): Boolean = structType(ord(f)).dataType match {
-    case LongType => true
-    case IntegerType | ShortType | ByteType => false
-    case other => throw new IllegalArgumentException(s"RuleRange field $f: unsupported type $other")
-  }
+  /** The owner of the binding and of the interpreted rule loop. */
+  private lazy val program = StructArrayRuleDetail(child, rules)
 
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(_: StructType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"StructArrayRuleCount requires array<struct>, got $other")
-    }
+    program.checkInputDataTypes()
 
-  /** Violations charged to a null element (struct-level null): only
-    * RuleExactlyOne fires there in the generic walk (0 non-null ≠ 1);
-    * RuleNotNull is guarded by the element's own isNotNull. */
-  private lazy val nullElemPenalty: Int = rules.count {
-    case _: RuleExactlyOne => true
-    case _ => false
-  }
-
-  private lazy val setRefs: Map[String, java.util.HashSet[UTF8String]] =
-    rules.collect { case RuleInSet(f, vs) =>
-      val s = new java.util.HashSet[UTF8String]()
-      vs.foreach(v => s.add(UTF8String.fromString(v)))
-      f -> s
-    }.toMap
-
-  /** Hoisted physical binding per decimal rule field — the interpreted
-    * path runs per array element, so re-deriving from the schema there
-    * would be per-element work (mirrors Detail's decInfo). */
-  private lazy val decBind: Map[String, DecimalRuleBinding.Binding] =
-    rules.collect { case RuleRangeDecimal(f, lo, hi) =>
-      f -> DecimalRuleBinding.bind(structType(ord(f)).dataType, f, lo, hi)
-    }.toMap
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) return 0
-    val arr = v.asInstanceOf[ArrayData]
-    val nFields = structType.length
-    var cnt = 0
-    val incRules = rules.collect { case r: RuleIncreasing => r }
-    val incViolated = Array.fill(incRules.size)(false)
-    val incPrev = new Array[Long](incRules.size)
-    val incPrevSet = Array.fill(incRules.size)(false)
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (arr.isNullAt(i)) {
-        cnt += nullElemPenalty
-        // a null element breaks every increasing-comparison chain (the
-        // generic adjacent-pair zip_with yields null for pairs touching it)
-        var k = 0
-        while (k < incRules.size) { incPrevSet(k) = false; k += 1 }
-      }
-      else {
-        val s = arr.getStruct(i, nFields)
-        rules.foreach {
-          case RuleNotNull(f) => if (s.isNullAt(ord(f))) cnt += 1
-          case RuleInSet(f, _) =>
-            val o = ord(f)
-            if (!s.isNullAt(o) && !setRefs(f).contains(s.getUTF8String(o))) cnt += 1
-          case RuleRange(f, lo, hi) =>
-            val o = ord(f)
-            if (!s.isNullAt(o)) {
-              val x = if (isLongField(f)) s.getLong(o) else s.getInt(o).toLong
-              if (x < lo || x > hi) cnt += 1
-            }
-          case RuleRangeDecimal(f, _, _) =>
-            val o = ord(f)
-            if (!s.isNullAt(o)) decBind(f) match {
-              case DecimalRuleBinding.AsDecimal(p, sc, lo, hi) =>
-                val d = s.getDecimal(o, p, sc)
-                if (d.compare(lo) < 0 || d.compare(hi) > 0) cnt += 1
-              case DecimalRuleBinding.AsLong(lo, hi) =>
-                val x = if (isLongField(f)) s.getLong(o) else s.getInt(o).toLong
-                if (x < lo || x > hi) cnt += 1
-            }
-          case RuleExactlyOne(fs) =>
-            var nn = 0
-            fs.foreach(f => if (!s.isNullAt(ord(f))) nn += 1)
-            if (nn != 1) cnt += 1
-          case _: RuleIncreasing => () // handled below (cross-element)
-        }
-        incRules.zipWithIndex.foreach { case (RuleIncreasing(f), k) =>
-          val o = ord(f)
-          if (!s.isNullAt(o)) {
-            val x = if (isLongField(f)) s.getLong(o) else s.getInt(o).toLong
-            if (incPrevSet(k) && x <= incPrev(k)) incViolated(k) = true
-            incPrev(k) = x
-            incPrevSet(k) = true
-          } else incPrevSet(k) = false // null value breaks the chain
-        }
-      }
-      i += 1
-    }
-    cnt + incViolated.count(identity)
-  }
+  override def eval(input: InternalRow): Any =
+    program.evalFromChildValue(child.eval(input)).numElements()
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val p = program
     val childGen = child.genCode(ctx)
     val arr = ctx.freshName("arr")
     val cnt = ctx.freshName("cnt")
     val i = ctx.freshName("i")
     val n = ctx.freshName("n")
     val s = ctx.freshName("s")
-    val nFields = structType.length
+    val nFields = p.structType.length
 
-    val incRules = rules.collect { case r: RuleIncreasing => r }
-    val incDecls = incRules.indices.map { k =>
-      s"boolean ${ev.value}_incV$k = false; long ${ev.value}_incP$k = 0L; boolean ${ev.value}_incS$k = false;"
+    val incDecls = p.incIdx.indices.map { q =>
+      s"boolean ${ev.value}_incV$q = false; long ${ev.value}_incP$q = 0L; boolean ${ev.value}_incS$q = false;"
     }.mkString("\n")
 
-    def getNum(f: String, o: Int): String =
-      if (isLongField(f)) s"$s.getLong($o)" else s"(long) $s.getInt($o)"
+    def getNum(k: Int): String =
+      if (p.ruleIsLong(k)) s"$s.getLong(${p.ruleOrd(k)})" else s"(long) $s.getInt(${p.ruleOrd(k)})"
+    def longRange(k: Int, lo: Long, hi: Long): String =
+      s"""if (!$s.isNullAt(${p.ruleOrd(k)})) { long _x = ${getNum(k)}; if (_x < ${lo}L || _x > ${hi}L) $cnt++; }"""
 
-    val perElem = rules.zipWithIndex.map {
-      case (RuleNotNull(f), _) =>
-        s"if ($s.isNullAt(${ord(f)})) $cnt++;"
-      case (RuleInSet(f, _), idx) =>
-        val setRef = ctx.addReferenceObj(s"ruleset$idx", setRefs(f),
-          "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
-        s"if (!$s.isNullAt(${ord(f)}) && !$setRef.contains($s.getUTF8String(${ord(f)}))) $cnt++;"
-      case (RuleRange(f, lo, hi), _) =>
-        val o = ord(f)
-        s"""if (!$s.isNullAt($o)) { long _x = ${getNum(f, o)}; if (_x < ${lo}L || _x > ${hi}L) $cnt++; }"""
-      case (RuleRangeDecimal(f, _, _), idx) =>
-        val o = ord(f)
-        decBind(f) match {
-          case DecimalRuleBinding.AsDecimal(p, sc, loD, hiD) =>
-            val loRef = ctx.addReferenceObj(s"declo$idx", loD, classOf[Decimal].getName)
-            val hiRef = ctx.addReferenceObj(s"dechi$idx", hiD, classOf[Decimal].getName)
+    val perElem = p.rulesArr.indices.map { k =>
+      val o = p.ruleOrd(k)
+      p.rulesArr(k) match {
+        case RuleNotNull(_) =>
+          s"if ($s.isNullAt($o)) $cnt++;"
+        case RuleInSet(_, _) =>
+          val setRef = ctx.addReferenceObj(s"ruleset$k", p.inSetRefs(k),
+            "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
+          s"if (!$s.isNullAt($o) && !$setRef.contains($s.getUTF8String($o))) $cnt++;"
+        case RuleRange(_, lo, hi) => longRange(k, lo, hi)
+        case RuleRangeDecimal(_, _, _) => p.decInfo(k) match {
+          case DecimalRuleBinding.AsDecimal(prec, sc, loD, hiD) =>
+            val loRef = ctx.addReferenceObj(s"declo$k", loD, classOf[Decimal].getName)
+            val hiRef = ctx.addReferenceObj(s"dechi$k", hiD, classOf[Decimal].getName)
             s"""if (!$s.isNullAt($o)) {
-               |  org.apache.spark.sql.types.Decimal _d = $s.getDecimal($o, $p, $sc);
+               |  org.apache.spark.sql.types.Decimal _d = $s.getDecimal($o, $prec, $sc);
                |  if (_d.compare($loRef) < 0 || _d.compare($hiRef) > 0) $cnt++;
                |}""".stripMargin
-          case DecimalRuleBinding.AsLong(lo, hi) =>
-            s"""if (!$s.isNullAt($o)) { long _x = ${getNum(f, o)}; if (_x < ${lo}L || _x > ${hi}L) $cnt++; }"""
+          case DecimalRuleBinding.AsLong(lo, hi) => longRange(k, lo, hi)
         }
-      case (RuleExactlyOne(fs), _) =>
-        val nnChecks = fs.map(f => s"if (!$s.isNullAt(${ord(f)})) _nn++;").mkString(" ")
-        s"{ int _nn = 0; $nnChecks if (_nn != 1) $cnt++; }"
-      case (_: RuleIncreasing, _) => ""
+        case RuleExactlyOne(_) =>
+          val nnChecks = p.oneOfOrds(k).map(o2 => s"if (!$s.isNullAt($o2)) _nn++;").mkString(" ")
+          s"{ int _nn = 0; $nnChecks if (_nn != 1) $cnt++; }"
+        case _: RuleIncreasing => ""
+      }
     }.mkString("\n")
 
-    val incUpdates = incRules.zipWithIndex.map { case (RuleIncreasing(f), k) =>
-      val o = ord(f)
-      s"""if (!$s.isNullAt($o)) {
-         |  long _x = ${getNum(f, o)};
-         |  if (${ev.value}_incS$k && _x <= ${ev.value}_incP$k) ${ev.value}_incV$k = true;
-         |  ${ev.value}_incP$k = _x; ${ev.value}_incS$k = true;
-         |} else { ${ev.value}_incS$k = false; }""".stripMargin
+    val incUpdates = p.incIdx.zipWithIndex.map { case (k, q) =>
+      s"""if (!$s.isNullAt(${p.ruleOrd(k)})) {
+         |  long _x = ${getNum(k)};
+         |  if (${ev.value}_incS$q && _x <= ${ev.value}_incP$q) ${ev.value}_incV$q = true;
+         |  ${ev.value}_incP$q = _x; ${ev.value}_incS$q = true;
+         |} else { ${ev.value}_incS$q = false; }""".stripMargin
     }.mkString("\n")
 
-    val incNullElemReset = incRules.indices
-      .map(k => s"${ev.value}_incS$k = false;").mkString(" ")
+    val incNullElemReset = p.incIdx.indices
+      .map(q => s"${ev.value}_incS$q = false;").mkString(" ")
 
-    val incFinal = incRules.indices.map(k => s"if (${ev.value}_incV$k) $cnt++;").mkString("\n")
+    val incFinal = p.incIdx.indices.map(q => s"if (${ev.value}_incV$q) $cnt++;").mkString("\n")
+
+    // a null element is charged its RuleExactlyOne rules (0 of N set)
+    val nullElemPenalty = p.exactlyOneIdx.length
 
     val code =
       s"""
@@ -284,6 +126,6 @@ case class StructArrayRuleCount(child: Expression, rules: Seq[ArrayRule])
 }
 
 object StructArrayRuleCount {
-  def column(arr: org.apache.spark.sql.Column, rules: Seq[ArrayRule]): org.apache.spark.sql.Column =
+  def column(arr: org.apache.spark.sql.Column, rules: Seq[DetailRule]): org.apache.spark.sql.Column =
     GraftBridge.column(StructArrayRuleCount(GraftBridge.expression(arr), rules))
 }

@@ -359,24 +359,26 @@ object Dedup {
    */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 25): DataFrame = {
-    // Materialize the input pair set once BEFORE symmetrizing: the two
-    // union legs would otherwise each re-run the caller's (expensive)
-    // pair-generation plan inside the cache-materialization job wherever
-    // exchange reuse doesn't cover a subtree.
-    val pairs0 = pairs
-      .select(col(aCol).cast(LongType).as("src"), col(bCol).cast(LongType).as("dst"))
-      .localCheckpoint(false)
-    val edges = pairs0
-      .union(pairs0.select(col("dst").as("src"), col("src").as("dst")))
+    // Symmetrize in ONE read of the caller's pair plan: each pair explodes
+    // into both directions, so the (expensive) pair-generation plan runs
+    // once inside the cache-materialization job.
+    val a = col(aCol).cast(LongType)
+    val b = col(bCol).cast(LongType)
+    val edges = pairs
+      .select(explode(array(struct(a.as("src"), b.as("dst")),
+        struct(b.as("src"), a.as("dst")))).as("e"))
+      .select("e.*")
       .repartition(col("src")).cache()
-    // LAZY checkpoint: materialized by round 1's convergence count — the
-    // per-round count action doubles as the checkpoint job, so each round
-    // costs ONE action instead of two (checkpoint + count)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).localCheckpoint(false)
-    var iter = 0
-    var converged = false
     try {
+      // Planned INSIDE the try: for a local-relation input the cast runs at
+      // planning time, and a cast failure must still unpersist `edges`.
+      // LAZY checkpoint: materialized by round 1's convergence count — the
+      // per-round count action doubles as the checkpoint job, so each round
+      // costs ONE action instead of two (checkpoint + count)
+      var labels = edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("label")).localCheckpoint(false)
+      var iter = 0
+      var converged = false
       while (!converged && iter < maxIter) {
         // ONE aggregation per round: union the node's own (label, prev)
         // row with its neighbors' label contributions and take the min —

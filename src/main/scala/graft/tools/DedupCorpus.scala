@@ -187,7 +187,7 @@ object DedupCorpus {
     }
   }
 
-  /** ANN probe parameterization shared by Bench and AnnScaleProbe. */
+  /** ANN probe parameterization of Bench's ANN legs. */
   object AnnProbe {
     val K = 10
     val Bits = 6
@@ -220,33 +220,6 @@ object DedupCorpus {
     def ivf(docs: DataFrame, cents: Array[Array[Double]], nProbe: Int = IvfProbes): DataFrame =
       graft.ops.Ann.ivfTopK(docs, queries(docs), "doc_id", "vec", "doc_id", "vec",
         k = K, centroids = cents, nProbe = nProbe)
-
-    // ---- PQ at the probe's dims: 32-dim float (128 B) → m = 8 codes of
-    // one byte each (`PqCodes` codewords per subspace).
-    val PqM = 8
-    val PqCodes = 256
-    val PqSampleN = 20000
-    val PqIters = 5
-    def trainPq(docs: DataFrame): graft.ops.Pq.PqModel =
-      graft.ops.Pq.train(docs, "doc_id", "vec", m = PqM, codesPerSub = PqCodes,
-        sampleN = PqSampleN, iters = PqIters)
-
-    // ---- IVF×PQ: both dials composed (candidate count = nProbe·√n via
-    // IVF cells, candidate bytes = m codes via PQ, exact re-rank on top).
-    // Rerank deepens to 1000 at probe scale: the synthetic corpus has a
-    // DENSE score tail (random 32-dim vectors put thousands of candidates
-    // within the ADC error band of the rank-K boundary — the full-scan PQ
-    // leg measured recall 0.139 at 1M docs because of exactly this), and
-    // 1000 exact cosines per query is still ~0.1% of the corpus.
-    val IvfPqRefine = 1000
-    def encodeIvfPq(docs: DataFrame, cents: Array[Array[Double]],
-        model: graft.ops.Pq.PqModel): DataFrame =
-      graft.ops.Pq.encodeWithCells(docs, "doc_id", "vec", cents, model)
-    def ivfPqFromCodes(enc: DataFrame, docs: DataFrame,
-        cents: Array[Array[Double]], model: graft.ops.Pq.PqModel): DataFrame =
-      graft.ops.Pq.ivfPqFromCodes(enc, docs, queries(docs), "doc_id", "vec",
-        "doc_id", "vec", k = K, cents, nProbe = IvfProbes, model,
-        rerank = IvfPqRefine)
   }
 
   /** True exact-duplicate pair count outside the degenerate shard. */

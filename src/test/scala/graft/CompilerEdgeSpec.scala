@@ -138,6 +138,10 @@ class CompilerEdgeSpec extends SparkTestBase {
     // must charge ONLY exactly-one rules (never not-null), and a null
     // element / null ordered value must break the increasing chain (the
     // generic adjacent-pair zip_with yields null for pairs touching a null).
+    // Run under each evaluator on purpose: "interpreted" reaches
+    // StructArrayRuleCount.eval, "codegen only" its generated Java (a janino
+    // error fails instead of falling back). The frames are RDD-backed, so no
+    // optimizer rule evaluates the projection on the driver instead.
     val plan = SpecCompiler.compile(graft.io.Docs.docSpec)
     val spanT = StructType(Seq(
       StructField("kind", StringType), StructField("text", StringType),
@@ -152,13 +156,6 @@ class CompilerEdgeSpec extends SparkTestBase {
       Row("doc-d", Seq(Row("text", "t", null, 0L), Row("text", "t2", null, null), Row("text", "t3", null, 0L))), // null offset
       Row("doc-e", Seq(Row("video", "t", null, 4L), Row("text", "t2", null, 4L))), // bad enum + tie
       Row("doc-f", null)) // null array
-    val df = spark.createDataFrame(rows.asJava, schema)
-    val all = df
-      .withColumn("n_detail", size(plan.violations).cast("long"))
-      .withColumn("n_native", plan.violationCount)
-      .withColumn("n_generic", plan.violationCountGeneric)
-      .select("doc_id", "n_detail", "n_native", "n_generic")
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
     val expected = Map(
       "doc-a" -> 0L, // clean
       "doc-b" -> 1L, // null element: exactly-one only; order chain broken
@@ -166,8 +163,51 @@ class CompilerEdgeSpec extends SparkTestBase {
       "doc-d" -> 1L, // missing offset; order chain broken by null value
       "doc-e" -> 2L, // unknown enum + non-increasing tie
       "doc-f" -> 0L) // absent repeated ≡ empty
-    expected.foreach { case (id, n) =>
-      assert(all(id) === ((n, n, n)), s"$id: (detail,native,generic)=${all(id)} expected $n")
+
+    // PUInt64 elements: the decimal binding of the range rule
+    val u64plan = SpecCompiler.compile(Spec("u", Seq(
+      RecordDef("span", Seq(PField("u", PInt.uint64, Required))),
+      RecordDef("r", Seq(PField("doc_id", PString, Required),
+        PField("spans", TypeRef("span"), Repeated)))), "r"))
+    val u64schema = StructType(Seq(
+      StructField("doc_id", StringType),
+      StructField("spans", ArrayType(StructType(Seq(
+        StructField("u", DecimalType(20, 0)))), containsNull = true))))
+    def dec(v: String) = new java.math.BigDecimal(v)
+    val u64rows = Seq(
+      Row("u-a", Seq(Row(dec("0")), Row(dec("18446744073709551615")))), // both bounds
+      Row("u-b", Seq(Row(dec("18446744073709551616")), Row(dec("-1")))), // above + below
+      Row("u-c", Seq(Row(null), null))) // missing u; null element charges nothing
+    val u64expected = Map("u-a" -> 0L, "u-b" -> 2L, "u-c" -> 1L)
+
+    def counts(p: graft.compile.ValidationPlan, rs: Seq[Row], sch: StructType) =
+      spark.createDataFrame(spark.sparkContext.parallelize(rs, 2), sch)
+        .withColumn("n_detail", size(p.violations).cast("long"))
+        .withColumn("n_native", p.violationCount)
+        .withColumn("n_generic", p.violationCountGeneric)
+        .select("doc_id", "n_detail", "n_native", "n_generic")
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
+
+    val modes = Seq(
+      "interpreted" -> Seq(
+        "spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
+      "codegen only" -> Seq(
+        "spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
+    modes.foreach { case (mode, confs) =>
+      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      try {
+        confs.foreach { case (k, v) => spark.conf.set(k, v) }
+        Seq((counts(plan, rows, schema), expected),
+            (counts(u64plan, u64rows, u64schema), u64expected)).foreach { case (all, exp) =>
+          exp.foreach { case (id, n) =>
+            assert(all(id) === ((n, n, n)),
+              s"$mode $id: (detail,native,generic)=${all(id)} expected $n")
+          }
+        }
+      } finally saved.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
   }
 
