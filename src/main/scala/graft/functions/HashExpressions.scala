@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * 64-bit SimHash over a token array (Charikar STOC'02): bit b of the result
  * is the sign of Σ_tokens (2·bit_b(xxhash64(token)) − 1).
  *
- * Exact HOF-equivalent semantics ([[graft.ops.Dedup.simhash64HOF]]):
+ * Exact HOF-equivalent semantics (`DedupHof.simhash64HOF`, test sources):
  * null array → null; empty array → 0L (all counters 0, sign ≤ 0 → bit 0);
  * null token → hashed as Spark's xxhash64 of null (seed unchanged → 42).
  */
@@ -110,7 +110,7 @@ case class Simhash64(child: Expression) extends UnaryExpression {
  * bytes (the signature table is cached and re-joined 3× in
  * [[graft.ops.Dedup.minhashNearDups]], so bytes are the scale cost).
  *
- * Exact HOF-equivalent semantics ([[graft.ops.Dedup.minhashSignatureHOF]]):
+ * Exact HOF-equivalent semantics (`DedupHof.minhashSignatureHOF`, test sources):
  * null or empty array → array of `numHashes` nulls (the HOF is
  * `array(array_min(...))` — the outer array() constructor never yields null,
  * and array_min of a null/empty slice is null); null element → contributes
@@ -219,7 +219,7 @@ case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpr
  * xxhash64; if fewer than k tokens, one whole-doc chain hash; result is
  * distinct (first-occurrence order).
  *
- * Exact HOF-equivalent semantics ([[graft.ops.Dedup.shingleHashesHOF]]) —
+ * Exact HOF-equivalent semantics (`DedupHof.shingleHashesHOF`, test sources) —
  * the HOF form was the REAL minhash bottleneck: its windows lambda reads
  * `th` via element_at, and Catalyst re-evaluates the whole
  * `transform(tokens, xxhash64)` array construction for every element_at
@@ -486,7 +486,7 @@ case class MinHashFromTokens(child: Expression, k: Int, numHashes: Int)
  * of Σ_i x_i · pc(seed,b,i) where pc ∈ {−1,+1} comes from
  * xxhash64(seed,b,i) parity.
  *
- * Exact HOF-equivalent semantics ([[Vectors.signBitsHOF]]): null array or
+ * Exact HOF-equivalent semantics (`VectorsHof.signBitsHOF`, test sources): null array or
  * any null element → 0L (the HOF's per-bit aggregate turns null, and
  * `when(null ≥ 0)` falls to the 0 branch for every bit); per-bit projection
  * sums elements in ascending index order (bit-identical float addition).

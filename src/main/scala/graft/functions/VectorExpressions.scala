@@ -286,7 +286,7 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
  * dsub-wide dot product, over codes that are 16-32× smaller than the raw
  * vectors — at 100 TB the compressed scan is the point.
  *
- * Null semantics (twin-tested vs [[Vectors.pqAdcHof]]): null codes or null
+ * Null semantics (twin-tested vs `VectorsHof.pqAdcHof`): null codes or null
  * luts → null; subspace-count mismatch, null element on either side, or a
  * code outside its LUT's range → null (a structurally bad pair scores as
  * unknown, never as a silently-partial sum — [[graft.ops.Pq.encode]] never

@@ -163,6 +163,11 @@ object Convert {
    *    `piqobj_of_json.ml:25-28`), object/array shape mismatches;
    *  - then the full compiled constraint pass.
    *
+   * Each document is tokenised three times: the typed record parse, the
+   * root `map<string,string>` parse (the parsed-vs-raw root probe below),
+   * and ONE streaming walk that yields both `parse:json` and every
+   * key-shape violation.
+   *
    * Returns the parsed columns + `violations` + `valid`.
    */
   def fromJson(jsonDf: DataFrame, jsonCol: String, spec: Spec): DataFrame = {
@@ -170,15 +175,9 @@ object Convert {
     val rs = spec.resolved
     // parse BY JSON KEY (json-name honored, `piqobj_of_json.ml:171`), then
     // project back to declared names — the shape compiled plans address
-    val parsed = jsonDf
-      .withColumn("_rec", from_json(col(jsonCol), jsonSchema(spec)))
-      .withColumn("_keys", json_object_keys(col(jsonCol)))
-
-    val parseVio = SpecCompiler.vio(
-      col(jsonCol).isNotNull && col("_keys").isNull,
-      "parse:json", "$", col(jsonCol))
-
-    val shapeVio = JsonShape.checkKeys(col(jsonCol), spec)
+    val parsed = jsonDf.withColumn("_rec", from_json(col(jsonCol), jsonSchema(spec)))
+    // parse:json (the document is not a JSON object) + key-shape checks
+    val shapeVio = JsonShape.walk(col(jsonCol), spec, rootScalars = false, parseVio = true)
 
     // scalar conversion failures: a key PRESENT in the raw document whose
     // parsed column is null means the value did not convert (garbage int,
@@ -208,12 +207,12 @@ object Convert {
     val flat = parsed.select(
       (rootFields(spec).map(f => fieldValue(col("_rec"), f, rs, toExternal = false,
         Map(rs.root -> 1)).as(f.name)) :+
-        col(jsonCol).as("_raw") :+ parseVio.as("_pv") :+ shapeVio.as("_sv") :+
+        col(jsonCol).as("_raw") :+ shapeVio.as("_sv") :+
         SpecCompiler.concatVios(convVios).as("_cv")): _*)
     flat
-      .withColumn("violations", concat(col("_pv"), col("_sv"), col("_cv"), plan.violations))
+      .withColumn("violations", concat(col("_sv"), col("_cv"), plan.violations))
       .withColumn("valid", size(col("violations")) === 0)
-      .drop("_pv", "_sv", "_cv")
+      .drop("_sv", "_cv")
   }
 
 
@@ -248,13 +247,11 @@ object Convert {
             .map(f => fieldValue(ext, f, rs, toExternal = false,
               Map(rs.root -> 1)).as(f.name)): _*)
         }
-      val parseVio = SpecCompiler.vio(
-        col(anyCol).isNotNull && json_object_keys(col(anyCol)).isNull,
-        "parse:json", "$", col(anyCol))
-      // rootScalars: validateAny has no parsed-vs-raw root probe like
-      // fromJson's, so the raw-space scalar probe covers root members too
-      val vios = concat(parseVio,
-        JsonShape.checkKeys(col(anyCol), spec, rootScalars = true),
+      // parse:json + key shape; rootScalars: validateAny has no
+      // parsed-vs-raw root probe like fromJson's, so the raw-space scalar
+      // probe covers root members too
+      val vios = concat(
+        JsonShape.walk(col(anyCol), spec, rootScalars = true, parseVio = true),
         plan.violationsFor(rec))
       (col(typeCol) === name, vios)
     }

@@ -1,8 +1,21 @@
 package graft.io
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.collection.mutable.ArrayBuffer
+import com.fasterxml.jackson.core.{JsonEncoding, JsonFactoryBuilder, JsonParser,
+  JsonProcessingException, JsonToken}
+import com.fasterxml.jackson.core.JsonToken._
+import com.fasterxml.jackson.core.json.JsonReadFeature
+import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression,
+  GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.compile.SpecCompiler
 import graft.spec._
 
@@ -20,35 +33,47 @@ import graft.spec._
  *    array → `parse:array-expected` ("array expected",
  *    `piqobj_of_json.ml:221-229`).
  *
- * Mechanism (pure built-in columns, no UDFs): at each level the object's
- * raw JSON substring is inspected with `json_object_keys` (which KEEPS
- * duplicate keys) and split into per-key raw-value strings via
- * `from_json(.., map<string,string>)` — Spark captures non-string values as
- * their raw JSON text, so nested records/arrays recurse on the captured
- * substring. Array elements are stamped with their index in the violation
- * path (`spans[2].meta`), mirroring the validators' path convention.
- * Recursion depth is bounded by the spec (cycles are rejected at compile,
- * SpecChecks A5).
+ * Mechanism: like the reference, ONE streaming walk per document. The spec
+ * compiles once into a member tree ([[Obj]]/[[Arr]]/[[Scalar]]); the
+ * [[JsonShapeWalk]] expression runs Jackson's streaming parser over the
+ * document's UTF-8 bytes and checks each level as it passes. It emits
+ * exactly the array of the column form it replaced (a key probe and a
+ * string-map parse per level over each object's raw text;
+ * `JsonShapeColumns` in the tests), so it keeps that form's
+ * observable Spark behaviour: a repeated key is checked through its FIRST
+ * occurrence; a detail is the value's raw capture (string content
+ * unescaped, anything else compactly re-serialised: `{ "y" : 1 }` →
+ * `{"y":1}`), and below a root member a value reads as that
+ * re-serialisation reads (an overflowing float as the string `Infinity`);
+ * a string holding JSON text has that text's shape; bytes after the root
+ * object are ignored. Non-JSON that Spark's two parsers split on
+ * (unescaped control characters, `NaN` literals) is walked as the key probe
+ * reads it. Array elements are stamped with their index in the violation
+ * path (`spans[2].meta`); recursion depth is bounded by the spec (cycles
+ * are rejected at compile, SpecChecks A5).
  */
 object JsonShape {
 
-  private val strMap = MapType(StringType, StringType)
-  private val strArr = ArrayType(StringType)
-
-  /** One object-level member: the legal JSON key (json-name honored — the
-    * reference resolves fields BY json-name, `piqobj_of_json.ml:171`), the
-    * declared name (violation paths stay in the declared name space), the
-    * type, and whether it is repeated. */
-  private final case class Member(key: String, name: String, tpe: PiqiType,
-      repeated: Boolean)
-
-  private def members(fields: Seq[PField]): Seq[Member] =
-    fields.map(f => Member(f.jsonKey, f.name, f.tpe, f.mode == Repeated))
+  /** Checks at one value position. */
+  sealed trait Node extends Serializable
+  /** No key-shape check (strings, enums, binary/any, beyond-depth content). */
+  case object Skip extends Node
+  /** Raw-space parse probe of a numeric/bool value (`parse:value`). */
+  final case class Scalar(base: PiqiType) extends Node
+  /** An object level: record fields or variant options, sorted by JSON key. */
+  final case class Obj(members: Vector[Member]) extends Node {
+    @transient lazy val index: Map[String, Int] = members.map(_.key).zipWithIndex.toMap
+  }
+  /** `quoted`: also the strict quoted-scalar probe (`node` is a [[Scalar]]). */
+  final case class Member(key: String, name: String, node: Node, quoted: Boolean) {
+    def base: PiqiType = node.asInstanceOf[Scalar].base
+  }
+  /** An array; `quoted` (strict, scalar elements): the whole-array probe. */
+  final case class Arr(elem: Node, quoted: Option[PiqiType]) extends Node
 
   /** All key-shape violations for a JSON document string against a spec.
     * Finite-but-recursive specs recurse to `spec.maxDepth` occurrences per
-    * type (the schema's unroll depth); beyond-depth content is covered by
-    * the compiled plan's `depth:` rule, not key-shape checks.
+    * type; beyond-depth content is the compiled plan's `depth:` rule's.
     *
     * NESTED scalar conversion failures (a present key whose numeric/bool
     * raw text cannot parse — PERMISSIVE parsing silently nulls these) are
@@ -56,210 +81,53 @@ object JsonShape {
     * `rootScalars=true` extends the probe to root-level members (for
     * callers without [[Convert.fromJson]]'s stronger parsed-vs-raw root
     * check, e.g. piqi-any validation). Under STRICT mode a QUOTED scalar
-    * (`"12"` where int is declared — invisible in the quote-stripping raw
-    * capture) is additionally flagged at every level via the typed-parse
-    * probe ([[quotedScalarVio]]), matching `piqobj_of_json.ml:40-43`;
-    * non-strict plays the reference's relaxed mode and accepts it. */
-  def checkKeys(jsonCol: Column, spec0: Spec, rootScalars: Boolean = false): Column = {
+    * (`"12"` where int is declared: present, refused by the typed JSON
+    * parse, raw text fine) is flagged at every level — once per field for an
+    * array (`piqobj_of_json.ml:40-43`); non-strict plays the reference's
+    * relaxed mode and accepts it. */
+  def checkKeys(jsonCol: Column, spec: Spec, rootScalars: Boolean = false): Column =
+    walk(jsonCol, spec, rootScalars, parseVio = false)
+
+  /** [[checkKeys]], led by a `parse:json` violation when a non-null
+    * document is not a JSON object: one walk serves both. */
+  private[io] def walk(jsonCol: Column, spec: Spec, rootScalars: Boolean,
+      parseVio: Boolean): Column =
+    GraftBridge.column(JsonShapeWalk(GraftBridge.expression(jsonCol),
+      compile(spec, rootScalars), spec.resolved.strict, parseVio))
+
+  /** The member tree of a spec's root record. */
+  private def compile(spec0: Spec, rootScalars: Boolean): Obj = {
     val spec = spec0.resolved
     val root = spec.defTable(spec.root) match {
       case r: RecordDef => r
       case other => throw new SpecException(s"root must be a record, got $other")
     }
-    objectVios(jsonCol, members(root.fields), "$", spec, Map(spec.root -> 1),
-      scalarChecks = rootScalars)
-  }
-
-  /** Violations for one object level: key checks + recursion into values. */
-  private def objectVios(objStr: Column, ms: Seq[Member], path: String,
-      spec: Spec, seen: Map[String, Int], scalarChecks: Boolean = true): Column = {
-    val keys = json_object_keys(objStr)
-    val keysOrEmpty = coalesce(keys, array().cast(strArr))
-    val knownKeys = ms.map(_.key)
-
-    val unknown = filter(keysOrEmpty, k => !k.isin(knownKeys: _*))
-    val unknownVio =
-      if (spec.strict)
-        SpecCompiler.vio(size(unknown) > 0, "unknown-field", path, concat_ws(",", unknown))
-      else SpecCompiler.emptyVio
-
-    val dupKeys = filter(array_distinct(keysOrEmpty),
-      k => size(filter(keysOrEmpty, x => x === k)) > 1)
-    val dupVio = SpecCompiler.vio(size(dupKeys) > 0, "duplicate-field", path,
-      concat_ws(",", dupKeys))
-
-    val m = from_json(objStr, strMap)
-    val subVios: Seq[Column] = ms.sortBy(_.key).map { mem =>
-      val raw = element_at(m, mem.key)
-      val inner = valueVios(raw, mem.tpe, repeated = mem.repeated,
-        s"$path.${mem.name}", spec, seen, scalarChecks)
-      // strict quoted-scalar probe (needs the OBJECT text — quoting is
-      // gone from the stripped raw capture). Gated on scalarChecks: at the
-      // root, fromJson's parsed-vs-raw check already reports these.
-      val quoted =
-        if (spec.strict && scalarChecks && !mem.repeated)
-          unalias(mem.tpe, spec) match {
-            case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) =>
-              val present = raw.isNotNull && trim(raw) =!= "null"
-              quotedScalarVio(objStr, raw, present, mem.key, b,
-                s"$path.${mem.name}")
-            case _ => SpecCompiler.emptyVio
-          }
-        else SpecCompiler.emptyVio
-      concat(inner, quoted)
+    def scalarBase(t: PiqiType): Option[PiqiType] = unalias(t, spec) match {
+      case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) => Some(b)
+      case _ => None
     }
-    SpecCompiler.concatVios(unknownVio +: dupVio +: subVios)
-  }
-
-  /** Violations for one raw value string of declared type `tpe`. */
-  private def valueVios(valStr: Column, tpe: PiqiType, repeated: Boolean,
-      path: String, spec: Spec, seen: Map[String, Int],
-      scalarCheck: Boolean = true): Column = {
-    val present = valStr.isNotNull && trim(valStr) =!= "null" // JSON null ≡ missing (B5)
-    if (repeated) arrayVios(valStr, present, tpe, path, spec, seen)
-    else unalias(tpe, spec) match {
-      case TypeRef(n) => spec.defTable(n) match {
-        case _: RecordDef | _: VariantDef | _: ListDef
-            if spec.atDepthCutoff(n, seen) =>
-          SpecCompiler.emptyVio // beyond-depth: the plan's depth: rule reports
-        case RecordDef(_, fields) =>
-          recordValueVios(valStr, present, fields, path, spec,
-            spec.bumpDepth(n, seen))
-        case VariantDef(_, options) =>
-          // variant object: option JSON keys are the only legal keys; recurse
-          // into record-typed option payloads
-          val ms = options.map(o =>
-            Member(o.jsonKey, o.name, o.tpe.getOrElse(PBool), repeated = false))
-          val shape = SpecCompiler.vio(present && json_object_keys(valStr).isNull,
-            "parse:object-expected", path, valStr)
-          concat(shape, when(present && json_object_keys(valStr).isNotNull,
-            objectVios(valStr, ms, path, spec, spec.bumpDepth(n, seen)))
-            .otherwise(SpecCompiler.emptyVio))
-        case ListDef(_, elem, _) =>
-          arrayVios(valStr, present, elem, path, spec,
-            spec.bumpDepth(n, seen))
-        case _ => SpecCompiler.emptyVio // enums/aliased scalars: no key shape
+    def fields(fs: Seq[PField]) = fs.map(f => (f.jsonKey, f.name, f.tpe, f.mode == Repeated))
+    def obj(ms: Seq[(String, String, PiqiType, Boolean)], seen: Map[String, Int],
+        scalars: Boolean): Obj =
+      Obj(ms.sortBy(_._1).map { case (key, name, t, repeated) =>
+        Member(key, name, if (repeated) arr(t, seen) else value(t, seen, scalars),
+          quoted = spec.strict && scalars && !repeated && scalarBase(t).isDefined)
+      }.toVector)
+    def arr(elem: PiqiType, seen: Map[String, Int]): Arr =
+      Arr(value(elem, seen, scalars = true), scalarBase(elem).filter(_ => spec.strict))
+    def value(t: PiqiType, seen: Map[String, Int], scalars: Boolean): Node =
+      unalias(t, spec) match {
+        case TypeRef(n) => spec.defTable(n) match {
+          case _: RecordDef | _: VariantDef | _: ListDef if spec.atDepthCutoff(n, seen) => Skip
+          case RecordDef(_, fs) => obj(fields(fs), spec.bumpDepth(n, seen), scalars = true)
+          case VariantDef(_, os) => obj(os.map(o => (o.jsonKey, o.name, o.tpe.getOrElse(PBool),
+            false)), spec.bumpDepth(n, seen), scalars = true)
+          case ListDef(_, e, _) => arr(e, spec.bumpDepth(n, seen))
+          case _ => Skip
+        }
+        case b => scalarBase(b).filter(_ => scalars).map(Scalar).getOrElse(Skip)
       }
-      case base =>
-        // numeric/bool scalars: present-but-unparseable raw text is a
-        // conversion failure the PERMISSIVE parser would null silently —
-        // semantic checks on the parsed value stay the compiler's job
-        if (scalarCheck) scalarParseVio(valStr, present, base, path)
-        else SpecCompiler.emptyVio
-    }
-  }
-
-  /** Max magnitude representable in the PUInt64 column type Decimal(20,0). */
-  private val Dec20Max = new java.math.BigDecimal("99999999999999999999")
-
-  /** Raw text cannot become a non-null value of the declared scalar's
-    * column type (Long for ints, Decimal(20,0) for uint64, Double for
-    * floats, Boolean); None for types that always capture. `try_cast`
-    * (not `cast`) throughout: garbage must yield a VIOLATION row, never an
-    * ANSI cast exception. */
-  private def rawBad(raw: Column, base: PiqiType): Option[Column] = {
-    val t = trim(raw)
-    val intRe = "^-?[0-9]+$"
-    def dec = t.try_cast(DecimalType(38, 0))
-    base match {
-      case PBool => Some(!t.isin("true", "false"))
-      case PInt(_, _) => Some(!t.rlike(intRe) || dec.isNull ||
-        dec < lit(java.math.BigDecimal.valueOf(Long.MinValue)) ||
-        dec > lit(java.math.BigDecimal.valueOf(Long.MaxValue)))
-      case PUInt64 => Some(!t.rlike(intRe) || dec.isNull ||
-        dec > lit(Dec20Max) || dec < lit(Dec20Max.negate))
-      case PFloat | PFloat32 => Some(t.try_cast(DoubleType).isNull)
-      case _ => None // strings/binary/any always capture
-    }
-  }
-
-  /** Raw-space parse probe for one scalar value — fires on [[rawBad]]. */
-  private def scalarParseVio(raw: Column, present: Column, base: PiqiType,
-      path: String): Column =
-    rawBad(raw, base)
-      .map(b => SpecCompiler.vio(present && b, "parse:value", path, raw))
-      .getOrElse(SpecCompiler.emptyVio)
-
-  /** Column type the typed-parse quoted-scalar probe uses. */
-  private def scalarSparkType(base: PiqiType): DataType = base match {
-    case PUInt64 => DecimalType(20, 0)
-    case _: PInt => LongType
-    case PBool => BooleanType
-    case _ => DoubleType
-  }
-
-  /**
-   * STRICT-mode quoted-scalar probe (`piqobj_of_json.ml:40-43`: a JSON
-   * STRING where an int/float/bool is declared errors unless relaxed mode;
-   * our non-strict plays relaxed). The raw map capture strips quotes, so
-   * `"12"` and `12` are indistinguishable there — but Spark's TYPED
-   * `from_json` refuses the string form (field parses to null), so:
-   * present ∧ typed-null ∧ raw-parses-fine ⇔ the value was quoted (or
-   * otherwise notationally mistyped). The raw-parses-fine conjunct keeps
-   * this disjoint from [[scalarParseVio]] — one violation per bad value,
-   * never two.
-   */
-  private def quotedScalarVio(objStr: Column, raw: Column, present: Column,
-      key: String, base: PiqiType, path: String): Column = {
-    val typed = from_json(objStr,
-      StructType(Seq(StructField(key, scalarSparkType(base))))).getField(key)
-    val rawOk = rawBad(raw, base).map(b => !b).getOrElse(lit(true))
-    SpecCompiler.vio(present && typed.isNull && rawOk, "parse:value", path, raw)
-  }
-
-  private def recordValueVios(valStr: Column, present: Column, fields: Seq[PField],
-      path: String, spec: Spec, seen: Map[String, Int]): Column = {
-    val shape = SpecCompiler.vio(present && json_object_keys(valStr).isNull,
-      "parse:object-expected", path, valStr)
-    val inner = when(present && json_object_keys(valStr).isNotNull,
-      objectVios(valStr, members(fields), path, spec, seen))
-      .otherwise(SpecCompiler.emptyVio)
-    concat(shape, inner)
-  }
-
-  /** Array value: shape check + per-element recursion with index-stamped paths. */
-  private def arrayVios(valStr: Column, present: Column, elemType: PiqiType,
-      path: String, spec: Spec, seen: Map[String, Int]): Column = {
-    val elems = from_json(valStr, strArr)
-    val shape = SpecCompiler.vio(present && elems.isNull,
-      "parse:array-expected", path, valStr)
-    // strict quoted-scalar probe for ARRAY elements: the typed array parse
-    // refuses a quoted element (whole array nulls) while every raw element
-    // text parses fine — flags the field once (element indices are not
-    // recoverable from the all-or-nothing typed parse). Disjoint from the
-    // per-element raw-space probes by the all-raw-ok conjunct.
-    val quotedArr = unalias(elemType, spec) match {
-      case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) if spec.strict =>
-        val typedArr = from_json(valStr, ArrayType(scalarSparkType(b)))
-        val elemBad = (e: Column) =>
-          rawBad(e, b).map(bc => (trim(e) =!= "null") && bc).getOrElse(lit(false))
-        val allRawOk =
-          size(filter(coalesce(elems, array().cast(strArr)), elemBad)) === 0
-        SpecCompiler.vio(present && elems.isNotNull && typedArr.isNull && allRawOk,
-          "parse:value", path, valStr)
-      case _ => SpecCompiler.emptyVio
-    }
-    // recurse when elements can have key shape (and the element type is not
-    // at its recursion cutoff), or carry a scalar parse probe
-    val needsRecursion = unalias(elemType, spec) match {
-      case TypeRef(n) => spec.defTable(n) match {
-        case _: RecordDef | _: VariantDef | _: ListDef =>
-          !spec.atDepthCutoff(n, seen)
-        case _ => false
-      }
-      case PBool | _: PInt | PUInt64 | PFloat | PFloat32 => true
-      case _ => false
-    }
-    if (!needsRecursion) concat(shape, quotedArr)
-    else {
-      val stamped = transform(coalesce(elems, array().cast(strArr)), (e, i) =>
-        transform(valueVios(e, elemType, repeated = false, path, spec, seen), v =>
-          struct(v.getField("rule").as("rule"),
-            concat(lit(path), lit("["), i.cast(StringType), lit("]"),
-              substring(v.getField("path"), path.length + 1, 1000000)).as("path"),
-            v.getField("detail").as("detail"))))
-      concat(shape, quotedArr, flatten(stamped))
-    }
+    obj(fields(root.fields), Map(spec.root -> 1), rootScalars)
   }
 
   /** Follow alias chains to the base type (shared with [[Convert]]). */
@@ -270,4 +138,256 @@ object JsonShape {
     }
     case _ => t
   }
+
+  /** The tokeniser of Spark's key probe: a document parses iff it does. */
+  private val factory = new JsonFactoryBuilder()
+    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
+    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES).build()
+  private val intRe = java.util.regex.Pattern.compile("^-?[0-9]+$")
+  private val Seq(dec20Max, longMin, longMax) = Seq("99999999999999999999",
+    Long.MinValue.toString, Long.MaxValue.toString).map(new java.math.BigDecimal(_))
+  private val nonNumeric = Set("NaN", "+INF", "+Infinity", "Infinity", "-INF", "-Infinity")
+  private val Seq(toDouble, toDec38) = Seq(DoubleType, DecimalType(38, 0)).map(
+    Cast(BoundReference(0, StringType, nullable = true), _, Some("UTC"), EvalMode.TRY))
+  private def tryCast(cast: Cast, s: UTF8String) = cast.eval(new GenericInternalRow(Array[Any](s)))
+  private def present(raw: String) = raw != null && UTF8String.fromString(raw).trim.toString != "null"
+
+  /** Raw text that cannot become a non-null value of the scalar's column
+    * type: the capture's `trim` + pattern + `try_cast` test (Long for ints,
+    * Decimal(20,0) for uint64, Double for floats, Boolean). */
+  private def rawBad(raw: String, base: PiqiType): Boolean = {
+    val t = UTF8String.fromString(raw).trim()
+    base match {
+      case PBool => t.toString != "true" && t.toString != "false"
+      case PFloat | PFloat32 => tryCast(toDouble, t) == null
+      case _ => !intRe.matcher(t.toString).find() || (tryCast(toDec38, t) match {
+        case d: Decimal =>
+          val v = d.toJavaBigDecimal
+          if (base == PUInt64) v.abs.compareTo(dec20Max) > 0
+          else v.compareTo(longMin) < 0 || v.compareTo(longMax) > 0
+        case _ => true
+      })
+    }
+  }
+
+  /** Compact re-serialisation of the current value (consumes it). */
+  private def serialize(p: JsonParser): String = {
+    val bytes = new ByteArrayOutputStream()
+    val g = factory.createGenerator(bytes, JsonEncoding.UTF8)
+    try g.copyCurrentStructure(p) finally g.close()
+    new String(bytes.toByteArray, UTF_8)
+  }
+
+  /** A value as the raw capture holds it: its token, its raw text (null for
+    * JSON null), whether an integer fits a long, and the text a decimal
+    * parse of a number reads. */
+  private final case class Val(tok: JsonToken, text: String, small: Boolean = false,
+      decimal: String = null)
+
+  /** The value at `p` (a container is consumed); `direct`: it sits in a
+    * parsed text, not in a re-serialised capture. */
+  private def view(p: JsonParser, direct: Boolean): Val = p.currentToken match {
+    case VALUE_STRING => Val(VALUE_STRING, p.getText)
+    case VALUE_NULL => Val(VALUE_NULL, null)
+    case t @ (VALUE_TRUE | VALUE_FALSE) => Val(t, p.getText)
+    case VALUE_NUMBER_INT if p.getNumberType != JsonParser.NumberType.BIG_INTEGER =>
+      Val(VALUE_NUMBER_INT, p.getLongValue.toString, small = true)
+    case VALUE_NUMBER_FLOAT =>
+      val d = p.getDoubleValue
+      if (!d.isInfinite) Val(VALUE_NUMBER_FLOAT, d.toString, decimal =
+        if (direct) p.getText else d.toString)
+      else if (direct) Val(VALUE_NUMBER_FLOAT, "\"" + d + "\"", decimal = p.getText) // quoted
+      else Val(VALUE_STRING, d.toString) // ... and so re-parsed as a string
+    case t => Val(t, serialize(p))
+  }
+
+  /** The typed JSON parse of a value into the scalar's column type (Spark's
+    * JacksonParser rules): -1 refused, 0 null, 1 a value. */
+  private def typed(v: Val, base: PiqiType): Int = (v.tok, base) match {
+    case (VALUE_NULL, _) => 0
+    case (VALUE_TRUE | VALUE_FALSE, PBool) => 1
+    case (VALUE_NUMBER_INT, _: PInt) => if (v.small) 1 else -1
+    case (VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT, PFloat | PFloat32) => 1
+    case (VALUE_NUMBER_INT | VALUE_NUMBER_FLOAT | VALUE_STRING, PUInt64) if v.text.nonEmpty =>
+      val s = if (v.tok == VALUE_STRING) v.text.replace(",", "")
+        else Option(v.decimal).getOrElse(v.text)
+      try {
+        val d = new java.math.BigDecimal(s) // fits Decimal(20,0) after HALF_UP rounding?
+        if (d.precision - d.scale <= 0 || d.precision - d.scale <= 21 &&
+          d.setScale(0, java.math.RoundingMode.HALF_UP).precision <= 20) 1 else -1
+      } catch { case _: NumberFormatException => -1 }
+    case (VALUE_STRING, PFloat | PFloat32) if nonNumeric(v.text) => 1
+    case _ => -1
+  }
+
+  /** One document's walk; `out` collects the violations in emission order. */
+  private final class Walker(strict: Boolean) {
+    val out = new java.util.ArrayList[InternalRow]()
+
+    def row(rule: String, path: String, detail: String): InternalRow =
+      new GenericInternalRow(Array[Any](UTF8String.fromString(rule),
+        UTF8String.fromString(path), UTF8String.fromString(detail)))
+    def emit(rule: String, path: String, detail: String): Unit = out.add(row(rule, path, detail))
+
+    /** Walks `text` if it holds a well-formed object/array (trailing bytes
+      * ignored); else emits nothing and answers false. */
+    def walkText(text: String, start: JsonToken)(f: JsonParser => Unit): Boolean = {
+      val (mark, q) = (out.size, factory.createParser(text))
+      try q.nextToken() == start && { f(q); true }
+      catch { case _: JsonProcessingException => out.subList(mark, out.size).clear(); false }
+      finally q.close()
+    }
+
+    /** Scalar probe: 0 absent, 1 fine, 2 reported as `parse:value`. */
+    def scalar(base: PiqiType, path: String, v: Val): Int =
+      if (!present(v.text)) 0
+      else if (if (v.small) base == PBool else rawBad(v.text, base)) {
+        emit("parse:value", path, v.text); 2
+      } else 1
+
+    /** Checks for the value at `p`, leaving `p` at its end. */
+    def value(node: Node, p: JsonParser, path: String, direct: Boolean): Unit = node match {
+      case Skip => p.skipChildren()
+      case Scalar(base) => scalar(base, path, view(p, direct))
+      case o: Obj if p.currentToken == START_OBJECT => level(o, p, path, direct = false)
+      case o: Obj => notA(START_OBJECT, "parse:object-expected", view(p, direct), path)((q, _) =>
+        level(o, q, path, direct = true))
+      case a: Arr if p.currentToken != START_ARRAY =>
+        notA(START_ARRAY, "parse:array-expected", view(p, direct), path)(
+          elements(a, _, path, _, direct = true))
+      case a: Arr if a.quoted.isDefined =>
+        val s = serialize(p)
+        walkText(s, START_ARRAY)(elements(a, _, path, s, direct = true))
+      case a: Arr if a.elem == Skip => p.skipChildren()
+      case a: Arr => elements(a, p, path, null, direct = false)
+    }
+
+    /** A value that is not the expected container: a string holding one is
+      * walked as that text; any other present value is reported. */
+    def notA(start: JsonToken, rule: String, v: Val, path: String)(
+        walk: (JsonParser, String) => Unit): Unit =
+      if (!(v.tok == VALUE_STRING && walkText(v.text, start)(walk(_, v.text))) && present(v.text))
+        emit(rule, path, v.text)
+
+    /** `p` at START_ARRAY; `text` is the array's raw capture when quoted. */
+    def elements(a: Arr, p: JsonParser, path: String, text: String, direct: Boolean): Unit = {
+      val mark = out.size
+      var (i, refused, rawOk) = (0, false, true)
+      while (p.nextToken() != END_ARRAY) {
+        a.quoted match {
+          case Some(base) =>
+            val v = view(p, direct)
+            if (typed(v, base) < 0) refused = true
+            if (scalar(base, s"$path[$i]", v) == 2) rawOk = false
+          case None => value(a.elem, p, s"$path[$i]", direct)
+        }
+        i += 1
+      }
+      if (refused && rawOk) out.add(mark, row("parse:value", path, text))
+    }
+
+    /** `p` at START_OBJECT; leaves it at the matching END_OBJECT. Each
+      * member's violations are held apart and emitted in member order. */
+    def level(o: Obj, p: JsonParser, path: String, direct: Boolean): Unit = {
+      val n = o.members.size
+      val held = new Array[java.util.List[InternalRow]](n) // null: member unseen
+      val typedVal = new Array[Int](n) // quoted: the typed outcome the parse keeps
+      val okRaw = new Array[String](n) // quoted: first raw, present and parseable
+      val keys = ArrayBuffer[String]()
+      var odd = false // an unknown or repeated key
+      while (p.nextToken() == FIELD_NAME) {
+        keys += p.currentName
+        p.nextToken()
+        val m = o.index.getOrElse(keys.last, -1)
+        val mem = if (m < 0) null else o.members(m)
+        val v = if (mem != null && mem.quoted) view(p, direct) else null
+        if (v != null) { val t = typed(v, mem.base); if (t >= 0) typedVal(m) = t }
+        if (m < 0 || held(m) != null) { odd = true; p.skipChildren() }
+        else {
+          val (mark, at) = (out.size, s"$path.${mem.name}")
+          if (v == null) value(mem.node, p, at, direct)
+          else if (scalar(mem.base, at, v) == 1) okRaw(m) = v.text
+          val mine = out.subList(mark, out.size)
+          held(m) = new java.util.ArrayList[InternalRow](mine)
+          mine.clear()
+        }
+      }
+      val unknown = if (strict && odd) keys.filterNot(o.index.contains) else Nil
+      if (unknown.nonEmpty) emit("unknown-field", path, unknown.mkString(","))
+      val dups = if (odd) keys.distinct.filter(k => keys.count(_ == k) > 1) else Nil
+      if (dups.nonEmpty) emit("duplicate-field", path, dups.mkString(","))
+      for (m <- 0 until n) {
+        if (held(m) != null) out.addAll(held(m))
+        if (okRaw(m) != null && typedVal(m) != 1)
+          emit("parse:value", s"$path.${o.members(m).name}", okRaw(m))
+      }
+    }
+  }
+
+  /** Walk one document: its violations, or None when it is not a JSON
+    * object (a tokeniser error up to the root's closing brace). The bytes
+    * reach Jackson through the UTF-8 reader Spark's key probe uses, so
+    * invalid UTF-8 and byte-order marks read as they read there. */
+  private[io] def run(root: Obj, strict: Boolean, doc: UTF8String): Option[java.util.List[InternalRow]] = {
+    val bb = doc.getByteBuffer
+    val p = factory.createParser(new InputStreamReader(
+      new ByteArrayInputStream(bb.array, bb.arrayOffset + bb.position, bb.remaining), UTF_8))
+    try {
+      if (p.nextToken() != START_OBJECT) None
+      else { val w = new Walker(strict); w.level(root, p, "$", direct = true); Some(w.out) }
+    } catch { case _: JsonProcessingException => None } finally p.close()
+  }
+}
+
+/**
+ * [[JsonShape]]'s walk as one Catalyst expression over a JSON string
+ * column: the key-shape violations of each document, led by `parse:json`
+ * (when `parseVio`) for a non-null document that is not a JSON object.
+ */
+private[graft] case class JsonShapeWalk(child: Expression, root: JsonShape.Obj, strict: Boolean,
+    parseVio: Boolean) extends UnaryExpression {
+
+  override def dataType: DataType = SpecCompiler.violationType
+  override def nullable: Boolean = false
+  override def stringArgs: Iterator[Any] = Iterator(child, strict, parseVio)
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"json_shape needs a string, got $other")
+  }
+
+  override def eval(input: InternalRow): Any =
+    evalDoc(child.eval(input).asInstanceOf[UTF8String])
+
+  def evalDoc(doc: UTF8String): ArrayData =
+    if (doc == null) JsonShapeWalk.empty
+    else JsonShape.run(root, strict, doc) match {
+      case Some(vs) => if (vs.isEmpty) JsonShapeWalk.empty else new GenericArrayData(vs.toArray)
+      case None if parseVio => new GenericArrayData(Array[Any](new GenericInternalRow(Array[Any](
+        UTF8String.fromString("parse:json"), UTF8String.fromString("$"), doc.clone()))))
+      case None => JsonShapeWalk.empty
+    }
+
+  // Codegen delegates to eval through a reference object (the
+  // StructArrayRuleDetail pattern): the walk is branchy parser work that
+  // gains nothing from inlined Java, and a non-CodegenFallback expression
+  // keeps the SURROUNDING projection inside whole-stage codegen.
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("jsonShape", this, classOf[JsonShapeWalk].getName)
+    val childGen = child.genCode(ctx)
+    val code =
+      s"""
+         |${childGen.code}
+         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
+         |  $self.evalDoc(${childGen.isNull} ? null : ${childGen.value});
+       """.stripMargin
+    ev.copy(code = Block.BlockHelper(new StringContext(code)).code(), isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): JsonShapeWalk =
+    copy(child = newChild)
+}
+
+private object JsonShapeWalk {
+  private val empty = new GenericArrayData(new Array[Any](0))
 }

@@ -75,25 +75,15 @@ object Dedup {
    * Word-shingle hashes WITHOUT building shingle strings: tokens are hashed
    * once, then each shingle hash combines `n` consecutive token hashes via
    * xxhash64 over longs. Computed by the native codegen'd
-   * [[graft.functions.ShingleHashes]] expression: the HOF form below reads
-   * the token-hash array through `element_at` inside a lambda, which
+   * [[graft.functions.ShingleHashes]] expression: the HOF form (kept in the
+   * tests as `DedupHof.shingleHashesHOF`) reads the token-hash array
+   * through `element_at` inside a lambda, which
    * re-evaluates the whole array construction per access — O(n²·k) token
    * hashes per doc, measured 16.6 s for 5,050 docs (it, not the signature
    * passes, was the true minhash bottleneck).
    */
   def shingleHashes(textCol: Column, shingleSize: Int): Column =
     graft.functions.HashExpressions.shingleHashesNative(Text.tokens(textCol), shingleSize)
-
-  /** Generic HOF form of [[shingleHashes]] — equivalence-test reference. */
-  def shingleHashesHOF(textCol: Column, shingleSize: Int): Column = {
-    val th = transform(Text.tokens(textCol), t => xxhash64(t))
-    val n = size(th)
-    val k = shingleSize
-    val windows = transform(sequence(lit(1), n - (k - 1)), i =>
-      xxhash64((0 until k).map(o => element_at(th, i + o)): _*))
-    val wholeDoc = array(aggregate(th, lit(17L), (acc, h) => xxhash64(acc, h)))
-    array_distinct(when(n < k, wholeDoc).otherwise(windows))
-  }
 
   /**
    * MinHash signature: `numHashes` independent permutation mins over the
@@ -110,19 +100,6 @@ object Dedup {
   def minhashSignature(textCol: Column, numHashes: Int, shingleSize: Int = 3): Column =
     graft.functions.HashExpressions.minhashFromTokensNative(
       Text.tokens(textCol), shingleSize, numHashes)
-
-  /** Generic HOF form of [[minhashSignature]] — equivalence-test reference. */
-  def minhashSignatureHOF(textCol: Column, numHashes: Int, shingleSize: Int = 3): Column =
-    minhashSignatureFromHashesHOF(shingleHashes(textCol, shingleSize), numHashes)
-
-  private[graft] def minhashSignatureFromHashesHOF(sh: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      // arithmetic >> 32 lands in int range and equals the native
-      // (int)(x >>> 32) reinterpretation of the top 32 bits
-      array_min(transform(sh, h =>
-        call_function("shiftright", xxhash64(lit(i), h), lit(32))
-          .cast(IntegerType)))
-    }: _*)
 
   /** One LSH band key per band: xxhash64 over (band index, the band's
     * signature slots) — band index hashed INTO the key so one long keys
@@ -196,29 +173,13 @@ object Dedup {
   /**
    * 64-bit SimHash over tokens: bit b of the hash is the sign of the sum of
    * (2*bit_b(xxhash64(token)) - 1) across tokens. Computed by the native
-   * codegen'd [[graft.functions.Simhash64]] expression — the HOF form below
-   * ran 64 interpreted zip_with ops per token (16.0 s for 5,050 docs, ~3
-   * ms/doc: a scale-killer at corpus size).
+   * codegen'd [[graft.functions.Simhash64]] expression — the HOF form
+   * (`DedupHof.simhash64HOF` in the tests) ran 64 interpreted zip_with ops
+   * per token (16.0 s for 5,050 docs, ~3 ms/doc: a scale-killer at corpus
+   * size).
    */
   def simhash64(textCol: Column): Column =
     graft.functions.HashExpressions.simhash64Native(Text.tokens(textCol))
-
-  /** Generic HOF form of [[simhash64]] — equivalence-test reference. */
-  def simhash64HOF(textCol: Column): Column = {
-    val toks = Text.tokens(textCol)
-    val counts = aggregate(
-      toks,
-      array_repeat(lit(0), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (c, b) => c + when(call_function("shiftright", h, b).bitwiseAND(1) === 1, 1).otherwise(-1))
-      })
-    aggregate(
-      zip_with(counts, sequence(lit(0), lit(63)),
-        (c, b) => when(c > 0, call_function("shiftleft", lit(1L), b)).otherwise(lit(0L))),
-      lit(0L), (acc, v) => acc.bitwiseOR(v))
-  }
 
   /**
    * SimHash near-dup pairs with hamming distance ≤ maxHamming, using the

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.{Ann, Dedup}
+import graft.ops.{Ann, Dedup, DedupHof}
 import graft.functions.{Text, Vectors}
 
 class DedupSpec extends SparkTestBase {
@@ -293,7 +293,7 @@ class DedupSpec extends SparkTestBase {
     val df = texts.toDF("id", "text")
     val both = df.select(col("id"),
       Dedup.simhash64(col("text")).as("native"),
-      Dedup.simhash64HOF(col("text")).as("hof"))
+      DedupHof.simhash64HOF(col("text")).as("hof"))
     assert(both.where(!(col("native") <=> col("hof"))).count() === 0)
     // null text propagates null through both forms
     assert(both.where(col("id") === 905L).collect()(0).isNullAt(1))
@@ -312,7 +312,7 @@ class DedupSpec extends SparkTestBase {
         Dedup.minhashSignature(col("text"), 32, k).as("fused"),
         graft.functions.HashExpressions.minhashSignatureNative(
           Dedup.shingleHashes(col("text"), k), 32).as("twostep"),
-        Dedup.minhashSignatureHOF(col("text"), 32, k).as("hof"))
+        DedupHof.minhashSignatureHOF(col("text"), 32, k).as("hof"))
       assert(all.where(!(col("fused") <=> col("twostep"))).count() === 0, s"k=$k fused!=twostep")
       assert(all.where(!(col("fused") <=> col("hof"))).count() === 0, s"k=$k fused!=hof")
     }
@@ -331,7 +331,7 @@ class DedupSpec extends SparkTestBase {
     for (k <- Seq(1, 3, 5)) {
       val both = df.select(col("id"),
         Dedup.shingleHashes(col("text"), k).as("native"),
-        Dedup.shingleHashesHOF(col("text"), k).as("hof"))
+        DedupHof.shingleHashesHOF(col("text"), k).as("hof"))
       assert(both.where(!(col("native") <=> col("hof"))).count() === 0, s"k=$k diverged")
     }
   }

@@ -158,4 +158,32 @@ class PlanGuardSpec extends SparkTestBase {
     assert(plan.contains("LeftAnti"),
       s"exactDedup should anti-join the removal set:\n${plan.take(3000)}")
   }
+
+  test("JSON ingest parses each document three times: record, root map and one shape walk") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, Expression,
+      JsonObjectKeys, JsonToStructs}
+    import graft.spec._
+    val spark0 = spark
+    import spark0.implicits._
+    // strict, nested, repeated records and scalars: every shape check the
+    // column form built as per-level key probes, map parses and lambdas
+    val spec = Spec("pin", Seq(
+      RecordDef("inner", Seq(PField("v", PInt.int32, Optional()), PField("n", PInt.int64, Repeated))),
+      RecordDef("doc", Seq(PField("id", PInt.int64, Required),
+        PField("nested", TypeRef("inner"), Optional()),
+        PField("items", TypeRef("inner"), Repeated)))), "doc", strict = true)
+    def exprs(df: org.apache.spark.sql.DataFrame): Seq[Expression] =
+      df.queryExecution.analyzed.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    def hofs(es: Seq[Expression]) =
+      es.count(e => e.isInstanceOf[ArrayTransform] || e.isInstanceOf[ArrayFilter])
+    val ingest = exprs(graft.io.Convert.fromJson(Seq("""{"id":1}""").toDF("json"), "json", spec))
+    assert(!ingest.exists(_.isInstanceOf[JsonObjectKeys]), "a json_object_keys probe is back")
+    assert(ingest.count(_.isInstanceOf[graft.io.JsonShapeWalk]) === 1)
+    assert(ingest.collect { case j: JsonToStructs => j.canonicalized }.distinct.size === 2,
+      "expected the typed record parse and the root map parse only")
+    // lambdas come from the compiled constraint plan alone, none from shape checks
+    val planOnly = exprs(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      graft.io.Convert.sparkSchema(spec)).select(graft.compile.SpecCompiler.compile(spec).violations))
+    assert(hofs(ingest) === hofs(planOnly))
+  }
 }

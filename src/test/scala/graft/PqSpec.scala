@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.Row
 import graft.ops.{Ann, Pq}
-import graft.functions.Vectors
+import graft.functions.{Vectors, VectorsHof}
 
 /** Product-quantization ANN: native ADC twin-equivalence, training
   * determinism, encode hygiene, and recall floors (compressed-domain scan
@@ -44,7 +44,7 @@ class PqSpec extends SparkTestBase {
       spark.sparkContext.parallelize(rows, 3), schema)
     val got = df.select(
       Vectors.pqAdc(col("codes"), col("luts")).as("nat"),
-      Vectors.pqAdcHof(col("codes"), col("luts")).as("hof")).collect()
+      VectorsHof.pqAdcHof(col("codes"), col("luts")).as("hof")).collect()
     got.zipWithIndex.foreach { case (r, i) =>
       val nat = if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0))
       val hof = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))

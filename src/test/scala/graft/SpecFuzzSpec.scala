@@ -7,28 +7,16 @@ import graft.compile.SpecCompiler
 import graft.io.Convert
 import graft.spec._
 
-/**
- * Generative fuzz over the compiler: RANDOM specs (nested records, enums,
- * repeated struct-arrays with absorbable row rules — the shapes that pick
- * between the native StructArrayRule programs and the generic HOF walk) ×
- * RANDOM documents (valid, missing, null, out-of-range, unknown-enum),
- * asserting the four compiled forms agree on EVERY row:
- *
- *   size(violations) == violationCount == violationCountGeneric
- *   multiset(violations) == multiset(violationsGeneric)
- *
- * A disagreement pinpoints a divergence between the codegen'd rule
- * programs and the reference Column walk — the class of bug a fixed
- * fixture suite can miss.
- */
-class SpecFuzzSpec extends SparkTestBase {
+/** Random specs and documents, shared with the other generative suites
+  * (`graft.io.JsonShapeWalkSpec`). */
+object SpecFuzzSpec {
 
-  private val enumGen: Gen[EnumDef] = for {
+  val enumGen: Gen[EnumDef] = for {
     n <- Gen.choose(2, 4)
     opts <- Gen.pick(n, Seq("red", "green", "blue", "cyan", "lime"))
   } yield EnumDef("col", opts.toSeq)
 
-  private def leafGen(enums: Seq[EnumDef]): Gen[PiqiType] = Gen.frequency(
+  def leafGen(enums: Seq[EnumDef]): Gen[PiqiType] = Gen.frequency(
     3 -> Gen.const(PString),
     2 -> Gen.const(PBool),
     2 -> Gen.const(PFloat),
@@ -36,12 +24,12 @@ class SpecFuzzSpec extends SparkTestBase {
     2 -> Gen.const(TypeRef("port")), // alias chain with accumulated constraint
     (if (enums.nonEmpty) 3 else 0) -> Gen.oneOf(enums.map(e => TypeRef(e.name))))
 
-  private def fieldGen(name: String, enums: Seq[EnumDef]): Gen[PField] = for {
+  def fieldGen(name: String, enums: Seq[EnumDef]): Gen[PField] = for {
     t <- leafGen(enums)
     mode <- Gen.oneOf[FieldMode](Required, Optional(None))
   } yield PField(name, t, mode)
 
-  private val specGen: Gen[Spec] = for {
+  val specGen: Gen[Spec] = for {
     enum0 <- enumGen
     nSub <- Gen.choose(1, 3)
     subFields <- Gen.sequence[Seq[PField], PField](
@@ -70,7 +58,7 @@ class SpecFuzzSpec extends SparkTestBase {
     rowRules = if (withRule) Seq(StrictlyIncreasing("ord", "items", "ord")) else Nil)
 
   /** Random JSON value for a leaf type: valid / invalid / null mix. */
-  private def valueGen(t: PiqiType, spec: Spec): Gen[String] = t match {
+  def valueGen(t: PiqiType, spec: Spec): Gen[String] = t match {
     case PInt(lo, hi) => Gen.frequency(
       5 -> Gen.choose(lo, hi).map(_.toString),
       2 -> Gen.oneOf((lo - 10).toString, (hi + 10).toString), // out of range
@@ -97,7 +85,7 @@ class SpecFuzzSpec extends SparkTestBase {
     case _ => Gen.const("null")
   }
 
-  private def objGen(fields: Seq[PField], spec: Spec): Gen[String] = {
+  def objGen(fields: Seq[PField], spec: Spec): Gen[String] = {
     val fieldEntries = fields.map { f =>
       f.tpe match {
         case TypeRef("sub") if f.mode == Repeated =>
@@ -120,6 +108,31 @@ class SpecFuzzSpec extends SparkTestBase {
     Gen.sequence[Seq[Option[String]], Option[String]](fieldEntries)
       .map(es => es.flatten.mkString("{", ",", "}"))
   }
+
+  /** The recursive spec: a tree recursing through an optional and a
+    * repeated edge, unrolled to `maxDepth`. */
+  def treeSpec(maxDepth: Int): Spec = Spec("rf", Seq(RecordDef("tree", Seq(
+    PField("value", PInt(0, 100), Optional()),
+    PField("next", TypeRef("tree"), Optional()),
+    PField("kids", TypeRef("tree"), Repeated)))), "tree", maxDepth = maxDepth)
+}
+
+/**
+ * Generative fuzz over the compiler: RANDOM specs (nested records, enums,
+ * repeated struct-arrays with absorbable row rules — the shapes that pick
+ * between the native StructArrayRule programs and the generic HOF walk) ×
+ * RANDOM documents (valid, missing, null, out-of-range, unknown-enum),
+ * asserting the four compiled forms agree on EVERY row:
+ *
+ *   size(violations) == violationCount == violationCountGeneric
+ *   multiset(violations) == multiset(violationsGeneric)
+ *
+ * A disagreement pinpoints a divergence between the codegen'd rule
+ * programs and the reference Column walk — the class of bug a fixed
+ * fixture suite can miss.
+ */
+class SpecFuzzSpec extends SparkTestBase {
+  import SpecFuzzSpec._
 
   test("fuzz: all four compiled forms agree on random specs x random documents") {
     val spark0 = spark
@@ -180,10 +193,7 @@ class SpecFuzzSpec extends SparkTestBase {
     } yield (maxDepth, docs)
 
     val prop = Prop.forAll(caseGen) { case (maxDepth, docs) =>
-      val spec = Spec("rf", Seq(RecordDef("tree", Seq(
-        PField("value", PInt(0, 100), Optional()),
-        PField("next", TypeRef("tree"), Optional()),
-        PField("kids", TypeRef("tree"), Repeated)))), "tree", maxDepth = maxDepth)
+      val spec = treeSpec(maxDepth)
       val plan = SpecCompiler.compile(spec)
       val schema = Convert.sparkSchema(spec)
       val df = docs.toDF("depth", "json")

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.{Vectors, VectorExpressions}
+import graft.functions.{Vectors, VectorExpressions, VectorsHof}
 
 /** Native codegen VectorDot vs the HOF reference formulation. */
 class VectorExprSpec extends SparkTestBase {
@@ -20,7 +20,7 @@ class VectorExprSpec extends SparkTestBase {
       .where(col("a.id") < col("b.id") && col("b.id") < 20)
     val diff = pairs.select(
       Vectors.dot(col("a.v"), col("b.v")).as("native"),
-      Vectors.dotHof(col("a.v"), col("b.v")).as("hof"))
+      VectorsHof.dotHof(col("a.v"), col("b.v")).as("hof"))
       .where(col("native") =!= col("hof"))
     assert(diff.count() === 0)
   }
@@ -33,7 +33,7 @@ class VectorExprSpec extends SparkTestBase {
     }.toDF("id", "v")
     val pairs = df.as("a").crossJoin(df.as("b")).where(col("a.id") < col("b.id"))
     assert(pairs.select(
-      (Vectors.dot(col("a.v"), col("b.v")) =!= Vectors.dotHof(col("a.v"), col("b.v"))).as("d"))
+      (Vectors.dot(col("a.v"), col("b.v")) =!= VectorsHof.dotHof(col("a.v"), col("b.v"))).as("d"))
       .where(col("d")).count() === 0)
   }
 
@@ -81,7 +81,7 @@ class VectorExprSpec extends SparkTestBase {
     for (bits <- Seq(1, 4, 8); seed <- Seq(42, 43)) {
       val cmp = emb.select(
         graft.functions.Vectors.signBits(col("v"), bits, seed).as("native"),
-        graft.functions.Vectors.signBitsHOF(col("v"), bits, seed).as("hof"))
+        graft.functions.VectorsHof.signBitsHOF(col("v"), bits, seed).as("hof"))
       assert(cmp.where(!(col("native") <=> col("hof"))).count() === 0, s"bits=$bits seed=$seed")
     }
     // doubles (via normalize), empty, null array, null element
@@ -92,7 +92,7 @@ class VectorExprSpec extends SparkTestBase {
       (4L, Seq[java.lang.Double](0.5, null, 1.0))).toDF("id", "v")
     val cmp2 = edge.select(col("id"),
       graft.functions.Vectors.signBits(col("v"), 6).as("native"),
-      graft.functions.Vectors.signBitsHOF(col("v"), 6).as("hof"))
+      graft.functions.VectorsHof.signBitsHOF(col("v"), 6).as("hof"))
     val rows = cmp2.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     rows.foreach { case (id, (n, h)) => assert(n === h, s"id=$id native=$n hof=$h") }
     assert(rows(2L)._1 === 0L && rows(3L)._1 === 0L && rows(4L)._1 === 0L)
@@ -106,7 +106,7 @@ class VectorExprSpec extends SparkTestBase {
       .limit(200).select(col("embedding").as("v"))
     val cmp = emb.select(
       graft.functions.Vectors.normalize(col("v")).as("native"),
-      graft.functions.Vectors.normalizeHOF(col("v")).as("hof"))
+      graft.functions.VectorsHof.normalizeHOF(col("v")).as("hof"))
     assert(cmp.where(!(col("native") <=> col("hof"))).count() === 0)
     // double edges: zero vector (unchanged), empty, null array, null element
     val edge = Seq(
@@ -117,7 +117,7 @@ class VectorExprSpec extends SparkTestBase {
       (5L, Seq[java.lang.Double](0.5, null, 1.0))).toDF("id", "v")
     val cmp2 = edge.select(col("id"),
       graft.functions.Vectors.normalize(col("v")).as("native"),
-      graft.functions.Vectors.normalizeHOF(col("v")).as("hof"))
+      graft.functions.VectorsHof.normalizeHOF(col("v")).as("hof"))
     assert(cmp2.where(!(col("native") <=> col("hof"))).count() === 0,
       cmp2.collect().mkString("; "))
     val byId = cmp2.collect().map(r => r.getLong(0) -> r).toMap
