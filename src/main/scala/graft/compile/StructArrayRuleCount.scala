@@ -4,6 +4,7 @@ import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
 /**
@@ -34,7 +35,7 @@ case class StructArrayRuleCount(child: Expression, rules: Seq[DetailRule])
     program.checkInputDataTypes()
 
   override def eval(input: InternalRow): Any =
-    program.evalFromChildValue(child.eval(input)).numElements()
+    program.evalFrom(child.eval(input)).asInstanceOf[ArrayData].numElements()
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val p = program

@@ -2,9 +2,7 @@ package graft.compile
 
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -108,7 +106,7 @@ final case class DetailRule(rule: ArrayRule, ruleId: String,
  * driver's sorted compare consume.
  */
 case class StructArrayRuleDetail(child: Expression, rules: Seq[DetailRule])
-    extends UnaryExpression {
+    extends graft.functions.UnaryEvalExpression {
 
   override def dataType: DataType = SpecCompiler.violationType
   override def nullable: Boolean = false
@@ -196,13 +194,12 @@ case class StructArrayRuleDetail(child: Expression, rules: Seq[DetailRule])
   private def vioRow(k: Int, p: UTF8String, detail: UTF8String): InternalRow =
     new GenericInternalRow(Array[Any](consts(k)(0), p, detail))
 
-  override def eval(input: InternalRow): Any = evalFromChildValue(child.eval(input))
-
-  /** Entry point for generated code and the count's `eval`: evaluate from
-    * the already-computed child value. */
-  def evalFromChildValue(childValue: Any): ArrayData =
-    if (childValue == null) StructArrayRuleDetail.emptyResult
-    else evalArray(childValue.asInstanceOf[ArrayData])
+  /** Generated code reaches this through [[graft.functions.EvalCodegen]]:
+    * the work is branchy object construction (strings, structs, a growable
+    * buffer) that inlined Java would not speed up. */
+  def evalFrom(v: Any): Any =
+    if (v == null) StructArrayRuleDetail.emptyResult
+    else evalArray(v.asInstanceOf[ArrayData])
 
   private def evalArray(arr: ArrayData): ArrayData = {
     val nFields = structType.length
@@ -306,28 +303,6 @@ case class StructArrayRuleDetail(child: Expression, rules: Seq[DetailRule])
     }
     if (out == null) StructArrayRuleDetail.emptyResult
     else new GenericArrayData(out.toArray)
-  }
-
-  // Codegen delegates to eval through a reference object: the work here is
-  // branchy object construction (strings, structs, growable buffer), which
-  // gains nothing from inlined Java but costs compile size; keeping the
-  // expression non-CodegenFallback via this stub keeps the SURROUNDING
-  // projection inside whole-stage codegen (a CodegenFallback would break the
-  // whole stage out of codegen).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("ruleDetail", this,
-      classOf[StructArrayRuleDetail].getName)
-    val childGen = child.genCode(ctx)
-    val code =
-      s"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  (org.apache.spark.sql.catalyst.util.ArrayData) $self.evalFromChildValue(
-         |    ${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin
-    ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-      .BlockHelper(new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): StructArrayRuleDetail =

@@ -2,11 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Native Catalyst expressions for the dedup signature hot paths.
@@ -16,8 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
  * ~64 `zip_with` ops per token and the MinHash signature 32 full
  * `transform`+`array_min` passes per doc — measured 16.0 s and 6.5 s for
  * 5,050 docs respectively, i.e. the dominant cost of both dedup jobs and a
- * scale-killer multiplied by 10^12 docs. These expressions emit one tight
- * primitive Java loop per doc instead (the same pattern as [[VectorDot]]).
+ * scale-killer multiplied by 10^12 docs. These expressions run one tight
+ * primitive loop per doc instead, written once in Scala: generated code
+ * calls it through [[EvalCodegen]], so the projection stays in whole-stage
+ * codegen.
  *
  * Hash compatibility: both use Spark's own xxhash64 primitives (XXH64, seed
  * 42) so results are BIT-IDENTICAL to the generic Column forms — equivalence
@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * null array → null; empty array → 0L (all counters 0, sign ≤ 0 → bit 0);
  * null token → hashed as Spark's xxhash64 of null (seed unchanged → 42).
  */
-case class Simhash64(child: Expression) extends UnaryExpression {
+case class Simhash64(child: Expression) extends UnaryEvalExpression {
 
   override def dataType: DataType = LongType
 
@@ -45,7 +45,8 @@ case class Simhash64(child: Expression) extends UnaryExpression {
           s"Simhash64 requires array<string>, got $other")
     }
 
-  override protected def nullSafeEval(v: Any): Any = {
+  def evalFrom(v: Any): Any = {
+    if (v == null) return null
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val cnt = new Array[Int](64)
@@ -70,32 +71,6 @@ case class Simhash64(child: Expression) extends UnaryExpression {
     sig
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val n = ctx.freshName("n")
-      val h = ctx.freshName("h")
-      val cnt = ctx.freshName("cnt")
-      val sig = ctx.freshName("sig")
-      s"""
-         |int $n = $a.numElements();
-         |int[] $cnt = new int[64];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  long $h = $a.isNullAt($i) ? 42L
-         |    : org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String($a.getUTF8String($i), 42L);
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ((($h >>> $b) & 1L) == 1L) $cnt[$b]++; else $cnt[$b]--;
-         |  }
-         |}
-         |long $sig = 0L;
-         |for (int $b = 0; $b < 64; $b++) {
-         |  if ($cnt[$b] > 0) $sig |= (1L << $b);
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
   override protected def withNewChildInternal(newChild: Expression): Simhash64 =
     copy(child = newChild)
 }
@@ -107,8 +82,9 @@ case class Simhash64(child: Expression) extends UnaryExpression {
  * slot). Values are the TOP 32 BITS of the permutation hash, compared as
  * signed ints — standard 32-bit minhash: per-slot collision probability is
  * Jaccard + O(2^-32), indistinguishable for LSH, at HALF the signature
- * bytes (the signature table is cached and re-joined 3× in
- * [[graft.ops.Dedup.minhashNearDups]], so bytes are the scale cost).
+ * bytes (every band row of [[graft.ops.Dedup.minhashNearDups]] carries
+ * the whole signature through its one shuffle, so bytes are the scale
+ * cost).
  *
  * Exact HOF-equivalent semantics (`DedupHof.minhashSignatureHOF`, test sources):
  * null or empty array → array of `numHashes` nulls (the HOF is
@@ -117,7 +93,7 @@ case class Simhash64(child: Expression) extends UnaryExpression {
  * trunc32(xxhash64(i)) alone (Spark's multi-arg xxhash64 skips null
  * children), i.e. the truncated per-slot seed.
  */
-case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpression {
+case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryEvalExpression {
 
   require(numHashes > 0, "numHashes must be positive")
 
@@ -137,12 +113,12 @@ case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpr
   private lazy val seeds: Array[Long] =
     Array.tabulate(numHashes)(i => XXH64.hashInt(i, 42L))
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
+  def evalFrom(v: Any): Any = {
     if (v == null) return new GenericArrayData(new Array[Any](numHashes)) // all null
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(new Array[Any](numHashes)) // all null
+    val seeds = this.seeds
     val mins = Array.fill(numHashes)(Int.MaxValue)
     var i = 0
     while (i < n) {
@@ -164,49 +140,6 @@ case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpr
       i += 1
     }
     new GenericArrayData(mins)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedsRef = ctx.addReferenceObj("minhashSeeds", seeds, "long[]")
-    val childGen = child.genCode(ctx)
-    val i = ctx.freshName("i")
-    val k = ctx.freshName("k")
-    val n = ctx.freshName("n")
-    val h = ctx.freshName("h")
-    val x = ctx.freshName("x")
-    val mins = ctx.freshName("mins")
-    val result = ctx.freshName("result")
-    val code =
-      s"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData $result;
-         |if (${childGen.isNull} || ${childGen.value}.numElements() == 0) {
-         |  $result = new org.apache.spark.sql.catalyst.util.GenericArrayData(new Object[$numHashes]);
-         |} else {
-         |  int $n = ${childGen.value}.numElements();
-         |  int[] $mins = new int[$numHashes];
-         |  java.util.Arrays.fill($mins, Integer.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (${childGen.value}.isNullAt($i)) {
-         |      for (int $k = 0; $k < $numHashes; $k++) {
-         |        int $x = (int) ($seedsRef[$k] >>> 32);
-         |        if ($x < $mins[$k]) $mins[$k] = $x;
-         |      }
-         |    } else {
-         |      long $h = ${childGen.value}.getLong($i);
-         |      for (int $k = 0; $k < $numHashes; $k++) {
-         |        int $x = (int) (org.apache.spark.sql.catalyst.expressions.XXH64.hashLong($h, $seedsRef[$k]) >>> 32);
-         |        if ($x < $mins[$k]) $mins[$k] = $x;
-         |      }
-         |    }
-         |  }
-         |  $result = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = $result;
-       """.stripMargin
-    ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-      .BlockHelper(new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
@@ -231,7 +164,7 @@ case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpr
  *   whole-doc  = fold over th of acc' = hashLong(h, hashLong(acc, 42)), acc₀=17
  * null tokens array → null.
  */
-case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
+case class ShingleHashes(child: Expression, k: Int) extends UnaryEvalExpression {
 
   require(k > 0, "shingle size must be positive")
 
@@ -246,7 +179,8 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
           s"ShingleHashes requires array<string>, got $other")
     }
 
-  override protected def nullSafeEval(v: Any): Any = {
+  def evalFrom(v: Any): Any = {
+    if (v == null) return null
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     val th = new Array[Long](n)
@@ -286,57 +220,6 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
     new GenericArrayData(java.util.Arrays.copyOf(kept, m2))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val o = ctx.freshName("o")
-      val n = ctx.freshName("n")
-      val m = ctx.freshName("m")
-      val m2 = ctx.freshName("m2")
-      val th = ctx.freshName("th")
-      val raw = ctx.freshName("raw")
-      val kept = ctx.freshName("kept")
-      val seen = ctx.freshName("seen")
-      val acc = ctx.freshName("acc")
-      val h = ctx.freshName("h")
-      s"""
-         |int $n = $a.numElements();
-         |long[] $th = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $th[$i] = $a.isNullAt($i) ? 42L
-         |    : org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String($a.getUTF8String($i), 42L);
-         |}
-         |long[] $raw;
-         |if ($n < $k) {
-         |  long $acc = 17L;
-         |  for (int $j = 0; $j < $n; $j++) {
-         |    $acc = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong($th[$j],
-         |      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong($acc, 42L));
-         |  }
-         |  $raw = new long[] { $acc };
-         |} else {
-         |  int $m = $n - ${k - 1};
-         |  $raw = new long[$m];
-         |  for (int $j = 0; $j < $m; $j++) {
-         |    long $h = 42L;
-         |    for (int $o = 0; $o < $k; $o++) {
-         |      $h = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong($th[$j + $o], $h);
-         |    }
-         |    $raw[$j] = $h;
-         |  }
-         |}
-         |java.util.HashSet<Long> $seen = new java.util.HashSet<Long>();
-         |long[] $kept = new long[$raw.length];
-         |int $m2 = 0;
-         |for (int $j = 0; $j < $raw.length; $j++) {
-         |  if ($seen.add($raw[$j])) { $kept[$m2++] = $raw[$j]; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |  java.util.Arrays.copyOf($kept, $m2));
-       """.stripMargin
-    })
-
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
     copy(child = newChild)
 }
@@ -353,7 +236,7 @@ case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
  * the stage that is 79% CPU of the one-shuffle pipeline's wall time.
  */
 case class MinHashFromTokens(child: Expression, k: Int, numHashes: Int)
-    extends UnaryExpression {
+    extends UnaryEvalExpression {
 
   require(k > 0, "shingle size must be positive")
   require(numHashes > 0, "numHashes must be positive")
@@ -373,11 +256,11 @@ case class MinHashFromTokens(child: Expression, k: Int, numHashes: Int)
   private lazy val seeds: Array[Long] =
     Array.tabulate(numHashes)(i => XXH64.hashInt(i, 42L))
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
+  def evalFrom(v: Any): Any = {
     if (v == null) return new GenericArrayData(new Array[Any](numHashes)) // tokens null
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
+    val seeds = this.seeds
     val mins = Array.fill(numHashes)(Int.MaxValue)
     @inline def update(h: Long): Unit = {
       var s = 0
@@ -413,69 +296,6 @@ case class MinHashFromTokens(child: Expression, k: Int, numHashes: Int)
     new GenericArrayData(mins)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedsRef = ctx.addReferenceObj("minhashFusedSeeds", seeds, "long[]")
-    val childGen = child.genCode(ctx)
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val o = ctx.freshName("o")
-    val s = ctx.freshName("s")
-    val n = ctx.freshName("n")
-    val h = ctx.freshName("h")
-    val x = ctx.freshName("x")
-    val acc = ctx.freshName("acc")
-    val buf = ctx.freshName("buf")
-    val th = ctx.freshName("th")
-    val mins = ctx.freshName("mins")
-    val result = ctx.freshName("result")
-    val xxh = "org.apache.spark.sql.catalyst.expressions.XXH64"
-    val code =
-      s"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData $result;
-         |if (${childGen.isNull}) {
-         |  $result = new org.apache.spark.sql.catalyst.util.GenericArrayData(new Object[$numHashes]);
-         |} else {
-         |  int $n = ${childGen.value}.numElements();
-         |  int[] $mins = new int[$numHashes];
-         |  java.util.Arrays.fill($mins, Integer.MAX_VALUE);
-         |  if ($n < $k) {
-         |    long $acc = 17L;
-         |    for (int $j = 0; $j < $n; $j++) {
-         |      long $th = ${childGen.value}.isNullAt($j) ? 42L
-         |        : $xxh.hashUTF8String(${childGen.value}.getUTF8String($j), 42L);
-         |      $acc = $xxh.hashLong($th, $xxh.hashLong($acc, 42L));
-         |    }
-         |    for (int $s = 0; $s < $numHashes; $s++) {
-         |      int $x = (int) ($xxh.hashLong($acc, $seedsRef[$s]) >>> 32);
-         |      if ($x < $mins[$s]) $mins[$s] = $x;
-         |    }
-         |  } else {
-         |    long[] $buf = new long[$k];
-         |    for (int $i = 0; $i < $n; $i++) {
-         |      $buf[$i % $k] = ${childGen.value}.isNullAt($i) ? 42L
-         |        : $xxh.hashUTF8String(${childGen.value}.getUTF8String($i), 42L);
-         |      if ($i >= ${k - 1}) {
-         |        long $h = 42L;
-         |        for (int $o = 0; $o < $k; $o++) {
-         |          $h = $xxh.hashLong($buf[($i - ${k - 1} + $o) % $k], $h);
-         |        }
-         |        for (int $s = 0; $s < $numHashes; $s++) {
-         |          int $x = (int) ($xxh.hashLong($h, $seedsRef[$s]) >>> 32);
-         |          if ($x < $mins[$s]) $mins[$s] = $x;
-         |        }
-         |      }
-         |    }
-         |  }
-         |  $result = new org.apache.spark.sql.catalyst.util.GenericArrayData($mins);
-         |}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = $result;
-       """.stripMargin
-    ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-      .BlockHelper(new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): MinHashFromTokens =
     copy(child = newChild)
 }
@@ -494,7 +314,7 @@ case class MinHashFromTokens(child: Expression, k: Int, numHashes: Int)
  * Column tree per element per bit — the inner loop of every bucketed ANN /
  * embedding near-dup job.
  */
-case class SignBits(child: Expression, bits: Int, seed: Int) extends UnaryExpression {
+case class SignBits(child: Expression, bits: Int, seed: Int) extends UnaryEvalExpression {
 
   require(bits > 0 && bits <= 63, "bits must be in 1..63")
 
@@ -510,27 +330,28 @@ case class SignBits(child: Expression, bits: Int, seed: Int) extends UnaryExpres
           s"SignBits requires array<float|double>, got $other")
     }
 
-  private def elemIsFloat: Boolean =
+  @transient private lazy val elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
   /** Per-bit hash prefix: xxhash64(seed, bit, ·) folded over the first two args. */
   private lazy val bitSeeds: Array[Long] =
     Array.tabulate(bits)(b => XXH64.hashInt(b, XXH64.hashInt(seed, 42L)))
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
+  def evalFrom(v: Any): Any = {
     if (v == null) return 0L
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     if (n == 0) return 0L // HOF: zip_with pads → null projection → all bits 0
+    val isF = elemIsFloat
+    val seeds = bitSeeds
     val proj = new Array[Double](bits)
     var i = 0
     while (i < n) {
       if (arr.isNullAt(i)) return 0L // null element nulls every projection
-      val x = if (elemIsFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
+      val x = if (isF) arr.getFloat(i).toDouble else arr.getDouble(i)
       var b = 0
       while (b < bits) {
-        val pc = if (((XXH64.hashInt(i, bitSeeds(b)) % 2) + 2) % 2 == 0) 1.0 else -1.0
+        val pc = if (((XXH64.hashInt(i, seeds(b)) % 2) + 2) % 2 == 0) 1.0 else -1.0
         proj(b) += x * pc
         b += 1
       }
@@ -543,47 +364,6 @@ case class SignBits(child: Expression, bits: Int, seed: Int) extends UnaryExpres
       b += 1
     }
     bucket
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val seedsRef = ctx.addReferenceObj("signBitSeeds", bitSeeds, "long[]")
-    val childGen = child.genCode(ctx)
-    val getter = if (elemIsFloat) "getFloat" else "getDouble"
-    val i = ctx.freshName("i")
-    val b = ctx.freshName("b")
-    val n = ctx.freshName("n")
-    val x = ctx.freshName("x")
-    val h = ctx.freshName("h")
-    val proj = ctx.freshName("proj")
-    val sawNull = ctx.freshName("sawNull")
-    val bucket = ctx.freshName("bucket")
-    val code =
-      s"""
-         |${childGen.code}
-         |long $bucket = 0L;
-         |if (!${childGen.isNull} && ${childGen.value}.numElements() > 0) {
-         |  int $n = ${childGen.value}.numElements();
-         |  double[] $proj = new double[$bits];
-         |  boolean $sawNull = false;
-         |  for (int $i = 0; $i < $n && !$sawNull; $i++) {
-         |    if (${childGen.value}.isNullAt($i)) { $sawNull = true; break; }
-         |    double $x = (double) ${childGen.value}.$getter($i);
-         |    for (int $b = 0; $b < $bits; $b++) {
-         |      long $h = org.apache.spark.sql.catalyst.expressions.XXH64.hashInt($i, $seedsRef[$b]);
-         |      $proj[$b] += ((($h % 2L) + 2L) % 2L == 0L) ? $x : -$x;
-         |    }
-         |  }
-         |  if (!$sawNull) {
-         |    for (int $b = 0; $b < $bits; $b++) {
-         |      if ($proj[$b] >= 0) $bucket += (1L << $b);
-         |    }
-         |  }
-         |}
-         |long ${ev.value} = $bucket;
-       """.stripMargin
-    ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-      .BlockHelper(new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): SignBits =

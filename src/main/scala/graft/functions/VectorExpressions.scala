@@ -2,8 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftBridge
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -14,17 +13,20 @@ import org.apache.spark.sql.types._
  * (`aggregate(zip_with(a, b, _*_), 0d, _+_)`) evaluates through interpreted
  * lambda dispatch — Spark's higher-order functions are CodegenFallback.
  * For ANN / near-dup jobs the dot product runs once per (doc × query) pair,
- * so this is THE inner loop at 100 TB; a custom `Expression` with
- * `doGenCode` emits a tight primitive Java loop instead (preference order
- * (b) of the build mandate: native expression > UDF).
+ * so this is THE inner loop at 100 TB; a custom `Expression` runs one
+ * tight primitive loop instead, written once in Scala and called from
+ * generated code through [[EvalCodegen]] (native expression > UDF).
  *
  * Semantics match [[Vectors.dot]]: null element or length mismatch → the
  * shorter prefix, null array → null result (nullSafe).
  */
 case class VectorDot(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryEvalExpression {
 
   override def dataType: DataType = DoubleType
+
+  @transient private lazy val leftIsFloat: Boolean = elemIsFloat(left)
+  @transient private lazy val rightIsFloat: Boolean = elemIsFloat(right)
 
   private def elemIsFloat(e: Expression): Boolean =
     e.dataType.asInstanceOf[ArrayType].elementType match {
@@ -44,11 +46,13 @@ case class VectorDot(left: Expression, right: Expression)
       s"VectorDot requires array<float|double> inputs, got ${left.dataType} / ${right.dataType}")
   }
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
+  def evalFrom(l: Any, r: Any): Any = {
+    if (l == null || r == null) return null
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
     val n = math.min(a.numElements(), b.numElements())
-    val (af, bf) = (elemIsFloat(left), elemIsFloat(right))
+    val af = leftIsFloat
+    val bf = rightIsFloat
     var sum = 0.0
     var i = 0
     while (i < n) {
@@ -60,26 +64,6 @@ case class VectorDot(left: Expression, right: Expression)
       i += 1
     }
     sum
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aGet = if (elemIsFloat(left)) "getFloat" else "getDouble"
-    val bGet = if (elemIsFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val sum = ctx.freshName("sum")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $sum += ((double) $a.$aGet($i)) * ((double) $b.$bGet($i));
-         |  }
-         |}
-         |${ev.value} = $sum;
-       """.stripMargin
-    })
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): VectorDot =
@@ -96,7 +80,7 @@ case class VectorDot(left: Expression, right: Expression)
  * sqrt of the null-skipping [[VectorDot]] self-product; zero norm → the
  * elements cast to double unchanged; null elements stay null.
  */
-case class VectorNormalize(child: Expression) extends UnaryExpression {
+case class VectorNormalize(child: Expression) extends UnaryEvalExpression {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = true)
 
@@ -112,7 +96,8 @@ case class VectorNormalize(child: Expression) extends UnaryExpression {
           s"VectorNormalize requires array<float|double>, got $other")
     }
 
-  override protected def nullSafeEval(v: Any): Any = {
+  def evalFrom(v: Any): Any = {
+    if (v == null) return null
     val a = v.asInstanceOf[ArrayData]
     val n = a.numElements()
     val isF = elemIsFloat
@@ -138,37 +123,6 @@ case class VectorNormalize(child: Expression) extends UnaryExpression {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val getter = if (elemIsFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val sum = ctx.freshName("sum")
-      val nrm = ctx.freshName("nrm")
-      val x = ctx.freshName("x")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $a.numElements();
-         |double $sum = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    double $x = (double) $a.$getter($i);
-         |    $sum += $x * $x;
-         |  }
-         |}
-         |double $nrm = java.lang.Math.sqrt($sum);
-         |Object[] $out = new Object[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i)) {
-         |    double $x = (double) $a.$getter($i);
-         |    $out[$i] = ($nrm == 0.0) ? (Object) $x : (Object) ($x / $nrm);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-  }
-
   override protected def withNewChildInternal(newChild: Expression): VectorNormalize =
     copy(child = newChild)
 }
@@ -177,16 +131,13 @@ case class VectorNormalize(child: Expression) extends UnaryExpression {
  * The `nProbe` nearest centroids (by L2) for a vector — the IVF coarse
  * quantizer's assignment step, over a broadcast centroid table carried as
  * an expression reference object (no join, no plane matrix shuffle). One
- * tight loop per row; codegen delegates to eval through a reference object
- * (branchy argmin with a small selection buffer gains nothing from inlined
- * Java; the stub keeps the surrounding projection inside whole-stage
- * codegen, same pattern as [[graft.compile.StructArrayRuleDetail]]).
+ * tight loop per row, called from generated code through [[EvalCodegen]].
  *
  * Null array / null element / empty → all `nProbe` cells −1 (a dedicated
  * "unassignable" cell; joins on it only match other unassignables).
  */
 case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
-    nProbe: Int) extends UnaryExpression {
+    nProbe: Int) extends UnaryEvalExpression {
 
   require(nProbe > 0 && nProbe <= centroids.length,
     "need 0 < nProbe <= centroid count")
@@ -209,16 +160,9 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
   private lazy val unassigned: org.apache.spark.sql.catalyst.util.GenericArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.fill(nProbe)(-1))
 
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
-    evalFromChildValue(child.eval(input))
-
-  /** Entry point shared by eval and generated code. */
-  def evalFromChildValue(childValue: Any): Any = {
-    if (childValue == null) return unassigned
-    evalWith(childValue.asInstanceOf[ArrayData])
-  }
-
-  private def evalWith(a: ArrayData): Any = {
+  def evalFrom(v: Any): Any = {
+    if (v == null) return unassigned
+    val a = v.asInstanceOf[ArrayData]
     val n = a.numElements()
     if (n == 0) return unassigned
     // dim mismatch vs the trained quantizer → unassignable, never a silent
@@ -255,22 +199,6 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
     new org.apache.spark.sql.catalyst.util.GenericArrayData(bestIdx)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("nearestCentroids", this,
-      classOf[NearestCentroids].getName)
-    val childGen = child.genCode(ctx)
-    val code =
-      s"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  (org.apache.spark.sql.catalyst.util.ArrayData) $self.evalFromChildValue(
-         |    ${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin
-    ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
-      .BlockHelper(new StringContext(code)).code(),
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
   override protected def withNewChildInternal(newChild: Expression): NearestCentroids =
     copy(child = newChild)
 }
@@ -292,7 +220,7 @@ case class NearestCentroids(child: Expression, centroids: Array[Array[Double]],
  * unknown, never as a silently-partial sum — [[graft.ops.Pq.encode]] never
  * emits one).
  */
-case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
+case class PqAdc(left: Expression, right: Expression) extends BinaryEvalExpression {
 
   override def dataType: DataType = DoubleType
   override def nullable: Boolean = true
@@ -306,7 +234,8 @@ case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
           s"PqAdc requires (array<int>, array<array<double>>), got $l / $r")
     }
 
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
+  def evalFrom(l: Any, r: Any): Any = {
+    if (l == null || r == null) return null
     val codes = l.asInstanceOf[ArrayData]
     val luts = r.asInstanceOf[ArrayData]
     val m = codes.numElements()
@@ -323,29 +252,6 @@ case class PqAdc(left: Expression, right: Expression) extends BinaryExpression {
     }
     sum
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (codes, luts) => {
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val c = ctx.freshName("c")
-      val lut = ctx.freshName("lut")
-      val sum = ctx.freshName("sum")
-      val bad = ctx.freshName("bad")
-      s"""
-         |int $m = $codes.numElements();
-         |double $sum = 0.0;
-         |boolean $bad = ($luts.numElements() != $m);
-         |for (int $j = 0; !$bad && $j < $m; $j++) {
-         |  if ($codes.isNullAt($j) || $luts.isNullAt($j)) { $bad = true; break; }
-         |  int $c = $codes.getInt($j);
-         |  org.apache.spark.sql.catalyst.util.ArrayData $lut = $luts.getArray($j);
-         |  if ($c < 0 || $c >= $lut.numElements() || $lut.isNullAt($c)) { $bad = true; break; }
-         |  $sum += $lut.getDouble($c);
-         |}
-         |if ($bad) { ${ev.isNull} = true; } else { ${ev.value} = $sum; }
-       """.stripMargin
-    })
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqAdc =
     copy(left = newLeft, right = newRight)

@@ -11,12 +11,12 @@ import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression,
-  GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{Block, CodegenContext, ExprCode, FalseLiteral}
+  GenericInternalRow}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import graft.compile.SpecCompiler
+import graft.functions.UnaryEvalExpression
 import graft.spec._
 
 /**
@@ -345,7 +345,7 @@ object JsonShape {
  * (when `parseVio`) for a non-null document that is not a JSON object.
  */
 private[graft] case class JsonShapeWalk(child: Expression, root: JsonShape.Obj, strict: Boolean,
-    parseVio: Boolean) extends UnaryExpression {
+    parseVio: Boolean) extends UnaryEvalExpression {
 
   override def dataType: DataType = SpecCompiler.violationType
   override def nullable: Boolean = false
@@ -356,10 +356,10 @@ private[graft] case class JsonShapeWalk(child: Expression, root: JsonShape.Obj, 
     case other => TypeCheckResult.TypeCheckFailure(s"json_shape needs a string, got $other")
   }
 
-  override def eval(input: InternalRow): Any =
-    evalDoc(child.eval(input).asInstanceOf[UTF8String])
-
-  def evalDoc(doc: UTF8String): ArrayData =
+  /** Generated code reaches this through [[EvalCodegen]]: the walk is
+    * branchy parser work that inlined Java would not speed up. */
+  def evalFrom(v: Any): Any = {
+    val doc = v.asInstanceOf[UTF8String]
     if (doc == null) JsonShapeWalk.empty
     else JsonShape.run(root, strict, doc) match {
       case Some(vs) => if (vs.isEmpty) JsonShapeWalk.empty else new GenericArrayData(vs.toArray)
@@ -367,21 +367,6 @@ private[graft] case class JsonShapeWalk(child: Expression, root: JsonShape.Obj, 
         UTF8String.fromString("parse:json"), UTF8String.fromString("$"), doc.clone()))))
       case None => JsonShapeWalk.empty
     }
-
-  // Codegen delegates to eval through a reference object (the
-  // StructArrayRuleDetail pattern): the walk is branchy parser work that
-  // gains nothing from inlined Java, and a non-CodegenFallback expression
-  // keeps the SURROUNDING projection inside whole-stage codegen.
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val self = ctx.addReferenceObj("jsonShape", this, classOf[JsonShapeWalk].getName)
-    val childGen = child.genCode(ctx)
-    val code =
-      s"""
-         |${childGen.code}
-         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} =
-         |  $self.evalDoc(${childGen.isNull} ? null : ${childGen.value});
-       """.stripMargin
-    ev.copy(code = Block.BlockHelper(new StringContext(code)).code(), isNull = FalseLiteral)
   }
 
   override protected def withNewChildInternal(newChild: Expression): JsonShapeWalk =

@@ -14,36 +14,6 @@ object DebugCodegen {
     // debugCodegen output
     import org.apache.spark.sql.execution.debug._
     counted.debugCodegen()
-    // dedup signature expressions (Simhash64 / MinHashSignature natives);
-    // spark.range (not a local Seq) so the projection stays a distributed
-    // plan — ConvertToLocalRelation would otherwise evaluate it driver-side
-    // with no codegen to inspect
-    val texts = spark.range(0, 1000, 1, 4).select(col("id"),
-      concat_ws(" ", lit("alpha"), col("id").cast("string"),
-        lit("beta gamma delta"), pmod(col("id"), lit(7)).cast("string")).as("text"))
-    val sigs = texts.select(
-      graft.ops.Dedup.simhash64(col("text")).as("simhash"),
-      graft.ops.Dedup.minhashSignature(col("text"), 32).as("minhash"))
-    sigs.debugCodegen()
-    sigs.collect() // force execution: janino errors surface as WARN + fallback
-    // sign-bit LSH native (embedding bucketing)
-    val vecs = spark.range(0, 1000, 1, 4).select(col("id"),
-      org.apache.spark.sql.functions.array(
-        (col("id") % 7).cast("double"), (col("id") % 3).cast("double"),
-        org.apache.spark.sql.functions.lit(-1.5)).as("v"))
-    val buckets = vecs.select(graft.functions.Vectors.signBits(col("v"), 8).as("b"))
-    buckets.debugCodegen()
-    buckets.collect()
-    // PQ asymmetric-distance native (codes × query LUTs)
-    val pqRows = spark.range(0, 1000, 1, 4).select(
-      org.apache.spark.sql.functions.array(
-        (col("id") % 4).cast("int"), (col("id") % 3).cast("int")).as("codes"),
-      org.apache.spark.sql.functions.array(
-        org.apache.spark.sql.functions.array(lit(0.1), lit(0.2), lit(0.3), lit(0.4)),
-        org.apache.spark.sql.functions.array(lit(1.0), lit(2.0), lit(3.0), lit(4.0))).as("luts"))
-    val adc = pqRows.select(graft.functions.Vectors.pqAdc(col("codes"), col("luts")).as("s"))
-    adc.debugCodegen()
-    adc.collect()
     // uint64 decimal branch of StructArrayRuleCount (RuleRangeDecimal):
     // CODEGEN_ONLY turns a janino error into a hard failure instead of the
     // silent interpreted fallback

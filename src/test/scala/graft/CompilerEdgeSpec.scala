@@ -188,25 +188,13 @@ class CompilerEdgeSpec extends SparkTestBase {
         .select("doc_id", "n_detail", "n_native", "n_generic")
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3))).toMap
 
-    val modes = Seq(
-      "interpreted" -> Seq(
-        "spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"),
-      "codegen only" -> Seq(
-        "spark.sql.codegen.wholeStage" -> "true", "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY"))
-    modes.foreach { case (mode, confs) =>
-      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      try {
-        confs.foreach { case (k, v) => spark.conf.set(k, v) }
-        Seq((counts(plan, rows, schema), expected),
-            (counts(u64plan, u64rows, u64schema), u64expected)).foreach { case (all, exp) =>
-          exp.foreach { case (id, n) =>
-            assert(all(id) === ((n, n, n)),
-              s"$mode $id: (detail,native,generic)=${all(id)} expected $n")
-          }
+    inEachEvaluator { mode =>
+      Seq((counts(plan, rows, schema), expected),
+          (counts(u64plan, u64rows, u64schema), u64expected)).foreach { case (all, exp) =>
+        exp.foreach { case (id, n) =>
+          assert(all(id) === ((n, n, n)),
+            s"$mode $id: (detail,native,generic)=${all(id)} expected $n")
         }
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
       }
     }
   }

@@ -157,7 +157,10 @@ class DedupSpec extends SparkTestBase {
     // an ANSI cast of a non-numeric id throws an IllegalArgumentException
     // subclass; only non-convergence may fall back to star
     val pairs = Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b")
-    val e = intercept[Exception](Dedup.connectedComponentsAuto(pairs).collect())
+    val e = withLoggersOff("org.apache.spark.executor.Executor",
+      "org.apache.spark.scheduler.TaskSetManager") {
+      intercept[Exception](Dedup.connectedComponentsAuto(pairs).collect())
+    }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[NumberFormatException]), e.toString)
     assert(!e.getStackTrace.exists(_.getMethodName.contains("connectedComponentsStar")),
@@ -291,12 +294,14 @@ class DedupSpec extends SparkTestBase {
       (900L, ""), (901L, "   "), (902L, "one"), (903L, "a b c d"),
       (904L, "unicode \u00fcber stra\u00dfe \u4e2d\u6587"), (905L, null: String))
     val df = texts.toDF("id", "text")
-    val both = df.select(col("id"),
-      Dedup.simhash64(col("text")).as("native"),
-      DedupHof.simhash64HOF(col("text")).as("hof"))
-    assert(both.where(!(col("native") <=> col("hof"))).count() === 0)
-    // null text propagates null through both forms
-    assert(both.where(col("id") === 905L).collect()(0).isNullAt(1))
+    inEachEvaluator { mode =>
+      val both = df.select(col("id"),
+        Dedup.simhash64(col("text")).as("native"),
+        DedupHof.simhash64HOF(col("text")).as("hof"))
+      assert(both.where(!(col("native") <=> col("hof"))).count() === 0, mode)
+      // null text propagates null through both forms
+      assert(both.where(col("id") === 905L).collect()(0).isNullAt(1), mode)
+    }
   }
 
   test("fused MinHashFromTokens == two-step native == HOF signature exactly (incl. edges)") {
@@ -307,14 +312,17 @@ class DedupSpec extends SparkTestBase {
       (904L, "a a a a a a"), // duplicate shingles: min over multiset == min over set
       (905L, "unicode über straße 中文 mixed in text"))
     val df = texts.toDF("id", "text")
-    for (k <- Seq(1, 3, 5)) {
-      val all = df.select(col("id"),
-        Dedup.minhashSignature(col("text"), 32, k).as("fused"),
-        graft.functions.HashExpressions.minhashSignatureNative(
-          Dedup.shingleHashes(col("text"), k), 32).as("twostep"),
-        DedupHof.minhashSignatureHOF(col("text"), 32, k).as("hof"))
-      assert(all.where(!(col("fused") <=> col("twostep"))).count() === 0, s"k=$k fused!=twostep")
-      assert(all.where(!(col("fused") <=> col("hof"))).count() === 0, s"k=$k fused!=hof")
+    inEachEvaluator { mode =>
+      for (k <- Seq(1, 3, 5)) {
+        val all = df.select(col("id"),
+          Dedup.minhashSignature(col("text"), 32, k).as("fused"),
+          graft.functions.HashExpressions.minhashSignatureNative(
+            Dedup.shingleHashes(col("text"), k), 32).as("twostep"),
+          DedupHof.minhashSignatureHOF(col("text"), 32, k).as("hof"))
+        assert(all.where(!(col("fused") <=> col("twostep"))).count() === 0,
+          s"$mode k=$k fused!=twostep")
+        assert(all.where(!(col("fused") <=> col("hof"))).count() === 0, s"$mode k=$k fused!=hof")
+      }
     }
   }
 
@@ -328,11 +336,13 @@ class DedupSpec extends SparkTestBase {
       (906L, "unicode über straße 中文 mixed in text"),
       (907L, null: String))
     val df = texts.toDF("id", "text")
-    for (k <- Seq(1, 3, 5)) {
-      val both = df.select(col("id"),
-        Dedup.shingleHashes(col("text"), k).as("native"),
-        DedupHof.shingleHashesHOF(col("text"), k).as("hof"))
-      assert(both.where(!(col("native") <=> col("hof"))).count() === 0, s"k=$k diverged")
+    inEachEvaluator { mode =>
+      for (k <- Seq(1, 3, 5)) {
+        val both = df.select(col("id"),
+          Dedup.shingleHashes(col("text"), k).as("native"),
+          DedupHof.shingleHashesHOF(col("text"), k).as("hof"))
+        assert(both.where(!(col("native") <=> col("hof"))).count() === 0, s"$mode k=$k diverged")
+      }
     }
   }
 

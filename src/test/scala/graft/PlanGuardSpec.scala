@@ -53,9 +53,7 @@ class PlanGuardSpec extends SparkTestBase {
     // refCheck's OWN cardinality gate (at real scale, stats are huge and
     // only the explicit hint broadcasts; here stats are tiny and only the
     // absence of the hint prevents it)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val docs = spark.read.parquet(tmpDocs).select(col("doc_id"))
       val catalog = spark.range(100).select(concat(lit("doc-"), col("id")).as("k"))
       val small = physical(ValidationRunner.refCheck(docs, "doc_id", catalog, "k"))
@@ -67,7 +65,7 @@ class PlanGuardSpec extends SparkTestBase {
         s"huge catalog must not broadcast (driver OOM at scale):\n$big")
       assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"),
         s"huge catalog should shuffle-join:\n$big")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("minhash/simhash/embedding near-dup plans contain no cartesian product") {
@@ -83,6 +81,48 @@ class PlanGuardSpec extends SparkTestBase {
       val p = physical(df)
       assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
         s"near-dup plan went quadratic:\n${p.take(4000)}")
+    }
+  }
+
+  test("native expressions compute inside a whole-stage codegen stage on a distributed input") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    import graft.functions._
+    // (operator, in a codegen stage) for each operator that computes a `cls`
+    def placed(df: org.apache.spark.sql.DataFrame, cls: Class[_]): Seq[(String, Boolean)] = {
+      def walk(p: SparkPlan, inStage: Boolean): Seq[(String, Boolean)] = p match {
+        case w: WholeStageCodegenExec => walk(w.child, inStage = true)
+        case a: InputAdapter => walk(a.child, inStage = false)
+        case _ =>
+          val here = if (p.expressions.exists(_.exists(cls.isInstance))) Seq(p.nodeName -> inStage)
+            else Nil
+          here ++ p.children.flatMap(walk(_, inStage))
+      }
+      walk(df.queryExecution.executedPlan, inStage = false)
+    }
+    val docs = graft.tools.DedupCorpus.generate(spark, 500, 4, degen = 100)
+    val vecs = docs.select(col("doc_id"),
+      array(col("doc_id").cast("double"), lit(1.0), lit(2.0)).as("v"))
+    val spec = graft.spec.Spec("pin", Seq(graft.spec.RecordDef("doc", Seq(
+      graft.spec.PField("id", graft.spec.PInt.int64, graft.spec.Required)))), "doc", strict = true)
+    val json = spark.range(0, 100, 1, 4)
+      .select(concat(lit("{\"id\":"), col("id").cast("string"), lit("}")).as("json"))
+    // the static plan (AQE plans its codegen stages only when it runs)
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      for ((df, cls) <- Seq(
+          graft.ops.Dedup.minhashNearDups(docs, "doc_id", "text",
+            numHashes = 32, bands = 8, threshold = 0.9) -> classOf[MinHashFromTokens],
+          graft.ops.Dedup.simhashNearDups(docs, "doc_id", "text") -> classOf[Simhash64],
+          graft.ops.Dedup.embeddingNearDups(vecs, "doc_id", "v") -> classOf[VectorNormalize],
+          graft.ops.Dedup.embeddingNearDups(vecs, "doc_id", "v") -> classOf[SignBits],
+          // the walk alone: Convert.fromJson computes it in one project with
+          // from_json, a CodegenFallback that keeps that project out
+          json.select(graft.io.JsonShape.checkKeys(col("json"), spec, rootScalars = true))
+            -> classOf[graft.io.JsonShapeWalk])) {
+        val ops = placed(df, cls)
+        assert(ops.nonEmpty && ops.forall(_._2),
+          s"${cls.getSimpleName} computed outside whole-stage codegen: $ops\n" +
+            physical(df).take(4000))
+      }
     }
   }
 

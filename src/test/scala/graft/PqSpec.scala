@@ -42,14 +42,16 @@ class PqSpec extends SparkTestBase {
         containsNull = true))))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 3), schema)
-    val got = df.select(
-      Vectors.pqAdc(col("codes"), col("luts")).as("nat"),
-      VectorsHof.pqAdcHof(col("codes"), col("luts")).as("hof")).collect()
-    got.zipWithIndex.foreach { case (r, i) =>
-      val nat = if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0))
-      val hof = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))
-      if (nat == null || hof == null) assert(nat == hof, s"row $i: $nat vs $hof")
-      else assert(math.abs(nat - hof) < 1e-12, s"row $i: $nat vs $hof")
+    inEachEvaluator { mode =>
+      val got = df.select(
+        Vectors.pqAdc(col("codes"), col("luts")).as("nat"),
+        VectorsHof.pqAdcHof(col("codes"), col("luts")).as("hof")).collect()
+      got.zipWithIndex.foreach { case (r, i) =>
+        val nat = if (r.isNullAt(0)) null else java.lang.Double.valueOf(r.getDouble(0))
+        val hof = if (r.isNullAt(1)) null else java.lang.Double.valueOf(r.getDouble(1))
+        if (nat == null || hof == null) assert(nat == hof, s"$mode row $i: $nat vs $hof")
+        else assert(math.abs(nat - hof) < 1e-12, s"$mode row $i: $nat vs $hof")
+      }
     }
   }
 

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.LoggerContext
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -7,6 +10,53 @@ import org.scalatest.BeforeAndAfterAll
 /** Shared local SparkSession for suites; one JVM-wide session (local[4]). */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkTestBase.session
+
+  /** Runs `body` with the Spark confs set, then restores them. */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /**
+   * Runs `body` once per expression evaluator, passing its name, and
+   * returns both results: once interpreted, and once through generated code
+   * only, so a janino error fails the run instead of falling back to
+   * interpreted evaluation. Both runs keep a local `Seq` input a scan:
+   * `ConvertToLocalRelation` would otherwise fold its projection into the
+   * plan, interpreted.
+   */
+  def inEachEvaluator[T](body: String => T): Seq[T] = {
+    val local = "spark.sql.optimizer.excludedRules" ->
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    Seq(withConf(local, "spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body("interpreted")),
+        withConf(local, "spark.sql.codegen.wholeStage" -> "true",
+          "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(body("codegen only")))
+  }
+
+  /** Runs `body` with the named loggers off, for a test whose expected
+    * failure Spark logs as an ERROR; restores their configuration after. */
+  def withLoggersOff[T](loggers: String*)(body: => T): T = {
+    val context = LoggerContext.getContext(false)
+    val config = context.getConfiguration
+    val saved = loggers.map(n => n -> Option(config.getLoggers.get(n)).map(_.getLevel))
+    try {
+      loggers.foreach(Configurator.setLevel(_, Level.OFF))
+      body
+    } finally {
+      saved.foreach {
+        case (n, Some(level)) => Configurator.setLevel(n, level)
+        case (n, None) => config.removeLogger(n)
+      }
+      context.updateLoggers()
+    }
+  }
 }
 
 object SparkTestBase {

@@ -18,11 +18,13 @@ class VectorExprSpec extends SparkTestBase {
     val df = vecsF(200)
     val pairs = df.as("a").crossJoin(df.as("b"))
       .where(col("a.id") < col("b.id") && col("b.id") < 20)
-    val diff = pairs.select(
-      Vectors.dot(col("a.v"), col("b.v")).as("native"),
-      VectorsHof.dotHof(col("a.v"), col("b.v")).as("hof"))
-      .where(col("native") =!= col("hof"))
-    assert(diff.count() === 0)
+    inEachEvaluator { mode =>
+      val diff = pairs.select(
+        Vectors.dot(col("a.v"), col("b.v")).as("native"),
+        VectorsHof.dotHof(col("a.v"), col("b.v")).as("hof"))
+        .where(col("native") =!= col("hof"))
+      assert(diff.count() === 0, mode)
+    }
   }
 
   test("native dot equals HOF dot exactly (double arrays)") {
@@ -32,9 +34,11 @@ class VectorExprSpec extends SparkTestBase {
       (i.toLong, (0 until 8).map(d => math.cos(i + d * 0.3)).toArray)
     }.toDF("id", "v")
     val pairs = df.as("a").crossJoin(df.as("b")).where(col("a.id") < col("b.id"))
-    assert(pairs.select(
-      (Vectors.dot(col("a.v"), col("b.v")) =!= VectorsHof.dotHof(col("a.v"), col("b.v"))).as("d"))
-      .where(col("d")).count() === 0)
+    inEachEvaluator { mode =>
+      assert(pairs.select(
+        (Vectors.dot(col("a.v"), col("b.v")) =!= VectorsHof.dotHof(col("a.v"), col("b.v"))).as("d"))
+        .where(col("d")).count() === 0, mode)
+    }
   }
 
   test("native dot: null array → null, empty → 0") {
@@ -44,11 +48,13 @@ class VectorExprSpec extends SparkTestBase {
       (1L, Array(1.0f, 2.0f), Array(3.0f, 4.0f)),
       (2L, null.asInstanceOf[Array[Float]], Array(1.0f)),
       (3L, Array.empty[Float], Array.empty[Float])).toDF("id", "a", "b")
-    val out = df.select(col("id"), Vectors.dot(col("a"), col("b")).as("d"))
-      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
-    assert(out(1L) === Some(11.0))
-    assert(out(2L) === None)
-    assert(out(3L) === Some(0.0))
+    inEachEvaluator { mode =>
+      val out = df.select(col("id"), Vectors.dot(col("a"), col("b")).as("d"))
+        .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+      assert(out(1L) === Some(11.0), mode)
+      assert(out(2L) === None, mode)
+      assert(out(3L) === Some(0.0), mode)
+    }
   }
 
   test("cosineNative equals composed cosine; used end-to-end in ANN") {
@@ -78,24 +84,29 @@ class VectorExprSpec extends SparkTestBase {
     // real float embeddings from testdata + synthetic doubles + edges
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(200).select(col("vec_id"), col("embedding").as("v"))
-    for (bits <- Seq(1, 4, 8); seed <- Seq(42, 43)) {
-      val cmp = emb.select(
-        graft.functions.Vectors.signBits(col("v"), bits, seed).as("native"),
-        graft.functions.VectorsHof.signBitsHOF(col("v"), bits, seed).as("hof"))
-      assert(cmp.where(!(col("native") <=> col("hof"))).count() === 0, s"bits=$bits seed=$seed")
-    }
+    val params = for (bits <- Seq(1, 4, 8); seed <- Seq(42, 43)) yield (bits, seed)
     // doubles (via normalize), empty, null array, null element
     val edge = Seq(
       (1L, Seq[java.lang.Double](0.5, -0.25, 1.0)),
       (2L, Seq[java.lang.Double]()),
       (3L, null: Seq[java.lang.Double]),
       (4L, Seq[java.lang.Double](0.5, null, 1.0))).toDF("id", "v")
-    val cmp2 = edge.select(col("id"),
-      graft.functions.Vectors.signBits(col("v"), 6).as("native"),
-      graft.functions.VectorsHof.signBitsHOF(col("v"), 6).as("hof"))
-    val rows = cmp2.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    rows.foreach { case (id, (n, h)) => assert(n === h, s"id=$id native=$n hof=$h") }
-    assert(rows(2L)._1 === 0L && rows(3L)._1 === 0L && rows(4L)._1 === 0L)
+    inEachEvaluator { mode =>
+      // one scan for every (bits, seed): columns native_i, hof_i
+      val cmp = emb.select(params.zipWithIndex.flatMap { case ((bits, seed), i) => Seq(
+        graft.functions.Vectors.signBits(col("v"), bits, seed).as(s"native_$i"),
+        graft.functions.VectorsHof.signBitsHOF(col("v"), bits, seed).as(s"hof_$i")) }: _*)
+        .collect()
+      params.indices.foreach { i =>
+        assert(cmp.forall(r => r.get(2 * i) == r.get(2 * i + 1)), s"$mode ${params(i)}")
+      }
+      val cmp2 = edge.select(col("id"),
+        graft.functions.Vectors.signBits(col("v"), 6).as("native"),
+        graft.functions.VectorsHof.signBitsHOF(col("v"), 6).as("hof"))
+      val rows = cmp2.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      rows.foreach { case (id, (n, h)) => assert(n === h, s"$mode id=$id native=$n hof=$h") }
+      assert(rows(2L)._1 === 0L && rows(3L)._1 === 0L && rows(4L)._1 === 0L, mode)
+    }
   }
 
   test("native VectorNormalize equals the HOF composite exactly (floats, doubles, edges)") {
@@ -104,10 +115,6 @@ class VectorExprSpec extends SparkTestBase {
     // real float embeddings
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .limit(200).select(col("embedding").as("v"))
-    val cmp = emb.select(
-      graft.functions.Vectors.normalize(col("v")).as("native"),
-      graft.functions.VectorsHof.normalizeHOF(col("v")).as("hof"))
-    assert(cmp.where(!(col("native") <=> col("hof"))).count() === 0)
     // double edges: zero vector (unchanged), empty, null array, null element
     val edge = Seq(
       (1L, Seq[java.lang.Double](3.0, -4.0)),          // norm 5 → (0.6, -0.8)
@@ -115,14 +122,20 @@ class VectorExprSpec extends SparkTestBase {
       (3L, Seq[java.lang.Double]()),
       (4L, null: Seq[java.lang.Double]),
       (5L, Seq[java.lang.Double](0.5, null, 1.0))).toDF("id", "v")
-    val cmp2 = edge.select(col("id"),
-      graft.functions.Vectors.normalize(col("v")).as("native"),
-      graft.functions.VectorsHof.normalizeHOF(col("v")).as("hof"))
-    assert(cmp2.where(!(col("native") <=> col("hof"))).count() === 0,
-      cmp2.collect().mkString("; "))
-    val byId = cmp2.collect().map(r => r.getLong(0) -> r).toMap
-    assert(byId(1L).getSeq[Double](1) === Seq(0.6, -0.8))
-    assert(byId(2L).getSeq[Double](1) === Seq(0.0, 0.0))
-    assert(byId(4L).isNullAt(1))
+    inEachEvaluator { mode =>
+      val cmp = emb.select(
+        graft.functions.Vectors.normalize(col("v")).as("native"),
+        graft.functions.VectorsHof.normalizeHOF(col("v")).as("hof"))
+      assert(cmp.where(!(col("native") <=> col("hof"))).count() === 0, mode)
+      val cmp2 = edge.select(col("id"),
+        graft.functions.Vectors.normalize(col("v")).as("native"),
+        graft.functions.VectorsHof.normalizeHOF(col("v")).as("hof"))
+      assert(cmp2.where(!(col("native") <=> col("hof"))).count() === 0,
+        s"$mode " + cmp2.collect().mkString("; "))
+      val byId = cmp2.collect().map(r => r.getLong(0) -> r).toMap
+      assert(byId(1L).getSeq[Double](1) === Seq(0.6, -0.8), mode)
+      assert(byId(2L).getSeq[Double](1) === Seq(0.0, 0.0), mode)
+      assert(byId(4L).isNullAt(1), mode)
+    }
   }
 }
