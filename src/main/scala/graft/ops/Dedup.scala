@@ -1,8 +1,11 @@
 package graft.ops
 
+import org.apache.spark.graphx.{Edge, Graph}
+import org.apache.spark.graphx.lib.ConnectedComponents
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.functions.{Text, Vectors}
 
 /**
@@ -292,85 +295,48 @@ object Dedup {
    * `id === label` picks exactly one representative per cluster and
    * everything else is the removal set.
    *
-   * Iterative min-label propagation (the simple label-prop form of the
-   * MapReduce CC family — Kiveris et al., "Connected Components in
-   * MapReduce and Beyond", SoCC'14): each round every node takes the min
-   * of its own label and its neighbors' labels; converges in O(diameter)
-   * rounds. Near-dup graphs are unions of near-cliques (band collisions),
-   * so diameters are tiny — 2-4 rounds typical. `maxIter` bounds
-   * pathological chains and non-convergence FAILS LOUDLY: an unconverged
-   * labeling silently under-merges clusters, which a dedup must never do.
+   * Min-label propagation, run as Spark's own GraphX
+   * `lib.ConnectedComponents` (Pregel; Gonzalez et al., "GraphX", OSDI'14 —
+   * the label-prop member of the MapReduce CC family in Kiveris et al.,
+   * "Connected Components in MapReduce and Beyond", SoCC'14): each
+   * superstep every node takes the min of its own label and its
+   * neighbors'; converges in O(diameter) supersteps. Near-dup graphs are
+   * unions of near-cliques (band collisions), so diameters are tiny — 2-4
+   * supersteps typical. `maxIter` bounds pathological chains and
+   * non-convergence FAILS LOUDLY: an unconverged labeling silently
+   * under-merges clusters, which a dedup must never do.
    *
-   * Scale shape: per round one shuffle of the (cached, pre-partitioned)
-   * edge set against the current labels; convergence is read off the same
-   * materialization (prev label carried through the propagation join), so
-   * there is no extra per-round join or second action. State is
-   * (node, label) — two longs per node, never edge-quadratic, no
-   * driver-side graph. Each round's labels are eagerly LOCAL-CHECKPOINTED,
-   * not cached: the checkpoint's one job doubles as the materializing
-   * action AND truncates lineage, keeping the logical plan CONSTANT-DEPTH
-   * across rounds — with cache() the plan tree still grows every
-   * iteration (cache cuts execution, not the plan), and a long-diameter
-   * run OOMs the DRIVER in Catalyst before data size ever matters.
-   * Superseded round blocks are dropped when their RDDs are GC'd
-   * (ContextCleaner); at most a couple of (node,label) rounds are live,
-   * and checkpoint storage spills to disk rather than OOM. Returns
-   * (id, label) backed by the final round's checkpoint; nothing is left
-   * pinned in the SQL cache manager.
+   * Scale shape: the caller's pair plan is read ONCE, into GraphX's edge
+   * partitions (MEMORY_AND_DISK). Each Pregel superstep is one RDD job
+   * (Pregel's `isEmpty` probe of the new messages, plus a second when the
+   * partitions it scans first are empty), and only edges next to a
+   * changed label send messages — no Catalyst query, AQE planning or
+   * generated class per round. State is (node, label) — two longs per
+   * node, never edge-quadratic, no driver-side graph. The fixpoint check
+   * is exact: at the fixpoint no edge joins two different labels (every
+   * label is then its component's minimum), and that is one count over
+   * the final triplets. Returns (id, label) backed by one eager local
+   * checkpoint taken before the graph is unpersisted; nothing is left
+   * pinned in the SQL cache manager and no GraphX RDD stays persisted.
    */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = 25): DataFrame = {
-    // Symmetrize in ONE read of the caller's pair plan: each pair explodes
-    // into both directions, so the (expensive) pair-generation plan runs
-    // once inside the cache-materialization job.
-    val a = col(aCol).cast(LongType)
-    val b = col(bCol).cast(LongType)
-    val edges = pairs
-      .select(explode(array(struct(a.as("src"), b.as("dst")),
-        struct(b.as("src"), a.as("dst")))).as("e"))
-      .select("e.*")
-      .repartition(col("src")).cache()
+    val edges = pairs.select(col(aCol).cast(LongType), col(bCol).cast(LongType)).rdd
+      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
+    val graph = Graph.fromEdges(edges, (), StorageLevel.MEMORY_AND_DISK,
+      StorageLevel.MEMORY_AND_DISK)
     try {
-      // Planned INSIDE the try: for a local-relation input the cast runs at
-      // planning time, and a cast failure must still unpersist `edges`.
-      // LAZY checkpoint: materialized by round 1's convergence count — the
-      // per-round count action doubles as the checkpoint job, so each round
-      // costs ONE action instead of two (checkpoint + count)
-      var labels = edges.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("label")).localCheckpoint(false)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        // ONE aggregation per round: union the node's own (label, prev)
-        // row with its neighbors' label contributions and take the min —
-        // algebraically identical to the old propagate-then-left-join form
-        // (next = least(prev, min over neighbor labels); prev rides as the
-        // own row's max, exactly one own row per id), but with a single
-        // exchange and no second join. The checkpoint is LAZY, so the
-        // `changed` count below IS the materializing job (one action per
-        // round, constant-depth plan).
-        val own = labels.select(col("id"), col("label"),
-          col("label").as("prev"))
-        val nbr = edges
-          .join(labels.withColumnRenamed("id", "src"), "src")
-          .select(col("dst").as("id"), col("label"),
-            lit(null).cast(LongType).as("prev"))
-        val next = own.union(nbr)
-          .groupBy(col("id"))
-          .agg(min(col("label")).as("label"), max(col("prev")).as("prev"))
-          .localCheckpoint(false)
-        val changed = next.where(col("label") =!= col("prev")).count()
-        labels = next.select(col("id"), col("label"))
-        converged = changed == 0
-        iter += 1
-      }
-      if (!converged) {
-        throw new NotConverged(
-          s"connectedComponents did not converge in $maxIter rounds — raise maxIter " +
-            "(component diameter exceeds the bound); an unconverged labeling under-merges")
-      }
-      labels
-    } finally edges.unpersist(): Unit
+      val cc = ConnectedComponents.run(graph, maxIter)
+      try {
+        if (cc.triplets.filter(t => t.srcAttr != t.dstAttr).count() > 0) {
+          throw new NotConverged(
+            s"connectedComponents did not converge in $maxIter rounds — raise maxIter " +
+              "(component diameter exceeds the bound); an unconverged labeling under-merges")
+        }
+        pairs.sparkSession.createDataFrame(cc.vertices).toDF("id", "label")
+          .localCheckpoint(true)
+      } finally cc.unpersist(): Unit
+    } finally graph.unpersist(): Unit
   }
 
   /**
@@ -394,9 +360,10 @@ object Dedup {
    * Fixpoint = the edge set is unchanged (then it is a union of stars
    * centered at component minima). The cheap necessary condition (edge
    * count unchanged) gates the exact set-equality check, so most rounds
-   * cost one action. Rounds are eagerly local-checkpointed, not cached —
-   * constant-depth plan across rounds (see [[connectedComponents]] for
-   * why cache() alone OOMs the driver on long iterations). Same contract:
+   * cost one action. Rounds are local-checkpointed, not cached, so the
+   * logical plan stays constant-depth across rounds: cache() cuts
+   * execution but not the plan, and a plan tree that grows every round
+   * OOMs the driver in Catalyst on long iterations. Same contract:
    * returns (id, label=component min) for every id appearing in `pairs`,
    * loud failure if `maxIter` is exceeded, nothing pinned in the SQL
    * cache manager.
@@ -474,13 +441,15 @@ object Dedup {
   private val AutoLpRounds = 8
 
   /**
-   * Auto-dispatching components: label propagation first with a SMALL
-   * round bound (near-dup graphs are near-cliques — 2-4 rounds typical,
-   * and LP's per-round cost is lower than a star round), falling back to
-   * [[connectedComponentsStar]] when the bound trips (deep drift chains).
-   * The wasted LP rounds are [[AutoLpRounds]] cheap label joins —
-   * insurance priced at a few scans of the (node,label) state, never
-   * quadratic. Any other failure propagates from the first attempt.
+   * Auto-dispatching components: [[connectedComponents]]' GraphX label
+   * propagation first with a SMALL superstep bound (near-dup graphs are
+   * near-cliques — 2-4 supersteps typical, and a Pregel superstep is one
+   * RDD job where a star round is several Catalyst queries), falling back
+   * to [[connectedComponentsStar]] when the bound trips (deep drift
+   * chains). The wasted supersteps are [[AutoLpRounds]] label-message
+   * jobs over the changed nodes — insurance priced at a few scans of the
+   * (node,label) state, never quadratic. Any other failure propagates
+   * from the first attempt.
    */
   def connectedComponentsAuto(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame =
@@ -495,9 +464,10 @@ object Dedup {
    * The anti-join side is the REMOVAL set (paired non-representatives),
    * keyed on the unique id: small removal sets broadcast under AQE, large
    * ones sort-merge without skew.
-   * Components come from [[connectedComponentsAuto]], so a pathological
-   * pair set (drift chains) degrades to more rounds, never to a wrong
-   * or failed labeling.
+   * Components come from [[connectedComponentsAuto]]: GraphX's Pregel
+   * label propagation on near-clique pair sets, and the star rounds when a
+   * pathological pair set (drift chains) trips its bound — more rounds,
+   * never a wrong or failed labeling.
    */
   def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
     val removals = connectedComponentsAuto(pairs)

@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.ops.{Ann, Dedup, DedupHof}
 import graft.functions.{Text, Vectors}
@@ -75,14 +77,32 @@ class DedupSpec extends SparkTestBase {
     // duplicate+reversed edges, and a longer chain 20..24
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 10L), (2L, 1L),
       (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponents(pairs).collect()
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.toMap
+    // a Catalyst query per label round (AQE stages, checkpoint, count)
+    // ran 23 jobs here; one GraphX Pregel run takes 9-10
+    val jobs = new AtomicInteger
+    val countJobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    val beforeSuccess = persisted.keySet
+    val labels = listening(countJobs)(Dedup.connectedComponents(pairs).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
+    assert(jobs.get <= 12, s"connectedComponents ran ${jobs.get} jobs on the mixed graph")
+    // persisted-RDD hygiene, checked as growth only (ContextCleaner may drop
+    // earlier RDDs meanwhile): success keeps at most the one RDD backing
+    // the returned labels, non-convergence keeps nothing
+    val grown = persisted.keySet -- beforeSuccess
+    assert(grown.size <= 1, s"persisted RDDs left behind: ${grown.flatMap(persisted.get)}")
     // non-convergence fails loudly instead of under-merging
+    val beforeFailure = persisted.keySet
     intercept[IllegalArgumentException] {
       Dedup.connectedComponents(pairs, maxIter = 1)
     }
+    val leaked = persisted.keySet -- beforeFailure
+    assert(leaked.isEmpty, s"persisted RDDs left behind: ${leaked.flatMap(persisted.get)}")
     // dedupByPairs: one representative per cluster + all unpaired docs
     val docs = (1L to 5L).union(Seq(10L, 11L, 30L)).toDF("id")
       .withColumn("text", concat(lit("d"), col("id")))

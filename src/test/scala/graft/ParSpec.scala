@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 import org.apache.spark.TaskKilled
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import graft.exec.Par
 
@@ -15,13 +14,6 @@ class ParSpec extends SparkTestBase {
   // SparkContext's constants for these keys are private[spark]
   private val JobDesc = "spark.job.description"
   private val JobTags = "spark.job.tags"
-
-  /** Runs `body` with `l` registered, then drains the bus and removes it. */
-  private def listening[T](l: SparkListener)(body: => T): T = {
-    sc.addSparkListener(l)
-    try body
-    finally { GraftBridge.drainListenerBus(sc); sc.removeSparkListener(l) }
-  }
 
   private def waitFor(what: String, seconds: Int)(cond: => Boolean): Unit = {
     val deadline = System.nanoTime() + seconds * 1000000000L

@@ -3,7 +3,8 @@ package graft
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.LoggerContext
 import org.apache.logging.log4j.core.config.Configurator
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.SparkListener
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -38,6 +39,14 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
           "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body("interpreted")),
         withConf(local, "spark.sql.codegen.wholeStage" -> "true",
           "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")(body("codegen only")))
+  }
+
+  /** Runs `body` with `l` registered, then drains the bus and removes it. */
+  def listening[T](l: SparkListener)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try body
+    finally { GraftBridge.drainListenerBus(sc); sc.removeSparkListener(l) }
   }
 
   /** Runs `body` with the named loggers off, for a test whose expected
