@@ -119,6 +119,11 @@ object Drift {
    * window over DISTINCT values — a single task over the distinct-value set,
    * so this is the bounded-cardinality / audit path. [[ksTest]] (KLL
    * sketches) is the unbounded-scale path; this exact form is its oracle.
+   *
+   * Contract: the distinct values of `valueCol` in the two groups must fit
+   * one task. That window has no partition key by design, so Spark's
+   * `WindowExec` logs "No Partition Defined for Window operation!" on every
+   * call; the WARN restates this contract and is not a fault.
    */
   def ksTestExact(df: DataFrame, valueCol: String, groupCol: String,
       g1: String, g2: String): KsResult = {

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.spark.graphx.{Edge, Graph}
-import org.apache.spark.graphx.lib.ConnectedComponents
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -288,6 +287,9 @@ object Dedup {
       graft.functions.HashExpressions.cosinePairs(_, threshold), "cos")
   }
 
+  /** Round bound of [[connectedComponents]] and its [[connectedComponentsStar]] name. */
+  private val ComponentsMaxIter = 30
+
   /**
    * Connected components over an undirected pair set — the step between
    * "near-dup pairs found" and "corpus deduplicated": every node of a
@@ -295,182 +297,93 @@ object Dedup {
    * `id === label` picks exactly one representative per cluster and
    * everything else is the removal set.
    *
-   * Min-label propagation, run as Spark's own GraphX
-   * `lib.ConnectedComponents` (Pregel; Gonzalez et al., "GraphX", OSDI'14 —
-   * the label-prop member of the MapReduce CC family in Kiveris et al.,
-   * "Connected Components in MapReduce and Beyond", SoCC'14): each
-   * superstep every node takes the min of its own label and its
-   * neighbors'; converges in O(diameter) supersteps. Near-dup graphs are
-   * unions of near-cliques (band collisions), so diameters are tiny — 2-4
-   * supersteps typical. `maxIter` bounds pathological chains and
-   * non-convergence FAILS LOUDLY: an unconverged labeling silently
-   * under-merges clusters, which a dedup must never do.
+   * Alternating large-star / small-star rounds on plain RDDs (Kiveris,
+   * Lattanzi, Mirrokni, Rastogi, Vassilvitskii, "Connected Components in
+   * MapReduce and Beyond", SoCC'14): O(log² n) rounds on ANY graph, so a
+   * drift chain (doc i near-dup of doc i+1 only, diameter = chain length)
+   * terminates like a near-clique, and the edge set never grows across
+   * rounds, so a round costs at most its input. An edge is (node, target)
+   * with target < node after round 1. Each round is
+   *  - large-star: group the symmetric adjacency by node u and point every
+   *    strictly larger neighbor at m = min(N(u) ∪ {u});
+   *  - small-star: group by the larger endpoint u and point u and its
+   *    smaller neighbors at their minimum — persisted, the next round's input;
+   *  - the star check: one reduceByKey over the new edges, whose count is
+   *    the round's one job and also materialises the persisted round.
+   * A round has converged when every node has at most one distinct target
+   * and no target has a target of its own. The edges are then disjoint
+   * stars; rounds preserve connectivity, so each star is a whole component,
+   * centred on its minimum because every edge points at a smaller id.
+   * Exceeding `maxIter` rounds FAILS LOUDLY: an unconverged labeling
+   * silently under-merges clusters, which a dedup must never do.
    *
-   * Scale shape: the caller's pair plan is read ONCE, into GraphX's edge
-   * partitions (MEMORY_AND_DISK). Each Pregel superstep is one RDD job
-   * (Pregel's `isEmpty` probe of the new messages, plus a second when the
-   * partitions it scans first are empty), and only edges next to a
-   * changed label send messages — no Catalyst query, AQE planning or
-   * generated class per round. State is (node, label) — two longs per
-   * node, never edge-quadratic, no driver-side graph. The fixpoint check
-   * is exact: at the fixpoint no edge joins two different labels (every
-   * label is then its component's minimum), and that is one count over
-   * the final triplets. Returns (id, label) backed by one eager local
-   * checkpoint taken before the graph is unpersisted; nothing is left
-   * pinned in the SQL cache manager and no GraphX RDD stays persisted.
+   * The caller's pair plan is read ONCE, into a persisted (long, long) RDD
+   * that round 1 and the node set both derive from; nodes that appear only
+   * in self-pairs label themselves. No Catalyst query or generated class
+   * per round, and the graph is never collected to one machine. Returns
+   * (id, label) backed by one eager local checkpoint; every RDD the call
+   * persists is unpersisted on the way out, on success and on failure.
    */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIter: Int = 25): DataFrame = {
-    val edges = pairs.select(col(aCol).cast(LongType), col(bCol).cast(LongType)).rdd
-      .map(r => Edge(r.getLong(0), r.getLong(1), ()))
-    val graph = Graph.fromEdges(edges, (), StorageLevel.MEMORY_AND_DISK,
-      StorageLevel.MEMORY_AND_DISK)
+      bCol: String = "id_b", maxIter: Int = ComponentsMaxIter): DataFrame = {
+    val input = pairs.select(col(aCol).cast(LongType), col(bCol).cast(LongType)).rdd
+      .map(r => (r.getLong(0), r.getLong(1))).persist(StorageLevel.MEMORY_AND_DISK)
+    var edges = input.filter { case (a, b) => a != b }
     try {
-      val cc = ConnectedComponents.run(graph, maxIter)
-      try {
-        if (cc.triplets.filter(t => t.srcAttr != t.dstAttr).count() > 0) {
-          throw new NotConverged(
-            s"connectedComponents did not converge in $maxIter rounds — raise maxIter " +
-              "(component diameter exceeds the bound); an unconverged labeling under-merges")
+      var rounds = 0
+      var converged = false
+      while (!converged) {
+        if (rounds == maxIter) {
+          throw new IllegalArgumentException(
+            s"connectedComponents did not converge in $maxIter rounds — raise maxIter; " +
+              "an unconverged labeling under-merges")
         }
-        pairs.sparkSession.createDataFrame(cc.vertices).toDF("id", "label")
-          .localCheckpoint(true)
-      } finally cc.unpersist(): Unit
-    } finally graph.unpersist(): Unit
+        val large = edges.flatMap { case (a, b) => Iterator((a, b), (b, a)) }.groupByKey()
+          .flatMap { case (u, nbrs) =>
+            val m = math.min(u, nbrs.min)
+            nbrs.iterator.filter(_ > u).distinct.map(v => (v, m))
+          }
+        // large-star edges already point from the larger endpoint (v > u >= m)
+        val next = large.groupByKey().flatMap { case (u, smaller) =>
+          val m = smaller.min
+          (Iterator(u) ++ smaller.iterator).filter(_ != m).distinct.map(v => (v, m))
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        try converged = nonStarNodes(next) == 0
+        finally { edges.unpersist(); edges = next }
+        rounds += 1
+      }
+      val labels = input.flatMap { case (a, b) => Iterator((a, a), (b, b)) }
+        .union(edges).reduceByKey(math.min(_, _), input.getNumPartitions)
+      pairs.sparkSession.createDataFrame(labels).toDF("id", "label").localCheckpoint(true)
+    } finally { input.unpersist(); edges.unpersist() }
   }
 
-  /**
-   * Connected components via alternating large-star / small-star rounds —
-   * the UNBOUNDED-DIAMETER scale path. [[connectedComponents]]'s label
-   * propagation needs O(diameter) rounds, which is fine for near-dup
-   * graphs (band-collision near-cliques, diameter 2-4) but collapses on
-   * drift chains: a corpus where doc i is near-dup of doc i+1 without
-   * i ~ i+2 yields a path graph whose diameter is the chain length.
-   * This form (Kiveris/Lattanzi/Mirrokni/Rastogi/Vassilvitskii,
-   * "Connected Components in MapReduce and Beyond", SoCC'14) converges
-   * in O(log² n) rounds on ANY graph, and the paper proves the edge set
-   * never grows across rounds — per-round cost is bounded by the input.
-   *
-   *  - large-star: each node u connects every strictly-larger neighbor
-   *    to m = min(N(u) ∪ {u}). Emitted once per undirected edge (at its
-   *    smaller endpoint's group), so no edge inflation.
-   *  - small-star: orient edges toward the larger endpoint; each node u
-   *    connects its smaller neighbors and itself to their minimum.
-   *
-   * Fixpoint = the edge set is unchanged (then it is a union of stars
-   * centered at component minima). The cheap necessary condition (edge
-   * count unchanged) gates the exact set-equality check, so most rounds
-   * cost one action. Rounds are local-checkpointed, not cached, so the
-   * logical plan stays constant-depth across rounds: cache() cuts
-   * execution but not the plan, and a plan tree that grows every round
-   * OOMs the driver in Catalyst on long iterations. Same contract:
-   * returns (id, label=component min) for every id appearing in `pairs`,
-   * loud failure if `maxIter` is exceeded, nothing pinned in the SQL
-   * cache manager.
-   */
+  /** Nodes of `edges` (node → target) that break the star shape: more than
+    * one distinct target, or a target that has a target of its own. */
+  private def nonStarNodes(edges: RDD[(Long, Long)]): Long =
+    edges.flatMap { case (v, t) =>
+      Iterator((v, (t, t, false)), (t, (Long.MaxValue, Long.MinValue, true)))
+    }.reduceByKey((x, y) => (math.min(x._1, y._1), math.max(x._2, y._2), x._3 || y._3))
+      .filter { case (_, (lo, hi, isTarget)) => lo <= hi && (lo != hi || isTarget) }
+      .count()
+
+  /** [[connectedComponents]] under the name the benchmark sweep and the
+    * `d_components_star` query call. */
   def connectedComponentsStar(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b", maxIter: Int = 30): DataFrame = {
-    // Materialize the input pair set ONCE: `nodes` is only read at the very
-    // end, and deriving it from the raw `pairs` plan would re-run the whole
-    // upstream pair-generation pipeline (minhash + verification at the
-    // call sites) a second time. It must come from the PRE-self-filter
-    // set — self-pair-only nodes still label themselves.
-    val pairs0 = pairs
-      .select(col(aCol).cast(LongType).as("p"), col(bCol).cast(LongType).as("q"))
-      .localCheckpoint(false)
-    val nodes = pairs0.select(col("p").as("id"))
-      .union(pairs0.select(col("q").as("id"))).distinct()
-    // LAZY checkpoints throughout: the count that follows each checkpoint
-    // is its materializing job (one action per round instead of two);
-    // lineage is still truncated, so the plan stays constant-depth.
-    var edges = pairs0.where(col("p") =!= col("q")).distinct().localCheckpoint(false)
-    var edgeCnt = edges.count()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      // large-star: group the symmetric adjacency by u, take the min
-      // neighbor, re-point every larger neighbor at least(u, minNbr).
-      val sym = edges.union(edges.select(col("q").as("p"), col("p").as("q")))
-        .toDF("u", "v")
-      val mins = sym.groupBy("u").agg(min(col("v")).as("mn"))
-      // No mid-round distinct: each sym row with v > u emits at most one
-      // (p, q), so the un-deduped large-star output is bounded by the
-      // round's input edge count (the non-growing invariant holds), the
-      // small-star min is unaffected by duplicate edges, and the round's
-      // closing distinct yields the IDENTICAL next set — the intermediate
-      // dedup bought one exchange per round and nothing else.
-      val afterLarge = sym.join(mins, "u").where(col("v") > col("u"))
-        .select(col("v").as("p"), least(col("u"), col("mn")).as("q"))
-        .where(col("p") =!= col("q"))
-      // small-star: orient toward the larger endpoint; point each
-      // group's smaller neighbors AND the center at the group minimum.
-      val oriented = afterLarge.select(
-        greatest(col("p"), col("q")).as("u"), least(col("p"), col("q")).as("v"))
-      val mins2 = oriented.groupBy("u").agg(min(col("v")).as("mn"))
-      val next = oriented.join(mins2, "u")
-        .select(col("v").as("p"), col("mn").as("q"))
-        .union(mins2.select(col("u").as("p"), col("mn").as("q")))
-        .where(col("p") =!= col("q")).distinct().localCheckpoint(false)
-      val nextCnt = next.count()
-      // count parity is necessary for a fixpoint; only then pay the exact
-      // set-equality probe. Both sides are distinct + checkpointed, so
-      // edges ⊆ next with |edges| == |next| ⇔ equality — a plain anti-join
-      // (except() would add a redundant dedup pass on top of the same join).
-      converged = nextCnt == edgeCnt &&
-        edges.join(next, Seq("p", "q"), "left_anti").count() == 0
-      edges = next
-      edgeCnt = nextCnt
-      iter += 1
-    }
-    if (!converged) {
-      throw new IllegalArgumentException(
-        s"connectedComponentsStar did not converge in $maxIter rounds — " +
-          "raise maxIter; an unconverged labeling under-merges")
-    }
-    // At fixpoint every edge is (member, componentMin). Nodes that lost
-    // all edges (self-pairs only) label themselves.
-    nodes.join(edges.select(col("p").as("id"), col("q").as("lb")), Seq("id"), "left")
-      .groupBy("id").agg(min(coalesce(col("lb"), col("id"))).as("label"))
-      .localCheckpoint(false) // caller's first action materializes it
-  }
-
-  /** Non-convergence of [[connectedComponents]]: the one failure that
-    * [[connectedComponentsAuto]] retries (not, say, a non-numeric id cast). */
-  private final class NotConverged(msg: String) extends IllegalArgumentException(msg)
-
-  private val AutoLpRounds = 8
-
-  /**
-   * Auto-dispatching components: [[connectedComponents]]' GraphX label
-   * propagation first with a SMALL superstep bound (near-dup graphs are
-   * near-cliques — 2-4 supersteps typical, and a Pregel superstep is one
-   * RDD job where a star round is several Catalyst queries), falling back
-   * to [[connectedComponentsStar]] when the bound trips (deep drift
-   * chains). The wasted supersteps are [[AutoLpRounds]] label-message
-   * jobs over the changed nodes — insurance priced at a few scans of the
-   * (node,label) state, never quadratic. Any other failure propagates
-   * from the first attempt.
-   */
-  def connectedComponentsAuto(pairs: DataFrame, aCol: String = "id_a",
-      bCol: String = "id_b"): DataFrame =
-    try connectedComponents(pairs, aCol, bCol, maxIter = AutoLpRounds)
-    catch {
-      case _: NotConverged => connectedComponentsStar(pairs, aCol, bCol)
-    }
+      bCol: String = "id_b", maxIter: Int = ComponentsMaxIter): DataFrame =
+    connectedComponents(pairs, aCol, bCol, maxIter)
 
   /**
    * Remove near-duplicates given their pair set: keep one representative
    * (the minimum id) per connected component, plus every unpaired doc.
    * The anti-join side is the REMOVAL set (paired non-representatives),
    * keyed on the unique id: small removal sets broadcast under AQE, large
-   * ones sort-merge without skew.
-   * Components come from [[connectedComponentsAuto]]: GraphX's Pregel
-   * label propagation on near-clique pair sets, and the star rounds when a
-   * pathological pair set (drift chains) trips its bound — more rounds,
-   * never a wrong or failed labeling.
+   * ones sort-merge without skew. Components come from
+   * [[connectedComponents]], whose star rounds terminate on near-clique
+   * and drift-chain pair sets alike.
    */
   def dedupByPairs(df: DataFrame, idCol: String, pairs: DataFrame): DataFrame = {
-    val removals = connectedComponentsAuto(pairs)
+    val removals = connectedComponents(pairs)
       .where(col("id") =!= col("label"))
       .select(col("id").as(idCol))
     df.join(removals, Seq(idCol), "left_anti")

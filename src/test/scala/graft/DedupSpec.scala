@@ -74,13 +74,16 @@ class DedupSpec extends SparkTestBase {
     val spark0 = spark
     import spark0.implicits._
     // chain 1-2-3 (transitive, never a direct 1-3 pair), pair 10-11,
-    // duplicate+reversed edges, and a longer chain 20..24
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 10L), (2L, 1L),
-      (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L)).toDF("id_a", "id_b")
+    // duplicate+reversed edges, and a longer chain 20..24; the input counts
+    // its reads, so a second scan of the caller's pair plan shows
     val sc = spark.sparkContext
+    val reads = sc.longAccumulator("pair reads")
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 10L), (2L, 1L),
+      (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L))
+    val pairs = sc.parallelize(edges, 3).map { p => reads.add(1); p }.toDF("id_a", "id_b")
     def persisted = sc.getPersistentRDDs.toMap
-    // a Catalyst query per label round (AQE stages, checkpoint, count)
-    // ran 23 jobs here; one GraphX Pregel run takes 9-10
+    // two star rounds (one star-check job each), the labels' checkpoint and
+    // the collect
     val jobs = new AtomicInteger
     val countJobs = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
@@ -90,13 +93,15 @@ class DedupSpec extends SparkTestBase {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
-    assert(jobs.get <= 12, s"connectedComponents ran ${jobs.get} jobs on the mixed graph")
+    assert(reads.value === edges.size.toLong, "the pair input was read more than once")
+    assert(jobs.get <= 4, s"connectedComponents ran ${jobs.get} jobs on the mixed graph")
     // persisted-RDD hygiene, checked as growth only (ContextCleaner may drop
     // earlier RDDs meanwhile): success keeps at most the one RDD backing
     // the returned labels, non-convergence keeps nothing
     val grown = persisted.keySet -- beforeSuccess
     assert(grown.size <= 1, s"persisted RDDs left behind: ${grown.flatMap(persisted.get)}")
-    // non-convergence fails loudly instead of under-merging
+    // non-convergence fails loudly instead of under-merging: the 20..24
+    // chain is not a star after one round
     val beforeFailure = persisted.keySet
     intercept[IllegalArgumentException] {
       Dedup.connectedComponents(pairs, maxIter = 1)
@@ -110,81 +115,95 @@ class DedupSpec extends SparkTestBase {
       Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b"))
       .select("id").collect().map(_.getLong(0)).toSet
     assert(kept === Set(1L, 4L, 5L, 10L, 30L))
-    // cache hygiene: nothing pinned in the SQL cache manager — success AND
-    // non-convergence paths both release every per-round cache entry
+    // cache hygiene: nothing pinned in the SQL cache manager
     assert(spark.sharedState.cacheManager.isEmpty,
       "connectedComponents left a DataFrame pinned in the cache manager")
   }
 
-  test("large-star/small-star components == label propagation; converges on deep chains") {
+  /** Min-id component labels by a local union-find: the reference
+    * the distributed star rounds are checked against. */
+  private def unionFindLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      // the larger root goes under the smaller: every root is its component's min
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("star components match a union-find reference and converge on deep chains") {
     val spark0 = spark
     import spark0.implicits._
-    // same mixed graph as the LP test — labels must be identical
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 10L), (2L, 1L),
-      (20L, 21L), (21L, 22L), (22L, 23L), (23L, 24L)).toDF("id_a", "id_b")
-    val star = Dedup.connectedComponentsStar(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
-      20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
-    // drift chain: a 4096-node path graph has diameter 4095 — label
-    // propagation's O(diameter) rounds blow any sane bound, while the
-    // star rounds converge in O(log² n); this is the scale path's reason
-    // to exist. Shift ids so min-id is NOT an endpoint (label must still
-    // be the component min, found mid-chain).
+    val sc = spark.sparkContext
+    def persisted = sc.getPersistentRDDs.toMap
+    def labelsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // seeded random graphs with self-pairs, duplicate pairs and reversed pairs
+    for (seed <- Seq(42, 7, 2024)) {
+      val rnd = new scala.util.Random(seed)
+      val ids = 40 + rnd.nextInt(160)
+      val base = Seq.fill(ids + rnd.nextInt(ids)) {
+        (rnd.nextInt(ids).toLong, rnd.nextInt(ids).toLong)
+      }
+      val pairs = base ++ base.take(20).map(_.swap) ++ base.take(10) ++
+        base.take(5).map { case (a, _) => (a, a) }
+      assert(labelsOf(Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))) ===
+        unionFindLabels(pairs), s"seed $seed")
+    }
+    // self-pair-only node labels itself; empty input yields empty labels;
+    // the star name runs the same rounds
+    assert(labelsOf(Dedup.connectedComponents(Seq((5L, 5L)).toDF("id_a", "id_b"))) ===
+      Map(5L -> 5L))
+    assert(Dedup.connectedComponents(Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
+      .count() === 0L)
+    assert(labelsOf(Dedup.connectedComponentsStar(Seq((3L, 2L), (2L, 9L)).toDF("id_a", "id_b")))
+      === Map(2L -> 2L, 3L -> 2L, 9L -> 2L))
+    // drift chain: a 4096-node path graph has diameter 4095, and the star
+    // rounds must converge in O(log² n) rounds (13 here), not O(diameter);
+    // three rounds are not enough. Shift ids so min-id is NOT an endpoint
+    // (label must still be the component min, found mid-chain).
     val n = 4096
     val chain = (0 until n - 1).map(i => (((i + 7) % n).toLong, ((i + 8) % n).toLong))
       .toDF("id_a", "id_b")
+    val beforeFailure = persisted.keySet
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chain, maxIter = 25)
+      Dedup.connectedComponents(chain, maxIter = 3)
     }
-    val chainLabels = Dedup.connectedComponentsStar(chain)
+    val leaked = persisted.keySet -- beforeFailure
+    assert(leaked.isEmpty, s"persisted RDDs left behind: ${leaked.flatMap(persisted.get)}")
+    val beforeSuccess = persisted.keySet
+    val chainLabels = Dedup.connectedComponents(chain)
+    val grown = persisted.keySet -- beforeSuccess
+    assert(grown.size <= 1, s"persisted RDDs left behind: ${grown.flatMap(persisted.get)}")
     assert(chainLabels.count() === n.toLong)
     assert(chainLabels.select(countDistinct(col("label"))).head().getLong(0) === 1L)
     assert(chainLabels.agg(max(col("label"))).head().getLong(0) === 0L)
-    // self-pair-only node labels itself; empty input yields empty labels
-    val selfOnly = Dedup.connectedComponentsStar(Seq((5L, 5L)).toDF("id_a", "id_b"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(selfOnly === Map(5L -> 5L))
-    // equivalence on a random graph (both algorithms, same labeling)
-    val rnd = new scala.util.Random(42)
-    val rndPairs = (0 until 300).map(_ => (rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
-      .toDF("id_a", "id_b")
-    val lp = Dedup.connectedComponents(rndPairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val st = Dedup.connectedComponentsStar(rndPairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(st === lp)
-    assert(spark.sharedState.cacheManager.isEmpty,
-      "connectedComponentsStar left a DataFrame pinned in the cache manager")
-    // auto-dispatch: LP answers clique graphs; a deep chain trips LP's
-    // bound and silently falls through to star — same labels either way
-    val autoClique = Dedup.connectedComponentsAuto(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(autoClique === star)
-    val autoChain = Dedup.connectedComponentsAuto(chain)
-    assert(autoChain.count() === n.toLong)
-    assert(autoChain.agg(max(col("label"))).head().getLong(0) === 0L)
     // dedupByPairs survives a drift-chain pair set (keeps only node 0)
     val chainDocs = (0L until n.toLong).toDF("id")
       .withColumn("text", concat(lit("d"), col("id")))
     val keptChain = Dedup.dedupByPairs(chainDocs, "id", chain)
     assert(keptChain.count() === 1L)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "connectedComponents left a DataFrame pinned in the cache manager")
   }
 
-  test("connectedComponentsAuto does not rerun a failed cast through the star form") {
+  test("a non-numeric id cast fails connectedComponents with its NumberFormatException") {
     val spark0 = spark
     import spark0.implicits._
-    // an ANSI cast of a non-numeric id throws an IllegalArgumentException
-    // subclass; only non-convergence may fall back to star
+    // an ANSI cast of a non-numeric id fails the first round's task; the
+    // executor logs that expected failure as an ERROR
     val pairs = Seq(("a", "b"), ("b", "c")).toDF("id_a", "id_b")
     val e = withLoggersOff("org.apache.spark.executor.Executor",
       "org.apache.spark.scheduler.TaskSetManager") {
-      intercept[Exception](Dedup.connectedComponentsAuto(pairs).collect())
+      intercept[Exception](Dedup.connectedComponents(pairs))
     }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[NumberFormatException]), e.toString)
-    assert(!e.getStackTrace.exists(_.getMethodName.contains("connectedComponentsStar")),
-      "the cast failure was retried through connectedComponentsStar")
   }
 
   test("exact dedup: skewed corpus (one group ~10% of rows) keeps min-id representative") {
