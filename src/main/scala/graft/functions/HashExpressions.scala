@@ -83,7 +83,7 @@ case class Simhash64(child: Expression) extends UnaryEvalExpression {
  * signed ints — standard 32-bit minhash: per-slot collision probability is
  * Jaccard + O(2^-32), indistinguishable for LSH, at HALF the signature
  * bytes (every band row of [[graft.ops.Dedup.minhashNearDups]] carries
- * the whole signature through its one shuffle, so bytes are the scale
+ * the whole signature through its bucket shuffle, so bytes are the scale
  * cost).
  *
  * Exact HOF-equivalent semantics (`DedupHof.minhashSignatureHOF`, test sources):
@@ -394,21 +394,4 @@ object HashExpressions {
     * in one pass with no intermediate shingle array. */
   def minhashFromTokensNative(tokens: Column, k: Int, numHashes: Int): Column =
     GraftBridge.column(MinHashFromTokens(GraftBridge.expression(tokens), k, numHashes))
-
-  /** Per-bucket verified MinHash pair generator over an
-    * `array<struct<id, sig:array<int>>>` column (use in `select`, alias with
-    * `.as(Seq("id_a","id_b","sig_sim"))`). */
-  def minhashPairs(items: Column, numHashes: Int, threshold: Double): Column =
-    GraftBridge.column(MinhashPairs(GraftBridge.expression(items), numHashes, threshold))
-
-  /** Per-bucket verified SimHash (hamming ≤ max) pair generator over an
-    * `array<struct<id, sig:long>>` column. */
-  def hammingPairs(items: Column, maxHamming: Int): Column =
-    GraftBridge.column(HammingPairs(GraftBridge.expression(items), maxHamming))
-
-  /** Per-bucket verified cosine pair generator over an
-    * `array<struct<id, v:array<double|float>>>` column of pre-normalized
-    * vectors. */
-  def cosinePairs(items: Column, threshold: Double): Column =
-    GraftBridge.column(CosinePairs(GraftBridge.expression(items), threshold))
 }

@@ -1,11 +1,16 @@
 package graft.ops
 
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
-import graft.functions.{Text, Vectors}
+import graft.functions.{CosinePairs, HammingPairs, MinhashPairs, Text, VerifiedPairsBase, Vectors}
 
 /**
  * Deduplication operators for training-data pipelines: exact, MinHash+LSH,
@@ -15,12 +20,21 @@ import graft.functions.{Text, Vectors}
  *  - exact dedup is a single hash groupBy (partial-agg absorbs dup mass
  *    map-side; identical texts collapse before the shuffle);
  *  - every near-dup pipeline (MinHash LSH, SimHash Manku blocks, embedding
- *    sign-bit LSH) is ONE wide shuffle: signature + bucket keys computed in
- *    a single codegen stage, `groupBy(bucket).collect_list(struct(id,sig))`,
- *    then a native [[graft.functions.VerifiedPairsBase]] generator emits
- *    verified pairs per bucket — the quadratic step runs per-bucket, never
- *    globally, bounded by the bucket cap (a free `size` filter on the
- *    collected list), and rejected candidates never materialize as rows;
+ *    sign-bit LSH) is one codegen stage and two shuffles: signature +
+ *    bucket keys computed in a single whole-stage codegen stage, then one
+ *    `BucketPairs` operator that leaves Catalyst for RDDs: a capped combine
+ *    of each bucket's `(id, payload)` rows (the bucket shuffle), a
+ *    [[graft.functions.VerifiedPairsBase]] loop that emits verified pairs
+ *    per bucket, and a pair-level distinct (the pairs-only shuffle) — the
+ *    quadratic step runs per-bucket, never
+ *    globally, bounded by the bucket cap, and rejected candidates never
+ *    materialize as rows. The tail leaves Catalyst so that it compiles no
+ *    class, where its aggregate, generator and projection stages each
+ *    compiled one (Spark's codegen cache holds 100 classes, and in local
+ *    mode each whole-stage class twice, once per class loader), and so
+ *    that the cap bounds each bucket's memory map-side ([[BucketItems]]);
+ *  - connected components read their pairs and return their labels as
+ *    Catalyst rows, with no object (de)serialization stage either side;
  *  - SimHash buckets on Manku/Jain/Sarma WWW'07 block combinations so
  *    hamming≤d pairs collide in ≥1 table; the block-count knob trades
  *    explode factor against bucket density (see [[simhashNearDups]]).
@@ -123,13 +137,21 @@ object Dedup {
    *
    * Returns (id_a, id_b, sig_sim) with id_a < id_b, sig_sim ≥ threshold.
    *
-   * ONE-SHUFFLE shape: the whole pipeline is
+   * Shape: one codegen stage, then two RDD shuffles in one `BucketPairs`
+   * operator:
    *
-   *   scan → sig + band keys (one codegen stage) → explode(bands)
-   *        → groupBy(bucket).collect_list(struct(id, sig))   [the shuffle]
-   *        → size(items) ≤ cap filter → [[graft.functions.MinhashPairs]]
-   *        → dropDuplicates(id_a, id_b)                      [pairs-only]
+   *   scan → sig + band keys (one whole-stage codegen stage)
+   *        → per band key, the doc's (id, sig) UnsafeRow bytes
+   *        → capped combine per bucket key                   [the bucket shuffle]
+   *        → [[graft.functions.MinhashPairs]] per bucket ≤ cap
+   *        → distinct pairs                                  [pairs-only]
    *
+   * The combine runs map-side too and stops buffering a bucket once it has
+   * seen more than `maxBucket` rows, so an over-cap bucket (a template
+   * shard) is never shuffled or held whole: a bucket holds at most
+   * `maxBucket` items, each an id and a `4·numHashes`-byte signature.
+   * Building the DataFrame runs no job: the signature stage is planned and
+   * run with the query that reads the pairs (`GraftBridge.mapRows`).
    * Each signature is computed once and nothing is cached. Report buckets
    * dropped by the cap via [[overflowBuckets]]. Band index is hashed INTO
    * the bucket key, so the key is a single long; a cross-band key
@@ -137,7 +159,8 @@ object Dedup {
    * signature-verified, so the result is unchanged w.h.p. (2⁻⁶⁴-scale).
    *
    * At cluster scale nothing here needs persistence or checkpointing: the
-   * output is a plain DataFrame — write it to a table for durability.
+   * output is a DataFrame over the pair RDD — write it to a table for
+   * durability.
    */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
@@ -156,20 +179,39 @@ object Dedup {
     // literals, so each slot is an O(1) element_at on the materialized sig
     // column. The same pair may collide in several bands.
     bucketPairs(withSig, "sig", bandKeyCols(col("sig"), numHashes, bands), maxBucket,
-      graft.functions.HashExpressions.minhashPairs(_, numHashes, threshold), "sig_sim")
+      MinhashPairs(_, numHashes, threshold))
   }
 
   /** The bucket → pairs tail all near-dup pipelines share (see the object
-    * doc): `base` is `(id, <payload>)`; `maxBucket <= 0` keeps every bucket;
-    * `pairs` maps a bucket's items to `(id_a, id_b, <metric>)` rows. */
+    * doc and [[minhashNearDups]]): `base` is `(id, <payload>)`; a bucket of
+    * more than `maxBucket` rows yields no pairs, `maxBucket <= 0` keeps
+    * every bucket; `verify` builds the per-bucket pair loop for the id
+    * type. Both shuffles use `spark.sql.shuffle.partitions` partitions and
+    * carry UnsafeRow bytes. */
   private def bucketPairs(base: DataFrame, payload: String, keys: Seq[Column],
-      maxBucket: Int, pairs: Column => Column, metric: String): DataFrame = {
-    val buckets = base.select(col("id"), col(payload), explode(array(keys: _*)).as("bucket"))
-      .groupBy("bucket")
-      .agg(collect_list(struct(col("id"), col(payload))).as("items"))
-    val capped = if (maxBucket > 0) buckets.where(size(col("items")) <= maxBucket) else buckets
-    capped.select(pairs(col("items")).as(Seq("id_a", "id_b", metric)))
-      .dropDuplicates("id_a", "id_b")
+      maxBucket: Int, verify: DataType => VerifiedPairsBase): DataFrame = {
+    val verifier = verify(base.schema("id").dataType)
+    val parts =
+      new HashPartitioner(base.sparkSession.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt)
+    // the signature + bucket-key projection is the last Catalyst (codegen'd)
+    // stage; its rows are UnsafeRows, so each item struct is one too
+    val docs = base.select(array(keys: _*).as("keys"),
+      struct(col("id"), col(payload)).as("item"))
+    GraftBridge.mapRows(docs, verifier.schema, "BucketPairs") { rows =>
+      rows.flatMap { row =>
+          val item = row.getStruct(1, 2).asInstanceOf[UnsafeRow].getBytes
+          row.getArray(0).toLongArray().iterator.map(key => (key, item))
+        }
+        .combineByKey((item: Array[Byte]) => new BucketItems().add(item, maxBucket),
+          (b: BucketItems, item: Array[Byte]) => b.add(item, maxBucket),
+          (b: BucketItems, o: BucketItems) => b.merge(o, maxBucket), parts)
+        .flatMap { case (_, b) => verifier.pairs(b.rows).map(pair => (pair: InternalRow, ())) }
+        // a distinct without map-side combine: a pair's copies come from
+        // other bands' buckets, on other tasks, and combining map-side would
+        // sort the pair rows by a hash computed in every comparison
+        .groupByKey(parts)
+        .keys
+    }
   }
 
   /**
@@ -228,8 +270,7 @@ object Dedup {
     val keys = combos.zipWithIndex.map { case (combo, ci) =>
       xxhash64((lit(ci.toLong) +: combo.map(i => blockVal(col("sig"), i))): _*)
     }
-    bucketPairs(withSig, "sig", keys, maxBucket,
-      graft.functions.HashExpressions.hammingPairs(_, maxHamming), "hamming")
+    bucketPairs(withSig, "sig", keys, maxBucket, HammingPairs(_, maxHamming))
   }
 
   /** Pairwise word-set Jaccard similarity for candidate pairs (verification step). */
@@ -279,12 +320,11 @@ object Dedup {
       maxBucket: Int = 100000): DataFrame = {
     val base = df.select(col(idCol).as("id"), Vectors.normalize(col(vecCol)).as("v"))
     // probe index hashed INTO the bucket key; cosine of pre-normalized
-    // vectors = ascending-order dot, computed inside the generator —
+    // vectors = ascending-order dot, computed inside the pair loop —
     // bit-identical to the Vectors.dot Column form
     val probeKeys = (0 until probes).map(s =>
       xxhash64(lit(s), Vectors.signBits(col("v"), lshBits, seed = 42 + s)))
-    bucketPairs(base, "v", probeKeys, maxBucket,
-      graft.functions.HashExpressions.cosinePairs(_, threshold), "cos")
+    bucketPairs(base, "v", probeKeys, maxBucket, CosinePairs(_, threshold))
   }
 
   /** Round bound of [[connectedComponents]] and its [[connectedComponentsStar]] name. */
@@ -308,27 +348,40 @@ object Dedup {
    *    strictly larger neighbor at m = min(N(u) ∪ {u});
    *  - small-star: group by the larger endpoint u and point u and its
    *    smaller neighbors at their minimum — persisted, the next round's input;
-   *  - the star check: one reduceByKey over the new edges, whose count is
-   *    the round's one job and also materialises the persisted round.
+   *  - the star check: one reduceByKey over the new edges and the
+   *    self-paired nodes, persisted; counting the nodes that break the
+   *    star shape is the round's one job, and it also materialises the
+   *    persisted round and its check.
    * A round has converged when every node has at most one distinct target
    * and no target has a target of its own. The edges are then disjoint
    * stars; rounds preserve connectivity, so each star is a whole component,
-   * centred on its minimum because every edge points at a smaller id.
+   * centred on its minimum because every edge points at a smaller id. The
+   * converged star check is then the labeling: a node's label is its one
+   * target, or itself when it has none, so no job follows the last round.
    * Exceeding `maxIter` rounds FAILS LOUDLY: an unconverged labeling
    * silently under-merges clusters, which a dedup must never do.
    *
-   * The caller's pair plan is read ONCE, into a persisted (long, long) RDD
-   * that round 1 and the node set both derive from; nodes that appear only
-   * in self-pairs label themselves. No Catalyst query or generated class
-   * per round, and the graph is never collected to one machine. Returns
-   * (id, label) backed by one eager local checkpoint; every RDD the call
-   * persists is unpersisted on the way out, on success and on failure.
+   * The caller's pair plan is read ONCE, as Catalyst rows, into a persisted
+   * (long, long) RDD that the edges and the self-paired nodes both derive
+   * from; nodes that appear only in self-pairs label themselves, and a null
+   * id fails the call. No Catalyst query or generated class per round, and
+   * the graph is never collected to one machine. Returns (id, label) as
+   * UnsafeRows mapped from the last round's persisted check, with no
+   * serialization stage; every other RDD the call persists is unpersisted
+   * on the way out, on success and on failure. (A local checkpoint of the
+   * check would cut its lineage, but unpersisting a superseded one logs a
+   * WARN per round.)
    */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = ComponentsMaxIter): DataFrame = {
-    val input = pairs.select(col(aCol).cast(LongType), col(bCol).cast(LongType)).rdd
-      .map(r => (r.getLong(0), r.getLong(1))).persist(StorageLevel.MEMORY_AND_DISK)
+    val input = pairs.select(col(aCol).cast(LongType), col(bCol).cast(LongType))
+      .queryExecution.toRdd.map { r =>
+        require(!r.anyNull, "connectedComponents: a pair has a null id")
+        (r.getLong(0), r.getLong(1))
+      }.persist(StorageLevel.MEMORY_AND_DISK)
+    val selfPaired = input.collect { case (a, b) if a == b => (a, Untargeted) }
     var edges = input.filter { case (a, b) => a != b }
+    var stars: RDD[(Long, (Long, Long, Boolean))] = null
     try {
       var rounds = 0
       var converged = false
@@ -348,24 +401,50 @@ object Dedup {
           val m = smaller.min
           (Iterator(u) ++ smaller.iterator).filter(_ != m).distinct.map(v => (v, m))
         }.persist(StorageLevel.MEMORY_AND_DISK)
-        try converged = nonStarNodes(next) == 0
-        finally { edges.unpersist(); edges = next }
+        val check = starCheck(next, selfPaired)
+        try converged = check.filter { case (_, (lo, hi, isTarget)) =>
+          lo <= hi && (lo != hi || isTarget)
+        }.count() == 0
+        finally {
+          edges.unpersist(); edges = next
+          if (stars != null) stars.unpersist()
+          stars = check
+        }
         rounds += 1
       }
-      val labels = input.flatMap { case (a, b) => Iterator((a, a), (b, b)) }
-        .union(edges).reduceByKey(math.min(_, _), input.getNumPartitions)
-      pairs.sparkSession.createDataFrame(labels).toDF("id", "label").localCheckpoint(true)
+      val labels = stars.map { case (v, (lo, hi, _)) => labelRow(v, if (lo <= hi) lo else v) }
+      GraftBridge.internalCreateDataFrame(pairs.sparkSession, labels, LabelSchema)
+    } catch {
+      case e: Throwable => if (stars != null) stars.unpersist(); throw e
     } finally { input.unpersist(); edges.unpersist() }
   }
 
-  /** Nodes of `edges` (node → target) that break the star shape: more than
-    * one distinct target, or a target that has a target of its own. */
-  private def nonStarNodes(edges: RDD[(Long, Long)]): Long =
-    edges.flatMap { case (v, t) =>
-      Iterator((v, (t, t, false)), (t, (Long.MaxValue, Long.MinValue, true)))
-    }.reduceByKey((x, y) => (math.min(x._1, y._1), math.max(x._2, y._2), x._3 || y._3))
-      .filter { case (_, (lo, hi, isTarget)) => lo <= hi && (lo != hi || isTarget) }
-      .count()
+  private val LabelSchema = StructType(Seq(StructField("id", LongType, nullable = false),
+    StructField("label", LongType, nullable = false)))
+
+  /** One (id, label) row of [[LabelSchema]]: a null-bit word and two longs. */
+  private def labelRow(id: Long, label: Long): InternalRow = {
+    val row = new UnsafeRow(2)
+    row.pointTo(new Array[Byte](24), 24)
+    row.setLong(0, id)
+    row.setLong(1, label)
+    row
+  }
+
+  /** A star-check entry of a node that points nowhere. */
+  private val Untargeted = (Long.MaxValue, Long.MinValue, false)
+
+  /** Per node of `edges` (node → target) and of `selfPaired`: (lowest
+    * target, highest target, is a target), persisted. A node
+    * breaks the star shape when it has more than one distinct target, or a
+    * target and a target of its own. */
+  private def starCheck(edges: RDD[(Long, Long)],
+      selfPaired: RDD[(Long, (Long, Long, Boolean))]): RDD[(Long, (Long, Long, Boolean))] =
+    edges.flatMap { case (v, t) => Iterator((v, (t, t, false)), (t, Untargeted.copy(_3 = true))) }
+      .union(selfPaired)
+      .reduceByKey((x, y) => (math.min(x._1, y._1), math.max(x._2, y._2), x._3 || y._3),
+        edges.getNumPartitions)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
   /** [[connectedComponents]] under the name the benchmark sweep and the
     * `d_components_star` query call. */
@@ -410,5 +489,59 @@ object Dedup {
       .withColumn("cos", Vectors.cosine(col("v_a"), col("v_b")))
       .where(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
+  }
+}
+
+/**
+ * One LSH bucket's items for [[Dedup]]'s bucket tail, capped: the
+ * `(id, payload)` UnsafeRow bytes of its rows until the bucket has seen more
+ * than `cap` rows (`cap <= 0`: no cap), then none. The count includes every
+ * row, so partial buckets merged from several map tasks overflow exactly
+ * when the whole bucket does, and a bucket never holds more than `cap`
+ * items. Shuffled as its count and its item bytes.
+ */
+private[ops] final class BucketItems extends java.io.Externalizable {
+  private var seen = 0L
+  private var items = ArrayBuffer.empty[Array[Byte]]
+
+  def add(item: Array[Byte], cap: Int): BucketItems = {
+    seen += 1
+    if (!overflowed(cap)) items += item
+    this
+  }
+
+  def merge(o: BucketItems, cap: Int): BucketItems = {
+    seen += o.seen
+    if (!overflowed(cap)) items ++= o.items
+    this
+  }
+
+  /** Past the cap: drop the items and keep the count at `cap + 1`. */
+  private def overflowed(cap: Int): Boolean = {
+    val over = cap > 0 && seen > cap
+    if (over) { seen = cap + 1L; if (items.nonEmpty) items = ArrayBuffer.empty }
+    over
+  }
+
+  /** The items as `(id, payload)` rows over their bytes. */
+  def rows: Array[InternalRow] = items.iterator.map { b =>
+    val row = new UnsafeRow(2)
+    row.pointTo(b, b.length)
+    row: InternalRow
+  }.toArray
+
+  override def writeExternal(out: java.io.ObjectOutput): Unit = {
+    out.writeLong(seen)
+    out.writeInt(items.length)
+    items.foreach { b => out.writeInt(b.length); out.write(b) }
+  }
+
+  override def readExternal(in: java.io.ObjectInput): Unit = {
+    seen = in.readLong()
+    items = ArrayBuffer.fill(in.readInt()) {
+      val b = new Array[Byte](in.readInt())
+      in.readFully(b)
+      b
+    }
   }
 }
