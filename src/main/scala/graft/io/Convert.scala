@@ -146,10 +146,14 @@ object Convert {
       case other => throw new SpecException(s"root must be a record, got $other")
     }
 
-  /** Any json-name anywhere in the spec's root record tree? */
-  private def specHasRenames(spec: Spec): Boolean = {
+  /** A JSON document column read against a spec: its typed record, parsed
+    * BY JSON KEY (json-name honored, `piqobj_of_json.ml:171`) and renamed
+    * back to the declared names compiled plans address, and the one
+    * [[JsonShape]] walk's violations, led by `parse:json`. */
+  private def readJson(json: Column, spec: Spec): (Column, Column) = {
     val rs = spec.resolved
-    rootFields(spec).exists(f => f.jsonName.isDefined || hasRenames(f.tpe, rs))
+    (renameTree(from_json(json, jsonSchema(spec)), TypeRef(rs.root), rs, toExternal = false,
+      Map.empty), JsonShape.walk(json, spec, parseVio = true))
   }
 
   /**
@@ -161,58 +165,26 @@ object Convert {
    *    unknown keys (violation iff `spec.strict`, `piqobj_of_json.ml:31-37`,
    *    flag `src/convert.ml:499`), duplicate keys (always,
    *    `piqobj_of_json.ml:25-28`), object/array shape mismatches;
+   *  - scalar conversion failures at every level (`parse:value`: a present
+   *    value PERMISSIVE parsing would otherwise null silently, where the
+   *    reference raises a located error);
    *  - then the full compiled constraint pass.
    *
-   * Each document is tokenised three times: the typed record parse, the
-   * root `map<string,string>` parse (the parsed-vs-raw root probe below),
-   * and ONE streaming walk that yields both `parse:json` and every
-   * key-shape violation.
+   * Each document is tokenised twice: the typed record parse and ONE
+   * streaming walk that yields `parse:json`, every key-shape violation and
+   * every conversion failure.
    *
    * Returns the parsed columns + `violations` + `valid`.
    */
   def fromJson(jsonDf: DataFrame, jsonCol: String, spec: Spec): DataFrame = {
     val plan = SpecCompiler.compile(spec)
-    val rs = spec.resolved
-    // parse BY JSON KEY (json-name honored, `piqobj_of_json.ml:171`), then
-    // project back to declared names — the shape compiled plans address
-    val parsed = jsonDf.withColumn("_rec", from_json(col(jsonCol), jsonSchema(spec)))
-    // parse:json (the document is not a JSON object) + key-shape checks
-    val shapeVio = JsonShape.walk(col(jsonCol), spec, rootScalars = false, parseVio = true)
-
-    // scalar conversion failures: a key PRESENT in the raw document whose
-    // parsed column is null means the value did not convert (garbage int,
-    // the string "null", uint64 past decimal(20,0) precision, …) —
-    // PERMISSIVE parsing would otherwise swallow it silently (the reference
-    // raises a located error). A BARE JSON null parses to a null map value
-    // (raw.isNotNull is the present-ness test), so legal null ≡ missing
-    // never fires. Per-field attribution relies on Spark's partial-results
-    // JSON parsing (enablePartialResults, default on since 3.4): only the
-    // failing field is nulled, not the whole record. Only numeric/bool root
-    // fields: strings/enums always parse, binary/any have lenient
-    // representations, records/arrays have their own shape checks. NESTED
-    // scalar conversion failures are probed in raw space by
-    // [[JsonShape.checkKeys]] (every level below the root).
-    val rawMap = from_json(col(jsonCol), MapType(StringType, StringType))
-    val convVios: Seq[Column] = rootFields(spec).flatMap { f =>
-      JsonShape.unalias(f.tpe, rs) match {
-        case _: PInt | PUInt64 | PFloat | PFloat32 | PBool if f.mode != Repeated =>
-          val raw = element_at(rawMap, f.jsonKey)
-          Some(SpecCompiler.vio(
-            raw.isNotNull && col("_rec").getField(f.jsonKey).isNull,
-            s"parse:value:${f.name}", f.name, raw))
-        case _ => None
-      }
-    }
-
-    val flat = parsed.select(
-      (rootFields(spec).map(f => fieldValue(col("_rec"), f, rs, toExternal = false,
-        Map(rs.root -> 1)).as(f.name)) :+
-        col(jsonCol).as("_raw") :+ shapeVio.as("_sv") :+
-        SpecCompiler.concatVios(convVios).as("_cv")): _*)
-    flat
-      .withColumn("violations", concat(col("_sv"), col("_cv"), plan.violations))
+    val (rec, shapeVio) = readJson(col(jsonCol), spec)
+    jsonDf.withColumn("_rec", rec)
+      .select((rootFields(spec).map(f => col("_rec").getField(f.name).as(f.name)) :+
+        col(jsonCol).as("_raw") :+ shapeVio.as("_sv")): _*)
+      .withColumn("violations", concat(col("_sv"), plan.violations))
       .withColumn("valid", size(col("violations")) === 0)
-      .drop("_sv", "_cv")
+      .drop("_sv")
   }
 
 
@@ -222,38 +194,19 @@ object Convert {
    * a registered type (`/root/reference/piqilib/piqobj.ml:267-401`, resolved
    * through the module db like `piqi_db.find_piqtype`): each row carries a
    * raw JSON payload (`anyCol`) and a type name (`typeCol`); the payload is
-   * parsed and validated against the named spec from `registry`.
+   * read and validated against the named spec from `registry` exactly as
+   * [[fromJson]] reads and validates a document.
    *
    * Returns the input columns + `any_violations` + `any_valid`. Unknown
    * typenames yield an `unknown-type` violation (`piqi_db.ml:149-153`).
-   * Execution shape: one filtered validate pass per registered type,
-   * unioned — each pass is a narrow projection, so the job stays one scan
-   * per type with no shuffle.
    */
   def validateAny(df: DataFrame, anyCol: String, typeCol: String,
       registry: Map[String, Spec]): DataFrame = {
     // ONE case-when projection over all registered types — no per-type scan,
     // no union, no shuffle: the typename dispatch is a column expression
     val branches = registry.toSeq.sortBy(_._1).map { case (name, spec) =>
-      val plan = SpecCompiler.compile(spec)
-      val rs = spec.resolved
-      // parse by JSON key, re-project to declared names for the plan (the
-      // rebuild is skipped entirely for specs without json-names)
-      val rec =
-        if (!specHasRenames(spec)) from_json(col(anyCol), sparkSchema(spec))
-        else {
-          val ext = from_json(col(anyCol), jsonSchema(spec))
-          struct(rootFields(spec)
-            .map(f => fieldValue(ext, f, rs, toExternal = false,
-              Map(rs.root -> 1)).as(f.name)): _*)
-        }
-      // parse:json + key shape; rootScalars: validateAny has no
-      // parsed-vs-raw root probe like fromJson's, so the raw-space scalar
-      // probe covers root members too
-      val vios = concat(
-        JsonShape.walk(col(anyCol), spec, rootScalars = true, parseVio = true),
-        plan.violationsFor(rec))
-      (col(typeCol) === name, vios)
+      val (rec, shapeVio) = readJson(col(anyCol), spec)
+      (col(typeCol) === name, concat(shapeVio, SpecCompiler.compile(spec).violationsFor(rec)))
     }
     val unknownVio = SpecCompiler.vio(lit(true), "unknown-type", "$",
       coalesce(col(typeCol), lit("null")))

@@ -3,15 +3,14 @@ package graft.io
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.collection.mutable.ArrayBuffer
-import com.fasterxml.jackson.core.{JsonEncoding, JsonFactoryBuilder, JsonParser,
-  JsonProcessingException, JsonToken}
+import com.fasterxml.jackson.core.{JsonEncoding, JsonParser, JsonProcessingException, JsonToken}
 import com.fasterxml.jackson.core.JsonToken._
-import com.fasterxml.jackson.core.json.JsonReadFeature
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode, Expression,
   GenericInternalRow}
+import org.apache.spark.sql.catalyst.json.JSONOptions
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,7 +30,9 @@ import graft.spec._
  *  - shape mismatches: a record field whose value is not a JSON object →
  *    `parse:object-expected`; a repeated/list field whose value is not an
  *    array → `parse:array-expected` ("array expected",
- *    `piqobj_of_json.ml:221-229`).
+ *    `piqobj_of_json.ml:221-229`);
+ *  - scalar conversion failures → `parse:value` (see [[checkKeys]]), at the
+ *    root by the same rule in strict and non-strict mode.
  *
  * Mechanism: like the reference, ONE streaming walk per document. The spec
  * compiles once into a member tree ([[Obj]]/[[Arr]]/[[Scalar]]); the
@@ -46,9 +47,11 @@ import graft.spec._
  * `{"y":1}`), and below a root member a value reads as that
  * re-serialisation reads (an overflowing float as the string `Infinity`);
  * a string holding JSON text has that text's shape; bytes after the root
- * object are ignored. Non-JSON that Spark's two parsers split on
- * (unescaped control characters, `NaN` literals) is walked as the key probe
- * reads it. Array elements are stamped with their index in the violation
+ * object are ignored. The walk reads the typed parse's dialect (Spark's
+ * `JSONOptions` defaults: single quotes and `NaN`/`Infinity` literals
+ * accepted, unescaped control characters refused), so a document is
+ * `parse:json` exactly when `from_json` cannot read it either. Array
+ * elements are stamped with their index in the violation
  * path (`spans[2].meta`); recursion depth is bounded by the spec (cycles
  * are rejected at compile, SpecChecks A5).
  */
@@ -64,8 +67,9 @@ object JsonShape {
   final case class Obj(members: Vector[Member]) extends Node {
     @transient lazy val index: Map[String, Int] = members.map(_.key).zipWithIndex.toMap
   }
-  /** `quoted`: also the strict quoted-scalar probe (`node` is a [[Scalar]]). */
-  final case class Member(key: String, name: String, node: Node, quoted: Boolean) {
+  /** `typed`: also judged by the typed parse's outcome (`node` is a
+    * [[Scalar]]): every root scalar, and strict scalars below the root. */
+  final case class Member(key: String, name: String, node: Node, typed: Boolean) {
     def base: PiqiType = node.asInstanceOf[Scalar].base
   }
   /** An array; `quoted` (strict, scalar elements): the whole-array probe. */
@@ -75,28 +79,30 @@ object JsonShape {
     * Finite-but-recursive specs recurse to `spec.maxDepth` occurrences per
     * type; beyond-depth content is the compiled plan's `depth:` rule's.
     *
-    * NESTED scalar conversion failures (a present key whose numeric/bool
-    * raw text cannot parse — PERMISSIVE parsing silently nulls these) are
-    * probed in raw space at every level below the root as `parse:value`;
-    * `rootScalars=true` extends the probe to root-level members (for
-    * callers without [[Convert.fromJson]]'s stronger parsed-vs-raw root
-    * check, e.g. piqi-any validation). Under STRICT mode a QUOTED scalar
-    * (`"12"` where int is declared: present, refused by the typed JSON
-    * parse, raw text fine) is flagged at every level — once per field for an
-    * array (`piqobj_of_json.ml:40-43`); non-strict plays the reference's
-    * relaxed mode and accepts it. */
-  def checkKeys(jsonCol: Column, spec: Spec, rootScalars: Boolean = false): Column =
-    walk(jsonCol, spec, rootScalars, parseVio = false)
+    * Scalar conversion failures (a present numeric/bool value that cannot
+    * become a value of its column type — PERMISSIVE parsing silently nulls
+    * these) are `parse:value`, judged on a repeated key's first occurrence:
+    *  - at the ROOT, a non-repeated member is flagged when its token is not
+    *    JSON null (the string `"null"` is a value) and either its raw text
+    *    fails the raw-space probe or the typed parse ends with it null
+    *    (refused, and no other occurrence kept a value), in strict and
+    *    non-strict mode alike;
+    *  - below the root, raw text that fails the raw-space probe is flagged
+    *    (`"null"` counts as absent there); under STRICT mode a QUOTED scalar
+    *    (`"12"` where int is declared: present, refused by the typed JSON
+    *    parse, raw text fine) is flagged too — once per field for an array
+    *    (`piqobj_of_json.ml:40-43`); non-strict plays the reference's
+    *    relaxed mode and accepts it. */
+  def checkKeys(jsonCol: Column, spec: Spec): Column = walk(jsonCol, spec, parseVio = false)
 
   /** [[checkKeys]], led by a `parse:json` violation when a non-null
     * document is not a JSON object: one walk serves both. */
-  private[io] def walk(jsonCol: Column, spec: Spec, rootScalars: Boolean,
-      parseVio: Boolean): Column =
+  private[io] def walk(jsonCol: Column, spec: Spec, parseVio: Boolean): Column =
     GraftBridge.column(JsonShapeWalk(GraftBridge.expression(jsonCol),
-      compile(spec, rootScalars), spec.resolved.strict, parseVio))
+      compile(spec), spec.resolved.strict, parseVio))
 
   /** The member tree of a spec's root record. */
-  private def compile(spec0: Spec, rootScalars: Boolean): Obj = {
+  private def compile(spec0: Spec): Obj = {
     val spec = spec0.resolved
     val root = spec.defTable(spec.root) match {
       case r: RecordDef => r
@@ -108,26 +114,26 @@ object JsonShape {
     }
     def fields(fs: Seq[PField]) = fs.map(f => (f.jsonKey, f.name, f.tpe, f.mode == Repeated))
     def obj(ms: Seq[(String, String, PiqiType, Boolean)], seen: Map[String, Int],
-        scalars: Boolean): Obj =
+        typed: Boolean): Obj =
       Obj(ms.sortBy(_._1).map { case (key, name, t, repeated) =>
-        Member(key, name, if (repeated) arr(t, seen) else value(t, seen, scalars),
-          quoted = spec.strict && scalars && !repeated && scalarBase(t).isDefined)
+        Member(key, name, if (repeated) arr(t, seen) else value(t, seen),
+          typed = typed && !repeated && scalarBase(t).isDefined)
       }.toVector)
     def arr(elem: PiqiType, seen: Map[String, Int]): Arr =
-      Arr(value(elem, seen, scalars = true), scalarBase(elem).filter(_ => spec.strict))
-    def value(t: PiqiType, seen: Map[String, Int], scalars: Boolean): Node =
+      Arr(value(elem, seen), scalarBase(elem).filter(_ => spec.strict))
+    def value(t: PiqiType, seen: Map[String, Int]): Node =
       unalias(t, spec) match {
         case TypeRef(n) => spec.defTable(n) match {
           case _: RecordDef | _: VariantDef | _: ListDef if spec.atDepthCutoff(n, seen) => Skip
-          case RecordDef(_, fs) => obj(fields(fs), spec.bumpDepth(n, seen), scalars = true)
+          case RecordDef(_, fs) => obj(fields(fs), spec.bumpDepth(n, seen), spec.strict)
           case VariantDef(_, os) => obj(os.map(o => (o.jsonKey, o.name, o.tpe.getOrElse(PBool),
-            false)), spec.bumpDepth(n, seen), scalars = true)
+            false)), spec.bumpDepth(n, seen), spec.strict)
           case ListDef(_, e, _) => arr(e, spec.bumpDepth(n, seen))
           case _ => Skip
         }
-        case b => scalarBase(b).filter(_ => scalars).map(Scalar).getOrElse(Skip)
+        case b => scalarBase(b).map(Scalar).getOrElse(Skip)
       }
-    obj(fields(root.fields), Map(spec.root -> 1), rootScalars)
+    obj(fields(root.fields), Map(spec.root -> 1), typed = true)
   }
 
   /** Follow alias chains to the base type (shared with [[Convert]]). */
@@ -139,10 +145,9 @@ object JsonShape {
     case _ => t
   }
 
-  /** The tokeniser of Spark's key probe: a document parses iff it does. */
-  private val factory = new JsonFactoryBuilder()
-    .enable(JsonReadFeature.ALLOW_UNESCAPED_CONTROL_CHARS)
-    .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES).build()
+  /** The typed parse's tokeniser and raw-capture generator (`from_json`'s
+    * default `JSONOptions`): a document parses iff it parses there. */
+  private val factory = new JSONOptions(Map.empty[String, String], "UTC", "").buildJsonFactory()
   private val intRe = java.util.regex.Pattern.compile("^-?[0-9]+$")
   private val Seq(dec20Max, longMin, longMax) = Seq("99999999999999999999",
     Long.MinValue.toString, Long.MaxValue.toString).map(new java.math.BigDecimal(_))
@@ -238,9 +243,10 @@ object JsonShape {
       finally q.close()
     }
 
-    /** Scalar probe: 0 absent, 1 fine, 2 reported as `parse:value`. */
-    def scalar(base: PiqiType, path: String, v: Val): Int =
-      if (!present(v.text)) 0
+    /** Scalar probe: 0 absent, 1 fine, 2 reported as `parse:value`. At the
+      * root (`top`) only JSON null is absent. */
+    def scalar(base: PiqiType, path: String, v: Val, top: Boolean = false): Int =
+      if (if (top) v.tok == VALUE_NULL else !present(v.text)) 0
       else if (if (v.small) base == PBool else rawBad(v.text, base)) {
         emit("parse:value", path, v.text); 2
       } else 1
@@ -287,12 +293,13 @@ object JsonShape {
     }
 
     /** `p` at START_OBJECT; leaves it at the matching END_OBJECT. Each
-      * member's violations are held apart and emitted in member order. */
-    def level(o: Obj, p: JsonParser, path: String, direct: Boolean): Unit = {
+      * member's violations are held apart and emitted in member order;
+      * `top`: the document's root object. */
+    def level(o: Obj, p: JsonParser, path: String, direct: Boolean, top: Boolean = false): Unit = {
       val n = o.members.size
       val held = new Array[java.util.List[InternalRow]](n) // null: member unseen
-      val typedVal = new Array[Int](n) // quoted: the typed outcome the parse keeps
-      val okRaw = new Array[String](n) // quoted: first raw, present and parseable
+      val typedVal = new Array[Int](n) // typed: the outcome the typed parse keeps
+      val okRaw = new Array[String](n) // typed: first raw, present and parseable
       val keys = ArrayBuffer[String]()
       var odd = false // an unknown or repeated key
       while (p.nextToken() == FIELD_NAME) {
@@ -300,13 +307,13 @@ object JsonShape {
         p.nextToken()
         val m = o.index.getOrElse(keys.last, -1)
         val mem = if (m < 0) null else o.members(m)
-        val v = if (mem != null && mem.quoted) view(p, direct) else null
+        val v = if (mem != null && mem.typed) view(p, direct) else null
         if (v != null) { val t = typed(v, mem.base); if (t >= 0) typedVal(m) = t }
         if (m < 0 || held(m) != null) { odd = true; p.skipChildren() }
         else {
           val (mark, at) = (out.size, s"$path.${mem.name}")
           if (v == null) value(mem.node, p, at, direct)
-          else if (scalar(mem.base, at, v) == 1) okRaw(m) = v.text
+          else if (scalar(mem.base, at, v, top) == 1) okRaw(m) = v.text
           val mine = out.subList(mark, out.size)
           held(m) = new java.util.ArrayList[InternalRow](mine)
           mine.clear()
@@ -326,15 +333,19 @@ object JsonShape {
 
   /** Walk one document: its violations, or None when it is not a JSON
     * object (a tokeniser error up to the root's closing brace). The bytes
-    * reach Jackson through the UTF-8 reader Spark's key probe uses, so
-    * invalid UTF-8 and byte-order marks read as they read there. */
+    * reach Jackson through the UTF-8 reader `from_json` uses, so invalid
+    * UTF-8 and byte-order marks read as they read there. */
   private[io] def run(root: Obj, strict: Boolean, doc: UTF8String): Option[java.util.List[InternalRow]] = {
     val bb = doc.getByteBuffer
     val p = factory.createParser(new InputStreamReader(
       new ByteArrayInputStream(bb.array, bb.arrayOffset + bb.position, bb.remaining), UTF_8))
     try {
       if (p.nextToken() != START_OBJECT) None
-      else { val w = new Walker(strict); w.level(root, p, "$", direct = true); Some(w.out) }
+      else {
+        val w = new Walker(strict)
+        w.level(root, p, "$", direct = true, top = true)
+        Some(w.out)
+      }
     } catch { case _: JsonProcessingException => None } finally p.close()
   }
 }

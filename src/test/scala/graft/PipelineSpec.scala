@@ -262,6 +262,77 @@ class PipelineSpec extends SparkTestBase {
     assert(strict(rows(5)) === Set.empty)
   }
 
+  test("JSON ingest reads one dialect: parse:json iff the typed record parse cannot read it") {
+    val spark0 = spark
+    import spark0.implicits._
+    val rows = Seq(
+      "{\"doc_id\":\"doc-1\tx\",\"spans\":[]}",          // unescaped control character
+      """{"doc_id":"doc-1x","spans":[],"n":NaN}""") // non-numeric number literal
+    val out = Convert.fromJson(rows.toDF("json"), "json", Docs.docSpec)
+      .select(col("_raw"), col("doc_id"), col("violations.rule")).collect()
+      .map(r => r.getString(0) -> r).toMap
+    assert(out(rows(0)).isNullAt(1))
+    assert(out(rows(0)).getSeq[String](2) === Seq("parse:json", "missing-field:doc_id"))
+    assert(out(rows(1)).getString(1) === "doc-1x")
+    assert(out(rows(1)).getSeq[String](2) === Seq.empty)
+  }
+
+  test("fromJson and validateAny give each document the same violations, strict or not") {
+    import graft.spec._
+    import org.apache.spark.sql.Row
+    val spark0 = spark
+    import spark0.implicits._
+    def mkSpec(strict: Boolean) = Spec("m", Seq(
+      RecordDef("inner", Seq(PField("v", PInt.int32, Optional()))),
+      RecordDef("r", Seq(
+        PField("i", PInt.int64, Optional()),
+        PField("u", PInt.uint64, Optional()),
+        PField("f", PFloat, Optional()),
+        PField("b", PBool, Optional()),
+        PField("count", PInt(0, 9), Optional(), jsonName = Some("n-count")),
+        PField("inner", TypeRef("inner"), Optional(), jsonName = Some("in-ner"))))), "r",
+      strict = strict)
+    val docs = Seq(
+      """{"i":1,"u":2,"f":1.5,"b":true,"n-count":3,"in-ner":{"v":4}}""",
+      """{"i":"12"}""",                  // quoted int
+      """{"u":"7","f":"1.5","b":"true","n-count":"3"}""", // more quoted scalars
+      """{"i":"null","b":" null "}""",   // the STRING "null"
+      """{"i":null,"u":null,"n-count":null}""", // JSON null ≡ missing
+      """{"u":1.5}""",                   // uint64 non-integers
+      """{"u":5e-4}""",
+      """{"u":1e20}""",
+      """{"u":"1,000"}""",
+      """{"f":1e400}""",                 // past Double
+      """{"i":"x","b":1,"n-count":[1]}""", // garbage
+      """{"n-count":12,"count":1}""",    // range; the declared name is not a key
+      """{"i":1,"i":"z"}""",             // duplicate keys
+      """{"u":null,"u":"x"}""",
+      """{"in-ner":{"v":"5"}}""",        // nested quoted int
+      """{"in-ner":{"v":"null"}}""",
+      """[1]""",
+      """not json""")
+    def multiset(vs: Seq[Row]) = vs.map(v => (v.getString(0), v.getString(1), v.getString(2)))
+      .groupBy(identity).view.mapValues(_.size).toMap
+    for (strict <- Seq(false, true)) {
+      val spec = mkSpec(strict)
+      val ingest = Convert.fromJson(docs.toDF("json"), "json", spec)
+        .select(col("_raw"), col("violations")).collect()
+        .map(r => r.getString(0) -> r.getSeq[Row](1)).toMap
+      val any = Convert.validateAny(docs.map(d => ("t", d)).toDF("any_type", "payload"),
+        "payload", "any_type", Map("t" -> spec))
+        .select(col("payload"), col("any_violations")).collect()
+        .map(r => r.getString(0) -> r.getSeq[Row](1)).toMap
+      for (d <- docs)
+        assert(multiset(ingest(d)) === multiset(any(d)), s"strict=$strict $d")
+      // root conversion failures carry one name in both modes
+      def rootVios(d: String) = ingest(d).filter(_.getString(0) == "parse:value").map(_.getString(1))
+      assert(rootVios(docs(1)) === Seq("$.i"), s"strict=$strict")
+      assert(rootVios(docs(3)) === Seq("$.b", "$.i"), s"strict=$strict")
+      for (k <- 5 to 9) assert(rootVios(docs(k)).nonEmpty, s"strict=$strict ${docs(k)}")
+      assert(rootVios(docs(4)).isEmpty && rootVios(docs(0)).isEmpty, s"strict=$strict")
+    }
+  }
+
   test("withDefaults: recursive — nested records and repeated elements (A6 nested)") {
     import graft.spec._
     import org.apache.spark.sql.Row
@@ -388,9 +459,10 @@ class PipelineSpec extends SparkTestBase {
       """{"id":6,"u":null}""",                  // bare null ≡ missing: legal
       """{"id":7,"u":"null"}""")                // the STRING "null": garbage
     val out = Convert.fromJson(rows.toDF("json"), "json", spec)
-      .select(col("id"), col("u"), col("violations.rule")).collect()
+      .select(col("id"), col("u"), col("violations.rule"), col("violations.path")).collect()
       .filterNot(_.isNullAt(0))
       .map(r => r.getLong(0) -> r).toMap
+    def vios(r: org.apache.spark.sql.Row) = r.getSeq[String](2).zip(r.getSeq[String](3))
     assert(out(1L).getSeq[String](2) === Seq.empty)
     assert(out(1L).getDecimal(1) === new java.math.BigDecimal("9223372036854775808"))
     assert(out(2L).getSeq[String](2) === Seq.empty)
@@ -400,15 +472,15 @@ class PipelineSpec extends SparkTestBase {
     // past the 20-digit precision the value cannot even be REPRESENTED:
     // PERMISSIVE parsing nulls it, and the present-key-but-parsed-null
     // check turns that into a parse:value violation instead of silence
-    out.get(5L).foreach(r => assert(r.getSeq[String](2).contains("parse:value:u")))
+    out.get(5L).foreach(r => assert(vios(r).contains(("parse:value", "$.u"))))
     if (!out.contains(5L)) { // whole-record nulling flavor: row must still be flagged
       val r5 = Convert.fromJson(Seq(rows(4)).toDF("json"), "json", spec)
-        .select(col("violations.rule")).collect()(0).getSeq[String](0)
-      assert(r5.contains("parse:value:u"))
+        .select(col("violations.rule"), col("violations.path")).collect()(0)
+      assert(r5.getSeq[String](0).zip(r5.getSeq[String](1)).contains(("parse:value", "$.u")))
     }
     // bare JSON null is legal (null ≡ missing); the STRING "null" is not
     assert(out(6L).getSeq[String](2) === Seq.empty)
-    assert(out(7L).getSeq[String](2) === Seq("parse:value:u"))
+    assert(vios(out(7L)) === Seq(("parse:value", "$.u")))
     // portable blob carries the kind
     assert(SpecJson.fromJson(SpecJson.toJson(spec)) === spec)
   }

@@ -116,7 +116,7 @@ class PlanGuardSpec extends SparkTestBase {
           graft.ops.Dedup.embeddingNearDups(vecs, "doc_id", "v") -> classOf[SignBits],
           // the walk alone: Convert.fromJson computes it in one project with
           // from_json, a CodegenFallback that keeps that project out
-          json.select(graft.io.JsonShape.checkKeys(col("json"), spec, rootScalars = true))
+          json.select(graft.io.JsonShape.checkKeys(col("json"), spec))
             -> classOf[graft.io.JsonShapeWalk])) {
         val ops = placed(df, cls)
         assert(ops.nonEmpty && ops.forall(_._2),
@@ -199,7 +199,7 @@ class PlanGuardSpec extends SparkTestBase {
       s"exactDedup should anti-join the removal set:\n${plan.take(3000)}")
   }
 
-  test("JSON ingest parses each document three times: record, root map and one shape walk") {
+  test("JSON ingest parses each document twice: the typed record and one shape walk") {
     import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, ArrayTransform, Expression,
       JsonObjectKeys, JsonToStructs}
     import graft.spec._
@@ -219,8 +219,8 @@ class PlanGuardSpec extends SparkTestBase {
     val ingest = exprs(graft.io.Convert.fromJson(Seq("""{"id":1}""").toDF("json"), "json", spec))
     assert(!ingest.exists(_.isInstanceOf[JsonObjectKeys]), "a json_object_keys probe is back")
     assert(ingest.count(_.isInstanceOf[graft.io.JsonShapeWalk]) === 1)
-    assert(ingest.collect { case j: JsonToStructs => j.canonicalized }.distinct.size === 2,
-      "expected the typed record parse and the root map parse only")
+    assert(ingest.collect { case j: JsonToStructs => j.canonicalized }.distinct.size === 1,
+      "expected the typed record parse only")
     // lambdas come from the compiled constraint plan alone, none from shape checks
     val planOnly = exprs(spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       graft.io.Convert.sparkSchema(spec)).select(graft.compile.SpecCompiler.compile(spec).violations))

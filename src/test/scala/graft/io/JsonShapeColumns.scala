@@ -38,29 +38,28 @@ object JsonShapeColumns {
     * type (the schema's unroll depth); beyond-depth content is covered by
     * the compiled plan's `depth:` rule, not key-shape checks.
     *
-    * NESTED scalar conversion failures (a present key whose numeric/bool
-    * raw text cannot parse — PERMISSIVE parsing silently nulls these) are
-    * probed in raw space at every level below the root as `parse:value`;
-    * `rootScalars=true` extends the probe to root-level members (for
-    * callers without [[Convert.fromJson]]'s stronger parsed-vs-raw root
-    * check, e.g. piqi-any validation). Under STRICT mode a QUOTED scalar
-    * (`"12"` where int is declared — invisible in the quote-stripping raw
-    * capture) is additionally flagged at every level via the typed-parse
-    * probe ([[quotedScalarVio]]), matching `piqobj_of_json.ml:40-43`;
+    * Scalar conversion failures (a present key whose numeric/bool value
+    * PERMISSIVE parsing silently nulls) are `parse:value`. A ROOT member is
+    * flagged by the parsed-vs-raw check ([[rootScalarVio]]) in strict and
+    * non-strict mode alike. Below the root, raw text that cannot parse is
+    * flagged ([[scalarParseVio]]), and under STRICT mode so is a QUOTED
+    * scalar (`"12"` where int is declared — invisible in the
+    * quote-stripping raw capture) via the typed-parse probe
+    * ([[quotedScalarVio]]), matching `piqobj_of_json.ml:40-43`;
     * non-strict plays the reference's relaxed mode and accepts it. */
-  def checkKeys(jsonCol: Column, spec0: Spec, rootScalars: Boolean = false): Column = {
+  def checkKeys(jsonCol: Column, spec0: Spec): Column = {
     val spec = spec0.resolved
     val root = spec.defTable(spec.root) match {
       case r: RecordDef => r
       case other => throw new SpecException(s"root must be a record, got $other")
     }
-    objectVios(jsonCol, members(root.fields), "$", spec, Map(spec.root -> 1),
-      scalarChecks = rootScalars)
+    objectVios(jsonCol, members(root.fields), "$", spec, Map(spec.root -> 1), root = true)
   }
 
-  /** Violations for one object level: key checks + recursion into values. */
+  /** Violations for one object level: key checks + recursion into values;
+    * `root`: the document's root object. */
   private def objectVios(objStr: Column, ms: Seq[Member], path: String,
-      spec: Spec, seen: Map[String, Int], scalarChecks: Boolean = true): Column = {
+      spec: Spec, seen: Map[String, Int], root: Boolean = false): Column = {
     val keys = json_object_keys(objStr)
     val keysOrEmpty = coalesce(keys, array().cast(strArr))
     val knownKeys = ms.map(_.key)
@@ -79,30 +78,28 @@ object JsonShapeColumns {
     val m = from_json(objStr, strMap)
     val subVios: Seq[Column] = ms.sortBy(_.key).map { mem =>
       val raw = element_at(m, mem.key)
-      val inner = valueVios(raw, mem.tpe, repeated = mem.repeated,
-        s"$path.${mem.name}", spec, seen, scalarChecks)
-      // strict quoted-scalar probe (needs the OBJECT text — quoting is
-      // gone from the stripped raw capture). Gated on scalarChecks: at the
-      // root, fromJson's parsed-vs-raw check already reports these.
-      val quoted =
-        if (spec.strict && scalarChecks && !mem.repeated)
-          unalias(mem.tpe, spec) match {
-            case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) =>
-              val present = raw.isNotNull && trim(raw) =!= "null"
-              quotedScalarVio(objStr, raw, present, mem.key, b,
-                s"$path.${mem.name}")
-            case _ => SpecCompiler.emptyVio
-          }
-        else SpecCompiler.emptyVio
-      concat(inner, quoted)
+      val at = s"$path.${mem.name}"
+      val scalar = if (mem.repeated) None else unalias(mem.tpe, spec) match {
+        case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) => Some(b)
+        case _ => None
+      }
+      scalar match {
+        case Some(b) if root => rootScalarVio(objStr, raw, mem.key, b, at)
+        // strict quoted-scalar probe (needs the OBJECT text — quoting is
+        // gone from the stripped raw capture)
+        case Some(b) if spec.strict =>
+          val present = raw.isNotNull && trim(raw) =!= "null"
+          concat(valueVios(raw, mem.tpe, repeated = false, at, spec, seen),
+            quotedScalarVio(objStr, raw, present, mem.key, b, at))
+        case _ => valueVios(raw, mem.tpe, repeated = mem.repeated, at, spec, seen)
+      }
     }
     SpecCompiler.concatVios(unknownVio +: dupVio +: subVios)
   }
 
   /** Violations for one raw value string of declared type `tpe`. */
   private def valueVios(valStr: Column, tpe: PiqiType, repeated: Boolean,
-      path: String, spec: Spec, seen: Map[String, Int],
-      scalarCheck: Boolean = true): Column = {
+      path: String, spec: Spec, seen: Map[String, Int]): Column = {
     val present = valStr.isNotNull && trim(valStr) =!= "null" // JSON null ≡ missing (B5)
     if (repeated) arrayVios(valStr, present, tpe, path, spec, seen)
     else unalias(tpe, spec) match {
@@ -132,8 +129,7 @@ object JsonShapeColumns {
         // numeric/bool scalars: present-but-unparseable raw text is a
         // conversion failure the PERMISSIVE parser would null silently —
         // semantic checks on the parsed value stay the compiler's job
-        if (scalarCheck) scalarParseVio(valStr, present, base, path)
-        else SpecCompiler.emptyVio
+        scalarParseVio(valStr, present, base, path)
     }
   }
 
@@ -189,11 +185,28 @@ object JsonShapeColumns {
    */
   private def quotedScalarVio(objStr: Column, raw: Column, present: Column,
       key: String, base: PiqiType, path: String): Column = {
-    val typed = from_json(objStr,
-      StructType(Seq(StructField(key, scalarSparkType(base))))).getField(key)
     val rawOk = rawBad(raw, base).map(b => !b).getOrElse(lit(true))
-    SpecCompiler.vio(present && typed.isNull && rawOk, "parse:value", path, raw)
+    SpecCompiler.vio(present && typedField(objStr, key, base).isNull && rawOk,
+      "parse:value", path, raw)
   }
+
+  /** The typed parse's value of one scalar member of an object's text. */
+  private def typedField(objStr: Column, key: String, base: PiqiType): Column =
+    from_json(objStr, StructType(Seq(StructField(key, scalarSparkType(base))))).getField(key)
+
+  /**
+   * Root scalar conversion check, in strict and non-strict mode alike: a
+   * key whose raw capture is not JSON null (`raw.isNotNull`: the STRING
+   * `"null"` is present) is flagged when the typed parse leaves it null or
+   * its raw text cannot parse ([[rawBad]]: a uint64 written `1.5`, which the
+   * typed parse rounds, or a float literal past Double, which it reads as
+   * ±Infinity).
+   */
+  private def rootScalarVio(objStr: Column, raw: Column, key: String, base: PiqiType,
+      path: String): Column =
+    SpecCompiler.vio(raw.isNotNull &&
+      (typedField(objStr, key, base).isNull || rawBad(raw, base).getOrElse(lit(false))),
+      "parse:value", path, raw)
 
   private def recordValueVios(valStr: Column, present: Column, fields: Seq[PField],
       path: String, spec: Spec, seen: Map[String, Int]): Column = {

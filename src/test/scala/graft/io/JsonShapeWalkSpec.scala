@@ -19,7 +19,7 @@ import graft.spec._
  * JSON text inside strings, escapes and whitespace in nested values,
  * truncation, trailing bytes, invalid UTF-8. Every document's violation
  * array must be SEQUENCE-equal to the reference's, with `parse:json` folded
- * in and with `rootScalars` both off and on.
+ * in.
  */
 class JsonShapeWalkSpec extends SparkTestBase {
 
@@ -180,11 +180,9 @@ class JsonShapeWalkSpec extends SparkTestBase {
     3 -> SpecFuzzSpec.specGen.map(widened), 1 -> Gen.choose(1, 3).map(SpecFuzzSpec.treeSpec))
     .flatMap(s => Gen.oneOf(true, false).map(strict => s.copy(strict = strict)))
 
-  private def referenceWith(json: Column, spec: Spec, rootScalars: Boolean, parseVio: Boolean) =
-    concat(
-      if (parseVio) SpecCompiler.vio(json.isNotNull && json_object_keys(json).isNull,
-        "parse:json", "$", json) else SpecCompiler.emptyVio,
-      JsonShapeColumns.checkKeys(json, spec, rootScalars))
+  private def reference(json: Column, spec: Spec) =
+    concat(SpecCompiler.vio(json.isNotNull && json_object_keys(json).isNull, "parse:json", "$", json),
+      JsonShapeColumns.checkKeys(json, spec))
 
   test("walk == column tree, in sequence, on 2,000+ fuzzed documents") {
     val spark0 = spark
@@ -202,15 +200,12 @@ class JsonShapeWalkSpec extends SparkTestBase {
       val df = rows.map(_.orNull).toDF("bin").select(col("bin").cast("string").as("json"))
       val j = col("json")
       def compare(mode: String) = {
-        val out = df.select(j,
-          JsonShape.walk(j, spec, rootScalars = false, parseVio = true),
-          referenceWith(j, spec, rootScalars = false, parseVio = true),
-          JsonShape.checkKeys(j, spec, rootScalars = true),
-          referenceWith(j, spec, rootScalars = true, parseVio = false)).collect()
-        val bad = out.filter(r => r.getSeq(1) != r.getSeq(2) || r.getSeq(3) != r.getSeq(4))
+        val out = df.select(j, JsonShape.walk(j, spec, parseVio = true), reference(j, spec))
+          .collect()
+        val bad = out.filter(r => r.getSeq(1) != r.getSeq(2))
         assert(bad.isEmpty, s"$mode case $c strict=${spec.strict} diverges on ${bad.length} docs:\n" +
-          bad.take(3).map(r => s"  doc ${r.getString(0)}\n   walk ${r.get(1)}\n   tree ${r.get(2)}" +
-            s"\n   walk(rootScalars) ${r.get(3)}\n   tree(rootScalars) ${r.get(4)}").mkString("\n"))
+          bad.take(3).map(r => s"  doc ${r.getString(0)}\n   walk ${r.get(1)}\n   tree ${r.get(2)}")
+            .mkString("\n"))
         out
       }
       // a slice runs under each evaluator; the rest as a local relation
@@ -218,7 +213,7 @@ class JsonShapeWalkSpec extends SparkTestBase {
       val out = if (c < 2) inEachEvaluator(compare).last else compare("local")
       docs += out.length
       out.foreach { r =>
-        val vs = r.getSeq[org.apache.spark.sql.Row](2) ++ r.getSeq[org.apache.spark.sql.Row](4)
+        val vs = r.getSeq[org.apache.spark.sql.Row](2)
         if (vs.nonEmpty) nonEmpty += 1
         vs.foreach(v => rules(v.getString(0)) += 1)
       }
