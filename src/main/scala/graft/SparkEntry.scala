@@ -665,7 +665,7 @@ object SparkEntry {
     }),
 
     // ORACLED tolerance pin for the gamma p-value (the ks_sketch_err
-    // pattern): the NR gamma-series p must agree with the INDEPENDENT
+    // pattern): the regularized-gamma p must agree with the INDEPENDENT
     // Wilson-Hilferty cube-root-normal approximation on the actual corpus
     // statistic — converts the last rows-only query into a closed-form
     // single-row assertion (both legs deterministic, disjoint algorithms)
@@ -733,7 +733,7 @@ object SparkEntry {
         val q = hits.toDF.writeStream.outputMode("append").format("parquet")
           .option("path", out).option("checkpointLocation", ck)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        q.awaitTermination(180000)
+        require(q.awaitTermination(180000), "AvailableNow near-dup stream did not terminate")
       }
       drain()
       corpus.where(col("doc_id") >= 102).write.mode("append").parquet(in)

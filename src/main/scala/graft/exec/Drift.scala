@@ -3,6 +3,7 @@ package graft.exec
 import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria.INCLUSIVE
+import org.apache.commons.math3.special.Gamma
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -190,15 +191,20 @@ object Drift {
       if (e > 0) { val d = table((g, c)) - e; stat += d * d / e }
     }
     val dof = math.max(1, (groups.size - 1) * (cats.size - 1))
-    Chi2Result(stat, dof, 1.0 - gammaP(dof / 2.0, stat / 2.0))
+    Chi2Result(stat, dof, chiSquarePValue(stat, dof))
   }
+
+  /** Chi-square upper-tail p-value: the regularized upper incomplete gamma
+    * Q(dof / 2, statistic / 2) (commons-math3, a Spark dependency). */
+  private[graft] def chiSquarePValue(statistic: Double, dof: Int): Double =
+    Gamma.regularizedGammaQ(dof / 2.0, statistic / 2.0)
 
   /**
    * INDEPENDENT approximation of the chi² upper-tail p-value: the Wilson &
    * Hilferty (1931) cube-root normal transform, Φ via the Abramowitz–Stegun
    * 7.1.26 erf polynomial. Two disjoint published algorithms; used as a
-   * tolerance pin against the gamma-series p-value (agreement ≲0.02 across
-   * the practical (dof, statistic) range) so the non-SQL-expressible gamma
+   * tolerance pin against [[chiSquarePValue]] (agreement ≲0.02 across the
+   * practical (dof, statistic) range) so the non-SQL-expressible gamma
    * path gets a driver-checkable oracle twin.
    */
   def chiSquarePValueWH(statistic: Double, dof: Int): Double = {
@@ -210,53 +216,5 @@ object Drift {
     val erf = 1.0 - poly * math.exp(-z * z / 2.0)
     val phi = if (z >= 0) 0.5 * (1.0 + erf) else 0.5 * (1.0 - erf)
     1.0 - phi
-  }
-
-  /** Regularized lower incomplete gamma P(a,x) (series + continued fraction, NR §6.2). */
-  private[graft] def gammaP(a: Double, x: Double): Double = {
-    if (x < 0 || a <= 0) return Double.NaN
-    if (x == 0) return 0.0
-    if (x < a + 1.0) {
-      // series representation
-      var ap = a; var sum = 1.0 / a; var del = sum
-      var i = 0
-      while (i < 500) {
-        ap += 1; del *= x / ap; sum += del
-        if (math.abs(del) < math.abs(sum) * 1e-14) i = 500 else i += 1
-      }
-      sum * math.exp(-x + a * math.log(x) - logGamma(a))
-    } else {
-      // continued fraction for Q, P = 1 - Q
-      var b = x + 1 - a; var c = 1e300; var d = 1.0 / b; var h = d
-      var i = 1
-      while (i <= 500) {
-        val an = -i * (i - a)
-        b += 2
-        d = an * d + b; if (math.abs(d) < 1e-300) d = 1e-300
-        c = b + an / c; if (math.abs(c) < 1e-300) c = 1e-300
-        d = 1.0 / d
-        val del = d * c
-        h *= del
-        if (math.abs(del - 1.0) < 1e-14) i = 501 else i += 1
-      }
-      1.0 - math.exp(-x + a * math.log(x) - logGamma(a)) * h
-    }
-  }
-
-  /** Lanczos log-gamma (public coefficients). */
-  private def logGamma(x: Double): Double = {
-    val g = 7.0
-    val coef = Array(0.99999999999980993, 676.5203681218851, -1259.1392167224028,
-      771.32342877765313, -176.61502916214059, 12.507343278686905,
-      -0.13857109526572012, 9.9843695780195716e-6, 1.5056327351493116e-7)
-    if (x < 0.5) math.log(math.Pi / math.sin(math.Pi * x)) - logGamma(1 - x)
-    else {
-      val xx = x - 1
-      var a = coef(0)
-      val t = xx + g + 0.5
-      var i = 1
-      while (i < 9) { a += coef(i) / (xx + i); i += 1 }
-      0.5 * math.log(2 * math.Pi) + (xx + 0.5) * math.log(t) - t + math.log(a)
-    }
   }
 }

@@ -79,20 +79,21 @@ object JsonShape {
     * Finite-but-recursive specs recurse to `spec.maxDepth` occurrences per
     * type; beyond-depth content is the compiled plan's `depth:` rule's.
     *
+    * At every level only the JSON `null` token is absent: the string
+    * `"null"` is a value, checked like any other.
+    *
     * Scalar conversion failures (a present numeric/bool value that cannot
     * become a value of its column type — PERMISSIVE parsing silently nulls
     * these) are `parse:value`, judged on a repeated key's first occurrence:
-    *  - at the ROOT, a non-repeated member is flagged when its token is not
-    *    JSON null (the string `"null"` is a value) and either its raw text
-    *    fails the raw-space probe or the typed parse ends with it null
+    *  - at the ROOT, a non-repeated member is flagged when either its raw
+    *    text fails the raw-space probe or the typed parse ends with it null
     *    (refused, and no other occurrence kept a value), in strict and
     *    non-strict mode alike;
-    *  - below the root, raw text that fails the raw-space probe is flagged
-    *    (`"null"` counts as absent there); under STRICT mode a QUOTED scalar
-    *    (`"12"` where int is declared: present, refused by the typed JSON
-    *    parse, raw text fine) is flagged too — once per field for an array
-    *    (`piqobj_of_json.ml:40-43`); non-strict plays the reference's
-    *    relaxed mode and accepts it. */
+    *  - below the root, raw text that fails the raw-space probe is flagged;
+    *    under STRICT mode a QUOTED scalar (`"12"` where int is declared:
+    *    present, refused by the typed JSON parse, raw text fine) is flagged
+    *    too — once per field for an array (`piqobj_of_json.ml:40-43`);
+    *    non-strict plays the reference's relaxed mode and accepts it. */
   def checkKeys(jsonCol: Column, spec: Spec): Column = walk(jsonCol, spec, parseVio = false)
 
   /** [[checkKeys]], led by a `parse:json` violation when a non-null
@@ -155,7 +156,6 @@ object JsonShape {
   private val Seq(toDouble, toDec38) = Seq(DoubleType, DecimalType(38, 0)).map(
     Cast(BoundReference(0, StringType, nullable = true), _, Some("UTC"), EvalMode.TRY))
   private def tryCast(cast: Cast, s: UTF8String) = cast.eval(new GenericInternalRow(Array[Any](s)))
-  private def present(raw: String) = raw != null && UTF8String.fromString(raw).trim.toString != "null"
 
   /** Raw text that cannot become a non-null value of the scalar's column
     * type: the capture's `trim` + pattern + `try_cast` test (Long for ints,
@@ -243,10 +243,9 @@ object JsonShape {
       finally q.close()
     }
 
-    /** Scalar probe: 0 absent, 1 fine, 2 reported as `parse:value`. At the
-      * root (`top`) only JSON null is absent. */
-    def scalar(base: PiqiType, path: String, v: Val, top: Boolean = false): Int =
-      if (if (top) v.tok == VALUE_NULL else !present(v.text)) 0
+    /** Scalar probe: 0 absent (JSON null), 1 fine, 2 reported as `parse:value`. */
+    def scalar(base: PiqiType, path: String, v: Val): Int =
+      if (v.tok == VALUE_NULL) 0
       else if (if (v.small) base == PBool else rawBad(v.text, base)) {
         emit("parse:value", path, v.text); 2
       } else 1
@@ -269,10 +268,10 @@ object JsonShape {
     }
 
     /** A value that is not the expected container: a string holding one is
-      * walked as that text; any other present value is reported. */
+      * walked as that text; any other value but JSON null is reported. */
     def notA(start: JsonToken, rule: String, v: Val, path: String)(
         walk: (JsonParser, String) => Unit): Unit =
-      if (!(v.tok == VALUE_STRING && walkText(v.text, start)(walk(_, v.text))) && present(v.text))
+      if (!(v.tok == VALUE_STRING && walkText(v.text, start)(walk(_, v.text))) && v.tok != VALUE_NULL)
         emit(rule, path, v.text)
 
     /** `p` at START_ARRAY; `text` is the array's raw capture when quoted. */
@@ -293,9 +292,8 @@ object JsonShape {
     }
 
     /** `p` at START_OBJECT; leaves it at the matching END_OBJECT. Each
-      * member's violations are held apart and emitted in member order;
-      * `top`: the document's root object. */
-    def level(o: Obj, p: JsonParser, path: String, direct: Boolean, top: Boolean = false): Unit = {
+      * member's violations are held apart and emitted in member order. */
+    def level(o: Obj, p: JsonParser, path: String, direct: Boolean): Unit = {
       val n = o.members.size
       val held = new Array[java.util.List[InternalRow]](n) // null: member unseen
       val typedVal = new Array[Int](n) // typed: the outcome the typed parse keeps
@@ -313,7 +311,7 @@ object JsonShape {
         else {
           val (mark, at) = (out.size, s"$path.${mem.name}")
           if (v == null) value(mem.node, p, at, direct)
-          else if (scalar(mem.base, at, v, top) == 1) okRaw(m) = v.text
+          else if (scalar(mem.base, at, v) == 1) okRaw(m) = v.text
           val mine = out.subList(mark, out.size)
           held(m) = new java.util.ArrayList[InternalRow](mine)
           mine.clear()
@@ -343,7 +341,7 @@ object JsonShape {
       if (p.nextToken() != START_OBJECT) None
       else {
         val w = new Walker(strict)
-        w.level(root, p, "$", direct = true, top = true)
+        w.level(root, p, "$", direct = true)
         Some(w.out)
       }
     } catch { case _: JsonProcessingException => None } finally p.close()

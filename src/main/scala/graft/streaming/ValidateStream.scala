@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import graft.compile.ValidationPlan
 import graft.exec.ValidationRunner
 
@@ -41,48 +42,29 @@ object ValidateStream {
         sum(col("valid").cast("long")).as("n_valid"),
         sum((!col("valid")).cast("long")).as("n_invalid"))
 
-  /** No TTL → NoTimeout: a processing-time timeout keeps planning
-    * timeout-firing micro-batches after the data is exhausted, so an
-    * `AvailableNow` query would never terminate. */
-  private def stateTimeout(stateTtl: Option[java.time.Duration]): GroupStateTimeout =
-    if (stateTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-    else GroupStateTimeout.NoTimeout()
-
   /**
-   * Streaming first-seen dedup: keeps the first document per `doc_id` across
-   * micro-batches via keyed state (`KeyValueGroupedDataset.flatMapGroupsWithState`)
-   * — the streaming form of the doc_id-uniqueness rule: instead of reporting
-   * duplicates after the fact, later arrivals are dropped (or routed) online.
-   * State is one boolean per key, partitioned by doc_id hash across
-   * executors. At 10^12 keys unbounded state OOMs the state store, so
-   * `stateTtl` bounds it: a key idle longer than the TTL is evicted (its
-   * next arrival is treated as first-seen again — the standard
-   * dedup-within-horizon trade; None = exact dedup, unbounded state).
+   * Streaming first-seen dedup: keeps the first document per `docKey` across
+   * micro-batches — the streaming form of the doc_id-uniqueness rule:
+   * instead of reporting duplicates after the fact, later arrivals are
+   * dropped online. Spark's own streaming deduplication does it, with keyed
+   * state partitioned by `docKey` hash across executors:
+   *  - no watermark on `stream`: `dropDuplicates(docKey)`, exact dedup with
+   *    one state entry per key ever seen (unbounded state);
+   *  - a watermark on `stream` (the caller's `withWatermark(ts, delay)`):
+   *    `dropDuplicatesWithinWatermark(docKey)`, dedup within an event-time
+   *    horizon. A duplicate arriving within `delay` of its key's first event
+   *    is dropped; the key's state is evicted once the watermark passes that
+   *    first event plus `delay`, so a later arrival counts as first-seen
+   *    again; rows older than the watermark are dropped as late data.
+   * Neither operator times out on processing time, so an `AvailableNow`
+   * query ends once its input is drained. Checkpoints written by the
+   * earlier hand-rolled keyed-state form of this operator cannot be
+   * resumed: the state layout differs.
    */
-  def dedupFirstSeen(stream: DataFrame, docKey: String,
-      stateTtl: Option[java.time.Duration] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode => OM}
-    import org.apache.spark.sql.{Encoders, Row}
-    implicit val rowEnc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(stream.schema)
-    implicit val strEnc = Encoders.STRING
-    implicit val boolEnc = Encoders.scalaBoolean
-    stream
-      .groupByKey((r: Row) => r.getAs[String](docKey))
-      .flatMapGroupsWithState[Boolean, Row](OM.Append(), stateTimeout(stateTtl)) {
-        (_: String, rows: Iterator[Row], state: GroupState[Boolean]) =>
-          if (state.hasTimedOut) {
-            state.remove() // TTL eviction: key forgotten, state bounded
-            Iterator.empty
-          } else if (state.exists) {
-            stateTtl.foreach(t => state.setTimeoutDuration(t.toMillis)) // refresh
-            Iterator.empty // key already emitted in a prior batch
-          } else {
-            state.update(true)
-            stateTtl.foreach(t => state.setTimeoutDuration(t.toMillis))
-            rows.take(1) // first occurrence within this batch wins
-          }
-      }
-  }
+  def dedupFirstSeen(stream: DataFrame, docKey: String): DataFrame =
+    if (stream.schema.exists(_.metadata.contains(EventTimeWatermark.delayKey)))
+      stream.dropDuplicatesWithinWatermark(docKey)
+    else stream.dropDuplicates(docKey)
 
   /** One (bucket, id, sig) row per LSH band of one streamed document. */
   final case class BandedDoc(bucket: Long, id: Long, sig: Array[Int])
@@ -109,15 +91,16 @@ object ValidateStream {
    *  - a pair colliding in several bands emits one hit PER band bucket —
    *    deduplicate downstream (`dropDuplicates` on (id_a, id_b) with a
    *    watermark, or in the sink);
-   *  - state is (maxBucket × sig) bytes per active bucket; `stateTtl`
-   *    bounds the horizon like [[dedupFirstSeen]] (None = exact, unbounded);
+   *  - `maxBucket` bounds each bucket's state to (maxBucket × sig) bytes;
+   *    the number of buckets is not bounded (no state is ever evicted: a
+   *    processing-time timeout would keep an `AvailableNow` query planning
+   *    timeout batches after its input is drained);
    *  - buckets partition across executors by key hash — the same shuffle
    *    key the batch groupBy uses.
    */
   def nearDupPairs(stream: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      threshold: Double = 0.7, maxBucket: Int = 1000,
-      stateTtl: Option[java.time.Duration] = None): org.apache.spark.sql.Dataset[NearDupHit] = {
+      threshold: Double = 0.7, maxBucket: Int = 1000): org.apache.spark.sql.Dataset[NearDupHit] = {
     import org.apache.spark.sql.streaming.{GroupState, OutputMode => OM}
     import org.apache.spark.sql.types.LongType
     val spark = stream.sparkSession
@@ -139,34 +122,28 @@ object ValidateStream {
     banded
       .groupByKey(_.bucket)
       .flatMapGroupsWithState[BucketState, NearDupHit](
-        OM.Append(), stateTimeout(stateTtl)) {
+        OM.Append(), GroupStateTimeout.NoTimeout()) {
         (_: Long, rows: Iterator[BandedDoc], state: GroupState[BucketState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(BucketState(Nil, Nil))
-            val hits = scala.collection.mutable.ArrayBuffer[NearDupHit]()
-            rows.foreach { d =>
-              if (!st.ids.contains(d.id)) {
-                var ids = st.ids; var sigs = st.sigs
-                while (ids.nonEmpty) {
-                  val oid = ids.head; val osig = sigs.head
-                  var eq = 0; var i = 0
-                  while (i < numHashes) { if (osig(i) == d.sig(i)) eq += 1; i += 1 }
-                  val sim = eq.toDouble / numHashes
-                  if (sim >= threshold)
-                    hits += NearDupHit(math.min(oid, d.id), math.max(oid, d.id), sim)
-                  ids = ids.tail; sigs = sigs.tail
-                }
-                if (st.ids.size < maxBucket)
-                  st = BucketState(d.id :: st.ids, d.sig :: st.sigs)
+          var st = state.getOption.getOrElse(BucketState(Nil, Nil))
+          val hits = scala.collection.mutable.ArrayBuffer[NearDupHit]()
+          rows.foreach { d =>
+            if (!st.ids.contains(d.id)) {
+              var ids = st.ids; var sigs = st.sigs
+              while (ids.nonEmpty) {
+                val oid = ids.head; val osig = sigs.head
+                var eq = 0; var i = 0
+                while (i < numHashes) { if (osig(i) == d.sig(i)) eq += 1; i += 1 }
+                val sim = eq.toDouble / numHashes
+                if (sim >= threshold)
+                  hits += NearDupHit(math.min(oid, d.id), math.max(oid, d.id), sim)
+                ids = ids.tail; sigs = sigs.tail
               }
+              if (st.ids.size < maxBucket)
+                st = BucketState(d.id :: st.ids, d.sig :: st.sigs)
             }
-            state.update(st)
-            stateTtl.foreach(t => state.setTimeoutDuration(t.toMillis))
-            hits.iterator
           }
+          state.update(st)
+          hits.iterator
       }
   }
 

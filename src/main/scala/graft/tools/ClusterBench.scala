@@ -5,15 +5,13 @@ import graft.exec.ValidationRunner
 import graft.io.Docs
 
 /**
- * Multi-executor scaling protocol — the spark-submit twin of
- * [[ScaleBench]]. Where ScaleBench compares local[8] vs local[32] inside
- * one JVM, this main is MASTER-AGNOSTIC (no `.master(...)` — supplied by
- * `spark-submit --master spark://…`) and is meant to run against a real
- * standalone cluster: one master plus four workers, each worker pinned to
- * a disjoint 8-core set with `taskset`, so executors are separate JVMs
- * with private heaps/GC and shuffles cross process boundaries through
- * netty — the execution shape of the north rule's "N and 4N executors",
- * as faithfully as a single box allows.
+ * Multi-executor scaling protocol. This main is MASTER-AGNOSTIC (no
+ * `.master(...)` — supplied by `spark-submit --master spark://…`) and is
+ * meant to run against a real standalone cluster: one master plus four
+ * workers, each worker pinned to a disjoint 8-core set with `taskset`,
+ * so executors are separate JVMs with private heaps/GC and shuffles
+ * cross process boundaries through netty — the execution shape of the
+ * north rule's "N and 4N executors", as faithfully as a single box allows.
  *
  *   N  = --conf spark.cores.max=8,  spark.executor.cores=8 → 1 executor
  *   4N = --conf spark.cores.max=32, spark.executor.cores=8 → 4 executors
@@ -24,12 +22,12 @@ import graft.io.Docs
  * (from the status tracker) so the artifact proves the cluster shape
  * rather than asserting it.
  *
- * Jobs are the same as ScaleBench's: `validate` = deterministic
- * interleaved-doc generation → full constraint-eval projection → global
- * summary; `dedup` = MinHash+LSH then SimHash pair generation over the
- * materialized dedup corpus (pair counts checked against the closed
- * form). Warm-up run first, then best-of-3 (hypervisor steal makes the
- * min the honest steady-state figure).
+ * Jobs: `validate` = deterministic interleaved-doc generation → full
+ * constraint-eval projection → global summary; `dedup` = MinHash+LSH
+ * then SimHash pair generation over the materialized dedup corpus (pair
+ * counts checked against the closed form). Warm-up run first, then
+ * best-of-3 (hypervisor steal makes the min the honest steady-state
+ * figure).
  */
 object ClusterBench {
 

@@ -118,8 +118,8 @@ object DedupCorpus {
       generate(spark, n, 256, degen).write.mode("overwrite").parquet(tmp)
     }
 
-  /** THE probe parameterization — one definition shared by `graft.Bench`,
-    * `ScaleBench dedup` and `ClusterBench dedup`, so the numbers the
+  /** THE probe parameterization — one definition shared by `graft.Bench`
+    * and `ClusterBench dedup`, so the numbers the
     * BASELINE compares across protocols are of the same job by
     * construction. */
   object Probe {

@@ -180,8 +180,8 @@ class DriftSpec extends SparkTestBase {
     // independent derivation: chi2_k CDF ≈ Φ(z), z = ((x/k)^(1/3) − (1 −
     // 2/(9k))) / sqrt(2/(9k)) (Wilson & Hilferty 1931); Φ via the
     // Abramowitz–Stegun 7.1.26 erf polynomial. Two disjoint published
-    // algorithms agreeing across the grid pins the NR series/continued-
-    // fraction implementation.
+    // algorithms agreeing across the grid pins the p-value the engine
+    // returns.
     def phi(z: Double): Double = {
       val t = 1.0 / (1.0 + 0.3275911 * math.abs(z) / math.sqrt(2.0))
       val poly = t * (0.254829592 + t * (-0.284496736 + t * (1.421413741 +
@@ -191,7 +191,7 @@ class DriftSpec extends SparkTestBase {
     }
     for (k <- Seq(3, 5, 10, 20, 50); mult <- Seq(0.5, 1.0, 1.5, 2.0, 3.0)) {
       val x = k * mult
-      val pOurs = 1.0 - Drift.gammaP(k / 2.0, x / 2.0)
+      val pOurs = Drift.chiSquarePValue(x, k)
       val z = (math.cbrt(x / k) - (1.0 - 2.0 / (9.0 * k))) / math.sqrt(2.0 / (9.0 * k))
       val pWH = 1.0 - phi(z)
       assert(math.abs(pOurs - pWH) < 0.02,
@@ -199,7 +199,7 @@ class DriftSpec extends SparkTestBase {
       assert(pOurs >= 0.0 && pOurs <= 1.0)
     }
     // monotonicity in the statistic at fixed dof
-    val ps = (1 to 30).map(i => 1.0 - Drift.gammaP(5.0, i.toDouble))
+    val ps = (1 to 30).map(i => Drift.chiSquarePValue(2.0 * i, 10))
     assert(ps.zip(ps.tail).forall { case (a, b) => b <= a + 1e-15 })
   }
 }

@@ -749,41 +749,36 @@ class PipelineSpec extends SparkTestBase {
     assert(all.groupBy("doc_id").count().where(col("count") > 1).count() === 0)
   }
 
-  test("streaming: dedup state TTL evicts idle keys so re-arrivals pass (bounded state)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ttl-in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("graft-ttl-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ttl-ck").toString
-    def runOnce(expectRows: Long): Unit = {
-      val stream = graft.streaming.ValidateStream.fromParquetDir(spark, dir, Docs.docSchema)
-      val deduped = graft.streaming.ValidateStream.dedupFirstSeen(stream, "doc_id",
-        stateTtl = Some(java.time.Duration.ofMillis(300)))
+  test("streaming: watermarked first-seen dedup forgets keys past the event-time horizon") {
+    import org.apache.spark.sql.types._
+    val dir = java.nio.file.Files.createTempDirectory("graft-horizon-in").toString
+    val outDir = java.nio.file.Files.createTempDirectory("graft-horizon-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-horizon-ck").toString
+    val schema = StructType(Docs.docSchema.fields :+ StructField("ts", TimestampType))
+    def write(docs: org.apache.spark.sql.DataFrame, at: String): Unit =
+      docs.withColumn("ts", to_timestamp(lit(s"2026-01-01 $at"))).write.mode("append").parquet(dir)
+    def runOnce(): Long = {
+      val stream = graft.streaming.ValidateStream.fromParquetDir(spark, dir, schema)
+        .withWatermark("ts", "1 minute")
+      val deduped = graft.streaming.ValidateStream.dedupFirstSeen(stream, "doc_id")
       val q = deduped.writeStream.outputMode("append").format("parquet")
         .option("path", outDir).option("checkpointLocation", ckpt)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      // a TTL'd stateful query keeps scheduling timeout-firing batches, so
-      // AvailableNow does not self-terminate — poll the sink for the data
-      // batches, then stop explicitly (leaking the query past the test
-      // crashes its next batch planning once the session is torn down)
-      val deadline = System.currentTimeMillis() + 60000
-      while (System.currentTimeMillis() < deadline &&
-        (try spark.read.parquet(outDir).count() catch { case _: Exception => -1L }) != expectRows)
-        Thread.sleep(500)
-      // the stop interrupts a timeout batch mid-write: its writer logs the
-      // abort as an ERROR
-      withLoggersOff("org.apache.spark.sql.execution.datasources.FileFormatWriter") {
-        q.stop()
-        q.awaitTermination()
-      }
+      assert(q.awaitTermination(120000), "AvailableNow watermarked dedup did not terminate")
+      spark.read.parquet(outDir).count()
     }
-    Docs.generate(spark, 50, 1).write.mode("append").parquet(dir)
-    runOnce(expectRows = 50)
-    assert(spark.read.parquet(outDir).count() === 50)
-    // past the TTL horizon the keys are evicted → the SAME docs are
-    // first-seen again (the no-TTL test above proves retention drops them)
-    Thread.sleep(1500)
-    Docs.generate(spark, 50, 1).write.mode("append").parquet(dir)
-    runOnce(expectRows = 100)
-    assert(spark.read.parquet(outDir).count() === 100)
+    write(Docs.generate(spark, 50, 1), "00:00:00")
+    assert(runOnce() === 50)
+    // the same docs 10 s later: within the 1-minute horizon, all dropped
+    write(Docs.generate(spark, 50, 1), "00:00:10")
+    assert(runOnce() === 50)
+    // one new doc 10 minutes later passes and moves the watermark past
+    // every first event + 1 minute, which evicts those keys' state
+    write(Docs.generate(spark, 51, 1).where(col("doc_id") === "doc-000000000050"), "00:10:00")
+    assert(runOnce() === 51)
+    // so the same 50 docs at +10 min count as first-seen again
+    write(Docs.generate(spark, 50, 1), "00:10:00")
+    assert(runOnce() === 101)
   }
 
   test("streaming: near-dup detection against keyed bucket state (cross-batch)") {
@@ -1129,6 +1124,35 @@ class PipelineSpec extends SparkTestBase {
       out(5L).toString)
     assert(out(6L).exists(_.contains("nested.deep_val")), out(6L).toString)
     assert(!out(7L).exists(_.startsWith("parse:value")), out(7L).toString)
+  }
+
+  test("only JSON null is absent: the string \"null\" is a value at every level and node") {
+    import graft.spec._
+    import org.apache.spark.sql.Row
+    val spark0 = spark
+    import spark0.implicits._
+    def mkSpec(strict: Boolean) = Spec("n", Seq(
+      RecordDef("inner", Seq(PField("v", PInt.int32, Optional()))),
+      RecordDef("doc", Seq(
+        PField("i", PInt.int64, Required),
+        PField("inner", TypeRef("inner"), Optional()),
+        PField("nums", PInt.int64, Repeated)))), "doc", strict = strict)
+    val docs = Seq(
+      """{"i":1,"inner":{"v":"null"}}""",
+      """{"i":2,"inner":"null"}""",
+      """{"i":3,"nums":"null"}""",
+      """{"i":4,"inner":{"v":null},"nums":null}""",
+      """{"i":5,"inner":null}""")
+    for (strict <- Seq(false, true)) {
+      val out = Convert.fromJson(docs.toDF("json"), "json", mkSpec(strict))
+        .select(col("_raw"), col("violations")).collect()
+        .map(r => r.getString(0) -> r.getSeq[Row](1)
+          .map(v => (v.getString(0), v.getString(1), v.getString(2)))).toMap
+      assert(out(docs(0)) === Seq(("parse:value", "$.inner.v", "null")), s"strict=$strict")
+      assert(out(docs(1)) === Seq(("parse:object-expected", "$.inner", "null")), s"strict=$strict")
+      assert(out(docs(2)) === Seq(("parse:array-expected", "$.nums", "null")), s"strict=$strict")
+      assert(out(docs(3)).isEmpty && out(docs(4)).isEmpty, s"strict=$strict")
+    }
   }
 
   test("quoted scalars: strict flags \"123\"-for-int at every level; non-strict plays relaxed") {

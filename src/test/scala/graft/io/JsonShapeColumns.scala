@@ -88,9 +88,8 @@ object JsonShapeColumns {
         // strict quoted-scalar probe (needs the OBJECT text — quoting is
         // gone from the stripped raw capture)
         case Some(b) if spec.strict =>
-          val present = raw.isNotNull && trim(raw) =!= "null"
           concat(valueVios(raw, mem.tpe, repeated = false, at, spec, seen),
-            quotedScalarVio(objStr, raw, present, mem.key, b, at))
+            quotedScalarVio(objStr, raw, mem.key, b, at))
         case _ => valueVios(raw, mem.tpe, repeated = mem.repeated, at, spec, seen)
       }
     }
@@ -100,7 +99,7 @@ object JsonShapeColumns {
   /** Violations for one raw value string of declared type `tpe`. */
   private def valueVios(valStr: Column, tpe: PiqiType, repeated: Boolean,
       path: String, spec: Spec, seen: Map[String, Int]): Column = {
-    val present = valStr.isNotNull && trim(valStr) =!= "null" // JSON null ≡ missing (B5)
+    val present = valStr.isNotNull // JSON null ≡ missing (B5); the string "null" is a value
     if (repeated) arrayVios(valStr, present, tpe, path, spec, seen)
     else unalias(tpe, spec) match {
       case TypeRef(n) => spec.defTable(n) match {
@@ -183,10 +182,10 @@ object JsonShapeColumns {
    * this disjoint from [[scalarParseVio]] — one violation per bad value,
    * never two.
    */
-  private def quotedScalarVio(objStr: Column, raw: Column, present: Column,
-      key: String, base: PiqiType, path: String): Column = {
+  private def quotedScalarVio(objStr: Column, raw: Column, key: String, base: PiqiType,
+      path: String): Column = {
     val rawOk = rawBad(raw, base).map(b => !b).getOrElse(lit(true))
-    SpecCompiler.vio(present && typedField(objStr, key, base).isNull && rawOk,
+    SpecCompiler.vio(raw.isNotNull && typedField(objStr, key, base).isNull && rawOk,
       "parse:value", path, raw)
   }
 
@@ -233,7 +232,7 @@ object JsonShapeColumns {
       case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) if spec.strict =>
         val typedArr = from_json(valStr, ArrayType(scalarSparkType(b)))
         val elemBad = (e: Column) =>
-          rawBad(e, b).map(bc => (trim(e) =!= "null") && bc).getOrElse(lit(false))
+          rawBad(e, b).map(bc => e.isNotNull && bc).getOrElse(lit(false))
         val allRawOk =
           size(filter(coalesce(elems, array().cast(strArr)), elemBad)) === 0
         SpecCompiler.vio(present && elems.isNotNull && typedArr.isNull && allRawOk,
