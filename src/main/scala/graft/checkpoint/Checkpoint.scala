@@ -20,11 +20,19 @@ import graft.exec.{Drift, QuantileSketch, ValidationRunner}
  * "no headers or footers... append", `doc/piq.md:697-700`).
  *
  * Layout under `root/`:
- *   <output>/bucket=N/...   one directory per named output (violations,
- *                           summary, sketches, …), parquet
+ *   <output>/bucket=N/...   one directory per named output (violations, or
+ *                           a [[runResumable]] caller's own), parquet
  *   lineage/commit-<min>-<max>-<uuid8>
- *                           one text marker per COMMITTED batch: its bucket
- *                           ids, one per line
+ *                           one text marker per COMMITTED batch, in one of
+ *                           two forms:
+ *                           - id-only ([[runResumable]]): the batch's
+ *                             bucket ids, one per line;
+ *                           - counted ([[ValidationCheckpoint.run]]): a
+ *                             first line `buckets=<id>,<id>,…`, then one
+ *                             line per bucket of the batch:
+ *                             `bucket=<id> n_docs=… n_valid=… n_invalid=…
+ *                             n_violations=… sketch_<name>=<base64> …`
+ *                             (n_docs=0 and no sketch for an empty bucket)
  *   .lineage_staging/       markers being written; never read
  *   spec.json               the compiled spec that wrote the outputs
  *
@@ -37,12 +45,16 @@ import graft.exec.{Drift, QuantileSketch, ValidationRunner}
  * `lineage/` with one atomic same-filesystem rename — a crash mid-write
  * leaves only staging garbage that no reader lists (swept by the next
  * commit), never a half-written marker that would poison
- * [[committedBuckets]] on resume. Commits and [[committedBuckets]] run no
- * Spark job. This stands in for an Iceberg snapshot+lineage transaction
- * (SURVEY.md §2.D): no Iceberg runtime ships with this build, so outputs
- * are plain parquet and the lineage is these marker files.
+ * [[committedBuckets]] on resume. A counted marker carries the batch's
+ * summary counts and KLL sketches, so they commit in the same rename as
+ * the lineage. Commits, [[committedBuckets]] and [[summary]] run no Spark
+ * job. This stands in for an Iceberg snapshot+lineage transaction
+ * (SURVEY.md §2.D), which keeps snapshot summaries and sketch blobs with
+ * the snapshot: no Iceberg runtime ships with this build, so outputs are
+ * plain parquet and the lineage is these marker files.
  */
 final class CheckpointManager(root: String) extends Serializable {
+  import CheckpointManager._
   private def lineagePath = new Path(s"$root/lineage")
   private def stagingPath = new Path(s"$root/.lineage_staging")
   private def specPath = new Path(s"$root/spec.json")
@@ -50,21 +62,39 @@ final class CheckpointManager(root: String) extends Serializable {
   private def fs(spark: SparkSession): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Buckets named by the published lineage markers. Only a missing
-    * `lineage/` means "none"; a marker that does not parse (e.g. a parquet
-    * marker from an older layout) or cannot be read throws, naming the file —
-    * treating it as "no lineage" would silently reprocess every bucket. */
+  /** Buckets named by the published lineage markers; of a counted marker
+    * only the first line is read. Only a missing `lineage/` means "none"; a
+    * marker that does not parse (e.g. a parquet marker from an older layout)
+    * or cannot be read throws, naming the file — treating it as "no lineage"
+    * would silently reprocess every bucket. */
   def committedBuckets(spark: SparkSession): Set[Int] = {
     val fs = this.fs(spark)
-    if (!fs.exists(lineagePath)) Set.empty
-    else fs.listStatus(lineagePath).iterator.flatMap { st =>
-      val ids = if (st.isFile) readText(fs, st.getPath).split('\n').map(_.trim.toIntOption).toSeq
-        else Seq(None)
-      if (ids.contains(None))
-        throw new java.io.IOException(s"unreadable lineage marker ${st.getPath}: expected one " +
-          "bucket id per line (a root written with parquet lineage markers cannot be resumed)")
-      ids.flatten
-    }.toSet
+    markers(fs).flatMap(readMarker(fs, _, idsOnly = true)._1).toSet
+  }
+
+  /** Every committed bucket's record, from the counted markers. Throws,
+    * naming the marker and the bucket, when a committed bucket has no
+    * counts — an id-only marker of [[runResumable]], or a root of the older
+    * layout that kept them in `summary` and `sketches` tables — or is
+    * committed twice: a partial answer would under-count silently. */
+  private[checkpoint] def bucketRecords(spark: SparkSession): Seq[BucketRecord] = {
+    val fs = this.fs(spark)
+    val records = markers(fs).flatMap { p =>
+      val (ids, lines) = readMarker(fs, p, idsOnly = false)
+      if (lines.isEmpty)
+        throw new java.io.IOException(s"lineage marker $p commits bucket ${ids.head} without counts: " +
+          "it was written by runResumable or by the older layout with summary and sketches tables")
+      val records = lines.map(decode(p, _))
+      if (records.map(_.bucket) != ids)
+        throw new java.io.IOException(s"lineage marker $p: bucket lines ${records.map(_.bucket)} " +
+          s"differ from its buckets $ids")
+      records
+    }
+    records.groupBy(_.bucket).values.find(_.size > 1).foreach { twice =>
+      throw new java.io.IOException(s"bucket ${twice.head.bucket} committed by more than one " +
+        s"lineage marker: ${twice.map(_.marker).mkString(", ")}")
+    }
+    records
   }
 
   /**
@@ -82,18 +112,20 @@ final class CheckpointManager(root: String) extends Serializable {
       outputs: DataFrame => Map[String, DataFrame], batches: Int = 1): Unit =
     forEachBatch(df, bucketCol, allBuckets, batches) { (batch, _) =>
       outputs(batch).foreach { case (name, out) => write(name, out, bucketCol) }
+      Nil
     }
 
-  /** The batch loop: `commit` writes one group's outputs, then the group's
+  /** The batch loop: `commit` writes one group's outputs and returns the
+    * records of its buckets (none for an id-only marker), then the group's
     * lineage marker is published — LAST, so a crash before it re-runs the
     * group idempotently. */
   private[checkpoint] def forEachBatch(df: DataFrame, bucketCol: String, allBuckets: Seq[Int],
-      batches: Int)(commit: (DataFrame, Seq[Int]) => Unit): Unit = {
+      batches: Int)(commit: (DataFrame, Seq[Int]) => Seq[BucketRecord]): Unit = {
     val spark = df.sparkSession
     val done = committedBuckets(spark)
     allBuckets.filterNot(done).grouped(math.max(1, batches)).foreach { group =>
-      commit(df.where(col(bucketCol).isin(group.map(Integer.valueOf): _*)), group)
-      commitLineage(spark, group)
+      val records = commit(df.where(col(bucketCol).isin(group.map(Integer.valueOf): _*)), group)
+      commitLineage(spark, group, records)
     }
   }
 
@@ -106,17 +138,19 @@ final class CheckpointManager(root: String) extends Serializable {
       .partitionBy("bucket").parquet(outPath(name))
 
   /**
-   * Staged lineage commit: write the group's bucket ids as one text file in
+   * Staged lineage commit: write the group's marker as one text file in
    * `.lineage_staging/`, then publish it into `lineage/` with a single
    * atomic rename. Readers list only `lineage/`, so a crash at any point
    * here leaves either no commit (staging garbage, swept on the next
    * commit) or the complete one — never a torn marker. One marker per
-   * committed batch keeps this O(#batches) tiny files.
+   * committed batch keeps this O(#batches) small files.
    */
-  private def commitLineage(spark: SparkSession, group: Seq[Int]): Unit = {
+  private def commitLineage(spark: SparkSession, group: Seq[Int], records: Seq[BucketRecord]): Unit = {
     val fs = this.fs(spark)
     val staged = new Path(stagingPath, java.util.UUID.randomUUID().toString)
-    writeText(fs, staged, group.mkString("", "\n", "\n"))
+    val lines =
+      if (records.isEmpty) group.map(_.toString) else (Header + group.mkString(",")) +: records.map(encode)
+    writeText(fs, staged, lines.mkString("", "\n", "\n"))
     val dst = new Path(lineagePath,
       s"commit-${group.min}-${group.max}-${java.util.UUID.randomUUID().toString.take(8)}")
     fs.mkdirs(lineagePath)
@@ -128,7 +162,15 @@ final class CheckpointManager(root: String) extends Serializable {
 
   def read(spark: SparkSession, name: String): DataFrame = spark.read.parquet(outPath(name))
   def violations(spark: SparkSession): DataFrame = read(spark, "violations")
-  def summary(spark: SparkSession): DataFrame = read(spark, "summary")
+
+  /** Per-bucket counts (`bucket`, `n_docs`, `n_valid`, `n_invalid`,
+    * `n_violations`) of the buckets [[ValidationCheckpoint.run]] committed,
+    * one row per non-empty bucket: a local relation built from the markers,
+    * so collecting it runs no job. Throws as [[bucketRecords]] does. */
+  def summary(spark: SparkSession): DataFrame = spark.createDataFrame(
+    java.util.Arrays.asList(bucketRecords(spark).filter(_.counts("n_docs") > 0)
+      .map(r => Row(r.bucket +: Counts.map(r.counts): _*)): _*),
+    StructType(StructField("bucket", IntegerType) +: Counts.map(StructField(_, LongType))))
 
   // ---- compiled-spec fingerprint (the `piqi compile` blob riding with the
   // lineage: a resumed run must be the SAME plan that wrote the outputs) ----
@@ -141,6 +183,40 @@ final class CheckpointManager(root: String) extends Serializable {
 
   def recordSpec(spark: SparkSession, specJson: String): Unit = writeText(fs(spark), specPath, specJson)
 
+  private def markers(fs: FileSystem): Seq[Path] =
+    if (!fs.exists(lineagePath)) Nil
+    else fs.listStatus(lineagePath).toSeq.map { st =>
+      if (!st.isFile) throw unreadable(st.getPath)
+      st.getPath
+    }
+
+  /** A marker's bucket ids and, unless `idsOnly`, its bucket lines (none in
+    * an id-only marker). With `idsOnly`, a counted marker is read up to the
+    * end of its first line only. */
+  private def readMarker(fs: FileSystem, p: Path, idsOnly: Boolean): (Seq[Int], Seq[String]) = {
+    val in = fs.open(p)
+    try {
+      val first = readLine(in)
+      def rest = new String(in.readAllBytes(), UTF_8).linesIterator.toSeq
+      val (ids, lines) =
+        if (first.startsWith(Header)) (first.stripPrefix(Header).split(',').toSeq, if (idsOnly) Nil else rest)
+        else (first +: rest, Nil)
+      val parsed = ids.map(_.trim.toIntOption)
+      if (parsed.contains(None)) throw unreadable(p)
+      (parsed.flatten, lines)
+    } finally in.close()
+  }
+
+  private def unreadable(p: Path) = new java.io.IOException(s"unreadable lineage marker $p: expected " +
+    "one bucket id per line or a buckets= line (a root written with parquet lineage markers cannot be resumed)")
+
+  private def readLine(in: java.io.InputStream): String = {
+    val line = new java.io.ByteArrayOutputStream()
+    var b = in.read()
+    while (b != -1 && b != '\n') { line.write(b); b = in.read() }
+    line.toString(UTF_8)
+  }
+
   private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try new String(in.readAllBytes(), UTF_8) finally in.close()
@@ -152,34 +228,78 @@ final class CheckpointManager(root: String) extends Serializable {
   }
 }
 
+object CheckpointManager {
+  /** The summary counts of one bucket, in marker and [[CheckpointManager.summary]] order. */
+  private[checkpoint] val Counts: Seq[String] = Seq("n_docs", "n_valid", "n_invalid", "n_violations")
+
+  /** One bucket line of a counted marker: the bucket's [[Counts]] and its
+    * KLL sketch bytes by sketch name; `marker` is the file it was read from. */
+  private[checkpoint] final case class BucketRecord(bucket: Int, counts: Map[String, Long],
+      sketches: Map[String, Array[Byte]], marker: String = "")
+
+  private val Header = "buckets="
+
+  private def encode(r: BucketRecord): String =
+    ((s"bucket=${r.bucket}" +: Counts.map(c => s"$c=${r.counts(c)}")) ++
+      r.sketches.map { case (n, b) => s"sketch_$n=${java.util.Base64.getEncoder.encodeToString(b)}" })
+      .mkString(" ")
+
+  private def decode(p: Path, line: String): BucketRecord = {
+    val fields = line.split(' ').map { t =>
+      val eq = t.indexOf('=')
+      if (eq <= 0) throw new java.io.IOException(s"lineage marker $p: unreadable field '${t.take(40)}'")
+      t.take(eq) -> t.drop(eq + 1)
+    }.toMap
+    def long(k: String) = fields.get(k).flatMap(_.toLongOption).getOrElse(throw new java.io.IOException(
+      s"lineage marker $p: bucket line without a numeric $k: '${line.take(80)}'"))
+    BucketRecord(long("bucket").toInt, Counts.map(c => c -> long(c)).toMap,
+      fields.collect { case (k, v) if k.startsWith("sketch_") =>
+        k.stripPrefix("sketch_") -> java.util.Base64.getDecoder.decode(v) },
+      p.toString)
+  }
+}
+
 /**
- * The full checkpointed validation job: per batch of buckets, commits
- * (violations, summary, sketches), lineage last, where `sketches` are
- * per-bucket KLL sketches (Spark's `kll_sketch_agg_double`, k = [[Drift.K]])
- * over the configured numeric columns — resumable drift state: merging the
- * committed per-bucket sketches reconstructs the whole-run sketch without
- * touching processed data again, within the rank-error bound stated on
- * [[Drift]].
+ * The full checkpointed validation job: per batch of buckets, writes the
+ * `violations` output, then commits the batch's lineage marker carrying
+ * each bucket's summary counts and one KLL sketch per sketch column
+ * (Spark's `kll_sketch_agg_double`, k = [[Drift.K]]) — resumable drift
+ * state: merging the committed per-bucket sketches reconstructs the
+ * whole-run sketch without touching processed data again, within the
+ * rank-error bound stated on [[Drift]].
  *
- * One validation pass per batch: the `violations` write is the only job
- * that scans and validates. `observe` on the validated frame computes, per
- * bucket of the batch, the summary counts and one KLL sketch per sketch
- * column (KLL sketches merge, so each task's partial sketch combines into
- * the bucket's); `summary` and `sketches` are then written from those
- * values as local relations of at most `batches` rows. The observed
- * metrics are exactly-once: the violations write is a single result stage,
- * and Spark applies each task's accumulator updates from an action once,
- * even when the task is retried. The observation carries (4 + sketch
- * columns) expressions per bucket, so its size grows with buckets per
- * batch.
+ * One job per batch: the `violations` write is the only job, and the only
+ * scan. `observe` on the validated frame computes, per bucket of the
+ * batch, the summary counts and the sketches (KLL sketches merge, so each
+ * task's partial sketch combines into the bucket's); they ride in the
+ * marker's bucket lines, so counts, sketches and lineage commit in one
+ * atomic rename. A KLL sketch at k = 400 serializes to at most about 10 KB
+ * (5.7 KB at 2.5k items, 10.3 KB at 10⁹), about 14 KB in base64, per
+ * bucket and sketch column. The observed metrics are exactly-once: the
+ * violations write is a single result stage, and Spark applies each
+ * task's accumulator updates from an action once, even when the task is
+ * retried. The observation carries (4 + sketch columns) expressions per
+ * bucket, so its size grows with buckets per batch.
+ *
+ * [[CheckpointManager.summary]], [[bucketSketches]] and [[mergedSketch]]
+ * read the markers and run no job. They throw, naming the marker and the
+ * bucket, when a committed bucket has no counts: a root that mixes in
+ * [[CheckpointManager.runResumable]] markers, or one of the older layout
+ * with `summary` and `sketches` tables. A sketch name must be a word
+ * (`[A-Za-z0-9_]+`) that no other sketch column of the run uses: the
+ * marker format carries no other; [[run]] checks this before any job.
  */
 object ValidationCheckpoint {
+  import CheckpointManager.{BucketRecord, Counts}
 
   final case class SketchCol(name: String, column: Column)
 
   def run(docs: DataFrame, plan: ValidationPlan, mgr: CheckpointManager,
       bucketCol: String, allBuckets: Seq[Int], docKey: String,
       sketchCols: Seq[SketchCol] = Nil, batches: Int = 1): Unit = {
+    val names = sketchCols.map(_.name)
+    names.foreach(n => require(n.matches("\\w+"), s"sketch name '$n' is not a word ([A-Za-z0-9_]+)"))
+    require(names.distinct.size == names.size, s"sketch names repeat: ${names.mkString(", ")}")
     // spec fingerprint: resuming a lineage with a DIFFERENT spec would mix
     // outputs of two plans in one table — fail fast instead (the serialized
     // blob is the `piqi compile` portable-spec analog, SpecJson)
@@ -193,15 +313,13 @@ object ValidationCheckpoint {
       case Some(_) => ()
       case None => mgr.recordSpec(spark, specJson)
     }
-    val counts = Seq("n_docs", "n_valid", "n_invalid", "n_violations")
-    val bucketType = docs.schema(bucketCol).dataType
     mgr.forEachBatch(docs, bucketCol, allBuckets, batches) { (batch, group) =>
       val name = s"checkpoint-${java.util.UUID.randomUUID()}"
       val metrics = group.flatMap { k =>
         val in = col(bucketCol) === k
         Seq(count(when(in, 1)), count(when(in && col("valid"), 1)), count(when(in && !col("valid"), 1)),
           sum(when(in, size(col("violations")).cast(LongType))))
-          .zip(counts).map { case (m, n) => m.as(s"${n}_$k") } ++
+          .zip(Counts).map { case (m, n) => m.as(s"${n}_$k") } ++
           sketchCols.map(sc => Drift.kllSketch(when(in, sc.column)).as(s"sketch_${sc.name}_$k"))
       }
       val validated = ValidationRunner.validate(batch, plan).observe(name, metrics.head, metrics.tail: _*)
@@ -213,19 +331,18 @@ object ValidationCheckpoint {
           validated.select(col(docKey), col(bucketCol), col("violations")),
           docKey, passthroughCols = Seq(bucketCol)), bucketCol)
       }
-      // an empty bucket gets no rows, as a groupBy would give it none
-      val present = group.filter(k => m(s"n_docs_$k").asInstanceOf[Long] > 0)
-      present.foreach { k =>
-        val Seq(n, valid, invalid) = counts.take(3).map(c => m(s"${c}_$k").asInstanceOf[Long])
-        require(valid + invalid == n, s"bucket $k: n_valid $valid + n_invalid $invalid != n_docs $n")
+      group.map { k =>
+        // an empty bucket gets no summary row and no sketch, as a groupBy
+        // would give it none (its n_violations sum is null)
+        if (m(s"n_docs_$k") == 0L) BucketRecord(k, Counts.map(_ -> 0L).toMap, Map.empty)
+        else {
+          val counts = Counts.map(c => c -> m(s"${c}_$k").asInstanceOf[Long]).toMap
+          require(counts("n_valid") + counts("n_invalid") == counts("n_docs"), s"bucket $k: n_valid + " +
+            s"n_invalid != n_docs in $counts")
+          BucketRecord(k, counts, sketchCols.map(sc => sc.name -> m(s"sketch_${sc.name}_$k")
+            .asInstanceOf[Array[Byte]]).toMap)
+        }
       }
-      def local(names: Seq[String], tpe: DataType): DataFrame = spark.createDataFrame(
-        java.util.Arrays.asList(present.map(k => Row(k +: names.map(c => m(s"${c}_$k")): _*)): _*),
-        StructType(StructField(bucketCol, IntegerType) +: names.map(StructField(_, tpe))))
-        .withColumn(bucketCol, col(bucketCol).cast(bucketType))
-      mgr.write("summary", local(counts, LongType), bucketCol)
-      if (sketchCols.nonEmpty)
-        mgr.write("sketches", local(sketchCols.map(sc => s"sketch_${sc.name}"), BinaryType), bucketCol)
     }
   }
 
@@ -246,10 +363,17 @@ object ValidationCheckpoint {
     row.getValuesMap[Any](row.schema.fieldNames.toSeq)
   }
 
-  /** Merge the committed per-bucket sketches for `name` into one sketch
-    * (one `kll_merge_agg_double` over the `sketches` table). */
+  /** The committed sketch `name` of each non-empty bucket, read from the
+    * markers (no job). Throws, naming the marker and the bucket, for a
+    * committed bucket without counts or without that sketch. */
+  def bucketSketches(spark: SparkSession, mgr: CheckpointManager, name: String): Map[Int, QuantileSketch] =
+    mgr.bucketRecords(spark).filter(_.counts("n_docs") > 0).map { r =>
+      r.bucket -> QuantileSketch.fromBytes(r.sketches.getOrElse(name, throw new java.io.IOException(
+        s"lineage marker ${r.marker}: bucket ${r.bucket} has no sketch '$name'")))
+    }.toMap
+
+  /** Merge the committed per-bucket sketches for `name` into one sketch at
+    * k = [[Drift.K]], on the driver (no job). */
   def mergedSketch(spark: SparkSession, mgr: CheckpointManager, name: String): QuantileSketch =
-    QuantileSketch.fromBytes(mgr.read(spark, "sketches")
-      .agg(kll_merge_agg_double(col(s"sketch_$name"), Drift.K))
-      .collect()(0).getAs[Array[Byte]](0))
+    QuantileSketch.merge(bucketSketches(spark, mgr, name).values)
 }

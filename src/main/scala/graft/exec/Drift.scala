@@ -28,6 +28,13 @@ object QuantileSketch {
   /** Reads the bytes of a KLL sketch column (the aggregates never yield NULL). */
   def fromBytes(bytes: Array[Byte]): QuantileSketch =
     new QuantileSketch(KllDoublesSketch.heapify(Memory.wrap(bytes)))
+
+  /** One sketch at k = [[Drift.K]] of all of `parts`, as `kll_merge_agg_double` merges them. */
+  def merge(parts: Iterable[QuantileSketch]): QuantileSketch = {
+    val union = KllDoublesSketch.newHeapInstance(Drift.K)
+    parts.foreach(p => union.merge(p.kll))
+    new QuantileSketch(union)
+  }
 }
 
 /**

@@ -203,18 +203,22 @@ object Convert {
   def validateAny(df: DataFrame, anyCol: String, typeCol: String,
       registry: Map[String, Spec]): DataFrame = {
     // ONE case-when projection over all registered types — no per-type scan,
-    // no union, no shuffle: the typename dispatch is a column expression
-    val branches = registry.toSeq.sortBy(_._1).map { case (name, spec) =>
-      val (rec, shapeVio) = readJson(col(anyCol), spec)
-      (col(typeCol) === name, concat(shapeVio, SpecCompiler.compile(spec).violationsFor(rec)))
+    // no union, no shuffle: the typename dispatch is a column expression.
+    // Each type's record is its own column, parsed on that type's rows only:
+    // read inside the dispatch, `from_json(payload).field` would be split
+    // into one parse per field read (Catalyst's OptimizeJsonExprs)
+    val types = registry.toSeq.sortBy(_._1).zipWithIndex.map { case ((name, spec), i) =>
+      (col(typeCol) === name, spec, readJson(col(anyCol), spec), s"_any_rec$i")
     }
     val unknownVio = SpecCompiler.vio(lit(true), "unknown-type", "$",
       coalesce(col(typeCol), lit("null")))
-    val dispatch = branches.foldRight(unknownVio) { case ((cond, vios), rest) =>
-      when(cond, vios).otherwise(rest)
+    val dispatch = types.foldRight(unknownVio) { case ((isType, spec, (_, shapeVio), recCol), rest) =>
+      when(isType, concat(shapeVio, SpecCompiler.compile(spec).violationsFor(col(recCol)))).otherwise(rest)
     }
-    df.withColumn("any_violations", dispatch)
+    df.select(col("*") +: types.map { case (isType, _, (rec, _), recCol) => when(isType, rec).as(recCol) }: _*)
+      .withColumn("any_violations", dispatch)
       .withColumn("any_valid", size(col("any_violations")) === 0)
+      .drop(types.map(_._4): _*)
   }
 
   /**

@@ -4,6 +4,7 @@ import java.net.URI
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.checkpoint.{CheckpointManager, ValidationCheckpoint}
@@ -84,28 +85,25 @@ class CheckpointSpec extends SparkTestBase {
     run(docs, clean, all, batches = 2)
     val cleanSketch = ValidationCheckpoint.mergedSketch(spark, clean, "offsets")
 
-    // batches of two: {0,1} commits, the kill lands in {2,3}'s commit. Per
-    // boundary: the (op, nth, path) that throws, the outputs holding {2,3}
-    // at the kill, and the lineage at the kill
-    def secondBatch(p: String) = p.contains("/bucket=2/") || p.contains("/bucket=3/")
-    val outputs = Seq("violations", "summary", "sketches")
-    val boundaries: Seq[(String, String, Int, String => Boolean, Seq[String], Set[Int])] = Seq(
-      ("after violations", "create", 1, p => p.contains("/summary/") && secondBatch(p), outputs.take(1), Set(0, 1)),
-      ("after summary", "create", 1, p => p.contains("/sketches/") && secondBatch(p), outputs.take(2), Set(0, 1)),
-      ("after sketches", "create", 2, _.contains("/.lineage_staging/"), outputs, Set(0, 1)),
-      ("staged, before rename", "rename", 2, _.contains("/.lineage_staging/"), outputs, Set(0, 1)),
-      ("renamed, before sweep", "delete", 2, _.endsWith("/.lineage_staging"), outputs, Set(0, 1, 2, 3)))
+    // batches of two: {0,1} commits, the kill lands in {2,3}'s commit, whose
+    // violations have landed by then. Per boundary of the marker commit: the
+    // (op, nth, path) that throws and the lineage at the kill
+    val boundaries: Seq[(String, String, Int, String => Boolean, Set[Int])] = Seq(
+      ("staged marker create", "create", 2, _.contains("/.lineage_staging/"), Set(0, 1)),
+      ("staged, before rename", "rename", 2, _.contains("/.lineage_staging/"), Set(0, 1)),
+      ("renamed, before sweep", "delete", 2, _.endsWith("/.lineage_staging"), Set(0, 1, 2, 3)))
     // the injected failures are expected: keep their task-failure stack traces
     // (some logged by killed sibling tasks after the run has thrown) out of the log
     spark.sparkContext.setLogLevel("OFF")
-    try for ((point, op, nth, matches, landed, committedAtKill) <- boundaries) withClue(s"[$point] ") {
+    try for ((point, op, nth, matches, committedAtKill) <- boundaries) withClue(s"[$point] ") {
       val dir = tempRoot("graft-fault")
       val mgr = new CheckpointManager("faulty://" + dir)
       FaultFs.arm(op, nth)(matches)
       val e = try intercept[Exception](run(docs, mgr, all, batches = 2)) finally FaultFs.disarm()
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(_.isInstanceOf[FaultFs.Fault]), s"run failed for another reason: $e")
-      assert(outputs.filter(o => new java.io.File(s"$dir/$o/bucket=2").isDirectory) === landed)
+      assert(new java.io.File(s"$dir/violations/bucket=2").isDirectory)
+      assert(Seq("summary", "sketches").forall(o => !new java.io.File(s"$dir/$o").exists))
       assert(mgr.committedBuckets(spark) === committedAtKill)
 
       run(docs, mgr, all, batches = 2)
@@ -135,10 +133,9 @@ class CheckpointSpec extends SparkTestBase {
       summaryCols.map(_ -> "long").toMap + ("bucket" -> "integer"))
 
     val perBucket = docs.groupBy("bucket").count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val sketches = mgr.read(spark, "sketches").collect()
-    assert(sketches.map(_.getAs[Int]("bucket")).sorted.toSeq === Seq(0, 1, 3, 4))
-    for (r <- sketches) assert(graft.exec.QuantileSketch.fromBytes(r.getAs[Array[Byte]]("sketch_offsets"))
-      .totalWeight === perBucket(r.getAs[Int]("bucket")).toDouble)
+    val sketches = ValidationCheckpoint.bucketSketches(spark, mgr, "offsets")
+    assert(sketches.keys.toSeq.sorted === Seq(0, 1, 3, 4))
+    for ((b, sketch) <- sketches) assert(sketch.totalWeight === perBucket(b).toDouble)
 
     assert(violationRows(mgr) === sortedRows(
       ValidationRunner.violationRows(validated, "doc_id", Seq("bucket")),
@@ -187,5 +184,54 @@ class CheckpointSpec extends SparkTestBase {
     java.nio.file.Files.write(old, Array[Byte](80, 65, 82, 49, 1, 2, 3))
     val e = intercept[java.io.IOException](run(docs, mgr, Seq(0, 1), batches = 1))
     assert(e.getMessage.contains("commit-1-1-0000abcd.parquet"))
+  }
+
+  test("a batch commits in one job, into one marker; reading the committed state runs none") {
+    val docs = withBuckets(Docs.generate(spark, 400, numPartitions = 2, corruptEvery = 20), 4)
+    val root = tempRoot("graft-ckpt-jobs")
+    val mgr = new CheckpointManager(root)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val countJobs = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    def jobsOf[T](body: => T): Int = { jobs.set(0); listening(countJobs)(body); jobs.get }
+
+    assert(jobsOf(run(docs, mgr, 0 to 4, batches = 5)) === 1)
+    assert(jobsOf(mgr.committedBuckets(spark)) === 0)
+    assert(jobsOf(mgr.summary(spark).collect()) === 0)
+    assert(jobsOf(ValidationCheckpoint.mergedSketch(spark, mgr, "offsets")) === 0)
+    assert(ValidationCheckpoint.mergedSketch(spark, mgr, "offsets").totalWeight === 400.0)
+
+    // the marker: the batch's ids first, then one line per bucket, each with
+    // n_docs; bucket 4 is empty and carries no sketch
+    import scala.jdk.CollectionConverters._
+    val Seq(marker) = new java.io.File(s"$root/lineage").listFiles().toSeq.filterNot(_.getName.startsWith("."))
+    val lines = java.nio.file.Files.readAllLines(marker.toPath).asScala.toSeq
+    assert(lines.head === "buckets=0,1,2,3,4")
+    assert(lines.tail.map(_.split(' ')(0)) === (0 to 4).map(k => s"bucket=$k"))
+    assert(lines.tail.forall(_.split(' ')(1).startsWith("n_docs=")))
+    assert(lines.last === "bucket=4 n_docs=0 n_valid=0 n_invalid=0 n_violations=0")
+    assert(lines.tail.init.forall(_.contains(" sketch_offsets=")))
+
+    // a marker whose bucket lines miss one of its buckets, or a bucket in two
+    // markers, would miscount: the reads throw, naming the markers
+    val other = java.nio.file.Paths.get(root, "lineage", "commit-5-6-0000abcd")
+    java.nio.file.Files.write(other, "buckets=5,6\nbucket=5 n_docs=1 n_valid=1 n_invalid=0 n_violations=0\n".getBytes)
+    assert(intercept[java.io.IOException](mgr.summary(spark)).getMessage.contains("commit-5-6-0000abcd"))
+    java.nio.file.Files.copy(marker.toPath, other, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val twice = intercept[java.io.IOException](ValidationCheckpoint.mergedSketch(spark, mgr, "offsets"))
+    assert(twice.getMessage.contains("more than one lineage marker") && twice.getMessage.contains(marker.getName))
+
+    // a sketch name the marker cannot carry fails before any job or file
+    val bad = new CheckpointManager(tempRoot("graft-ckpt-badname"))
+    for (name <- Seq("off sets", "a=b", "")) withClue(s"[$name] ") {
+      val e = intercept[IllegalArgumentException](jobsOf(ValidationCheckpoint.run(docs, plan, bad, "bucket",
+        0 to 3, "doc_id", Seq(offsets.copy(name = name)))))
+      assert(e.getMessage.contains("sketch name"))
+    }
+    assert(jobs.get === 0)
+    intercept[IllegalArgumentException](ValidationCheckpoint.run(docs, plan, bad, "bucket", 0 to 3, "doc_id",
+      Seq(offsets, offsets)))
+    assert(bad.recordedSpec(spark).isEmpty && bad.committedBuckets(spark).isEmpty)
   }
 }

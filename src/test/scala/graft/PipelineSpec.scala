@@ -45,7 +45,7 @@ class PipelineSpec extends SparkTestBase {
     val direct = ValidationRunner.summary(
       ValidationRunner.validate(docs, plan), Seq("bucket"))
       .agg(sum("n_docs"), sum("n_invalid")).collect()(0)
-    val ckpt = mgr.summary(spark).agg(sum("n_docs"), sum("n_invalid")).collect()(0)
+    val ckpt = mgr.read(spark, "summary").agg(sum("n_docs"), sum("n_invalid")).collect()(0)
     assert(direct.getLong(0) === ckpt.getLong(0))
     assert(direct.getLong(1) === ckpt.getLong(1))
 
@@ -86,23 +86,15 @@ class PipelineSpec extends SparkTestBase {
       .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
     val sketchCols = Seq(ValidationCheckpoint.SketchCol("nspans", size(col("spans")).cast("double")))
 
-    // crash after the first bucket commit
-    val crashing = new CheckpointManager(root) // same lineage
-    var n = 0
-    try {
-      crashing.runResumable(docs, "bucket", Seq(0, 1, 2, 3), df => {
-        n += 1
-        if (n > 1) throw new RuntimeException("crash")
-        val v = ValidationRunner.validate(df, plan)
-        Map(
-          "violations" -> ValidationRunner.violationRows(v, "doc_id")
-            .join(df.select("doc_id", "bucket"), "doc_id"),
-          "summary" -> ValidationRunner.summary(v, Seq("bucket")),
-          "sketches" -> df.groupBy(col("bucket"))
-            .agg(graft.exec.Drift.kllSketch(size(col("spans"))).as("sketch_nspans")))
-      })
-    } catch { case _: RuntimeException => () }
-    assert(mgr.committedBuckets(spark).size === 1)
+    // crash inside the run: the first bucket commits, the second bucket's
+    // marker rename fails
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFs].getName)
+    val crashing = new CheckpointManager("faulty://" + root) // same lineage
+    FaultFs.arm("rename", 2)(_.contains("/.lineage_staging/"))
+    val e = try intercept[Exception](ValidationCheckpoint.run(docs, plan, crashing, "bucket", Seq(0, 1, 2, 3),
+      "doc_id", sketchCols)) finally FaultFs.disarm()
+    assert(e.isInstanceOf[FaultFs.Fault], s"run failed for another reason: $e")
+    assert(mgr.committedBuckets(spark) === Set(0))
 
     // resume through the high-level API
     ValidationCheckpoint.run(docs, plan, mgr, "bucket", Seq(0, 1, 2, 3), "doc_id", sketchCols)
@@ -118,6 +110,30 @@ class PipelineSpec extends SparkTestBase {
       assert(math.abs(merged.quantile(q) - oneShot.quantile(q)) <= 1.0) // n_spans ∈ 1..7
     // and drift between the resumed state and a fresh run of the same data is nil
     assert(graft.exec.Drift.ksStatistic(merged, oneShot) < 0.05)
+  }
+
+  test("checkpoint: a root mixing runResumable and ValidationCheckpoint markers fails summary and sketch reads") {
+    import graft.checkpoint.ValidationCheckpoint
+    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-mixed").toString
+    val mgr = new CheckpointManager(root)
+    val plan = SpecCompiler.compile(Docs.docSpec)
+    val docs = Docs.generate(spark, 200, numPartitions = 2)
+      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
+    val sketchCols = Seq(ValidationCheckpoint.SketchCol("nspans", size(col("spans"))))
+    // bucket 1 through runResumable (an id-only marker), the rest through run
+    mgr.runResumable(docs, "bucket", Seq(1), df => Map("summary" -> ValidationRunner.summary(
+      ValidationRunner.validate(df, plan), Seq("bucket"))))
+    ValidationCheckpoint.run(docs, plan, mgr, "bucket", Seq(0, 1, 2, 3), "doc_id", sketchCols)
+    assert(mgr.committedBuckets(spark) === Set(0, 1, 2, 3))
+    // a partial answer would count 3 of 4 buckets: both reads throw instead,
+    // naming the id-only marker and its bucket
+    val idOnly = new java.io.File(s"$root/lineage").listFiles().map(_.getName).filter(_.startsWith("commit-1-1-"))
+    assert(idOnly.length === 1)
+    for (read <- Seq[() => Any](() => mgr.summary(spark), () => ValidationCheckpoint.mergedSketch(spark, mgr, "nspans"),
+        () => ValidationCheckpoint.bucketSketches(spark, mgr, "nspans"))) {
+      val e = intercept[java.io.IOException](read())
+      assert(e.getMessage.contains(idOnly.head) && e.getMessage.contains("bucket 1 without counts"))
+    }
   }
 
   test("checkpoint: duplicate doc_ids do not multiply committed violation rows") {
@@ -684,7 +700,18 @@ class PipelineSpec extends SparkTestBase {
     assert(resized.exists(r => r.getInt(3) < r.getInt(1) || r.getInt(4) < r.getInt(2)))
   }
 
-  test("streaming: windowed validation summary over file stream") {
+  /** A test whose stateful query restarts: each restart logs WARNs for the
+    * older state snapshots it does not load (`ChecksumCheckpointFileManager`:
+    * no checksum file for a snapshot; `HDFSBackedStateStoreProvider`: a
+    * version not in the loaded maps). Those loggers run at ERROR, so an
+    * error still shows. The provider's logger name carries its store id
+    * after the class name, so its level comes from the package's logger. */
+  private def restartingStreamTest(name: String)(body: => Any)(implicit pos: org.scalactic.source.Position): Unit =
+    test(name)(withLoggersAt(org.apache.logging.log4j.Level.ERROR,
+      "org.apache.spark.sql.execution.streaming.checkpointing.ChecksumCheckpointFileManager",
+      "org.apache.spark.sql.execution.streaming.state")(body))
+
+  restartingStreamTest("streaming: windowed validation summary over file stream") {
     import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-in").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-ck").toString
@@ -721,7 +748,7 @@ class PipelineSpec extends SparkTestBase {
     assert(out(0).getAs[Long]("n_invalid") === 4)
   }
 
-  test("streaming: stateful first-seen dedup across micro-batches") {
+  restartingStreamTest("streaming: stateful first-seen dedup across micro-batches") {
     val dir = java.nio.file.Files.createTempDirectory("graft-dedup-in").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-dedup-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-dedup-ck").toString
@@ -749,7 +776,7 @@ class PipelineSpec extends SparkTestBase {
     assert(all.groupBy("doc_id").count().where(col("count") > 1).count() === 0)
   }
 
-  test("streaming: watermarked first-seen dedup forgets keys past the event-time horizon") {
+  restartingStreamTest("streaming: watermarked first-seen dedup forgets keys past the event-time horizon") {
     import org.apache.spark.sql.types._
     val dir = java.nio.file.Files.createTempDirectory("graft-horizon-in").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-horizon-out").toString
@@ -781,7 +808,7 @@ class PipelineSpec extends SparkTestBase {
     assert(runOnce() === 101)
   }
 
-  test("streaming: near-dup detection against keyed bucket state (cross-batch)") {
+  restartingStreamTest("streaming: near-dup detection against keyed bucket state (cross-batch)") {
     val spark0 = spark
     import spark0.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-neardup-in").toString

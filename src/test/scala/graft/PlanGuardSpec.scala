@@ -226,4 +226,28 @@ class PlanGuardSpec extends SparkTestBase {
       graft.io.Convert.sparkSchema(spec)).select(graft.compile.SpecCompiler.compile(spec).violations))
     assert(hofs(ingest) === hofs(planOnly))
   }
+
+  test("piqi-any ingest parses each payload once: one JsonToStructs per registered type") {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import graft.spec._
+    val spark0 = spark
+    import spark0.implicits._
+    // four root fields read by the compiled plan; Catalyst splits
+    // `from_json(payload).field` into one single-field parse per field read
+    // when the record is consumed inside the dispatch projection
+    val registry = Map(
+      "point" -> Spec("m", Seq(RecordDef("point", Seq(PField("x", PInt(0, 100), Required),
+        PField("y", PInt(0, 100), Required), PField("z", PInt.int64, Optional()),
+        PField("label", PString, Optional())))), "point"),
+      "tag" -> Spec("m", Seq(RecordDef("tag", Seq(PField("name", PString, Required),
+        PField("n", PInt.int32, Optional())))), "tag"))
+    val df = Seq(("1", "point", """{"x":5,"y":2}"""), ("2", "tag", """{"name":"a"}"""))
+      .toDF("id", "any_type", "payload").repartition(2)
+    val out = graft.io.Convert.validateAny(df, "payload", "any_type", registry)
+    val parses = out.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case j: JsonToStructs => j })
+    assert(parses.size === registry.size, s"one parse per registered type, got:\n${parses.mkString("\n")}")
+    assert(parses.map(_.canonicalized).distinct.size === registry.size)
+    assert(out.select("id", "any_valid").as[(String, Boolean)].collect().toMap === Map("1" -> true, "2" -> true))
+  }
 }

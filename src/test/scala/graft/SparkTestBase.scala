@@ -51,12 +51,17 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Runs `body` with the named loggers off, for a test whose expected
     * failure Spark logs as an ERROR; restores their configuration after. */
-  def withLoggersOff[T](loggers: String*)(body: => T): T = {
+  def withLoggersOff[T](loggers: String*)(body: => T): T = withLoggersAt(Level.OFF, loggers: _*)(body)
+
+  /** Runs `body` with the named loggers at `level` — ERROR quiets the WARNs
+    * an expected event logs while an ERROR still shows; restores their
+    * configuration after. */
+  def withLoggersAt[T](level: Level, loggers: String*)(body: => T): T = {
     val context = LoggerContext.getContext(false)
     val config = context.getConfiguration
     val saved = loggers.map(n => n -> Option(config.getLoggers.get(n)).map(_.getLevel))
     try {
-      loggers.foreach(Configurator.setLevel(_, Level.OFF))
+      loggers.foreach(Configurator.setLevel(_, level))
       body
     } finally {
       saved.foreach {
