@@ -20,19 +20,14 @@ import graft.exec.{Drift, QuantileSketch, ValidationRunner}
  * "no headers or footers... append", `doc/piq.md:697-700`).
  *
  * Layout under `root/`:
- *   <output>/bucket=N/...   one directory per named output (violations, or
- *                           a [[runResumable]] caller's own), parquet
+ *   violations/bucket=N/... the violation rows of each bucket, parquet
  *   lineage/commit-<min>-<max>-<uuid8>
- *                           one text marker per COMMITTED batch, in one of
- *                           two forms:
- *                           - id-only ([[runResumable]]): the batch's
- *                             bucket ids, one per line;
- *                           - counted ([[ValidationCheckpoint.run]]): a
- *                             first line `buckets=<id>,<id>,…`, then one
- *                             line per bucket of the batch:
- *                             `bucket=<id> n_docs=… n_valid=… n_invalid=…
- *                             n_violations=… sketch_<name>=<base64> …`
- *                             (n_docs=0 and no sketch for an empty bucket)
+ *                           one text marker per COMMITTED batch: a first
+ *                           line `buckets=<id>,<id>,…`, then one line per
+ *                           bucket of the batch: `bucket=<id> n_docs=…
+ *                           n_valid=… n_invalid=… n_violations=…
+ *                           sketch_<name>=<base64> …` (n_docs=0 and no
+ *                           sketch for an empty bucket)
  *   .lineage_staging/       markers being written; never read
  *   spec.json               the compiled spec that wrote the outputs
  *
@@ -45,7 +40,7 @@ import graft.exec.{Drift, QuantileSketch, ValidationRunner}
  * `lineage/` with one atomic same-filesystem rename — a crash mid-write
  * leaves only staging garbage that no reader lists (swept by the next
  * commit), never a half-written marker that would poison
- * [[committedBuckets]] on resume. A counted marker carries the batch's
+ * [[committedBuckets]] on resume. The marker carries the batch's
  * summary counts and KLL sketches, so they commit in the same rename as
  * the lineage. Commits, [[committedBuckets]] and [[summary]] run no Spark
  * job. This stands in for an Iceberg snapshot+lineage transaction
@@ -58,32 +53,27 @@ final class CheckpointManager(root: String) extends Serializable {
   private def lineagePath = new Path(s"$root/lineage")
   private def stagingPath = new Path(s"$root/.lineage_staging")
   private def specPath = new Path(s"$root/spec.json")
-  private def outPath(name: String) = s"$root/$name"
+  private def violationsPath = s"$root/violations"
   private def fs(spark: SparkSession): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Buckets named by the published lineage markers; of a counted marker
-    * only the first line is read. Only a missing `lineage/` means "none"; a
-    * marker that does not parse (e.g. a parquet marker from an older layout)
-    * or cannot be read throws, naming the file — treating it as "no lineage"
-    * would silently reprocess every bucket. */
+  /** Buckets named by the published lineage markers; of each marker only
+    * the first line is read. Only a missing `lineage/` means "none"; a
+    * marker that does not parse (an id-only or parquet marker of an older
+    * layout) or cannot be read throws, naming the file — treating it as "no
+    * lineage" would silently reprocess every bucket. */
   def committedBuckets(spark: SparkSession): Set[Int] = {
     val fs = this.fs(spark)
     markers(fs).flatMap(readMarker(fs, _, idsOnly = true)._1).toSet
   }
 
-  /** Every committed bucket's record, from the counted markers. Throws,
-    * naming the marker and the bucket, when a committed bucket has no
-    * counts — an id-only marker of [[runResumable]], or a root of the older
-    * layout that kept them in `summary` and `sketches` tables — or is
-    * committed twice: a partial answer would under-count silently. */
+  /** Every committed bucket's record, from the markers. Throws, naming the
+    * markers, when a marker's bucket lines differ from its buckets or a
+    * bucket is committed twice: a partial answer would miscount silently. */
   private[checkpoint] def bucketRecords(spark: SparkSession): Seq[BucketRecord] = {
     val fs = this.fs(spark)
     val records = markers(fs).flatMap { p =>
       val (ids, lines) = readMarker(fs, p, idsOnly = false)
-      if (lines.isEmpty)
-        throw new java.io.IOException(s"lineage marker $p commits bucket ${ids.head} without counts: " +
-          "it was written by runResumable or by the older layout with summary and sketches tables")
       val records = lines.map(decode(p, _))
       if (records.map(_.bucket) != ids)
         throw new java.io.IOException(s"lineage marker $p: bucket lines ${records.map(_.bucket)} " +
@@ -97,45 +87,13 @@ final class CheckpointManager(root: String) extends Serializable {
     records
   }
 
-  /**
-   * Run `outputs` over every not-yet-committed bucket of `df` and commit
-   * each named result partitioned by bucket.
-   *
-   * @param df        input with an integral `bucketCol` (e.g.
-   *                  `pmod(xxhash64(doc_id), nBuckets)`)
-   * @param outputs   bucket-batch DataFrame → named outputs; each must
-   *                  retain bucketCol
-   * @param batches   buckets are committed in groups of this many (fewer
-   *                  jobs at scale; 1 = finest-grained resume)
-   */
-  def runResumable(df: DataFrame, bucketCol: String, allBuckets: Seq[Int],
-      outputs: DataFrame => Map[String, DataFrame], batches: Int = 1): Unit =
-    forEachBatch(df, bucketCol, allBuckets, batches) { (batch, _) =>
-      outputs(batch).foreach { case (name, out) => write(name, out, bucketCol) }
-      Nil
-    }
-
-  /** The batch loop: `commit` writes one group's outputs and returns the
-    * records of its buckets (none for an id-only marker), then the group's
-    * lineage marker is published — LAST, so a crash before it re-runs the
-    * group idempotently. */
-  private[checkpoint] def forEachBatch(df: DataFrame, bucketCol: String, allBuckets: Seq[Int],
-      batches: Int)(commit: (DataFrame, Seq[Int]) => Seq[BucketRecord]): Unit = {
-    val spark = df.sparkSession
-    val done = committedBuckets(spark)
-    allBuckets.filterNot(done).grouped(math.max(1, batches)).foreach { group =>
-      val records = commit(df.where(col(bucketCol).isin(group.map(Integer.valueOf): _*)), group)
-      commitLineage(spark, group, records)
-    }
-  }
-
-  /** Overwrite the buckets present in `out` under output `name`, leaving
+  /** Overwrite the buckets present in `out` under `violations`, leaving
     * every other bucket in place. */
-  private[checkpoint] def write(name: String, out: DataFrame, bucketCol: String): Unit =
+  private[checkpoint] def writeViolations(out: DataFrame, bucketCol: String): Unit =
     // per-writer option, never the session conf: other jobs share it
     out.withColumn("bucket", col(bucketCol).cast("int"))
       .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(outPath(name))
+      .partitionBy("bucket").parquet(violationsPath)
 
   /**
    * Staged lineage commit: write the group's marker as one text file in
@@ -145,11 +103,11 @@ final class CheckpointManager(root: String) extends Serializable {
    * commit) or the complete one — never a torn marker. One marker per
    * committed batch keeps this O(#batches) small files.
    */
-  private def commitLineage(spark: SparkSession, group: Seq[Int], records: Seq[BucketRecord]): Unit = {
+  private[checkpoint] def commitLineage(spark: SparkSession, group: Seq[Int],
+      records: Seq[BucketRecord]): Unit = {
     val fs = this.fs(spark)
     val staged = new Path(stagingPath, java.util.UUID.randomUUID().toString)
-    val lines =
-      if (records.isEmpty) group.map(_.toString) else (Header + group.mkString(",")) +: records.map(encode)
+    val lines = (Header + group.mkString(",")) +: records.map(encode)
     writeText(fs, staged, lines.mkString("", "\n", "\n"))
     val dst = new Path(lineagePath,
       s"commit-${group.min}-${group.max}-${java.util.UUID.randomUUID().toString.take(8)}")
@@ -160,8 +118,7 @@ final class CheckpointManager(root: String) extends Serializable {
     fs.delete(stagingPath, true): Unit
   }
 
-  def read(spark: SparkSession, name: String): DataFrame = spark.read.parquet(outPath(name))
-  def violations(spark: SparkSession): DataFrame = read(spark, "violations")
+  def violations(spark: SparkSession): DataFrame = spark.read.parquet(violationsPath)
 
   /** Per-bucket counts (`bucket`, `n_docs`, `n_valid`, `n_invalid`,
     * `n_violations`) of the buckets [[ValidationCheckpoint.run]] committed,
@@ -190,25 +147,21 @@ final class CheckpointManager(root: String) extends Serializable {
       st.getPath
     }
 
-  /** A marker's bucket ids and, unless `idsOnly`, its bucket lines (none in
-    * an id-only marker). With `idsOnly`, a counted marker is read up to the
-    * end of its first line only. */
+  /** A marker's bucket ids and, unless `idsOnly`, its bucket lines. With
+    * `idsOnly`, the marker is read up to the end of its first line only. */
   private def readMarker(fs: FileSystem, p: Path, idsOnly: Boolean): (Seq[Int], Seq[String]) = {
     val in = fs.open(p)
     try {
       val first = readLine(in)
-      def rest = new String(in.readAllBytes(), UTF_8).linesIterator.toSeq
-      val (ids, lines) =
-        if (first.startsWith(Header)) (first.stripPrefix(Header).split(',').toSeq, if (idsOnly) Nil else rest)
-        else (first +: rest, Nil)
-      val parsed = ids.map(_.trim.toIntOption)
-      if (parsed.contains(None)) throw unreadable(p)
-      (parsed.flatten, lines)
+      if (!first.startsWith(Header)) throw unreadable(p)
+      val ids = first.stripPrefix(Header).split(',').toSeq.map(_.trim.toIntOption)
+      if (ids.contains(None)) throw unreadable(p)
+      (ids.flatten, if (idsOnly) Nil else new String(in.readAllBytes(), UTF_8).linesIterator.toSeq)
     } finally in.close()
   }
 
-  private def unreadable(p: Path) = new java.io.IOException(s"unreadable lineage marker $p: expected " +
-    "one bucket id per line or a buckets= line (a root written with parquet lineage markers cannot be resumed)")
+  private def unreadable(p: Path) = new java.io.IOException(s"unreadable lineage marker $p: expected a " +
+    "buckets= first line (a root written with id-only or parquet lineage markers cannot be resumed)")
 
   private def readLine(in: java.io.InputStream): String = {
     val line = new java.io.ByteArrayOutputStream()
@@ -232,7 +185,7 @@ object CheckpointManager {
   /** The summary counts of one bucket, in marker and [[CheckpointManager.summary]] order. */
   private[checkpoint] val Counts: Seq[String] = Seq("n_docs", "n_valid", "n_invalid", "n_violations")
 
-  /** One bucket line of a counted marker: the bucket's [[Counts]] and its
+  /** One bucket line of a marker: the bucket's [[Counts]] and its
     * KLL sketch bytes by sketch name; `marker` is the file it was read from. */
   private[checkpoint] final case class BucketRecord(bucket: Int, counts: Map[String, Long],
       sketches: Map[String, Array[Byte]], marker: String = "")
@@ -282,10 +235,10 @@ object CheckpointManager {
  * bucket, so its size grows with buckets per batch.
  *
  * [[CheckpointManager.summary]], [[bucketSketches]] and [[mergedSketch]]
- * read the markers and run no job. They throw, naming the marker and the
- * bucket, when a committed bucket has no counts: a root that mixes in
- * [[CheckpointManager.runResumable]] markers, or one of the older layout
- * with `summary` and `sketches` tables. A sketch name must be a word
+ * read the markers and run no job. They throw, naming the markers, when a
+ * marker's bucket lines differ from its buckets or a bucket is committed
+ * twice; a root of an older layout, with id-only markers, fails on its
+ * first marker read. A sketch name must be a word
  * (`[A-Za-z0-9_]+`) that no other sketch column of the run uses: the
  * marker format carries no other; [[run]] checks this before any job.
  */
@@ -313,7 +266,9 @@ object ValidationCheckpoint {
       case Some(_) => ()
       case None => mgr.recordSpec(spark, specJson)
     }
-    mgr.forEachBatch(docs, bucketCol, allBuckets, batches) { (batch, group) =>
+    val done = mgr.committedBuckets(spark)
+    allBuckets.filterNot(done).grouped(math.max(1, batches)).foreach { group =>
+      val batch = docs.where(col(bucketCol).isin(group.map(Integer.valueOf): _*))
       val name = s"checkpoint-${java.util.UUID.randomUUID()}"
       val metrics = group.flatMap { k =>
         val in = col(bucketCol) === k
@@ -327,11 +282,11 @@ object ValidationCheckpoint {
         // bucketCol rides through the explode — NEVER re-join on docKey here:
         // duplicate doc_ids (a supported, validated scenario) would multiply
         // each violation row by the duplicate count
-        mgr.write("violations", ValidationRunner.violationRows(
+        mgr.writeViolations(ValidationRunner.violationRows(
           validated.select(col(docKey), col(bucketCol), col("violations")),
           docKey, passthroughCols = Seq(bucketCol)), bucketCol)
       }
-      group.map { k =>
+      val records = group.map { k =>
         // an empty bucket gets no summary row and no sketch, as a groupBy
         // would give it none (its n_violations sum is null)
         if (m(s"n_docs_$k") == 0L) BucketRecord(k, Counts.map(_ -> 0L).toMap, Map.empty)
@@ -343,6 +298,9 @@ object ValidationCheckpoint {
             .asInstanceOf[Array[Byte]]).toMap)
         }
       }
+      // the marker is published LAST: a crash before it re-runs the batch,
+      // whose violations overwrite their own buckets only
+      mgr.commitLineage(spark, group, records)
     }
   }
 
@@ -364,8 +322,8 @@ object ValidationCheckpoint {
   }
 
   /** The committed sketch `name` of each non-empty bucket, read from the
-    * markers (no job). Throws, naming the marker and the bucket, for a
-    * committed bucket without counts or without that sketch. */
+    * markers (no job). Throws as [[CheckpointManager.summary]] does, and,
+    * naming the marker and the bucket, for a bucket without that sketch. */
   def bucketSketches(spark: SparkSession, mgr: CheckpointManager, name: String): Map[Int, QuantileSketch] =
     mgr.bucketRecords(spark).filter(_.counts("n_docs") > 0).map { r =>
       r.bucket -> QuantileSketch.fromBytes(r.sketches.getOrElse(name, throw new java.io.IOException(

@@ -243,8 +243,11 @@ object ValidationRunner {
   def refCheck(df: DataFrame, refCol: String, catalog: DataFrame, catKey: String,
       broadcastMaxRows: Long = 1000000L, catalogRowHint: Option[Long] = None): DataFrame = {
     val catRows = catalogRowHint.getOrElse(catalog.count())
-    val cat = catalog.select(col(catKey).as(refCol)).distinct()
-    val rhs = if (catRows <= broadcastMaxRows) broadcast(cat) else cat
+    val cat = catalog.select(col(catKey).as(refCol))
+    // a repeated key does not change a left-anti join's output: the broadcast
+    // side is built as is, while the shuffled side is made distinct first,
+    // which may shrink its shuffle
+    val rhs = if (catRows <= broadcastMaxRows) broadcast(cat) else cat.distinct()
     df.where(col(refCol).isNotNull).join(rhs, Seq(refCol), "left_anti")
   }
 }

@@ -103,14 +103,6 @@ object Text {
     aggregate(tokens(text), lit(1469598103934665603L),
       (acc, t) => xxhash64(acc, t)) // hash-chain: order-sensitive, overflow-free (ANSI-safe)
 
-  /** Word n-gram shingles (n consecutive tokens joined by one space). */
-  def shingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(transform(sequence(lit(0), size(toks) - n),
-        i => concat_ws(" ", slice(toks, i + 1, lit(n)))))
-  }
-
   /** Character n-gram shingles. */
   def charShingles(text: Column, n: Int): Column =
     when(length(text) < n, array(text))

@@ -275,12 +275,4 @@ object VectorExpressions {
   /** Codegen'd one-pass L2 normalization over `array<float|double>`. */
   def normalizeNative(a: Column): Column =
     GraftBridge.column(VectorNormalize(GraftBridge.expression(a)))
-
-  /** Codegen'd cosine: dot / (|a| |b|), zero-norm → 0.0. */
-  def cosineNative(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions._
-    val d = dotNative(a, b)
-    val n = sqrt(dotNative(a, a)) * sqrt(dotNative(b, b))
-    when(n === 0, lit(0.0)).otherwise(d / n)
-  }
 }

@@ -14,7 +14,8 @@ import graft.functions.{CosinePairs, HammingPairs, MinhashPairs, Text, VerifiedP
 
 /**
  * Deduplication operators for training-data pipelines: exact, MinHash+LSH,
- * SimHash, n-gram Jaccard, embedding-cosine near-dup.
+ * SimHash, embedding-cosine near-dup, and the word-set Jaccard that
+ * verifies candidate pairs.
  *
  * Scale design notes (the part that matters at 100 TB):
  *  - exact dedup is a single hash groupBy (partial-agg absorbs dup mass
@@ -283,34 +284,6 @@ object Dedup {
   }
 
   /**
-   * n-gram Jaccard near-dups over an explicit candidate set (self-join of a
-   * bounded id range or pre-bucketed candidates). For unbounded inputs use
-   * [[minhashNearDups]] — this exact variant is the verifier / small-N path,
-   * and it ENFORCES that contract: the input is counted up front and the
-   * call throws (before any cross join is scheduled) when it exceeds
-   * `maxRows`. The count is one cheap job on an input that is small by
-   * contract; an unguarded O(n²) cartesian reaching a 10^9-row frame by
-   * accident is the scale failure this forbids.
-   */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double, maxRows: Long = 100000L): DataFrame = {
-    require(maxRows > 0, "maxRows must be positive")
-    val nRows = df.count()
-    require(nRows <= maxRows,
-      s"ngramJaccardPairs is the exact small-N verifier: input has $nRows rows > maxRows=$maxRows " +
-        s"(~${nRows * nRows / 2} candidate pairs); use minhashNearDups for unbounded inputs " +
-        "or raise maxRows deliberately")
-    val sh = df.select(col(idCol).as("id"),
-      array_distinct(Text.shingles(col(textCol), n)).as("sh"))
-    val a = sh.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = sh.select(col("id").as("id_b"), col("sh").as("sh_b"))
-    a.crossJoin(b).where(col("id_a") < col("id_b"))
-      .withColumn("jaccard", jaccardWords(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
-
-  /**
    * Embedding-cosine near-dup pairs: bucket by sign-bit LSH (high-cosine
    * pairs collide with high probability), exact cosine within buckets.
    * `lshBits` trades recall vs bucket size; multi-probe via several seeds.
@@ -469,8 +442,7 @@ object Dedup {
   }
 
   /** Exact brute-force embedding near-dups (oracle / small-N verification
-    * path). Like [[ngramJaccardPairs]], the small-N contract is ENFORCED:
-    * the input is counted up front and the call throws BEFORE any cross
+    * path). The small-N contract is ENFORCED: the input is counted up front and the call throws BEFORE any cross
     * join is scheduled when it exceeds `maxRows` — an unguarded O(n²)
     * cartesian reaching an unbounded frame is the scale failure this
     * forbids. Use [[embeddingNearDups]] for unbounded inputs. */

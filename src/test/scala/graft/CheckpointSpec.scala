@@ -4,7 +4,6 @@ import java.net.URI
 import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.checkpoint.{CheckpointManager, ValidationCheckpoint}
@@ -175,27 +174,25 @@ class CheckpointSpec extends SparkTestBase {
   }
 
   test("a lineage marker that does not parse fails resume, naming the file") {
-    val root = tempRoot("graft-ckpt-oldmarker")
     val docs = withBuckets(Docs.generate(spark, 40, 1), 2)
-    val mgr = new CheckpointManager(root)
-    run(docs, mgr, Seq(0), batches = 1)
-    // a parquet marker, as roots written with parquet lineage markers hold
-    val old = java.nio.file.Paths.get(root, "lineage", "commit-1-1-0000abcd.parquet")
-    java.nio.file.Files.write(old, Array[Byte](80, 65, 82, 49, 1, 2, 3))
-    val e = intercept[java.io.IOException](run(docs, mgr, Seq(0, 1), batches = 1))
-    assert(e.getMessage.contains("commit-1-1-0000abcd.parquet"))
+    // markers of older layouts: a parquet file, and the id-only text form
+    // (one bucket id per line)
+    val oldMarkers = Seq("commit-1-1-0000abcd.parquet" -> Array[Byte](80, 65, 82, 49, 1, 2, 3),
+      "commit-1-1-0000abcd" -> "1\n".getBytes)
+    for ((name, bytes) <- oldMarkers) withClue(s"[$name] ") {
+      val root = tempRoot("graft-ckpt-oldmarker")
+      val mgr = new CheckpointManager(root)
+      run(docs, mgr, Seq(0), batches = 1)
+      java.nio.file.Files.write(java.nio.file.Paths.get(root, "lineage", name), bytes)
+      for (read <- Seq[() => Any](() => mgr.committedBuckets(spark), () => run(docs, mgr, Seq(0, 1), batches = 1)))
+        assert(intercept[java.io.IOException](read()).getMessage.contains(name))
+    }
   }
 
   test("a batch commits in one job, into one marker; reading the committed state runs none") {
     val docs = withBuckets(Docs.generate(spark, 400, numPartitions = 2, corruptEvery = 20), 4)
     val root = tempRoot("graft-ckpt-jobs")
     val mgr = new CheckpointManager(root)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val countJobs = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-    }
-    def jobsOf[T](body: => T): Int = { jobs.set(0); listening(countJobs)(body); jobs.get }
-
     assert(jobsOf(run(docs, mgr, 0 to 4, batches = 5)) === 1)
     assert(jobsOf(mgr.committedBuckets(spark)) === 0)
     assert(jobsOf(mgr.summary(spark).collect()) === 0)
@@ -225,11 +222,12 @@ class CheckpointSpec extends SparkTestBase {
     // a sketch name the marker cannot carry fails before any job or file
     val bad = new CheckpointManager(tempRoot("graft-ckpt-badname"))
     for (name <- Seq("off sets", "a=b", "")) withClue(s"[$name] ") {
-      val e = intercept[IllegalArgumentException](jobsOf(ValidationCheckpoint.run(docs, plan, bad, "bucket",
-        0 to 3, "doc_id", Seq(offsets.copy(name = name)))))
-      assert(e.getMessage.contains("sketch name"))
+      assert(jobsOf {
+        val e = intercept[IllegalArgumentException](ValidationCheckpoint.run(docs, plan, bad, "bucket",
+          0 to 3, "doc_id", Seq(offsets.copy(name = name))))
+        assert(e.getMessage.contains("sketch name"))
+      } === 0)
     }
-    assert(jobs.get === 0)
     intercept[IllegalArgumentException](ValidationCheckpoint.run(docs, plan, bad, "bucket", 0 to 3, "doc_id",
       Seq(offsets, offsets)))
     assert(bad.recordedSpec(spark).isEmpty && bad.committedBuckets(spark).isEmpty)

@@ -65,15 +65,6 @@ class DedupSpec extends SparkTestBase {
     }
   }
 
-  test("ngram jaccard: exact dups at 1.0, near-dups high, unrelated low") {
-    val df = corpus(20)
-    val pairs = Dedup.ngramJaccardPairs(df, "id", "text", n = 3, threshold = 0.35)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    for (i <- 0 until 3) assert(pairs.get((i.toLong, 2000L + i)).contains(1.0))
-    val nd = pairs.get((0L, 1000L))
-    assert(nd.exists(_ > 0.5), s"near-dup jaccard: $nd")
-  }
-
   test("connected components: transitive clusters get min-id labels; dedup keeps representatives") {
     val spark0 = spark
     import spark0.implicits._
@@ -235,17 +226,6 @@ class DedupSpec extends SparkTestBase {
     assert(e.getMessage.contains("embeddingNearDups"))
     // raising the bound deliberately re-admits the same input
     assert(Dedup.embeddingNearDupsExact(df, "id", "vec", -1.0, maxRows = 50).count() > 0)
-  }
-
-  test("ngram jaccard: over-budget input throws before any cross join runs") {
-    val df = corpus(30)
-    val e = intercept[IllegalArgumentException] {
-      Dedup.ngramJaccardPairs(df, "id", "text", n = 3, threshold = 0.35, maxRows = 10)
-    }
-    assert(e.getMessage.contains("minhashNearDups"))
-    // raising the bound deliberately re-admits the same input
-    assert(Dedup.ngramJaccardPairs(df, "id", "text", n = 3, threshold = 0.35,
-      maxRows = 50).count() > 0)
   }
 
   test("embedding near-dups: LSH path finds what exact path finds (high threshold)") {

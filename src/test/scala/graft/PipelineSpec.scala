@@ -10,70 +10,61 @@ import graft.ops.Multimodal
 class PipelineSpec extends SparkTestBase {
 
   test("checkpoint: kill between buckets resumes without recomputation or dups") {
+    import graft.checkpoint.ValidationCheckpoint
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val mgr = new CheckpointManager(root)
     val plan = SpecCompiler.compile(Docs.docSpec)
     val docs = Docs.generate(spark, 600, numPartitions = 4, corruptEvery = 50)
       .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
+    def run(m: CheckpointManager) = ValidationCheckpoint.run(docs, plan, m, "bucket", Seq(0, 1, 2, 3), "doc_id")
 
-    def process(df: org.apache.spark.sql.DataFrame) = {
-      val v = ValidationRunner.validate(df, plan)
-      Map(
-        "violations" -> ValidationRunner.violationRows(v.withColumn("bucket", col("bucket")), "doc_id")
-          .join(v.select("doc_id", "bucket"), "doc_id"),
-        "summary" -> ValidationRunner.summary(v, Seq("bucket")))
-    }
-
-    // first run "crashes" after 2 of 4 buckets
-    var processed = 0
-    try {
-      mgr.runResumable(docs, "bucket", Seq(0, 1, 2, 3), df => {
-        processed += 1
-        if (processed > 2) throw new RuntimeException("simulated crash")
-        process(df)
-      })
-    } catch { case e: RuntimeException => assert(e.getMessage === "simulated crash") }
+    // first run is killed at the third bucket's marker rename, after its
+    // violations landed
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFs].getName)
+    FaultFs.arm("rename", 3)(_.contains("/.lineage_staging/"))
+    val e = try intercept[Exception](run(new CheckpointManager("faulty://" + root))) finally FaultFs.disarm()
+    assert(e.isInstanceOf[FaultFs.Fault], s"run failed for another reason: $e")
     assert(mgr.committedBuckets(spark) === Set(0, 1))
 
-    // resume: only remaining buckets are processed
-    var resumed = 0
-    mgr.runResumable(docs, "bucket", Seq(0, 1, 2, 3), df => { resumed += 1; process(df) })
-    assert(resumed === 2, s"resume processed $resumed batches, expected 2")
+    // resume: one job per uncommitted batch, none for the committed ones
+    assert(jobsOf(run(mgr)) === 2)
     assert(mgr.committedBuckets(spark) === Set(0, 1, 2, 3))
 
-    // totals equal a non-checkpointed run (no loss, no double count)
-    val direct = ValidationRunner.summary(
-      ValidationRunner.validate(docs, plan), Seq("bucket"))
-      .agg(sum("n_docs"), sum("n_invalid")).collect()(0)
-    val ckpt = mgr.read(spark, "summary").agg(sum("n_docs"), sum("n_invalid")).collect()(0)
-    assert(direct.getLong(0) === ckpt.getLong(0))
-    assert(direct.getLong(1) === ckpt.getLong(1))
+    // outputs equal a non-checkpointed run (no loss, no double count)
+    val validated = ValidationRunner.validate(docs, plan)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val summaryCols = Seq("bucket", "n_docs", "n_valid", "n_invalid", "n_violations")
+    assert(rows(mgr.summary(spark), summaryCols: _*) ===
+      rows(ValidationRunner.summary(validated, Seq("bucket")), summaryCols: _*))
+    val violationCols = Seq("doc_id", "bucket", "rule", "path", "detail")
+    assert(rows(mgr.violations(spark), violationCols: _*) ===
+      rows(ValidationRunner.violationRows(validated, "doc_id", Seq("bucket")), violationCols: _*))
 
     // idempotence: a third run does nothing
-    var third = 0
-    mgr.runResumable(docs, "bucket", Seq(0, 1, 2, 3), df => { third += 1; process(df) })
-    assert(third === 0)
+    assert(jobsOf(run(mgr)) === 0)
 
-    // STAGING-COMMIT atomicity (r4 ask): a crash mid-lineage-write leaves
-    // torn bytes only in .lineage_staging — inject exactly that garbage and
-    // prove no reader ever sees it
+    // STAGING-COMMIT atomicity: a crash mid-lineage-write leaves torn bytes
+    // only in .lineage_staging — inject exactly that garbage and prove no
+    // reader ever sees it
     val stag = new java.io.File(s"$root/.lineage_staging/crashed-batch")
     assert(stag.mkdirs())
-    val torn = new java.io.FileOutputStream(s"$stag/part-00000-torn.snappy.parquet")
-    torn.write(Array[Byte](80, 65, 82, 49, 1, 2, 3)) // "PAR1" + truncated garbage
+    val torn = new java.io.FileOutputStream(s"$stag/part-00000-torn")
+    torn.write("buckets=0,1\nbucket=0 n_docs=".getBytes) // a marker cut mid-line
     torn.close()
     assert(mgr.committedBuckets(spark) === Set(0, 1, 2, 3)) // unpoisoned
-    var fourth = 0
-    mgr.runResumable(docs, "bucket", Seq(0, 1, 2, 3), df => { fourth += 1; process(df) })
-    assert(fourth === 0) // resume unaffected by the torn staging file
+    assert(jobsOf(run(mgr)) === 0) // resume unaffected by the torn staging file
     // every entry in lineage/ is a published commit marker (or its local-FS
     // checksum sidecar), and the markers name exactly the committed buckets
     val (markers, sidecars) = new java.io.File(s"$root/lineage").listFiles().toSeq
       .partition(!_.getName.startsWith("."))
     assert(markers.nonEmpty && markers.forall(_.getName.startsWith("commit-")))
     assert(sidecars.map(_.getName).toSet.subsetOf(markers.map(f => s".${f.getName}.crc").toSet))
-    import scala.jdk.CollectionConverters._
-    val ids = markers.flatMap(f => java.nio.file.Files.readAllLines(f.toPath).asScala.map(_.trim.toInt))
+    val ids = markers.flatMap { f =>
+      val first = java.nio.file.Files.readAllLines(f.toPath).get(0)
+      assert(first.startsWith("buckets="), s"${f.getName}: $first")
+      first.stripPrefix("buckets=").split(',').map(_.toInt)
+    }
     assert(ids.sorted === Seq(0, 1, 2, 3))
   }
 
@@ -112,30 +103,6 @@ class PipelineSpec extends SparkTestBase {
     assert(graft.exec.Drift.ksStatistic(merged, oneShot) < 0.05)
   }
 
-  test("checkpoint: a root mixing runResumable and ValidationCheckpoint markers fails summary and sketch reads") {
-    import graft.checkpoint.ValidationCheckpoint
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-mixed").toString
-    val mgr = new CheckpointManager(root)
-    val plan = SpecCompiler.compile(Docs.docSpec)
-    val docs = Docs.generate(spark, 200, numPartitions = 2)
-      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
-    val sketchCols = Seq(ValidationCheckpoint.SketchCol("nspans", size(col("spans"))))
-    // bucket 1 through runResumable (an id-only marker), the rest through run
-    mgr.runResumable(docs, "bucket", Seq(1), df => Map("summary" -> ValidationRunner.summary(
-      ValidationRunner.validate(df, plan), Seq("bucket"))))
-    ValidationCheckpoint.run(docs, plan, mgr, "bucket", Seq(0, 1, 2, 3), "doc_id", sketchCols)
-    assert(mgr.committedBuckets(spark) === Set(0, 1, 2, 3))
-    // a partial answer would count 3 of 4 buckets: both reads throw instead,
-    // naming the id-only marker and its bucket
-    val idOnly = new java.io.File(s"$root/lineage").listFiles().map(_.getName).filter(_.startsWith("commit-1-1-"))
-    assert(idOnly.length === 1)
-    for (read <- Seq[() => Any](() => mgr.summary(spark), () => ValidationCheckpoint.mergedSketch(spark, mgr, "nspans"),
-        () => ValidationCheckpoint.bucketSketches(spark, mgr, "nspans"))) {
-      val e = intercept[java.io.IOException](read())
-      assert(e.getMessage.contains(idOnly.head) && e.getMessage.contains("bucket 1 without counts"))
-    }
-  }
-
   test("checkpoint: duplicate doc_ids do not multiply committed violation rows") {
     import graft.checkpoint.ValidationCheckpoint
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt-dup").toString
@@ -154,45 +121,27 @@ class PipelineSpec extends SparkTestBase {
     assert(committed === direct, s"committed=$committed direct=$direct (re-join multiplication?)")
   }
 
-  test("checkpoint: runResumable restores partitionOverwriteMode") {
+  test("checkpoint: session conf untouched; half run + resume keeps every bucket") {
+    import graft.checkpoint.ValidationCheckpoint
     val root = java.nio.file.Files.createTempDirectory("graft-ckpt-conf").toString
     val mgr = new CheckpointManager(root)
+    val plan = SpecCompiler.compile(Docs.docSpec)
     val key = "spark.sql.sources.partitionOverwriteMode"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "static")
-    val docs = Docs.generate(spark, 20, 1)
-      .withColumn("bucket", lit(0))
-    mgr.runResumable(docs, "bucket", Seq(0),
-      df => Map("echo" -> df.select("doc_id", "bucket")))
-    assert(spark.conf.get(key) === "static")
-    before match { case Some(v) => spark.conf.set(key, v); case None => spark.conf.unset(key) }
-  }
-
-  test("checkpoint: session conf untouched; half run + resume keeps every bucket") {
-    val root = java.nio.file.Files.createTempDirectory("graft-ckpt-conf2").toString
-    val mgr = new CheckpointManager(root)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val before = spark.conf.getOption(key)
-    spark.conf.set(key, "static")
-    try {
-      val docs = Docs.generate(spark, 200, 2)
-        .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
-      val seen = scala.collection.mutable.ArrayBuffer[Option[String]]()
-      def process(df: org.apache.spark.sql.DataFrame) = {
-        seen += spark.conf.getOption(key)
-        Map("counts" -> df.groupBy("bucket").count())
-      }
-      mgr.runResumable(docs, "bucket", Seq(0, 1), process) // half run
-      mgr.runResumable(docs, "bucket", Seq(0, 1, 2, 3), process) // resume
-      assert(seen.size === 4 && seen.forall(_.contains("static")), s"conf seen mid-run: $seen")
-      // a static overwrite by the resume would have wiped buckets 0 and 1
-      val out = mgr.read(spark, "counts").collect()
-      assert(out.map(_.getAs[Int]("bucket")).toSet === Set(0, 1, 2, 3))
-      assert(out.map(_.getAs[Long]("count")).sum === 200L)
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    val docs = Docs.generate(spark, 200, 2, corruptEvery = 10)
+      .withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
+    withConf(key -> "static") {
+      ValidationCheckpoint.run(docs, plan, mgr, "bucket", Seq(0, 1), "doc_id") // half run
+      assert(spark.conf.get(key) === "static")
+      ValidationCheckpoint.run(docs, plan, mgr, "bucket", Seq(0, 1, 2, 3), "doc_id") // resume
+      assert(spark.conf.get(key) === "static")
     }
+    // a static overwrite by the resume would have wiped buckets 0 and 1
+    val committed = mgr.violations(spark)
+    assert(committed.select("bucket").distinct().collect().map(_.getInt(0)).toSet === Set(0, 1, 2, 3))
+    val direct = ValidationRunner.violationRows(ValidationRunner.validate(docs, plan), "doc_id", Seq("bucket"))
+    val cols = Seq("doc_id", "bucket", "rule", "path", "detail").map(col)
+    assert(committed.select(cols: _*).exceptAll(direct.select(cols: _*)).isEmpty &&
+      direct.select(cols: _*).exceptAll(committed.select(cols: _*)).isEmpty)
   }
 
   test("checkpoint: resuming with a DIFFERENT spec fails fast (spec fingerprint)") {

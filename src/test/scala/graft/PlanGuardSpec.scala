@@ -65,6 +65,18 @@ class PlanGuardSpec extends SparkTestBase {
         s"huge catalog must not broadcast (driver OOM at scale):\n$big")
       assert(big.contains("SortMergeJoin") || big.contains("ShuffledHashJoin"),
         s"huge catalog should shuffle-join:\n$big")
+      assert(big.contains("HashAggregate"), s"a shuffled catalog is made distinct first:\n$big")
+      // repeated catalog keys: the broadcast side is built as is, with no
+      // aggregate under it, and the output equals the distinct catalog's
+      val half = docs.select(col("doc_id").as("k")).where(col("k") < "doc-000000001000")
+      val repeated = half.union(half)
+      val missing = ValidationRunner.refCheck(docs, "doc_id", repeated, "k")
+      val plan = physical(missing)
+      assert(plan.contains("BroadcastHashJoin") && !plan.contains("HashAggregate"),
+        s"broadcast catalog must not be aggregated:\n$plan")
+      def ids(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.getString(0)).toSeq.sorted
+      assert(ids(missing) === ids(ValidationRunner.refCheck(docs, "doc_id", repeated.distinct(), "k")))
+      assert(ids(missing).size === 1000)
     }
   }
 

@@ -3,7 +3,7 @@ package graft
 import org.apache.logging.log4j.Level
 import org.apache.logging.log4j.core.LoggerContext
 import org.apache.logging.log4j.core.config.Configurator
-import org.apache.spark.scheduler.SparkListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -47,6 +47,15 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     sc.addSparkListener(l)
     try body
     finally { GraftBridge.drainListenerBus(sc); sc.removeSparkListener(l) }
+  }
+
+  /** The number of Spark jobs `body` starts. */
+  def jobsOf(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    })(body)
+    jobs.get
   }
 
   /** Runs `body` with the named loggers off, for a test whose expected

@@ -57,7 +57,7 @@ class VectorExprSpec extends SparkTestBase {
     }
   }
 
-  test("cosineNative equals composed cosine; used end-to-end in ANN") {
+  test("Ann.bruteTopK scores through the native vectordot") {
     val df = vecsF(60)
     val q = df.where(col("id") < 3)
     val got = graft.ops.Ann.bruteTopK(df, q, "id", "v", "id", "v", k = 2)
