@@ -20,7 +20,6 @@ import graft.exec.{Drift, QuantileSketch, ValidationRunner}
  * "no headers or footers... append", `doc/piq.md:697-700`).
  *
  * Layout under `root/`:
- *   violations/bucket=N/... the violation rows of each bucket, parquet
  *   lineage/commit-<min>-<max>-<uuid8>
  *                           one text marker per COMMITTED batch: a first
  *                           line `buckets=<id>,<id>,…`, then one line per
@@ -28,32 +27,39 @@ import graft.exec.{Drift, QuantileSketch, ValidationRunner}
  *                           n_valid=… n_invalid=… n_violations=…
  *                           sketch_<name>=<base64> …` (n_docs=0 and no
  *                           sketch for an empty bucket)
+ *   violations/commit-<min>-<max>-<uuid8>/
+ *                           the violation rows of the batch whose marker has
+ *                           the same name: plain parquet, `bucket` an int
+ *                           column; read only once that marker is published
  *   .lineage_staging/       markers being written; never read
  *   spec.json               the compiled spec that wrote the outputs
  *
- * Exactly-once per bucket: bucket outputs are written with dynamic
- * partition overwrite (idempotent on re-run), and the lineage marker is
- * published only AFTER all of the batch's outputs land — a crash between
- * the two re-processes that batch (overwriting identical output), never
- * skips or duplicates. The marker itself is a STAGED COMMIT through the
- * Hadoop FS: it is written under `.lineage_staging/`, then published into
- * `lineage/` with one atomic same-filesystem rename — a crash mid-write
- * leaves only staging garbage that no reader lists (swept by the next
- * commit), never a half-written marker that would poison
- * [[committedBuckets]] on resume. The marker carries the batch's
- * summary counts and KLL sketches, so they commit in the same rename as
- * the lineage. Commits, [[committedBuckets]] and [[summary]] run no Spark
- * job. This stands in for an Iceberg snapshot+lineage transaction
- * (SURVEY.md §2.D), which keeps snapshot summaries and sketch blobs with
- * the snapshot: no Iceberg runtime ships with this build, so outputs are
- * plain parquet and the lineage is these marker files.
+ * Exactly-once per bucket, committed as an Iceberg snapshot is: a batch
+ * writes its violation rows into a fresh directory named after the marker
+ * it is about to publish, then publishes the marker, and readers read only
+ * the directories that published markers name. So one commit makes the
+ * batch's rows, counts and sketches visible together. A crash before it
+ * leaves a directory no marker names, which no reader reads; the re-run
+ * writes the batch again under a fresh name, and the next commit deletes
+ * the orphan. The marker itself is a STAGED COMMIT through the Hadoop FS:
+ * it is written under `.lineage_staging/`, then published into `lineage/`
+ * with one atomic same-filesystem rename — a crash mid-write leaves only
+ * staging garbage that no reader lists (swept by the next commit), never a
+ * half-written marker that would poison [[committedBuckets]] on resume.
+ * The sweeps assume one writer per root: a concurrent run's unpublished
+ * directory would be deleted. Commits, [[committedBuckets]] and [[summary]]
+ * run no Spark job. This stands in for an Iceberg snapshot+lineage
+ * transaction (SURVEY.md §2.D), which writes data files first and keeps
+ * snapshot summaries and sketch blobs with the snapshot: no Iceberg runtime
+ * ships with this build, so outputs are plain parquet and the lineage is
+ * these marker files.
  */
 final class CheckpointManager(root: String) extends Serializable {
   import CheckpointManager._
   private def lineagePath = new Path(s"$root/lineage")
   private def stagingPath = new Path(s"$root/.lineage_staging")
   private def specPath = new Path(s"$root/spec.json")
-  private def violationsPath = s"$root/violations"
+  private def violationsPath = new Path(s"$root/violations")
   private def fs(spark: SparkSession): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -61,11 +67,21 @@ final class CheckpointManager(root: String) extends Serializable {
     * the first line is read. Only a missing `lineage/` means "none"; a
     * marker that does not parse (an id-only or parquet marker of an older
     * layout) or cannot be read throws, naming the file — treating it as "no
-    * lineage" would silently reprocess every bucket. */
+    * lineage" would silently reprocess every bucket. So does a marker that
+    * names no violations directory (a root of the older
+    * `violations/bucket=N` layout), naming the root. */
   def committedBuckets(spark: SparkSession): Set[Int] = {
     val fs = this.fs(spark)
-    markers(fs).flatMap(readMarker(fs, _, idsOnly = true)._1).toSet
+    val ms = markers(fs)
+    val ids = ms.flatMap(readMarker(fs, _, idsOnly = true)._1).toSet
+    requireBatchDirs(fs, ms)
+    ids
   }
+
+  /** A fresh batch name: its lineage marker's file name and its violations
+    * directory's. */
+  private[checkpoint] def batchName(group: Seq[Int]): String =
+    s"commit-${group.min}-${group.max}-${java.util.UUID.randomUUID().toString.take(8)}"
 
   /** Every committed bucket's record, from the markers. Throws, naming the
     * markers, when a marker's bucket lines differ from its buckets or a
@@ -87,38 +103,50 @@ final class CheckpointManager(root: String) extends Serializable {
     records
   }
 
-  /** Overwrite the buckets present in `out` under `violations`, leaving
-    * every other bucket in place. */
-  private[checkpoint] def writeViolations(out: DataFrame, bucketCol: String): Unit =
-    // per-writer option, never the session conf: other jobs share it
-    out.withColumn("bucket", col(bucketCol).cast("int"))
-      .write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(violationsPath)
+  /** Write `out` into `violations/<name>/`, one unpartitioned parquet
+    * directory that no reader reads until the marker `name` is published,
+    * with `bucketCol` as the int column `bucket`, last. */
+  private[checkpoint] def writeViolations(out: DataFrame, bucketCol: String, name: String): Unit =
+    out.select(out.columns.filter(_ != "bucket").map(col).toSeq :+ col(bucketCol).cast("int").as("bucket"): _*)
+      .write.mode(SaveMode.ErrorIfExists).parquet(new Path(violationsPath, name).toString)
 
   /**
-   * Staged lineage commit: write the group's marker as one text file in
-   * `.lineage_staging/`, then publish it into `lineage/` with a single
+   * Staged lineage commit of the batch `name`, whose violations directory
+   * is written: write the group's marker as one text file in
+   * `.lineage_staging/`, then publish it as `lineage/<name>` with a single
    * atomic rename. Readers list only `lineage/`, so a crash at any point
-   * here leaves either no commit (staging garbage, swept on the next
-   * commit) or the complete one — never a torn marker. One marker per
-   * committed batch keeps this O(#batches) small files.
+   * here leaves either no commit (staging garbage and an unnamed violations
+   * directory, swept on the next commit) or the complete one — never a torn
+   * marker. One marker per committed batch keeps this O(#batches) small
+   * files.
    */
-  private[checkpoint] def commitLineage(spark: SparkSession, group: Seq[Int],
+  private[checkpoint] def commitLineage(spark: SparkSession, name: String, group: Seq[Int],
       records: Seq[BucketRecord]): Unit = {
     val fs = this.fs(spark)
-    val staged = new Path(stagingPath, java.util.UUID.randomUUID().toString)
+    val staged = new Path(stagingPath, name)
     val lines = (Header + group.mkString(",")) +: records.map(encode)
     writeText(fs, staged, lines.mkString("", "\n", "\n"))
-    val dst = new Path(lineagePath,
-      s"commit-${group.min}-${group.max}-${java.util.UUID.randomUUID().toString.take(8)}")
+    val dst = new Path(lineagePath, name)
     fs.mkdirs(lineagePath)
     if (!fs.rename(staged, dst))
       throw new java.io.IOException(s"lineage commit rename failed: $staged -> $dst")
     // sweep: this marker is published; anything left is prior crashes' garbage
-    fs.delete(stagingPath, true): Unit
+    fs.delete(stagingPath, true)
+    val named = markers(fs).map(_.getName).toSet
+    batchDirs(fs).filterNot(named).foreach(d => fs.delete(new Path(violationsPath, d), true))
   }
 
-  def violations(spark: SparkSession): DataFrame = spark.read.parquet(violationsPath)
+  /** The violation rows of the committed batches (`docKey`, `rule`, `path`,
+    * `detail`, `bucket`): exactly the directories the published markers
+    * name, so a crashed batch's rows are never read. Throws as
+    * [[committedBuckets]] does, and when no batch is committed. */
+  def violations(spark: SparkSession): DataFrame = {
+    val fs = this.fs(spark)
+    val ms = markers(fs)
+    requireBatchDirs(fs, ms)
+    if (ms.isEmpty) throw new java.io.IOException(s"checkpoint root $root has no committed batch")
+    spark.read.parquet(ms.map(m => new Path(violationsPath, m.getName).toString): _*)
+  }
 
   /** Per-bucket counts (`bucket`, `n_docs`, `n_valid`, `n_invalid`,
     * `n_violations`) of the buckets [[ValidationCheckpoint.run]] committed,
@@ -146,6 +174,19 @@ final class CheckpointManager(root: String) extends Serializable {
       if (!st.isFile) throw unreadable(st.getPath)
       st.getPath
     }
+
+  /** The names of the batch directories under `violations/`. */
+  private def batchDirs(fs: FileSystem): Seq[String] =
+    if (!fs.exists(violationsPath)) Nil
+    else fs.listStatus(violationsPath).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+
+  private def requireBatchDirs(fs: FileSystem, markers: Seq[Path]): Unit = {
+    val dirs = batchDirs(fs).toSet
+    markers.find(m => !dirs(m.getName)).foreach { m =>
+      throw new java.io.IOException(s"checkpoint root $root: lineage marker ${m.getName} names no " +
+        "violations directory (a root of the older violations/bucket=N layout cannot be read or resumed)")
+    }
+  }
 
   /** A marker's bucket ids and, unless `idsOnly`, its bucket lines. With
     * `idsOnly`, the marker is read up to the end of its first line only. */
@@ -214,20 +255,22 @@ object CheckpointManager {
 
 /**
  * The full checkpointed validation job: per batch of buckets, writes the
- * `violations` output, then commits the batch's lineage marker carrying
- * each bucket's summary counts and one KLL sketch per sketch column
- * (Spark's `kll_sketch_agg_double`, k = [[Drift.K]]) — resumable drift
- * state: merging the committed per-bucket sketches reconstructs the
- * whole-run sketch without touching processed data again, within the
- * rank-error bound stated on [[Drift]].
+ * batch's violations directory, then commits the lineage marker of the
+ * same name, carrying each bucket's summary counts and one KLL sketch per
+ * sketch column (Spark's `kll_sketch_agg_double`, k = [[Drift.K]]) —
+ * resumable drift state: merging the committed per-bucket sketches
+ * reconstructs the whole-run sketch without touching processed data again,
+ * within the rank-error bound stated on [[Drift]].
  *
- * One job per batch: the `violations` write is the only job, and the only
- * scan. `observe` on the validated frame computes, per bucket of the
- * batch, the summary counts and the sketches (KLL sketches merge, so each
- * task's partial sketch combines into the bucket's); they ride in the
- * marker's bucket lines, so counts, sketches and lineage commit in one
- * atomic rename. A KLL sketch at k = 400 serializes to at most about 10 KB
- * (5.7 KB at 2.5k items, 10.3 KB at 10⁹), about 14 KB in base64, per
+ * One job per batch: the violations write is the only job, and the only
+ * scan. It writes one unpartitioned parquet directory, so Spark plans no
+ * sort before it and each task writes at most one file. `observe` on the
+ * validated frame computes, per bucket of the batch, the summary counts
+ * and the sketches (KLL sketches merge, so each task's partial sketch
+ * combines into the bucket's); they ride in the marker's bucket lines, so
+ * the marker's one atomic rename commits the rows, counts, sketches and
+ * lineage together. A KLL sketch at k = 400 serializes to at most about
+ * 10 KB (5.7 KB at 2.5k items, 10.3 KB at 10⁹), about 14 KB in base64, per
  * bucket and sketch column. The observed metrics are exactly-once: the
  * violations write is a single result stage, and Spark applies each
  * task's accumulator updates from an action once, even when the task is
@@ -269,7 +312,7 @@ object ValidationCheckpoint {
     val done = mgr.committedBuckets(spark)
     allBuckets.filterNot(done).grouped(math.max(1, batches)).foreach { group =>
       val batch = docs.where(col(bucketCol).isin(group.map(Integer.valueOf): _*))
-      val name = s"checkpoint-${java.util.UUID.randomUUID()}"
+      val name = mgr.batchName(group)
       val metrics = group.flatMap { k =>
         val in = col(bucketCol) === k
         Seq(count(when(in, 1)), count(when(in && col("valid"), 1)), count(when(in && !col("valid"), 1)),
@@ -284,7 +327,7 @@ object ValidationCheckpoint {
         // each violation row by the duplicate count
         mgr.writeViolations(ValidationRunner.violationRows(
           validated.select(col(docKey), col(bucketCol), col("violations")),
-          docKey, passthroughCols = Seq(bucketCol)), bucketCol)
+          docKey, passthroughCols = Seq(bucketCol)), bucketCol, name)
       }
       val records = group.map { k =>
         // an empty bucket gets no summary row and no sketch, as a groupBy
@@ -298,9 +341,9 @@ object ValidationCheckpoint {
             .asInstanceOf[Array[Byte]]).toMap)
         }
       }
-      // the marker is published LAST: a crash before it re-runs the batch,
-      // whose violations overwrite their own buckets only
-      mgr.commitLineage(spark, group, records)
+      // the marker is published LAST: a crash before it re-runs the batch
+      // under a fresh name, and no reader reads the orphan directory
+      mgr.commitLineage(spark, name, group, records)
     }
   }
 

@@ -322,9 +322,9 @@ object Dedup {
    *  - small-star: group by the larger endpoint u and point u and its
    *    smaller neighbors at their minimum — persisted, the next round's input;
    *  - the star check: one reduceByKey over the new edges and the
-   *    self-paired nodes, persisted; counting the nodes that break the
-   *    star shape is the round's one job, and it also materialises the
-   *    persisted round and its check.
+   *    self-paired nodes, persisted; counting, in one pass, the nodes and
+   *    the nodes that break the star shape is the round's one job, and it
+   *    also materialises the persisted round and its check.
    * A round has converged when every node has at most one distinct target
    * and no target has a target of its own. The edges are then disjoint
    * stars; rounds preserve connectivity, so each star is a whole component,
@@ -340,10 +340,12 @@ object Dedup {
    * id fails the call. No Catalyst query or generated class per round, and
    * the graph is never collected to one machine. Returns (id, label) as
    * UnsafeRows mapped from the last round's persisted check, with no
-   * serialization stage; every other RDD the call persists is unpersisted
-   * on the way out, on success and on failure. (A local checkpoint of the
-   * check would cut its lineage, but unpersisting a superseded one logs a
-   * WARN per round.)
+   * serialization stage, in a relation that carries the last round's node
+   * count as its row count, so a join against the labels plans a broadcast
+   * when they are few and a sort-merge join when they are many. Every
+   * other RDD the call persists is unpersisted on the way out, on success
+   * and on failure. (A local checkpoint of the check would cut its
+   * lineage, but unpersisting a superseded one logs a WARN per round.)
    */
   def connectedComponents(pairs: DataFrame, aCol: String = "id_a",
       bCol: String = "id_b", maxIter: Int = ComponentsMaxIter): DataFrame = {
@@ -358,6 +360,7 @@ object Dedup {
     try {
       var rounds = 0
       var converged = false
+      var nodes = 0L
       while (!converged) {
         if (rounds == maxIter) {
           throw new IllegalArgumentException(
@@ -375,10 +378,14 @@ object Dedup {
           (Iterator(u) ++ smaller.iterator).filter(_ != m).distinct.map(v => (v, m))
         }.persist(StorageLevel.MEMORY_AND_DISK)
         val check = starCheck(next, selfPaired)
-        try converged = check.filter { case (_, (lo, hi, isTarget)) =>
-          lo <= hi && (lo != hi || isTarget)
-        }.count() == 0
-        finally {
+        // one pass counts (nodes that break the star shape, nodes)
+        try {
+          val (broken, n) = check.aggregate((0L, 0L))({ case ((b, n), (_, (lo, hi, isTarget))) =>
+            (if (lo <= hi && (lo != hi || isTarget)) b + 1 else b, n + 1)
+          }, { case ((b1, n1), (b2, n2)) => (b1 + b2, n1 + n2) })
+          converged = broken == 0
+          nodes = n
+        } finally {
           edges.unpersist(); edges = next
           if (stars != null) stars.unpersist()
           stars = check
@@ -386,7 +393,7 @@ object Dedup {
         rounds += 1
       }
       val labels = stars.map { case (v, (lo, hi, _)) => labelRow(v, if (lo <= hi) lo else v) }
-      GraftBridge.internalCreateDataFrame(pairs.sparkSession, labels, LabelSchema)
+      GraftBridge.internalCreateDataFrame(pairs.sparkSession, labels, LabelSchema, nodes)
     } catch {
       case e: Throwable => if (stars != null) stars.unpersist(); throw e
     } finally { input.unpersist(); edges.unpersist() }
@@ -429,8 +436,9 @@ object Dedup {
    * Remove near-duplicates given their pair set: keep one representative
    * (the minimum id) per connected component, plus every unpaired doc.
    * The anti-join side is the REMOVAL set (paired non-representatives),
-   * keyed on the unique id: small removal sets broadcast under AQE, large
-   * ones sort-merge without skew. Components come from
+   * keyed on the unique id: the labels carry their row count, so a small
+   * removal set broadcasts from the first plan and a large one
+   * sort-merges without skew. Components come from
    * [[connectedComponents]], whose star rounds terminate on near-clique
    * and drift-chain pair sets alike.
    */

@@ -4,7 +4,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.MultiInstanceRelation
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.execution.adaptive.LogicalQueryStage
 import org.apache.spark.sql.types.StructType
@@ -19,11 +20,17 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** A DataFrame over an RDD of Catalyst rows of `schema`, with no
-    * per-row conversion (`SparkSession.internalCreateDataFrame`). */
+  /** A DataFrame over an RDD of `rowCount` Catalyst rows of `schema`, with
+    * no per-row conversion (`SparkSession.internalCreateDataFrame`). The
+    * relation carries `rowCount` and a size of `rowCount` ×
+    * `schema.defaultSize` bytes as its statistics, in place of Spark's
+    * default estimate, so a join plans a broadcast of it when it is small. */
   def internalCreateDataFrame(spark: SparkSession, rows: RDD[InternalRow],
-      schema: StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
+      schema: StructType, rowCount: Long): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val stats = Statistics(sizeInBytes = BigInt(rowCount) * schema.defaultSize, rowCount = Some(rowCount))
+    classic.Dataset.ofRows(session, LogicalRDD(DataTypeUtils.toAttributes(schema), rows)(session, Some(stats)))
+  }
 
   /** `df`'s rows mapped by `f` (an RDD transformation, shuffles included)
     * to rows of `schema`, as a DataFrame whose physical plan is `df`'s under

@@ -84,13 +84,22 @@ class CheckpointSpec extends SparkTestBase {
     run(docs, clean, all, batches = 2)
     val cleanSketch = ValidationCheckpoint.mergedSketch(spark, clean, "offsets")
 
-    // batches of two: {0,1} commits, the kill lands in {2,3}'s commit, whose
-    // violations have landed by then. Per boundary of the marker commit: the
-    // (op, nth, path) that throws and the lineage at the kill
+    // batches of two: {0,1} commits, the kill lands in {2,3}'s write or
+    // commit. Per boundary: the (op, nth, path) that throws and the lineage
+    // at the kill
+    val batch23 = "/commit-2-3-"
     val boundaries: Seq[(String, String, Int, String => Boolean, Set[Int])] = Seq(
-      ("staged marker create", "create", 2, _.contains("/.lineage_staging/"), Set(0, 1)),
-      ("staged, before rename", "rename", 2, _.contains("/.lineage_staging/"), Set(0, 1)),
+      ("batch data-file create", "create", 1, p => p.contains(s"/violations$batch23") && p.contains("/part-"),
+        Set(0, 1)),
+      ("write job commit", "create", 1, p => p.contains(s"/violations$batch23") && p.endsWith("/_SUCCESS"),
+        Set(0, 1)),
+      ("staged marker create", "create", 1, _.contains(s"/.lineage_staging$batch23"), Set(0, 1)),
+      ("staged, before rename", "rename", 1, _.contains(s"/.lineage_staging$batch23"), Set(0, 1)),
       ("renamed, before sweep", "delete", 2, _.endsWith("/.lineage_staging"), Set(0, 1, 2, 3)))
+    def batchDirs(dir: String) =
+      Option(new java.io.File(s"$dir/violations").list()).toSeq.flatten.filterNot(_.startsWith(".")).toSet
+    def markerNames(dir: String) =
+      new java.io.File(s"$dir/lineage").list().toSeq.filterNot(_.startsWith(".")).toSet
     // the injected failures are expected: keep their task-failure stack traces
     // (some logged by killed sibling tasks after the run has thrown) out of the log
     spark.sparkContext.setLogLevel("OFF")
@@ -101,12 +110,16 @@ class CheckpointSpec extends SparkTestBase {
       val e = try intercept[Exception](run(docs, mgr, all, batches = 2)) finally FaultFs.disarm()
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
         .exists(_.isInstanceOf[FaultFs.Fault]), s"run failed for another reason: $e")
-      assert(new java.io.File(s"$dir/violations/bucket=2").isDirectory)
       assert(Seq("summary", "sketches").forall(o => !new java.io.File(s"$dir/$o").exists))
       assert(mgr.committedBuckets(spark) === committedAtKill)
+      // the killed batch's directory is there, but only the committed
+      // batches' rows are read
+      assert(batchDirs(dir).exists(_.startsWith(batch23.stripPrefix("/"))))
+      assert(violationRows(mgr) === violationRows(clean).filter(r => committedAtKill(r.split('|')(1).toInt)))
 
       run(docs, mgr, all, batches = 2)
       assert(mgr.committedBuckets(spark) === all.toSet)
+      assert(batchDirs(dir) === markerNames(dir)) // the orphan is swept
       assert(violationRows(mgr) === violationRows(clean))
       assert(summaryRows(mgr.summary(spark)) === summaryRows(clean.summary(spark)))
       val sketch = ValidationCheckpoint.mergedSketch(spark, mgr, "offsets")
@@ -139,6 +152,21 @@ class CheckpointSpec extends SparkTestBase {
     assert(violationRows(mgr) === sortedRows(
       ValidationRunner.violationRows(validated, "doc_id", Seq("bucket")),
       "doc_id", "bucket", "rule", "path", "detail"))
+  }
+
+  test("a batch with no violation rows commits and reads back") {
+    // clean docs in buckets 0-1 and none in bucket 2: both batches write no row
+    val docs = withBuckets(Docs.generate(spark, 300, numPartitions = 3), 2)
+    val root = tempRoot("graft-ckpt-norows")
+    val mgr = new CheckpointManager(root)
+    run(docs, mgr, 0 to 2, batches = 2)
+    assert(mgr.committedBuckets(spark) === Set(0, 1, 2))
+    val dirs = new java.io.File(s"$root/violations").list().toSeq.filterNot(_.startsWith("."))
+    assert(dirs.size === 2)
+    val rows = mgr.violations(spark)
+    assert(rows.isEmpty)
+    assert(rows.schema.map(f => f.name -> f.dataType.typeName) === Seq("doc_id" -> "string",
+      "rule" -> "string", "path" -> "string", "detail" -> "string", "bucket" -> "integer"))
   }
 
   test("two concurrent runs on one session keep their observations apart") {

@@ -66,6 +66,9 @@ class PipelineSpec extends SparkTestBase {
       first.stripPrefix("buckets=").split(',').map(_.toInt)
     }
     assert(ids.sorted === Seq(0, 1, 2, 3))
+    // and violations/ holds exactly the batch directories the markers name:
+    // the killed batch's directory went with the resume's first commit
+    assert(new java.io.File(s"$root/violations").list().toSet === markers.map(_.getName).toSet)
   }
 
   test("checkpoint: sketch accumulators survive crash-resume and merge to the whole-run digest") {
@@ -135,7 +138,8 @@ class PipelineSpec extends SparkTestBase {
       ValidationCheckpoint.run(docs, plan, mgr, "bucket", Seq(0, 1, 2, 3), "doc_id") // resume
       assert(spark.conf.get(key) === "static")
     }
-    // a static overwrite by the resume would have wiped buckets 0 and 1
+    // the resume adds its batches' directories next to the half run's; a
+    // static overwrite of violations/ would have wiped buckets 0 and 1
     val committed = mgr.violations(spark)
     assert(committed.select("bucket").distinct().collect().map(_.getInt(0)).toSet === Set(0, 1, 2, 3))
     val direct = ValidationRunner.violationRows(ValidationRunner.validate(docs, plan), "doc_id", Seq("bucket"))

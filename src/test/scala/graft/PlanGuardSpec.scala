@@ -195,6 +195,38 @@ class PlanGuardSpec extends SparkTestBase {
       s"precision pin went quadratic:\n${p.take(3000)}")
   }
 
+  test("a checkpoint batch writes one unsorted, unpartitioned directory, named by its marker") {
+    import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.checkpoint.{CheckpointManager, ValidationCheckpoint}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (nodes(qe.executedPlan).exists(_.isInstanceOf[DataWritingCommandExec])) writes.add(qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft-planguard-ckpt").toString
+    val docs = spark.read.parquet(tmpDocs).withColumn("bucket", pmod(xxhash64(col("doc_id")), lit(4)).cast("int"))
+    spark.listenerManager.register(listener)
+    try ValidationCheckpoint.run(docs, SparkEntry.docsPlan, new CheckpointManager(root), "bucket", 0 to 3,
+      "doc_id", batches = 2)
+    finally {
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(writes.size === 2)
+    for (w <- writes.asScala) assert(!nodes(w).exists(_.isInstanceOf[SortExec]), s"the batch write sorts:\n$w")
+    def names(sub: String) = new java.io.File(s"$root/$sub").list().toSeq.filterNot(_.startsWith(".")).toSet
+    assert(names("lineage").size === 2 && names("violations") === names("lineage"))
+  }
+
   test("exactDedup keep-one is agg + anti-join, never a window over the content hash") {
     val spark0 = spark
     import spark0.implicits._
