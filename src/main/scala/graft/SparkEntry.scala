@@ -385,12 +385,16 @@ object SparkEntry {
           (count(lit(1)) > 0).cast("long").as("has_pairs"))
     }),
 
-    // PRECISION oracle for the approximate simhash path: hamming <= 3 over
-    // 64 sign bits concentrates on high token overlap; the token-set
-    // Jaccard floor 0.3 is an order of magnitude below anything hamming<=3
-    // emits on this corpus (observed minimum ~1.0 — near pairs here are
-    // template/dup variants) — the pin catches a precision REGRESSION
-    // (bucket-join emitting unverified pairs), not a theoretical bound.
+    // PRECISION oracle for the approximate simhash path. The bound it rests
+    // on: each of the 64 bits differs with probability ≈ θ/π, θ the angle of
+    // the docs' token-count vectors, so hamming is Binomial(64, θ/π). For
+    // two equal-size token sets without repeats cos θ = 2J/(1+J), so a pair
+    // under the token-set Jaccard floor 0.3 has θ/π > 0.347 and is emitted
+    // (hamming <= 3) with probability P(Binomial(64, 0.347) <= 3) < 1e-8.
+    // Repeated tokens and unequal lengths loosen that cos–Jaccard link, so
+    // no bound holds for every pair; on this corpus the observed minimum is
+    // ~1.0 (near pairs are template/dup variants), and the pin catches a
+    // precision REGRESSION (bucket-join emitting unverified pairs).
     "d_simhash_near_precision" -> ((s, dir) => {
       val docs = dupCorpus(s, dir)
       val pairs = graft.ops.Dedup.simhashNearDups(docs, "doc_id", "text", maxHamming = 3)

@@ -31,8 +31,9 @@ import graft.exec.{Drift, QuantileSketch, ValidationRunner}
  *                           the violation rows of the batch whose marker has
  *                           the same name: plain parquet, `bucket` an int
  *                           column; read only once that marker is published
- *   .lineage_staging/       markers being written; never read
- *   spec.json               the compiled spec that wrote the outputs
+ *   .lineage_staging/       markers and spec.json being written; never read
+ *   spec.json               the compiled spec that wrote the outputs,
+ *                           published through `.lineage_staging/` too
  *
  * Exactly-once per bucket, committed as an Iceberg snapshot is: a batch
  * writes its violation rows into a fresh directory named after the marker
@@ -123,13 +124,8 @@ final class CheckpointManager(root: String) extends Serializable {
   private[checkpoint] def commitLineage(spark: SparkSession, name: String, group: Seq[Int],
       records: Seq[BucketRecord]): Unit = {
     val fs = this.fs(spark)
-    val staged = new Path(stagingPath, name)
     val lines = (Header + group.mkString(",")) +: records.map(encode)
-    writeText(fs, staged, lines.mkString("", "\n", "\n"))
-    val dst = new Path(lineagePath, name)
-    fs.mkdirs(lineagePath)
-    if (!fs.rename(staged, dst))
-      throw new java.io.IOException(s"lineage commit rename failed: $staged -> $dst")
+    publish(fs, new Path(lineagePath, name), lines.mkString("", "\n", "\n"))
     // sweep: this marker is published; anything left is prior crashes' garbage
     fs.delete(stagingPath, true)
     val named = markers(fs).map(_.getName).toSet
@@ -166,7 +162,19 @@ final class CheckpointManager(root: String) extends Serializable {
     if (!fs.exists(specPath)) None else Some(readText(fs, specPath))
   }
 
-  def recordSpec(spark: SparkSession, specJson: String): Unit = writeText(fs(spark), specPath, specJson)
+  /** Record the spec JSON, staged as a marker is ([[publish]]): a kill
+    * mid-write leaves no `spec.json`, so the resume records it again. */
+  def recordSpec(spark: SparkSession, specJson: String): Unit = publish(fs(spark), specPath, specJson)
+
+  /** The staged write of the markers and `spec.json`: write `text` as
+    * `.lineage_staging/<dst name>`, then publish it as `dst` with one atomic
+    * rename, so a crash at any point leaves `dst` whole or absent. */
+  private def publish(fs: FileSystem, dst: Path, text: String): Unit = {
+    val staged = new Path(stagingPath, dst.getName)
+    writeText(fs, staged, text)
+    fs.mkdirs(dst.getParent)
+    if (!fs.rename(staged, dst)) throw new java.io.IOException(s"staged write rename failed: $staged -> $dst")
+  }
 
   private def markers(fs: FileSystem): Seq[Path] =
     if (!fs.exists(lineagePath)) Nil

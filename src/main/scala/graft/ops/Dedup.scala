@@ -138,6 +138,16 @@ object Dedup {
    *
    * Returns (id_a, id_b, sig_sim) with id_a < id_b, sig_sim ≥ threshold.
    *
+   * Candidate probability: a signature slot of two docs agrees with
+   * probability s, the Jaccard similarity of their shingle sets, so a band
+   * of r = numHashes / bands slots agrees with probability sʳ and the pair
+   * shares at least one bucket with probability 1 − (1 − sʳ)ᵇ, b = bands
+   * (at 32 hashes and 8 bands: 0.06 at s = 0.3, 0.40 at 0.5, 0.985 at
+   * 0.8). The verify step's error is Hoeffding's on `sig_sim`, stated on
+   * [[graft.functions.MinhashPairs]]. The cap is the one bucket rule the
+   * streaming detector keeps too: a bucket that has seen more than
+   * `maxBucket` rows yields no pairs; `maxBucket <= 0` means no cap.
+   *
    * Shape: one codegen stage, then two RDD shuffles in one `BucketPairs`
    * operator:
    *
@@ -165,7 +175,7 @@ object Dedup {
    */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      threshold: Double = 0.7, maxBucket: Int = 100000): DataFrame = {
+      threshold: Double = 0.7, maxBucket: Int = DefaultMaxBucket): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     // fused tokens→signature expression: one codegen pass, no intermediate
     // shingle array to materialize or dedup. Null-text docs are dropped
@@ -183,12 +193,15 @@ object Dedup {
       MinhashPairs(_, numHashes, threshold))
   }
 
+  /** The default bucket cap of every near-dup pipeline, batch and streaming. */
+  private[graft] val DefaultMaxBucket = 100000
+
   /** The bucket → pairs tail all near-dup pipelines share (see the object
-    * doc and [[minhashNearDups]]): `base` is `(id, <payload>)`; a bucket of
-    * more than `maxBucket` rows yields no pairs, `maxBucket <= 0` keeps
-    * every bucket; `verify` builds the per-bucket pair loop for the id
-    * type. Both shuffles use `spark.sql.shuffle.partitions` partitions and
-    * carry UnsafeRow bytes. */
+    * doc and [[minhashNearDups]]): `base` is `(id, <payload>)`; a bucket that
+    * has seen more than `maxBucket` rows yields no pairs, `maxBucket <= 0`
+    * means no cap ([[BucketItems]]); `verify` builds the per-bucket pair
+    * loop for the id type. Both shuffles use `spark.sql.shuffle.partitions`
+    * partitions and carry UnsafeRow bytes. */
   private def bucketPairs(base: DataFrame, payload: String, keys: Seq[Column],
       maxBucket: Int, verify: DataType => VerifiedPairsBase): DataFrame = {
     val verifier = verify(base.schema("id").dataType)
@@ -236,6 +249,15 @@ object Dedup {
    * of those agreeing blocks — so every true pair collides in ≥ 1 table
    * (recall 1 before caps).
    *
+   * Which pairs are within d: each signature bit is the sign of a ±1
+   * projection of the doc's token-count vector, so two docs at angle θ
+   * differ in a bit with probability ≈ θ/π (Charikar STOC'02; exact for
+   * uniformly random hyperplanes, approached by hash-generated ±1 planes
+   * as the vocabulary grows), and with the 64 bits independent the Hamming
+   * distance is Binomial(64, θ/π): a pair is emitted with probability
+   * P(Binomial(64, θ/π) ≤ d). The hamming it reports is exact, and the
+   * bucket cap is [[minhashNearDups]]'s rule.
+   *
    * THE k KNOB IS THE SCALE DIAL. k = d + 1 (the default, combinations of
    * size 1) keys on ~64/k bits — cheapest explode (k tables) but bucket
    * density grows as n / 2^(64/k): at d = 3 that is n/65536 docs per
@@ -247,7 +269,7 @@ object Dedup {
    * k whose key width keeps n / 2^keyBits ≪ cap.
    */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxHamming: Int = 3, maxBucket: Int = 100000, numBlocks: Int = 0): DataFrame = {
+      maxHamming: Int = 3, maxBucket: Int = DefaultMaxBucket, numBlocks: Int = 0): DataFrame = {
     val d = maxHamming
     val k = if (numBlocks <= 0) d + 1 else numBlocks
     require(k > d, s"numBlocks ($k) must exceed maxHamming ($d)")
@@ -287,10 +309,16 @@ object Dedup {
    * Embedding-cosine near-dup pairs: bucket by sign-bit LSH (high-cosine
    * pairs collide with high probability), exact cosine within buckets.
    * `lshBits` trades recall vs bucket size; multi-probe via several seeds.
+   * Each sign bit of two vectors at angle θ differs with probability ≈ θ/π
+   * (as for [[simhashNearDups]]), so a probe's `lshBits`-bit key agrees
+   * with probability (1 − θ/π)^lshBits and the pair is a candidate with
+   * probability 1 − (1 − (1 − θ/π)^lshBits)^probes. The cosine it then
+   * checks is exact, so the only error is a missed pair; the bucket cap is
+   * [[minhashNearDups]]'s rule.
    */
   def embeddingNearDups(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, lshBits: Int = 8, probes: Int = 2,
-      maxBucket: Int = 100000): DataFrame = {
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val base = df.select(col(idCol).as("id"), Vectors.normalize(col(vecCol)).as("v"))
     // probe index hashed INTO the bucket key; cosine of pre-normalized
     // vectors = ascending-order dot, computed inside the pair loop —
@@ -478,11 +506,15 @@ object Dedup {
  * than `cap` rows (`cap <= 0`: no cap), then none. The count includes every
  * row, so partial buckets merged from several map tasks overflow exactly
  * when the whole bucket does, and a bucket never holds more than `cap`
- * items. Shuffled as its count and its item bytes.
+ * items. Shuffled as its count and its item bytes; also the keyed state of
+ * [[graft.streaming.ValidateStream.nearDupPairs]]' buckets, Java-serialized.
  */
-private[ops] final class BucketItems extends java.io.Externalizable {
+private[graft] final class BucketItems extends java.io.Externalizable {
   private var seen = 0L
   private var items = ArrayBuffer.empty[Array[Byte]]
+
+  /** The number of items held. */
+  def size: Int = items.length
 
   def add(item: Array[Byte], cap: Int): BucketItems = {
     seen += 1

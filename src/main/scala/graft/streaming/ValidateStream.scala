@@ -1,12 +1,16 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection, UnsafeArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 import graft.compile.ValidationPlan
 import graft.exec.ValidationRunner
+import graft.functions.MinhashPairs
+import graft.ops.{BucketItems, Dedup}
 
 /**
  * Structured-Streaming validation — the continuous form of the reference's
@@ -68,41 +72,44 @@ object ValidateStream {
 
   /** One (bucket, id, sig) row per LSH band of one streamed document. */
   final case class BandedDoc(bucket: Long, id: Long, sig: Array[Int])
-  /** A detected near-duplicate: `id_b` arrived while `id_a` (or an earlier
-    * batch-mate) was already in the bucket's state; ids ordered. */
+  /** A detected near-duplicate pair, ids ordered. */
   final case class NearDupHit(id_a: Long, id_b: Long, sig_sim: Double)
-  /** Per-bucket keyed state: the signatures seen in this bucket (bounded). */
-  final case class BucketState(ids: List[Long], sigs: List[Array[Int]])
 
   /**
    * STREAMING near-dup detection — MinHash+LSH against keyed bucket state:
    * the continuous form of [[graft.ops.Dedup.minhashNearDups]] for "is this
    * incoming document a near-duplicate of anything already ingested?".
    *
-   * Same codegen'd signature + band-key projection as the batch pipeline
-   * (one stateless stage), then `flatMapGroupsWithState` keyed by band
-   * bucket: each arrival is signature-verified against the bucket's stored
-   * members (the per-bucket quadratic is bounded by `maxBucket`, exactly
-   * like the batch cap) and emitted as a [[NearDupHit]] when the agreeing
-   * fraction clears `threshold`; then it joins the state. In-batch pairs
-   * are caught too (members verify against earlier batch-mates).
+   * Built from the batch pipeline's parts: the same codegen'd signature +
+   * band-key projection (one stateless stage), then `flatMapGroupsWithState`
+   * keyed by band bucket, whose state is the batch's capped bucket
+   * ([[graft.ops.BucketItems]]). Each micro-batch adds its arrivals to the
+   * bucket through the batch's capped `add`, and
+   * [[graft.functions.MinhashPairs]] verifies the pairs that involve an
+   * arrival: with each earlier member and with each other. The candidate
+   * probability and the verify step's error are the batch's.
+   *
+   * The cap is the batch's one rule: a bucket that has seen more than
+   * `maxBucket` rows yields no pairs; `maxBucket <= 0` means no cap. So
+   * rows that arrive in one micro-batch give the batch pipeline's pairs on
+   * the same rows, and a bucket holds at most `maxBucket` items. Pairs
+   * emitted before a bucket overflowed stand: a stream cannot retract output.
    *
    * Notes for scale/semantics:
    *  - a pair colliding in several bands emits one hit PER band bucket —
    *    deduplicate downstream (`dropDuplicates` on (id_a, id_b) with a
    *    watermark, or in the sink);
-   *  - `maxBucket` bounds each bucket's state to (maxBucket × sig) bytes;
-   *    the number of buckets is not bounded (no state is ever evicted: a
+   *  - the number of buckets is not bounded (no state is ever evicted: a
    *    processing-time timeout would keep an `AvailableNow` query planning
    *    timeout batches after its input is drained);
    *  - buckets partition across executors by key hash — the same shuffle
-   *    key the batch groupBy uses.
+   *    key the batch pipeline uses. Checkpoints written with the earlier
+   *    per-bucket id and signature lists cannot be resumed: the state
+   *    layout differs.
    */
   def nearDupPairs(stream: DataFrame, idCol: String, textCol: String,
-      numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3,
-      threshold: Double = 0.7, maxBucket: Int = 1000): org.apache.spark.sql.Dataset[NearDupHit] = {
-    import org.apache.spark.sql.streaming.{GroupState, OutputMode => OM}
-    import org.apache.spark.sql.types.LongType
+      numHashes: Int = 32, bands: Int = 8, shingleSize: Int = 3, threshold: Double = 0.7,
+      maxBucket: Int = Dedup.DefaultMaxBucket): org.apache.spark.sql.Dataset[NearDupHit] = {
     val spark = stream.sparkSession
     import spark.implicits._
     require(numHashes % bands == 0, "bands must divide numHashes")
@@ -112,38 +119,30 @@ object ValidateStream {
       // and kills the whole stream — same drop the batch pipeline applies
       .where(col(textCol).isNotNull)
       .select(col(idCol).try_cast(LongType).as("id"),
-        graft.ops.Dedup.minhashSignature(col(textCol), numHashes, shingleSize).as("sig"))
+        Dedup.minhashSignature(col(textCol), numHashes, shingleSize).as("sig"))
       .where(col("id").isNotNull)
     val banded = withSig
-      .select(explode(array(
-          graft.ops.Dedup.bandKeyCols(col("sig"), numHashes, bands): _*)).as("bucket"),
+      .select(explode(array(Dedup.bandKeyCols(col("sig"), numHashes, bands): _*)).as("bucket"),
         col("id"), col("sig"))
       .as[BandedDoc]
+    val verifier = MinhashPairs(LongType, numHashes, threshold)
+    implicit val bucketState: Encoder[BucketItems] = Encoders.javaSerialization[BucketItems]
     banded
       .groupByKey(_.bucket)
-      .flatMapGroupsWithState[BucketState, NearDupHit](
-        OM.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, rows: Iterator[BandedDoc], state: GroupState[BucketState]) =>
-          var st = state.getOption.getOrElse(BucketState(Nil, Nil))
-          val hits = scala.collection.mutable.ArrayBuffer[NearDupHit]()
-          rows.foreach { d =>
-            if (!st.ids.contains(d.id)) {
-              var ids = st.ids; var sigs = st.sigs
-              while (ids.nonEmpty) {
-                val oid = ids.head; val osig = sigs.head
-                var eq = 0; var i = 0
-                while (i < numHashes) { if (osig(i) == d.sig(i)) eq += 1; i += 1 }
-                val sim = eq.toDouble / numHashes
-                if (sim >= threshold)
-                  hits += NearDupHit(math.min(oid, d.id), math.max(oid, d.id), sim)
-                ids = ids.tail; sigs = sigs.tail
-              }
-              if (st.ids.size < maxBucket)
-                st = BucketState(d.id :: st.ids, d.sig :: st.sigs)
-            }
+      .flatMapGroupsWithState[BucketItems, NearDupHit](OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (_: Long, docs: Iterator[BandedDoc], state: GroupState[BucketItems]) =>
+          val bucket = state.getOption.getOrElse(new BucketItems)
+          val from = bucket.size
+          val toItem = InterpretedUnsafeProjection.createProjection(Seq(
+            BoundReference(0, LongType, nullable = false),
+            BoundReference(1, ArrayType(IntegerType, containsNull = false), nullable = false)))
+          docs.foreach { d =>
+            // copy: getBytes may hand out the projection's reused buffer
+            bucket.add(toItem(InternalRow(d.id, UnsafeArrayData.fromPrimitiveArray(d.sig))).copy().getBytes,
+              maxBucket)
           }
-          state.update(st)
-          hits.iterator
+          state.update(bucket)
+          verifier.pairs(bucket.rows, from).map(p => NearDupHit(p.getLong(0), p.getLong(1), p.getDouble(2)))
       }
   }
 

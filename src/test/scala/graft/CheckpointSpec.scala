@@ -13,19 +13,24 @@ import graft.io.Docs
 
 /** Local files under the `faulty:` scheme. When armed, the `nth` matching
   * (op, path) call throws instead of running — a process kill at that point,
-  * seen from the files. Fires once, then disarms. */
+  * seen from the files. Fires once, then disarms. The op `opened` is a kill
+  * after a `create` and before anything is written: the file is left empty. */
 class FaultFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("faulty:///")
   override def getScheme: String = "faulty"
   override def create(f: Path, overwrite: Boolean, bufferSize: Int, replication: Short,
       blockSize: Long, progress: Progressable): FSDataOutputStream = {
     FaultFs.hit("create", f)
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+    opened(f, super.create(f, overwrite, bufferSize, replication, blockSize, progress))
   }
   override def create(f: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
     FaultFs.hit("create", f)
-    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+    opened(f, super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress))
+  }
+  private def opened(f: Path, out: FSDataOutputStream): FSDataOutputStream = {
+    try FaultFs.hit("opened", f) catch { case e: FaultFs.Fault => out.close(); throw e }
+    out
   }
   override def rename(src: Path, dst: Path): Boolean = { FaultFs.hit("rename", src); super.rename(src, dst) }
   override def delete(p: Path, recursive: Boolean): Boolean = { FaultFs.hit("delete", p); super.delete(p, recursive) }
@@ -85,10 +90,11 @@ class CheckpointSpec extends SparkTestBase {
     val cleanSketch = ValidationCheckpoint.mergedSketch(spark, clean, "offsets")
 
     // batches of two: {0,1} commits, the kill lands in {2,3}'s write or
-    // commit. Per boundary: the (op, nth, path) that throws and the lineage
-    // at the kill
+    // commit, or in the spec record before either batch. Per boundary: the
+    // (op, nth, path) that throws and the lineage at the kill
     val batch23 = "/commit-2-3-"
     val boundaries: Seq[(String, String, Int, String => Boolean, Set[Int])] = Seq(
+      ("spec.json created, before close", "opened", 1, _.endsWith("/spec.json"), Set.empty),
       ("batch data-file create", "create", 1, p => p.contains(s"/violations$batch23") && p.contains("/part-"),
         Set(0, 1)),
       ("write job commit", "create", 1, p => p.contains(s"/violations$batch23") && p.endsWith("/_SUCCESS"),
@@ -112,10 +118,16 @@ class CheckpointSpec extends SparkTestBase {
         .exists(_.isInstanceOf[FaultFs.Fault]), s"run failed for another reason: $e")
       assert(Seq("summary", "sketches").forall(o => !new java.io.File(s"$dir/$o").exists))
       assert(mgr.committedBuckets(spark) === committedAtKill)
-      // the killed batch's directory is there, but only the committed
-      // batches' rows are read
-      assert(batchDirs(dir).exists(_.startsWith(batch23.stripPrefix("/"))))
-      assert(violationRows(mgr) === violationRows(clean).filter(r => committedAtKill(r.split('|')(1).toInt)))
+      if (committedAtKill.isEmpty) {
+        // killed before the first batch: no batch ran and no torn spec is recorded
+        assert(batchDirs(dir).isEmpty)
+        assert(mgr.recordedSpec(spark).isEmpty)
+      } else {
+        // the killed batch's directory is there, but only the committed
+        // batches' rows are read
+        assert(batchDirs(dir).exists(_.startsWith(batch23.stripPrefix("/"))))
+        assert(violationRows(mgr) === violationRows(clean).filter(r => committedAtKill(r.split('|')(1).toInt)))
+      }
 
       run(docs, mgr, all, batches = 2)
       assert(mgr.committedBuckets(spark) === all.toSet)

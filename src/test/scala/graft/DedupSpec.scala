@@ -555,4 +555,40 @@ class DedupSpec extends SparkTestBase {
     assert(pairs(4) === pairs(6))
     assert(pairs(4) === pairs(8))
   }
+
+  test("minhash banding: each planted Jaccard level's candidate rate is within a Hoeffding band of 1 - (1 - s^r)^b") {
+    val spark0 = spark
+    import spark0.implicits._
+    // the test's failure probability, fixed up front and split over the
+    // levels (union bound); inputs are seeded, so the outcome is fixed too
+    val delta = 1e-6
+    val (r, b, perLevel) = (4, 8, 200)
+    // per level s: n shingles per doc, c of them shared, c / (2n - c) = s
+    val levels = Seq(0.3 -> (104, 48), 0.5 -> (102, 68), 0.8 -> (99, 88), 0.9 -> (95, 90))
+    val rnd = new scala.util.Random(20)
+    def fresh(k: Int) = Seq.fill(k)("t" + java.lang.Long.toHexString(rnd.nextLong()))
+    def shingles(toks: Seq[String]) = toks.sliding(3).map(_.mkString(" ")).toSet
+    // pair p of level l: ids (l·10⁴ + 2p, l·10⁴ + 2p + 1); b shares a's
+    // first c + 2 tokens, then continues with fresh ones
+    val planted = for (((s, (n, c)), l) <- levels.zipWithIndex; p <- 0 until perLevel) yield {
+      val a = fresh(n + 2)
+      val bt = a.take(c + 2) ++ fresh(n - c)
+      val (sa, sb) = (shingles(a), shingles(bt))
+      assert((sa & sb).size.toDouble / (sa | sb).size === s, s"level $s pair $p")
+      val id = l * 10000L + 2 * p
+      (l, (id, a.mkString(" ")), (id + 1, bt.mkString(" ")))
+    }
+    val docs = planted.flatMap { case (_, x, y) => Seq(x, y) }.toDF("id", "text").repartition(4)
+    // at threshold 0 every candidate verifies, so the output is the candidate set
+    val candidates = Dedup.minhashNearDups(docs, "id", "text", numHashes = r * b, bands = b,
+        shingleSize = 3, threshold = 0.0)
+      .collect().map(row => (row.getLong(0), row.getLong(1))).toSet
+    val eps = math.sqrt(math.log(2 * levels.size / delta) / (2 * perLevel))
+    for (((s, _), l) <- levels.zipWithIndex) {
+      val rate = planted.count { case (pl, (a, _), (bId, _)) => pl == l && candidates((a, bId)) }
+        .toDouble / perLevel
+      val expected = 1 - math.pow(1 - math.pow(s, r), b)
+      assert(math.abs(rate - expected) <= eps, s"s = $s: candidate rate $rate, expected $expected ± $eps")
+    }
+  }
 }

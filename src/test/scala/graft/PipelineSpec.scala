@@ -21,7 +21,7 @@ class PipelineSpec extends SparkTestBase {
     // first run is killed at the third bucket's marker rename, after its
     // violations landed
     spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFs].getName)
-    FaultFs.arm("rename", 3)(_.contains("/.lineage_staging/"))
+    FaultFs.arm("rename", 3)(_.contains("/.lineage_staging/commit-"))
     val e = try intercept[Exception](run(new CheckpointManager("faulty://" + root))) finally FaultFs.disarm()
     assert(e.isInstanceOf[FaultFs.Fault], s"run failed for another reason: $e")
     assert(mgr.committedBuckets(spark) === Set(0, 1))
@@ -84,7 +84,7 @@ class PipelineSpec extends SparkTestBase {
     // marker rename fails
     spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultFs].getName)
     val crashing = new CheckpointManager("faulty://" + root) // same lineage
-    FaultFs.arm("rename", 2)(_.contains("/.lineage_staging/"))
+    FaultFs.arm("rename", 2)(_.contains("/.lineage_staging/commit-"))
     val e = try intercept[Exception](ValidationCheckpoint.run(docs, plan, crashing, "bucket", Seq(0, 1, 2, 3),
       "doc_id", sketchCols)) finally FaultFs.disarm()
     assert(e.isInstanceOf[FaultFs.Fault], s"run failed for another reason: $e")
@@ -808,6 +808,51 @@ class PipelineSpec extends SparkTestBase {
       .select("id_a", "id_b").distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs3 === Set((3L, 103L), (200L, 201L)), s"got $pairs3")
+  }
+
+  restartingStreamTest("near-dup bucket cap: the 5-doc probe gives the batch's pairs in one stream micro-batch") {
+    val spark0 = spark
+    import spark0.implicits._
+    // 5 identical docs: every band bucket sees all 5
+    val text = (0 until 30).map(j => s"w$j").mkString(" ")
+    val docs = (0L until 5L).map(id => (id, text))
+    val all = (for (i <- 0L until 5L; j <- i + 1 until 5L) yield (i, j)).toSet
+    def hitsOf(df: org.apache.spark.sql.DataFrame) = df.select("id_a", "id_b").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    def batch(rows: Seq[(Long, String)], cap: Int) = hitsOf(graft.ops.Dedup.minhashNearDups(
+      rows.toDF("id", "text"), "id", "text", numHashes = 32, bands = 8, threshold = 0.9, maxBucket = cap)).toSet
+    /** The stream's hits, one per pair and band bucket, after one AvailableNow
+      * run per part of `parts`, on one checkpoint. */
+    def stream(parts: Seq[Seq[(Long, String)]], cap: Int) = {
+      val Seq(in, out, ck) = Seq("in", "out", "ck")
+        .map(d => java.nio.file.Files.createTempDirectory(s"graft-probe-$d").toString)
+      parts.foreach { part =>
+        part.toDF("id", "text").coalesce(1).write.mode("append").parquet(in)
+        val hits = graft.streaming.ValidateStream.nearDupPairs(
+          spark.readStream.schema("id long, text string").parquet(in), "id", "text",
+          numHashes = 32, bands = 8, threshold = 0.9, maxBucket = cap)
+        val q = hits.toDF.writeStream.outputMode("append").format("parquet")
+          .option("path", out).option("checkpointLocation", ck)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        assert(q.awaitTermination(120000), "AvailableNow near-dup probe did not terminate")
+      }
+      hitsOf(spark.read.schema("id_a long, id_b long, sig_sim double").parquet(out))
+    }
+    // a bucket that has seen more than the cap yields no pairs; cap 0 is no cap
+    for ((cap, expected) <- Seq(3 -> Set.empty[(Long, Long)], 5 -> all, 0 -> all)) withClue(s"cap $cap: ") {
+      assert(batch(docs, cap) === expected)
+      assert(stream(Seq(docs), cap).toSet === expected)
+    }
+    // micro-batches of 3 then 2 docs at cap 3: the first batch's pairs
+    // stand, and the overflowing second batch adds none
+    val first3 = docs.take(3)
+    assert(batch(first3, 3) === Set((0L, 1L), (0L, 2L), (1L, 2L)))
+    assert(stream(Seq(first3, docs.drop(3)), 3).toSet === batch(first3, 3))
+    // uncapped, the second micro-batch emits only the pairs its arrivals
+    // make: each pair once in each of its 8 band buckets
+    val split = stream(Seq(first3, docs.drop(3)), 0)
+    assert(split.toSet === all)
+    assert(split.size === all.size * 8)
   }
 
   test("streaming: violation rows written exactly-once via checkpointed file sink") {
