@@ -110,21 +110,6 @@ private[compile] object CountEmitter extends Emitter[Column] {
  */
 final class ValidationPlan(val spec: Spec) extends Serializable {
 
-  /** Follow alias chains like `Piqobj.unalias` (`piqobj.ml:157-160`), accumulating constraints. */
-  private def unalias(t: PiqiType, acc: Seq[Constraint] = Nil): (PiqiType, Seq[Constraint]) =
-    t match {
-      case TypeRef(n) => spec.defTable(n) match {
-        case AliasDef(_, target, cs) => unalias(target, acc ++ cs)
-        case _ => (t, acc)
-      }
-      case _ => (t, acc)
-    }
-
-  private def resolveDef(t: PiqiType): Option[TypeDef] = t match {
-    case TypeRef(n) => Some(spec.defTable(n))
-    case _ => None
-  }
-
   /** Violations from value-level constraints; checks apply only when value non-null. */
   private def constraintVios[R](e: Emitter[R], c: Column, path: String, cs: Seq[Constraint]): Seq[R] =
     cs.map {
@@ -144,18 +129,6 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
         e.emit(c.isNotNull && !c.isin(vals: _*), s"unknown-value:$path", path, c)
     }
 
-  /** Occurrence counts of type defs along the current expansion path — the
-    * compile-time unroll state for finite-but-recursive types (reference
-    * matrix `tests/infinite_types/finite*.piqi`). The root record counts as
-    * its first occurrence. */
-  private def rootSeen: Map[String, Int] = Map(spec.root -> 1)
-
-  private def atCutoff(n: String, seen: Map[String, Int]): Boolean =
-    spec.atDepthCutoff(n, seen)
-
-  private def bump(n: String, seen: Map[String, Int]): Map[String, Int] =
-    spec.bumpDepth(n, seen)
-
   /** Beyond-depth presence: the schema types this subtree as raw-capture
     * string ([[graft.io.Convert.jsonSchema]] cutoff), so non-null means a
     * document deeper than the configured unroll — a violation, the
@@ -165,61 +138,45 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
       lit(s"recursion deeper than maxDepth=${spec.maxDepth}"))
 
   /**
-   * Violations for a single value of type `t` at column `c` (all value
+   * Violations for a single value of shape `sh` at column `c` (all value
    * checks self-guard on non-null; required/optional is the caller's job).
    */
-  private def valueVios[R](e: Emitter[R], t: PiqiType, c: Column, path: String,
-      seen: Map[String, Int]): Seq[R] = {
-    val (base, aliasCs) = unalias(t)
-    val aliasVios = constraintVios(e, c, path, aliasCs)
-    val ownVios: Seq[R] = base match {
-      case PBool | PFloat | PFloat32 | PString | PBinary | PAny => Nil
-      case PUInt64 =>
+  private def valueVios[R](e: Emitter[R], sh: TypeShape, c: Column, path: String): Seq[R] = {
+    val aliasVios = constraintVios(e, c, path, sh.constraints)
+    val ownVios: Seq[R] = sh match {
+      case TypeShape.Leaf(PUInt64, _) =>
         // full uint64 domain on DecimalType(20,0): 20 digits also hold
         // values past 2^64−1, so the upper bound is a real check
         Seq(e.emit(c.isNotNull &&
             (c < lit(java.math.BigDecimal.ZERO) || c > lit(SpecCompiler.UInt64Max)),
           s"range:$path", path, c))
-      case PInt(lo, hi) =>
+      case TypeShape.Leaf(PInt(lo, hi), _) =>
         // range checks the reference documents but does not enforce
         // (doc/tools.md:490-493); we enforce (SURVEY.md B9)
         if (lo != Long.MinValue || hi != Long.MaxValue)
           Seq(e.emit(c.isNotNull && (c.cast(LongType) < lo || c.cast(LongType) > hi),
             s"range:$path", path, c))
         else Nil
-      case TypeRef(n) =>
-        resolveDef(base) match {
-          case Some(EnumDef(_, options)) =>
-            // unknown enum option → error (`piqobj_of_json.ml:270-284`)
-            Seq(e.emit(c.isNotNull && !c.isin(options: _*), s"unknown-enum:$path", path, c))
-          case Some(RecordDef(_, fields)) =>
-            if (atCutoff(n, seen)) Seq(depthVio(e, c, path))
-            else recordVios(e, fields, c, path, guard = c.isNotNull, bump(n, seen))
-          case Some(VariantDef(_, options)) =>
-            if (atCutoff(n, seen)) Seq(depthVio(e, c, path))
-            else variantVios(e, options, c, path, bump(n, seen))
-          case Some(ListDef(_, elem, elemCs)) =>
-            if (atCutoff(n, seen)) Seq(depthVio(e, c, path))
-            else Seq(listVios(e, elem, elemCs, c, path, bump(n, seen)))
-          case _ => Nil
-        }
-      case _ => Nil
+      case _: TypeShape.Leaf => Nil
+      case TypeShape.Enum(options, _) =>
+        // unknown enum option → error (`piqobj_of_json.ml:270-284`)
+        Seq(e.emit(c.isNotNull && !c.isin(options: _*), s"unknown-enum:$path", path, c))
+      case _: TypeShape.Cut => Seq(depthVio(e, c, path))
+      case r: TypeShape.Record => recordVios(e, r, c, path, guard = c.isNotNull)
+      case v: TypeShape.Variant => variantVios(e, v, c, path)
+      case l: TypeShape.ListOf =>
+        Seq(listVios(e, spec.shape(l.elem, l.depth), l.elemConstraints, c, path))
     }
     aliasVios ++ ownVios
   }
 
   /** Record fields: required/optional/repeated semantics (SURVEY.md B1-B8). */
-  private def recordVios[R](e: Emitter[R], fields: Seq[PField], rec: Column, path: String,
-      guard: Column, seen: Map[String, Int]): Seq[R] = {
-    fields.flatMap { f =>
-      val c = rec.getField(f.name)
-      val p = if (path.isEmpty) f.name else s"$path.${f.name}"
-      fieldVios(e, f, c, p, guard, seen)
-    }
-  }
+  private def recordVios[R](e: Emitter[R], r: TypeShape.Record, rec: Column, path: String,
+      guard: Column): Seq[R] =
+    r.fields.flatMap(f => fieldVios(e, f, rec.getField(f.name), s"$path.${f.name}", guard, r.depth))
 
   private def fieldVios[R](e: Emitter[R], f: PField, c: Column, p: String, guard: Column,
-      seen: Map[String, Int]): Seq[R] = {
+      depth: UnrollDepth): Seq[R] = {
     val modeVios: Seq[R] = f.mode match {
       case Required =>
         // exactly one instance must be present (`piqobj_of_json.ml:192-197`)
@@ -228,31 +185,33 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
       case Repeated => Nil    // absent repeated ≡ empty (`piqobj_of_json.ml:221-229`)
       case Flag => Nil        // desugared in Spec.resolved
     }
+    val sh = spec.shape(f.tpe, depth)
     val bodyVios: Seq[R] = f.mode match {
-      case Repeated => Seq(listVios(e, f.tpe, f.constraints, c, p, seen))
-      case _ => valueVios(e, f.tpe, c, p, seen) ++ constraintVios(e, c, p, f.constraints)
+      case Repeated => Seq(listVios(e, sh, f.constraints, c, p))
+      case _ => valueVios(e, sh, c, p) ++ constraintVios(e, c, p, f.constraints)
     }
     modeVios ++ bodyVios
   }
 
   /** Exactly one non-null option per variant value (`piqobj_of_json.ml:248-253`). */
-  private def variantVios[R](e: Emitter[R], options: Seq[POption], c: Column, path: String,
-      seen: Map[String, Int]): Seq[R] = {
+  private def variantVios[R](e: Emitter[R], v: TypeShape.Variant, c: Column, path: String): Seq[R] = {
+    val options = v.options
     val nonNullCnt = options.map(o => c.getField(o.name).isNotNull.cast(IntegerType))
       .reduce(_ + _)
     val exactly = e.emit(c.isNotNull && nonNullCnt =!= 1, s"exactly-one:$path", path,
       concat_ws("|", options.map(o => when(c.getField(o.name).isNotNull, lit(o.name))): _*))
     val optionChecks = options.flatMap { o =>
-      o.tpe.toSeq.flatMap(t => valueVios(e, t, c.getField(o.name), s"$path.${o.name}", seen))
+      o.tpe.toSeq.flatMap(t =>
+        valueVios(e, spec.shape(t, v.depth), c.getField(o.name), s"$path.${o.name}"))
     }
     exactly +: optionChecks
   }
 
   /** Element-wise list validation (higher-order transform — unavoidable for arrays). */
-  private def listVios[R](e: Emitter[R], elem: PiqiType, elemCs: Seq[Constraint],
-      arr: Column, path: String, seen: Map[String, Int]): R =
+  private def listVios[R](e: Emitter[R], elem: TypeShape, elemCs: Seq[Constraint],
+      arr: Column, path: String): R =
     e.fromArray(arr, path, (x, _) =>
-      e.combine(valueVios(e, elem, x, path, seen) ++ constraintVios(e, x, path, elemCs)))
+      e.combine(valueVios(e, elem, x, path) ++ constraintVios(e, x, path, elemCs)))
 
   /** Cross-field / ordering rules (north-rule additions, SURVEY.md §2.D). */
   private def rowRuleVios[R](e: Emitter[R], r: RowRule,
@@ -296,16 +255,12 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
   }
 
   private def isRepeatedRoot(fieldName: String): Boolean =
-    rootRecord.fields.exists(f => f.name == fieldName && f.mode == Repeated)
-
-  lazy val rootRecord: RecordDef = spec.defTable(spec.root) match {
-    case r: RecordDef => r
-    case other => throw new SpecException(s"root '${spec.root}' must be a record, got $other")
-  }
+    spec.rootRecord.fields.exists(f => f.name == fieldName && f.mode == Repeated)
 
   private def rootWalk[R](e: Emitter[R], resolve: String => Column = col): R = {
-    val fieldRs = rootRecord.fields.flatMap(f =>
-      fieldVios(e, f, resolve(f.name), f.name, lit(true), rootSeen))
+    val root = spec.rootRecord
+    val fieldRs = root.fields.flatMap(f =>
+      fieldVios(e, f, resolve(f.name), f.name, lit(true), root.depth))
     val ruleRs = spec.rowRules.flatMap(r => rowRuleVios(e, r, resolve))
     e.combine(fieldRs ++ ruleRs)
   }
@@ -342,40 +297,35 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
    * Conservative: any rule shape the native expressions can't represent
    * bit-exactly → None → generic Column fallback.
    */
-  private def nativeArrayRules(f: PField): Option[Seq[DetailRule]] = {
+  private def nativeArrayRules(f: PField): Option[(Seq[PField], Seq[DetailRule])] = {
     if (f.mode != Repeated || f.constraints.nonEmpty) return None
-    val (base, aliasCs) = unalias(f.tpe)
-    if (aliasCs.nonEmpty) return None
-    resolveDef(base) match {
-      case Some(RecordDef(_, fields)) =>
+    spec.shape(f.tpe, spec.rootRecord.depth) match {
+      case TypeShape.Record(fields, depth, Seq()) =>
         val rules = scala.collection.mutable.ArrayBuffer[DetailRule]()
         def elemRule(r: ArrayRule, kind: String, f2: String, detail: String = ""): Unit =
           rules += DetailRule(r, s"$kind:${f.name}.$f2", s"${f.name}[", s"].$f2", detail)
         fields.foreach { f2 =>
-          val (b2, cs2) = unalias(f2.tpe)
-          if (cs2.nonEmpty || f2.constraints.nonEmpty) return None // regex/utf8/base64 etc → generic
+          val sh2 = spec.shape(f2.tpe, depth)
+          if (sh2.constraints.nonEmpty || f2.constraints.nonEmpty) return None // regex/utf8/base64 etc → generic
           f2.mode match {
             case Required =>
               elemRule(RuleNotNull(f2.name), "missing-field", f2.name, "required field is missing")
             case Optional(None) => ()
             case _ => return None // defaults / nested repeated / flags → generic
           }
-          b2 match {
-            case PInt(lo, hi) =>
+          sh2 match {
+            case TypeShape.Leaf(PInt(lo, hi), _) =>
               if (lo != Long.MinValue || hi != Long.MaxValue)
                 elemRule(RuleRange(f2.name, lo, hi), "range", f2.name)
-            case PBool | PFloat | PFloat32 | PString | PBinary | PAny => ()
-            case PUInt64 =>
+            case TypeShape.Leaf(PUInt64, _) =>
               elemRule(RuleRangeDecimal(f2.name,
                 java.math.BigDecimal.ZERO, SpecCompiler.UInt64Max), "range", f2.name)
-            case TypeRef(_) => resolveDef(b2) match {
-              case Some(EnumDef(_, opts)) => elemRule(RuleInSet(f2.name, opts), "unknown-enum", f2.name)
-              case _ => return None // nested records/variants/lists → generic
-            }
-            case _ => return None
+            case _: TypeShape.Leaf => ()
+            case TypeShape.Enum(opts, _) => elemRule(RuleInSet(f2.name, opts), "unknown-enum", f2.name)
+            case _ => return None // nested records/variants/lists → generic
           }
         }
-        Some(rules.toSeq)
+        Some((fields, rules.toSeq))
       case _ => None
     }
   }
@@ -395,7 +345,7 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
         else None
       case StrictlyIncreasing(name, arrayPath, field) if arrayPath == arrName =>
         elemFields.find(_.name == field).flatMap { ef =>
-          unalias(ef.tpe) match {
+          spec.unalias(ef.tpe) match {
             case (PInt(_, _), _) => // int/long fields only
               Some(DetailRule(RuleIncreasing(field), s"order:$name", arrName, "",
                 s"$field must be strictly increasing"))
@@ -410,10 +360,8 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
     * element rules followed by the array-scoped row rules it absorbs; and
     * the set of absorbed row rules, which the row-rule walk then skips. */
   private lazy val nativeRules: (Map[String, Seq[DetailRule]], Set[RowRule]) = {
-    val perField = rootRecord.fields.flatMap { f =>
-      nativeArrayRules(f).map { base =>
-        val elemFields = resolveDef(unalias(f.tpe)._1)
-          .collect { case RecordDef(_, fs) => fs }.getOrElse(Nil)
+    val perField = spec.rootRecord.fields.flatMap { f =>
+      nativeArrayRules(f).map { case (elemFields, base) =>
         val absorbed = spec.rowRules.flatMap(r =>
           absorbableRowRule(r, f.name, elemFields).map(r -> _))
         (f.name -> (base ++ absorbed.map(_._2)), absorbed.map(_._1))
@@ -426,10 +374,11 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
     * by `native` instead of the generic emitter. */
   private def nativeWalk(e: Emitter[Column], native: (Column, Seq[DetailRule]) => Column): Column = {
     val (byField, absorbed) = nativeRules
-    val fieldCols: Seq[Column] = rootRecord.fields.flatMap { f =>
+    val root = spec.rootRecord
+    val fieldCols: Seq[Column] = root.fields.flatMap { f =>
       byField.get(f.name) match {
         case Some(rules) => Seq(native(col(f.name), rules))
-        case None => fieldVios(e, f, col(f.name), f.name, lit(true), rootSeen)
+        case None => fieldVios(e, f, col(f.name), f.name, lit(true), root.depth)
       }
     }
     val rowCols = spec.rowRules.filterNot(absorbed).flatMap(r => rowRuleVios(e, r))
@@ -460,69 +409,65 @@ final class ValidationPlan(val spec: Spec) extends Serializable {
    * RECURSIVE, mirroring `parse_optional_field` → `parse_default`
    * (`piqobj_of_json.ml:210-216`, `piqobj_common.ml:54-60`): defaults apply
    * at every depth — inside nested records and inside elements of repeated
-   * fields — by rebuilding only the structs that actually contain defaults
-   * (an untouched subtree keeps its original column expression and physical
-   * type). A missing (null) nested record stays missing — defaults fill
-   * fields of PRESENT records, they do not conjure the record itself.
+   * fields and variant options — by rebuilding only the structs that
+   * actually contain defaults within the unrolled depth (an untouched
+   * subtree keeps its original column expression and physical type). A
+   * missing (null) nested record stays missing — defaults fill fields of
+   * PRESENT records, they do not conjure the record itself.
    */
   def withDefaults(df: DataFrame): DataFrame = {
-    val cols = rootRecord.fields.map { f =>
-      val dt = df.schema.find(_.name == f.name).map(_.dataType)
-      defaultizeField(col(f.name), f, dt, rootRepeatedToEmpty = true, rootSeen).as(f.name)
-    }
-    df.select(cols: _*)
+    val (root, st) = (spec.rootRecord, Some(df.schema))
+    df.select(rebuilt(root, st, fieldDefaults(root, st), col): _*)
   }
 
-  /** Does this type contain any optional-with-default field at any depth? */
-  private def typeHasDefaults(t: PiqiType, seen: Set[String] = Set.empty): Boolean = t match {
-    case TypeRef(n) if !seen(n) => spec.defTable(n) match {
-      case RecordDef(_, fs) => fs.exists(f => (f.mode match {
-        case Optional(Some(_)) => true
-        case _ => false
-      }) || typeHasDefaults(f.tpe, seen + n))
-      case ListDef(_, e, _) => typeHasDefaults(e, seen + n)
-      case AliasDef(_, target, _) => typeHasDefaults(target, seen + n)
-      case VariantDef(_, os) => os.exists(_.tpe.exists(typeHasDefaults(_, seen + n)))
-      case _ => false
-    }
-    case _ => false
-  }
+  private def memberType(st: Option[StructType], name: String): Option[DataType] =
+    st.flatMap(_.find(_.name == name)).map(_.dataType)
 
-  private def defaultizeField(c: Column, f: PField, dt: Option[DataType],
-      rootRepeatedToEmpty: Boolean, seen: Map[String, Int]): Column = f.mode match {
-    case Optional(Some(d)) => coalesce(defaultizeValue(c, f.tpe, dt, seen), lit(d))
-    case Repeated =>
-      val elemDt = dt.collect { case ArrayType(e, _) => e }
-      val applied =
-        if (typeHasDefaults(f.tpe)) transform(c, e => defaultizeValue(e, f.tpe, elemDt, seen))
-        else c
-      // absent repeated ≡ empty on output (`piqobj_of_json.ml:221-229`)
-      dt match {
-        case Some(t) if rootRepeatedToEmpty => coalesce(applied, array().cast(t))
-        case _ => applied
+  /** Per field of `r` (struct type `st` where known), the rewrite that
+    * fills its default and its value's defaults; None where none applies. */
+  private def fieldDefaults(r: TypeShape.Record, st: Option[StructType]): Seq[Option[Column => Column]] =
+    r.fields.map { f =>
+      val (sh, dt) = (spec.shape(f.tpe, r.depth), memberType(st, f.name))
+      f.mode match {
+        case Optional(Some(d)) => Some(c => coalesce(defaults(sh, dt).fold(c)(_(c)), lit(d)))
+        case Repeated =>
+          defaults(sh, dt.collect { case ArrayType(e, _) => e }).map(g => c => transform(c, g))
+        case _ => defaults(sh, dt)
       }
-    case _ => defaultizeValue(c, f.tpe, dt, seen)
-  }
+    }
 
-  private def defaultizeValue(c: Column, t: PiqiType, dt: Option[DataType],
-      seen: Map[String, Int]): Column = {
-    val (base, _) = unalias(t)
-    base match {
-      case TypeRef(n) if typeHasDefaults(base) && !atCutoff(n, seen) => resolveDef(base) match {
-        case Some(RecordDef(_, fields)) =>
-          val st = dt.collect { case s: StructType => s }
-          val rebuilt = struct(fields.map { f2 =>
-            val fdt = st.flatMap(_.find(_.name == f2.name)).map(_.dataType)
-            defaultizeField(c.getField(f2.name), f2, fdt, rootRepeatedToEmpty = true,
-              bump(n, seen)).as(f2.name)
-          }: _*)
-          when(c.isNull, lit(null)).otherwise(rebuilt)
-        case Some(ListDef(_, elem, _)) =>
-          val elemDt = dt.collect { case ArrayType(e, _) => e }
-          transform(c, e => defaultizeValue(e, elem, elemDt, bump(n, seen)))
+  /** `r`'s fields read through `get` with `rewrites` applied; an absent
+    * repeated field is empty on output (`piqobj_of_json.ml:221-229`). */
+  private def rebuilt(r: TypeShape.Record, st: Option[StructType],
+      rewrites: Seq[Option[Column => Column]], get: String => Column): Seq[Column] =
+    r.fields.zip(rewrites).map { case (f, rw) =>
+      val c = rw.fold(get(f.name))(_(get(f.name)))
+      (memberType(st, f.name) match {
+        case Some(t) if f.mode == Repeated => coalesce(c, array().cast(t))
         case _ => c
-      }
-      case _ => c
+      }).as(f.name)
+    }
+
+  /** The rewrite that fills the defaults inside a value of shape `sh`
+    * (column type `dt` where known); None where no default applies. */
+  private def defaults(sh: TypeShape, dt: Option[DataType]): Option[Column => Column] = {
+    val st = dt.collect { case s: StructType => s }
+    sh match {
+      case r: TypeShape.Record =>
+        val rws = fieldDefaults(r, st)
+        if (rws.forall(_.isEmpty)) None
+        else Some(c => when(c.isNull, lit(null)).otherwise(struct(rebuilt(r, st, rws, c.getField): _*)))
+      case TypeShape.Variant(options, depth, _) =>
+        val rws = options.map(o =>
+          o.tpe.flatMap(t => defaults(spec.shape(t, depth), memberType(st, o.name))))
+        if (rws.forall(_.isEmpty)) None
+        else Some(c => when(c.isNull, lit(null)).otherwise(struct(options.zip(rws).map {
+          case (o, rw) => rw.fold(c.getField(o.name))(_(c.getField(o.name))).as(o.name)
+        }: _*)))
+      case l: TypeShape.ListOf =>
+        defaults(spec.shape(l.elem, l.depth), dt.collect { case ArrayType(e, _) => e })
+          .map(g => c => transform(c, g))
+      case _ => None
     }
   }
 

@@ -96,7 +96,7 @@ object ValidationRunner {
   def deprecatedUsage(df: DataFrame, plan: graft.compile.ValidationPlan): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val declared = plan.rootRecord.fields.filter(_.deprecated).map(_.name)
+    val declared = plan.spec.rootRecord.fields.filter(_.deprecated).map(_.name)
     // a frame that already projected a deprecated column away (natural
     // mid-migration state) reports (field, 0, n_docs) instead of throwing
     // an unresolved-column error

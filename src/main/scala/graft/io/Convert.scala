@@ -32,119 +32,69 @@ object Convert {
     // subtree is typed StringType — Spark's JSON parser captures any value
     // as its raw text for a string field, so beyond-depth content survives
     // as a raw blob and the compiled plan's `depth:` rule can see presence
-    def dataTypeOf(t: PiqiType, seen: Map[String, Int]): DataType = t match {
-      case PBool => BooleanType
-      case _: PInt => LongType
-      case PFloat => DoubleType
-      case PFloat32 => FloatType
-      case PUInt64 => DecimalType(20, 0) // full uint64 domain (doc/piqi.md:345-347)
-      case PString => StringType
-      case PBinary => BinaryType
-      case PAny => StringType // raw JSON capture, parsed lazily (piqobj.ml:267-318 analog)
-      case TypeRef(n) => s.defTable(n) match {
-        case RecordDef(_, fields) =>
-          if (s.atDepthCutoff(n, seen)) StringType
-          else StructType(fields.map(structField(_, s.bumpDepth(n, seen))))
-        case VariantDef(_, options) =>
-          if (s.atDepthCutoff(n, seen)) StringType
-          else {
-            val s2 = s.bumpDepth(n, seen)
-            StructType(options.map(o => StructField(
-              if (external) o.jsonKey else o.name,
-              o.tpe.map(dataTypeOf(_, s2)).getOrElse(BooleanType), nullable = true)))
-          }
-        case EnumDef(_, _) => StringType
-        case ListDef(_, e, _) =>
-          if (s.atDepthCutoff(n, seen)) StringType
-          else ArrayType(dataTypeOf(e, s.bumpDepth(n, seen)))
-        case AliasDef(_, target, _) => dataTypeOf(target, seen)
+    def dataTypeOf(sh: TypeShape): DataType = sh match {
+      case TypeShape.Leaf(base, _) => base match {
+        case PBool => BooleanType
+        case _: PInt => LongType
+        case PFloat => DoubleType
+        case PFloat32 => FloatType
+        case PUInt64 => DecimalType(20, 0) // full uint64 domain (doc/piqi.md:345-347)
+        case PString => StringType
+        case PBinary => BinaryType
+        case PAny => StringType // raw JSON capture, parsed lazily (piqobj.ml:267-318 analog)
       }
+      case _: TypeShape.Enum | _: TypeShape.Cut => StringType
+      case r: TypeShape.Record => structOf(r)
+      case TypeShape.Variant(options, depth, _) =>
+        StructType(options.map(o => StructField(
+          if (external) o.jsonKey else o.name,
+          o.tpe.map(t => dataTypeOf(s.shape(t, depth))).getOrElse(BooleanType), nullable = true)))
+      case l: TypeShape.ListOf => ArrayType(dataTypeOf(s.shape(l.elem, l.depth)))
     }
-    def structField(f: PField, seen: Map[String, Int]): StructField = {
-      val nm = if (external) f.jsonKey else f.name
-      f.mode match {
-        case Repeated => StructField(nm, ArrayType(dataTypeOf(f.tpe, seen)), nullable = true)
-        case _ => StructField(nm, dataTypeOf(f.tpe, seen), nullable = true)
-      }
-    }
-    s.defTable(s.root) match {
-      case RecordDef(_, fields) =>
-        StructType(fields.map(structField(_, Map(s.root -> 1))))
-      case other => throw new SpecException(s"root must be a record, got $other")
-    }
+    def structOf(r: TypeShape.Record): StructType = StructType(r.fields.map { f =>
+      val dt = dataTypeOf(s.shape(f.tpe, r.depth))
+      StructField(if (external) f.jsonKey else f.name,
+        if (f.mode == Repeated) ArrayType(dt) else dt, nullable = true)
+    })
+    structOf(s.rootRecord)
   }
 
   // ---------- json-name rename trees ----------
 
-  /** Does `t`'s subtree declare any json-name override? (Guards the struct
-    * rebuilds below — a spec without json-names pays nothing.) */
-  private def hasRenames(t: PiqiType, s: Spec, seen: Set[String] = Set.empty): Boolean = t match {
-    case TypeRef(n) if !seen(n) => s.defTable.get(n).exists {
-      case RecordDef(_, fs) =>
-        fs.exists(f => f.jsonName.isDefined || hasRenames(f.tpe, s, seen + n))
-      case VariantDef(_, os) =>
-        os.exists(o => o.jsonName.isDefined || o.tpe.exists(hasRenames(_, s, seen + n)))
-      case ListDef(_, e, _) => hasRenames(e, s, seen + n)
-      case AliasDef(_, target, _) => hasRenames(target, s, seen + n)
-      case _ => false
+  /** The rewrite of a value of shape `sh` renaming struct fields between
+    * the declared (internal) and JSON (external) name spaces; None where
+    * its subtree declares no json-name. Recursive types stop at the
+    * schema's maxDepth cutoff (the value there is a raw-capture string —
+    * nothing to rename; below the cutoff content stays under its
+    * on-the-wire names). */
+  private def renaming(sh: TypeShape, s: Spec, toExternal: Boolean): Option[Column => Column] = {
+    /** A struct of members (declared name, json-name, type, repeated). */
+    def members(ms: Seq[(String, Option[String], Option[PiqiType], Boolean)],
+        depth: UnrollDepth): Option[Column => Column] = {
+      val rws = ms.map { case (_, _, t, repeated) => memberRenaming(t, repeated, depth, s, toExternal) }
+      if (ms.forall(_._2.isEmpty) && rws.forall(_.isEmpty)) None
+      else Some(c => when(c.isNull, lit(null)).otherwise(struct(ms.zip(rws).map {
+        case ((name, jsonName, _, _), rw) =>
+          val key = jsonName.getOrElse(name)
+          val src = c.getField(if (toExternal) name else key)
+          rw.fold(src)(_(src)).as(if (toExternal) key else name)
+      }: _*)))
     }
-    case _ => false
-  }
-
-  /** Rebuild a value of type `t` renaming struct fields between the declared
-    * (internal) and JSON (external) name spaces. Identity when the subtree
-    * has no json-names. Recursive types stop at the schema's maxDepth cutoff
-    * (the value there is a raw-capture string — nothing to rename; below the
-    * cutoff content stays under its on-the-wire names). */
-  private def renameTree(c: Column, t: PiqiType, s: Spec, toExternal: Boolean,
-      seen: Map[String, Int]): Column = {
-    if (!hasRenames(t, s)) return c
-    t match {
-      case TypeRef(n) => s.defTable(n) match {
-        case _: RecordDef | _: VariantDef | _: ListDef
-            if s.atDepthCutoff(n, seen) => c
-        case RecordDef(_, fields) =>
-          val s2 = s.bumpDepth(n, seen)
-          val rebuilt = struct(fields.map(f => fieldValue(c, f, s, toExternal, s2)
-            .as(if (toExternal) f.jsonKey else f.name)): _*)
-          when(c.isNull, lit(null)).otherwise(rebuilt)
-        case VariantDef(_, options) =>
-          val s2 = s.bumpDepth(n, seen)
-          val rebuilt = struct(options.map { o =>
-            val src = c.getField(if (toExternal) o.name else o.jsonKey)
-            o.tpe.map(renameTree(src, _, s, toExternal, s2)).getOrElse(src)
-              .as(if (toExternal) o.jsonKey else o.name)
-          }: _*)
-          when(c.isNull, lit(null)).otherwise(rebuilt)
-        case ListDef(_, elem, _) =>
-          val s2 = s.bumpDepth(n, seen)
-          transform(c, e => renameTree(e, elem, s, toExternal, s2))
-        case AliasDef(_, target, _) => renameTree(c, target, s, toExternal, seen)
-        case _ => c
-      }
-      case _ => c
+    sh match {
+      case r: TypeShape.Record => members(r.fields.map(f =>
+        (f.name, f.jsonName, Some(f.tpe), f.mode == Repeated)), r.depth)
+      case v: TypeShape.Variant =>
+        members(v.options.map(o => (o.name, o.jsonName, o.tpe, false)), v.depth)
+      case l: TypeShape.ListOf => memberRenaming(Some(l.elem), repeated = true, l.depth, s, toExternal)
+      case _ => None
     }
   }
 
-  /** One record field's renamed value (handles the repeated wrapper). */
-  private def fieldValue(rec: Column, f: PField, s: Spec, toExternal: Boolean,
-      seen: Map[String, Int]): Column =
-    fieldValueFrom(rec.getField(if (toExternal) f.name else f.jsonKey), f, s, toExternal, seen)
-
-  private def fieldValueFrom(src: Column, f: PField, s: Spec, toExternal: Boolean,
-      seen: Map[String, Int]): Column =
-    f.mode match {
-      case Repeated =>
-        if (hasRenames(f.tpe, s)) transform(src, e => renameTree(e, f.tpe, s, toExternal, seen))
-        else src
-      case _ => renameTree(src, f.tpe, s, toExternal, seen)
-    }
-
-  private def rootFields(spec: Spec): Seq[PField] =
-    spec.resolved.defTable(spec.resolved.root) match {
-      case RecordDef(_, fields) => fields
-      case other => throw new SpecException(s"root must be a record, got $other")
-    }
+  /** A member's rename rewrite (each element's for a repeated member). */
+  private def memberRenaming(t: Option[PiqiType], repeated: Boolean, depth: UnrollDepth, s: Spec,
+      toExternal: Boolean): Option[Column => Column] =
+    t.flatMap(t => renaming(s.shape(t, depth), s, toExternal))
+      .map(rw => if (repeated) (c: Column) => transform(c, rw) else rw)
 
   /** A JSON document column read against a spec: its typed record, parsed
     * BY JSON KEY (json-name honored, `piqobj_of_json.ml:171`) and renamed
@@ -152,8 +102,9 @@ object Convert {
     * [[JsonShape]] walk's violations, led by `parse:json`. */
   private def readJson(json: Column, spec: Spec): (Column, Column) = {
     val rs = spec.resolved
-    (renameTree(from_json(json, jsonSchema(spec)), TypeRef(rs.root), rs, toExternal = false,
-      Map.empty), JsonShape.walk(json, spec, parseVio = true))
+    val parsed = from_json(json, jsonSchema(spec))
+    (renaming(rs.rootRecord, rs, toExternal = false).fold(parsed)(_(parsed)),
+      JsonShape.walk(json, spec, parseVio = true))
   }
 
   /**
@@ -180,7 +131,7 @@ object Convert {
     val plan = SpecCompiler.compile(spec)
     val (rec, shapeVio) = readJson(col(jsonCol), spec)
     jsonDf.withColumn("_rec", rec)
-      .select((rootFields(spec).map(f => col("_rec").getField(f.name).as(f.name)) :+
+      .select((spec.resolved.rootRecord.fields.map(f => col("_rec").getField(f.name).as(f.name)) :+
         col(jsonCol).as("_raw") :+ shapeVio.as("_sv")): _*)
       .withColumn("violations", concat(col("_sv"), plan.violations))
       .withColumn("valid", size(col("violations")) === 0)
@@ -322,47 +273,28 @@ object Convert {
     val acc = scala.collection.mutable.LinkedHashMap[String, Vector[String]]()
     val wildcards = scala.collection.mutable.ArrayBuffer[String]()
     def add(n: String, p: String): Unit = acc(n) = acc.getOrElse(n, Vector.empty) :+ p
-    def walkType(t: PiqiType, path: String, seen: Map[String, Int]): Unit = t match {
-      case TypeRef(n) => s.defTable(n) match {
-        case RecordDef(_, fs) =>
-          if (s.atDepthCutoff(n, seen)) wildcards += path
-          else {
-            val s2 = s.bumpDepth(n, seen)
-            fs.foreach(f => walkField(f, path, s2))
-          }
-        case VariantDef(_, os) =>
-          if (s.atDepthCutoff(n, seen)) wildcards += path
-          else {
-            val s2 = s.bumpDepth(n, seen)
-            os.foreach { o =>
-              add(o.name, s"$path/${o.name}")
-              o.tpe.foreach(walkType(_, s"$path/${o.name}", s2))
-            }
-          }
-        case ListDef(_, e, _) =>
-          if (s.atDepthCutoff(n, seen)) wildcards += path
-          else {
-            val s2 = s.bumpDepth(n, seen)
-            add("item", s"$path/item")
-            walkType(e, path, s2)
-            walkType(e, s"$path/item", s2)
-          }
-        case AliasDef(_, target, _) => walkType(target, path, seen)
-        case _ => () // enum → text content, no child elements
-      }
-      case _ => ()
+    def walk(sh: TypeShape, path: String): Unit = sh match {
+      case _: TypeShape.Cut => wildcards += path
+      case r: TypeShape.Record => r.fields.foreach(f => walkField(f, path, r.depth))
+      case TypeShape.Variant(os, depth, _) =>
+        os.foreach { o =>
+          add(o.name, s"$path/${o.name}")
+          o.tpe.foreach(t => walk(s.shape(t, depth), s"$path/${o.name}"))
+        }
+      case l: TypeShape.ListOf =>
+        add("item", s"$path/item")
+        val elem = s.shape(l.elem, l.depth)
+        walk(elem, path)
+        walk(elem, s"$path/item")
+      case _ => () // scalars and enums → text content, no child elements
     }
-    def walkField(f: PField, parent: String, seen: Map[String, Int]): Unit = {
-      val p = s"$parent/${f.name}"
+    def walkField(f: PField, parent: String, depth: UnrollDepth): Unit = {
+      val (p, sh) = (s"$parent/${f.name}", s.shape(f.tpe, depth))
       add(f.name, p)
-      if (f.mode == Repeated) { add("item", s"$p/item"); walkType(f.tpe, s"$p/item", seen) }
-      walkType(f.tpe, p, seen)
+      if (f.mode == Repeated) { add("item", s"$p/item"); walk(sh, s"$p/item") }
+      walk(sh, p)
     }
-    s.defTable(s.root) match {
-      case RecordDef(_, fields) =>
-        fields.foreach(f => walkField(f, "/*", Map(s.root -> 1)))
-      case _ => ()
-    }
+    walk(s.rootRecord, "/*")
     (acc.toMap.view.mapValues(_.distinct.toSeq).toMap, wildcards.distinct.toSeq)
   }
 
@@ -450,15 +382,13 @@ object Convert {
     // emit under the JSON keys (`piqobj_to_json.ml:115,151,164`): spec root
     // fields rename declared → json-name at every level; non-spec passthrough
     // columns keep their names
-    val s = plan.spec // compile() resolves, so this is the desugared spec
-    val byName = (s.defTable.get(s.root) match {
-      case Some(RecordDef(_, fs)) => fs
-      case _ => Nil
-    }).map(f => f.name -> f).toMap
+    val (s, root) = (plan.spec, plan.spec.rootRecord) // compile() resolves the spec
+    val byName = root.fields.map(f => f.name -> f).toMap
     val cols = dataCols.map { cname =>
       byName.get(cname) match {
-        case Some(f) => fieldValueFrom(col(cname), f, s, toExternal = true,
-          Map(s.root -> 1)).as(f.jsonKey)
+        case Some(f) =>
+          val rw = memberRenaming(Some(f.tpe), f.mode == Repeated, root.depth, s, toExternal = true)
+          rw.fold(col(cname))(_(col(cname))).as(f.jsonKey)
         case None => col(cname)
       }
     }

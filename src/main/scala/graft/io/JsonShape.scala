@@ -105,45 +105,27 @@ object JsonShape {
   /** The member tree of a spec's root record. */
   private def compile(spec0: Spec): Obj = {
     val spec = spec0.resolved
-    val root = spec.defTable(spec.root) match {
-      case r: RecordDef => r
-      case other => throw new SpecException(s"root must be a record, got $other")
-    }
-    def scalarBase(t: PiqiType): Option[PiqiType] = unalias(t, spec) match {
-      case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) => Some(b)
+    def scalarBase(sh: TypeShape): Option[PiqiType] = sh match {
+      case TypeShape.Leaf(b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32), _) => Some(b)
       case _ => None
     }
     def fields(fs: Seq[PField]) = fs.map(f => (f.jsonKey, f.name, f.tpe, f.mode == Repeated))
-    def obj(ms: Seq[(String, String, PiqiType, Boolean)], seen: Map[String, Int],
-        typed: Boolean): Obj =
+    def obj(ms: Seq[(String, String, PiqiType, Boolean)], depth: UnrollDepth, typed: Boolean): Obj =
       Obj(ms.sortBy(_._1).map { case (key, name, t, repeated) =>
-        Member(key, name, if (repeated) arr(t, seen) else value(t, seen),
-          typed = typed && !repeated && scalarBase(t).isDefined)
+        val sh = spec.shape(t, depth)
+        Member(key, name, if (repeated) arr(sh) else value(sh),
+          typed = typed && !repeated && scalarBase(sh).isDefined)
       }.toVector)
-    def arr(elem: PiqiType, seen: Map[String, Int]): Arr =
-      Arr(value(elem, seen), scalarBase(elem).filter(_ => spec.strict))
-    def value(t: PiqiType, seen: Map[String, Int]): Node =
-      unalias(t, spec) match {
-        case TypeRef(n) => spec.defTable(n) match {
-          case _: RecordDef | _: VariantDef | _: ListDef if spec.atDepthCutoff(n, seen) => Skip
-          case RecordDef(_, fs) => obj(fields(fs), spec.bumpDepth(n, seen), spec.strict)
-          case VariantDef(_, os) => obj(os.map(o => (o.jsonKey, o.name, o.tpe.getOrElse(PBool),
-            false)), spec.bumpDepth(n, seen), spec.strict)
-          case ListDef(_, e, _) => arr(e, spec.bumpDepth(n, seen))
-          case _ => Skip
-        }
-        case b => scalarBase(b).map(Scalar).getOrElse(Skip)
-      }
-    obj(fields(root.fields), Map(spec.root -> 1), typed = true)
-  }
-
-  /** Follow alias chains to the base type (shared with [[Convert]]). */
-  private[io] def unalias(t: PiqiType, spec: Spec): PiqiType = t match {
-    case TypeRef(n) => spec.defTable(n) match {
-      case AliasDef(_, target, _) => unalias(target, spec)
-      case _ => t
+    def arr(elem: TypeShape): Arr = Arr(value(elem), scalarBase(elem).filter(_ => spec.strict))
+    def value(sh: TypeShape): Node = sh match {
+      case r: TypeShape.Record => obj(fields(r.fields), r.depth, spec.strict)
+      case v: TypeShape.Variant => obj(v.options.map(o => (o.jsonKey, o.name, o.tpe.getOrElse(PBool),
+        false)), v.depth, spec.strict)
+      case l: TypeShape.ListOf => arr(spec.shape(l.elem, l.depth))
+      case _ => scalarBase(sh).map(Scalar).getOrElse(Skip)
     }
-    case _ => t
+    val root = spec.rootRecord
+    obj(fields(root.fields), root.depth, typed = true)
   }
 
   /** The typed parse's tokeniser and raw-capture generator (`from_json`'s

@@ -264,8 +264,10 @@ object Multimodal {
     out
   }
 
-  /** PNG/JPEG decode via ImageIO → [w, h, meanR, meanG, meanB, minLum,
-    * maxLum, stdLum, 0…].
+  /** Receives one pixel's 0-255 R, G, B values. */
+  private trait RgbSink { def apply(r: Int, g: Int, b: Int): Unit }
+
+  /** Every pixel of `img` in row order.
     *
     * Pixel access is BULK row reads (`Raster.getPixels` into a reusable int
     * buffer) for the 3-band 8-bit layouts ImageIO actually produces
@@ -274,22 +276,10 @@ object Multimodal {
     * `getRGB` routes every pixel through ColorModel conversion, measured
     * several× slower and the reason m_features regressed 0.16→0.57 s in r3.
     * Exotic layouts (palette, gray, alpha) keep the exact `getRGB` path —
-    * both paths consume identical 0-255 ints, so sums are bit-identical.
+    * both paths yield identical 0-255 ints, so sums are bit-identical.
     */
-  private[graft] def imageFeatures(payload: Array[Byte], dim: Int): Array[Float] = {
-    val img = ImageIO.read(new ByteArrayInputStream(payload))
-    if (img == null) throw new IllegalArgumentException("undecodable image")
+  private def eachRgb(img: BufferedImage)(sink: RgbSink): Unit = {
     val (w, h) = (img.getWidth, img.getHeight)
-    var sr = 0L; var sg = 0L; var sb = 0L
-    var minL = Double.MaxValue; var maxL = Double.MinValue
-    var sumL = 0.0; var sumL2 = 0.0
-    @inline def acc(r: Int, g: Int, b: Int): Unit = {
-      sr += r; sg += g; sb += b
-      val lum = (r + g + b) / 3.0
-      if (lum < minL) minL = lum
-      if (lum > maxL) maxL = lum
-      sumL += lum; sumL2 += lum * lum
-    }
     val bulk = img.getType match {
       case BufferedImage.TYPE_3BYTE_BGR | BufferedImage.TYPE_INT_RGB |
            BufferedImage.TYPE_INT_BGR => img.getRaster.getNumBands == 3
@@ -302,7 +292,7 @@ object Multimodal {
       while (y < h) {
         raster.getPixels(0, y, w, 1, row)
         var i = 0
-        while (i < w * 3) { acc(row(i), row(i + 1), row(i + 2)); i += 3 }
+        while (i < w * 3) { sink(row(i), row(i + 1), row(i + 2)); i += 3 }
         y += 1
       }
     } else {
@@ -311,11 +301,29 @@ object Multimodal {
         var x = 0
         while (x < w) {
           val rgb = img.getRGB(x, y)
-          acc((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
+          sink((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
           x += 1
         }
         y += 1
       }
+    }
+  }
+
+  /** PNG/JPEG decode via ImageIO → [w, h, meanR, meanG, meanB, minLum,
+    * maxLum, stdLum, 0…], pixels read by [[eachRgb]]. */
+  private[graft] def imageFeatures(payload: Array[Byte], dim: Int): Array[Float] = {
+    val img = ImageIO.read(new ByteArrayInputStream(payload))
+    if (img == null) throw new IllegalArgumentException("undecodable image")
+    val (w, h) = (img.getWidth, img.getHeight)
+    var sr = 0L; var sg = 0L; var sb = 0L
+    var minL = Double.MaxValue; var maxL = Double.MinValue
+    var sumL = 0.0; var sumL2 = 0.0
+    eachRgb(img) { (r, g, b) =>
+      sr += r; sg += g; sb += b
+      val lum = (r + g + b) / 3.0
+      if (lum < minL) minL = lum
+      if (lum > maxL) maxL = lum
+      sumL += lum; sumL2 += lum * lum
     }
     val n = (w * h).toDouble
     val meanL = sumL / n
@@ -407,41 +415,11 @@ object Multimodal {
     val frameMeans = p.frames.map { img =>
       val (w, h) = (img.getWidth, img.getHeight)
       var s = 0.0
-      @inline def acc(r: Int, g: Int, b: Int): Unit = {
+      eachRgb(img) { (r, g, b) =>
         val lum = (r + g + b) / 3.0
         s += lum
         if (lum < minL) minL = lum
         if (lum > maxL) maxL = lum
-      }
-      // same bulk Raster.getPixels fast path as imageFeatures (JPEG decodes
-      // to TYPE_3BYTE_BGR): per-pixel getRGB routes through ColorModel
-      // conversion and was the r3 m_features regression
-      val bulk = img.getType match {
-        case BufferedImage.TYPE_3BYTE_BGR | BufferedImage.TYPE_INT_RGB |
-             BufferedImage.TYPE_INT_BGR => img.getRaster.getNumBands == 3
-        case _ => false
-      }
-      if (bulk) {
-        val raster = img.getRaster
-        val row = new Array[Int](w * 3)
-        var y = 0
-        while (y < h) {
-          raster.getPixels(0, y, w, 1, row)
-          var i = 0
-          while (i < w * 3) { acc(row(i), row(i + 1), row(i + 2)); i += 3 }
-          y += 1
-        }
-      } else {
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            acc((rgb >> 16) & 0xff, (rgb >> 8) & 0xff, rgb & 0xff)
-            x += 1
-          }
-          y += 1
-        }
       }
       sumL += s; nPix += w.toLong * h
       s / (w.toLong * h)
@@ -454,34 +432,30 @@ object Multimodal {
   }
 
   /**
-   * Batched feature extraction over payload binaries. The execution shape
-   * is the one decoders need: per-partition iteration in bounded batches
-   * (decoder init cost amortized per batch, memory bounded by
-   * `batchSize × payload`), null payloads short-circuited, per-row failure
-   * isolated (`ok=false`) instead of task failure — a poison payload (bad
-   * bytes) must never kill a 10^12-row job.
+   * Feature extraction over payload binaries, one row at a time per
+   * partition: null payloads short-circuited, per-row failure isolated
+   * (`ok=false`) instead of task failure — a poison payload (bad bytes)
+   * must never kill a 10^12-row job.
    */
-  def extractFeatures(media: DataFrame, dim: Int = 16, batchSize: Int = 64): Dataset[MediaFeature] = {
+  def extractFeatures(media: DataFrame, dim: Int = 16): Dataset[MediaFeature] = {
     val spark = media.sparkSession
     import spark.implicits._
     media.select(col("media_ref"), col("mime"), col("payload"))
       .as[(String, String, Array[Byte])]
       .mapPartitions { it =>
         ImageIO.setUseCache(false) // decoder init, once per partition
-        it.grouped(batchSize).flatMap { batch =>
-          batch.iterator.map { case (ref, mime, payload) =>
-            if (payload == null) MediaFeature(ref, mime, ok = false, 0, Array.empty, 0L)
-            else {
-              try {
-                val f =
-                  if (mime.startsWith("image/")) imageFeatures(payload, dim)
-                  else if (mime.startsWith("audio/")) audioFeatures(payload, dim)
-                  else videoFeatures(payload, dim)
-                val checksum = f.foldLeft(17L)((a, v) => a * 31 + java.lang.Float.floatToIntBits(v))
-                MediaFeature(ref, mime, ok = true, dim, f, checksum)
-              } catch {
-                case _: Exception => MediaFeature(ref, mime, ok = false, 0, Array.empty, 0L)
-              }
+        it.map { case (ref, mime, payload) =>
+          if (payload == null) MediaFeature(ref, mime, ok = false, 0, Array.empty, 0L)
+          else {
+            try {
+              val f =
+                if (mime.startsWith("image/")) imageFeatures(payload, dim)
+                else if (mime.startsWith("audio/")) audioFeatures(payload, dim)
+                else videoFeatures(payload, dim)
+              val checksum = f.foldLeft(17L)((a, v) => a * 31 + java.lang.Float.floatToIntBits(v))
+              MediaFeature(ref, mime, ok = true, dim, f, checksum)
+            } catch {
+              case _: Exception => MediaFeature(ref, mime, ok = false, 0, Array.empty, 0L)
             }
           }
         }

@@ -145,23 +145,64 @@ final case class Spec(
     maxDepth: Int = 4) {
   require(maxDepth >= 1, "maxDepth must be >= 1")
 
-  /** Depth-unroll helpers — the ONE definition of the recursion cutoff,
-    * shared by every spec-walking traversal (rule walk, schema build,
-    * rename trees, JSON key-shape walk, XML legal paths): the traversals
-    * must stay bit-for-bit consistent or the schema cutoff desynchronizes
-    * from the compiled plan's `depth:` rule (getField on a raw-capture
-    * string column → AnalysisException). */
-  def atDepthCutoff(n: String, seen: Map[String, Int]): Boolean =
-    seen.getOrElse(n, 0) >= maxDepth
-  def bumpDepth(n: String, seen: Map[String, Int]): Map[String, Int] =
-    seen.updated(n, seen.getOrElse(n, 0) + 1)
-
   /** All defs visible to this module: own + imported (qualified). */
   lazy val defTable: Map[String, TypeDef] = {
     val imported = imports.flatMap { m =>
       m.defTable.map { case (k, d) => s"${m.module}/$k" -> d }
     }
     (imported ++ defs.map(d => d.name -> d)).toMap
+  }
+
+  /** Follow an alias chain to its base type — a primitive or a reference
+    * to a non-alias def — like `Piqobj.unalias` (`piqobj.ml:157-160`),
+    * accumulating the chain's constraints outermost first. */
+  def unalias(t: PiqiType): (PiqiType, Seq[Constraint]) = t match {
+    case TypeRef(n) => defTable.get(n) match {
+      case Some(AliasDef(_, target, cs)) =>
+        val (base, inner) = unalias(target)
+        (base, cs ++ inner)
+      case _ => (t, Nil)
+    }
+    case _ => (t, Nil)
+  }
+
+  private def atDepthCutoff(n: String, depth: UnrollDepth): Boolean =
+    depth.seen.getOrElse(n, 0) >= maxDepth
+  private def bumpDepth(n: String, depth: UnrollDepth): UnrollDepth =
+    new UnrollDepth(depth.seen.updated(n, depth.seen.getOrElse(n, 0) + 1))
+
+  /**
+   * One step of the type expansion every spec traversal walks (rule walk,
+   * read schemas, rename and defaults rebuilds, JSON key-shape tree, XML
+   * legal paths): `t` with its alias chain followed, at `depth` on the
+   * path from the root. A finite-but-recursive def (SpecChecks A5) unrolls
+   * to [[maxDepth]] occurrences per def on a path; a record, variant or
+   * list past that is a [[TypeShape.Cut]], which the schema types as a
+   * raw-capture string and the plan's `depth:` rule checks. The cutoff
+   * rule lives only here, so every traversal cuts where the schema does
+   * by construction: none can address a raw-capture string as a struct.
+   */
+  def shape(t: PiqiType, depth: UnrollDepth): TypeShape = {
+    val (base, cs) = unalias(t)
+    base match {
+      case p: Primitive => TypeShape.Leaf(p, cs)
+      case TypeRef(n) => defTable(n) match {
+        case EnumDef(_, options) => TypeShape.Enum(options, cs)
+        case _ if atDepthCutoff(n, depth) => TypeShape.Cut(cs)
+        case RecordDef(_, fields) => TypeShape.Record(fields, bumpDepth(n, depth), cs)
+        case VariantDef(_, options) => TypeShape.Variant(options, bumpDepth(n, depth), cs)
+        case ListDef(_, elem, elemCs) => TypeShape.ListOf(elem, elemCs, bumpDepth(n, depth), cs)
+        case a: AliasDef => throw new IllegalStateException(s"alias ${a.name} not followed")
+      }
+    }
+  }
+
+  /** The root record's expansion; the root counts as its own first
+    * occurrence. */
+  lazy val rootRecord: TypeShape.Record = defTable(root) match {
+    case RecordDef(_, fields) =>
+      TypeShape.Record(fields, bumpDepth(root, new UnrollDepth(Map.empty)), Nil)
+    case other => throw new SpecException(s"root must be a record, got '$root' = $other")
   }
 
   /**
@@ -221,14 +262,8 @@ final case class Spec(
     * DecimalType literal coalescible with the DecimalType(20,0) column) so
     * compiled plans and the SpecJson blob see one representation. */
   lazy val resolved: Spec = {
-    def baseOf(t: PiqiType, seen: Set[String] = Set.empty): PiqiType = t match {
-      case TypeRef(n) if !seen(n) => defTable.get(n) match {
-        case Some(AliasDef(_, target, _)) => baseOf(target, seen + n)
-        case _ => t
-      }
-      case _ => t
-    }
-    def norm(t: PiqiType, v: Any): Any = baseOf(t) match {
+    // SpecChecks (A5) reject alias loops, so the chain ends
+    def norm(t: PiqiType, v: Any): Any = unalias(t)._1 match {
       case PUInt64 => v match {
         case i: Int => java.math.BigDecimal.valueOf(i.toLong)
         case l: Long => java.math.BigDecimal.valueOf(l)
@@ -281,6 +316,27 @@ object Spec {
       rowRules ++ includes.flatMap(_.rowRules),
       imports ++ includes.flatMap(_.imports),
       strict, maxDepth)
+}
+
+/** Occurrences of each type def on the path from the root to a point of
+  * [[Spec.shape]]'s expansion: the recursion unroll state. */
+final class UnrollDepth private[spec] (private[spec] val seen: Map[String, Int]) extends Serializable
+
+/** One step of [[Spec.shape]]'s expansion. `constraints` are those its
+  * alias chain accumulated, outermost first. A container carries the
+  * depth its members expand at. */
+sealed trait TypeShape { def constraints: Seq[Constraint] }
+object TypeShape {
+  final case class Leaf(base: Primitive, constraints: Seq[Constraint]) extends TypeShape
+  final case class Enum(options: Seq[String], constraints: Seq[Constraint]) extends TypeShape
+  final case class Record(fields: Seq[PField], depth: UnrollDepth,
+      constraints: Seq[Constraint]) extends TypeShape
+  final case class Variant(options: Seq[POption], depth: UnrollDepth,
+      constraints: Seq[Constraint]) extends TypeShape
+  final case class ListOf(elem: PiqiType, elemConstraints: Seq[Constraint], depth: UnrollDepth,
+      constraints: Seq[Constraint]) extends TypeShape
+  /** A record, variant or list past [[Spec.maxDepth]] occurrences. */
+  final case class Cut(constraints: Seq[Constraint]) extends TypeShape
 }
 
 /** Raised on structurally invalid specs — compile-time analog of piqi schema errors. */

@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.catalyst.plans.logical.EventTimeWatermark
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
-import graft.compile.ValidationPlan
 import graft.exec.ValidationRunner
 import graft.functions.MinhashPairs
 import graft.ops.{BucketItems, Dedup}
@@ -17,8 +16,11 @@ import graft.ops.{BucketItems, Dedup}
  * pull-based document stream (`src/convert.ml:456-487`: read one object,
  * validate, emit, repeat). A Piq stream's "one document at a time with
  * per-object location reset" becomes a micro-batched `readStream` with the
- * SAME compiled violation projection as the batch path (one plan, two
- * runners), plus watermarked per-window pass/fail aggregation.
+ * SAME compiled violation projection as the batch path: a stream is
+ * validated by `ValidationRunner.validate` itself, which takes a streaming
+ * DataFrame as it takes a batch one. This object adds watermarked
+ * per-window pass/fail aggregation, first-seen and near-dup dedup, and the
+ * violation-row sink.
  */
 object ValidateStream {
 
@@ -26,10 +28,6 @@ object ValidateStream {
   def fromParquetDir(spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.readStream.schema(schema).parquet(path)
-
-  /** The same narrow validate projection as the batch runner — stateless. */
-  def validate(stream: DataFrame, plan: ValidationPlan): DataFrame =
-    ValidationRunner.validate(stream, plan)
 
   /**
    * Windowed pass/fail counts with a watermark on `tsCol` — late documents

@@ -340,6 +340,32 @@ class PipelineSpec extends SparkTestBase {
     assert(b.getSeq[Row](2) === Seq.empty) // absent repeated ≡ empty
   }
 
+  test("withDefaults: a record reached through a variant option gets its defaults") {
+    import graft.spec._
+    val spark0 = spark
+    import spark0.implicits._
+    val spec = Spec("m", Seq(
+      RecordDef("A", Seq(
+        PField("x", PInt.int32, Optional(Some(5))),
+        PField("y", PString, Optional()))),
+      VariantDef("V", Seq(POption("a", Some(TypeRef("A"))), POption("b", Some(PString)))),
+      RecordDef("r", Seq(
+        PField("id", PString, Required),
+        PField("v", TypeRef("V"), Optional())))), "r")
+    val plan = SpecCompiler.compile(spec)
+    val df = Convert.fromJson(Seq("""{"id":"k","v":{"a":{"x":null,"y":"q"}}}""",
+      """{"id":"j","v":{"b":"s"}}""").toDF("json"), "json", spec).select("id", "v")
+    val rows = plan.withDefaults(df).select(col("id"), col("v.a").isNull, col("v.a.x"),
+      col("v.a.y"), col("v.b")).collect().map(r => r.getString(0) -> r).toMap
+    assert(rows("k").getLong(2) === 5L) // the option's record has its default
+    assert(rows("k").getString(3) === "q")
+    assert(rows("k").isNullAt(4)) // the option not chosen stays null
+    assert(rows("j").getBoolean(1)) // no record is conjured for an unchosen option
+    assert(rows("j").getString(4) === "s")
+    assert(Convert.toJson(df, plan, addDefaults = true).collect().map(_.getString(0)).toSet ===
+      Set("""{"id":"k","v":{"a":{"x":5,"y":"q"}}}""", """{"id":"j","v":{"b":"s"}}"""))
+  }
+
   test("piqi-any: payloads validate against their per-row typename (B18)") {
     val spark0 = spark
     import spark0.implicits._
@@ -599,7 +625,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("multimodal: real PNG/WAV decode, poison/null isolation, determinism") {
     val media = Multimodal.synthesizeMedia(spark, 200, numPartitions = 4)
-    val feats = Multimodal.extractFeatures(media, dim = 16, batchSize = 32)
+    val feats = Multimodal.extractFeatures(media, dim = 16)
     val rows = feats.collect()
     assert(rows.length === 200)
     val failed = rows.filterNot(_.ok)
@@ -625,8 +651,8 @@ class PipelineSpec extends SparkTestBase {
       byRef("m-2").features(4) <= byRef("m-2").features(6))
     // poison payloads fail per-row, not per-task
     assert(!byRef("m-7").ok && !byRef("m-49").ok)
-    // determinism: second run (different batch shape) identical checksums
-    val again = Multimodal.extractFeatures(media, dim = 16, batchSize = 7).collect()
+    // determinism: a second run gives identical checksums
+    val again = Multimodal.extractFeatures(media, dim = 16).collect()
     assert(rows.map(r => r.media_ref -> r.checksum).toMap ===
       again.map(r => r.media_ref -> r.checksum).toMap)
   }
@@ -653,16 +679,26 @@ class PipelineSpec extends SparkTestBase {
     assert(resized.exists(r => r.getInt(3) < r.getInt(1) || r.getInt(4) < r.getInt(2)))
   }
 
-  /** A test whose stateful query restarts: each restart logs WARNs for the
-    * older state snapshots it does not load (`ChecksumCheckpointFileManager`:
-    * no checksum file for a snapshot; `HDFSBackedStateStoreProvider`: a
-    * version not in the loaded maps). Those loggers run at ERROR, so an
-    * error still shows. The provider's logger name carries its store id
-    * after the class name, so its level comes from the package's logger. */
-  private def restartingStreamTest(name: String)(body: => Any)(implicit pos: org.scalactic.source.Position): Unit =
+  /** A test that starts streaming queries: each start logs Spark's two
+    * WARNs that AQE is off in streaming (`ResolveWriteToStream`,
+    * `MicroBatchExecution`). Those loggers, and `loggers`, run at ERROR, so
+    * an error still shows. */
+  private def streamTest(name: String, loggers: String*)(body: => Any)(
+      implicit pos: org.scalactic.source.Position): Unit =
     test(name)(withLoggersAt(org.apache.logging.log4j.Level.ERROR,
+      Seq("org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
+        "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution") ++ loggers: _*)(body))
+
+  /** A [[streamTest]] whose stateful query restarts: each restart logs
+    * WARNs for the older state snapshots it does not load
+    * (`ChecksumCheckpointFileManager`: no checksum file for a snapshot;
+    * `HDFSBackedStateStoreProvider`: a version not in the loaded maps). The
+    * provider's logger name carries its store id after the class name, so
+    * its level comes from the package's logger. */
+  private def restartingStreamTest(name: String)(body: => Any)(implicit pos: org.scalactic.source.Position): Unit =
+    streamTest(name,
       "org.apache.spark.sql.execution.streaming.checkpointing.ChecksumCheckpointFileManager",
-      "org.apache.spark.sql.execution.streaming.state")(body))
+      "org.apache.spark.sql.execution.streaming.state")(body)
 
   restartingStreamTest("streaming: windowed validation summary over file stream") {
     import org.apache.spark.sql.types._
@@ -675,7 +711,7 @@ class PipelineSpec extends SparkTestBase {
     d1.write.mode("append").parquet(dir)
     val plan = SpecCompiler.compile(Docs.docSpec)
     val stream = graft.streaming.ValidateStream.fromParquetDir(spark, dir, schema)
-    val validated = graft.streaming.ValidateStream.validate(stream, plan)
+    val validated = ValidationRunner.validate(stream, plan)
     val summary = graft.streaming.ValidateStream.windowedSummary(validated, "ts")
     val outDir = java.nio.file.Files.createTempDirectory("graft-stream-out").toString
     def runOnce(): Unit = {
@@ -855,14 +891,14 @@ class PipelineSpec extends SparkTestBase {
     assert(split.size === all.size * 8)
   }
 
-  test("streaming: violation rows written exactly-once via checkpointed file sink") {
+  streamTest("streaming: violation rows written exactly-once via checkpointed file sink") {
     val dir = java.nio.file.Files.createTempDirectory("graft-vstream-in").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-vstream-out").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-vstream-ck").toString
     Docs.generate(spark, 200, 2, corruptEvery = 50).write.mode("append").parquet(dir)
     val plan = SpecCompiler.compile(Docs.docSpec)
     val stream = graft.streaming.ValidateStream.fromParquetDir(spark, dir, Docs.docSchema)
-    val validated = graft.streaming.ValidateStream.validate(stream, plan)
+    val validated = ValidationRunner.validate(stream, plan)
     val q = graft.streaming.ValidateStream
       .writeViolations(validated, "doc_id", outDir, ckpt).start()
     assert(q.awaitTermination(60000), "AvailableNow violations sink did not terminate")

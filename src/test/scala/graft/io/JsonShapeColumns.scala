@@ -49,17 +49,14 @@ object JsonShapeColumns {
     * non-strict plays the reference's relaxed mode and accepts it. */
   def checkKeys(jsonCol: Column, spec0: Spec): Column = {
     val spec = spec0.resolved
-    val root = spec.defTable(spec.root) match {
-      case r: RecordDef => r
-      case other => throw new SpecException(s"root must be a record, got $other")
-    }
-    objectVios(jsonCol, members(root.fields), "$", spec, Map(spec.root -> 1), root = true)
+    val root = spec.rootRecord
+    objectVios(jsonCol, members(root.fields), "$", spec, root.depth, root = true)
   }
 
   /** Violations for one object level: key checks + recursion into values;
     * `root`: the document's root object. */
   private def objectVios(objStr: Column, ms: Seq[Member], path: String,
-      spec: Spec, seen: Map[String, Int], root: Boolean = false): Column = {
+      spec: Spec, depth: UnrollDepth, root: Boolean = false): Column = {
     val keys = json_object_keys(objStr)
     val keysOrEmpty = coalesce(keys, array().cast(strArr))
     val knownKeys = ms.map(_.key)
@@ -79,18 +76,15 @@ object JsonShapeColumns {
     val subVios: Seq[Column] = ms.sortBy(_.key).map { mem =>
       val raw = element_at(m, mem.key)
       val at = s"$path.${mem.name}"
-      val scalar = if (mem.repeated) None else unalias(mem.tpe, spec) match {
-        case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) => Some(b)
-        case _ => None
-      }
+      val scalar = if (mem.repeated) None else scalarBase(mem.tpe, spec)
       scalar match {
         case Some(b) if root => rootScalarVio(objStr, raw, mem.key, b, at)
         // strict quoted-scalar probe (needs the OBJECT text — quoting is
         // gone from the stripped raw capture)
         case Some(b) if spec.strict =>
-          concat(valueVios(raw, mem.tpe, repeated = false, at, spec, seen),
+          concat(valueVios(raw, mem.tpe, repeated = false, at, spec, depth),
             quotedScalarVio(objStr, raw, mem.key, b, at))
-        case _ => valueVios(raw, mem.tpe, repeated = mem.repeated, at, spec, seen)
+        case _ => valueVios(raw, mem.tpe, repeated = mem.repeated, at, spec, depth)
       }
     }
     SpecCompiler.concatVios(unknownVio +: dupVio +: subVios)
@@ -98,37 +92,29 @@ object JsonShapeColumns {
 
   /** Violations for one raw value string of declared type `tpe`. */
   private def valueVios(valStr: Column, tpe: PiqiType, repeated: Boolean,
-      path: String, spec: Spec, seen: Map[String, Int]): Column = {
+      path: String, spec: Spec, depth: UnrollDepth): Column = {
     val present = valStr.isNotNull // JSON null ≡ missing (B5); the string "null" is a value
-    if (repeated) arrayVios(valStr, present, tpe, path, spec, seen)
-    else unalias(tpe, spec) match {
-      case TypeRef(n) => spec.defTable(n) match {
-        case _: RecordDef | _: VariantDef | _: ListDef
-            if spec.atDepthCutoff(n, seen) =>
-          SpecCompiler.emptyVio // beyond-depth: the plan's depth: rule reports
-        case RecordDef(_, fields) =>
-          recordValueVios(valStr, present, fields, path, spec,
-            spec.bumpDepth(n, seen))
-        case VariantDef(_, options) =>
-          // variant object: option JSON keys are the only legal keys; recurse
-          // into record-typed option payloads
-          val ms = options.map(o =>
-            Member(o.jsonKey, o.name, o.tpe.getOrElse(PBool), repeated = false))
-          val shape = SpecCompiler.vio(present && json_object_keys(valStr).isNull,
-            "parse:object-expected", path, valStr)
-          concat(shape, when(present && json_object_keys(valStr).isNotNull,
-            objectVios(valStr, ms, path, spec, spec.bumpDepth(n, seen)))
-            .otherwise(SpecCompiler.emptyVio))
-        case ListDef(_, elem, _) =>
-          arrayVios(valStr, present, elem, path, spec,
-            spec.bumpDepth(n, seen))
-        case _ => SpecCompiler.emptyVio // enums/aliased scalars: no key shape
-      }
-      case base =>
+    if (repeated) arrayVios(valStr, present, tpe, path, spec, depth)
+    else spec.shape(tpe, depth) match {
+      case _: TypeShape.Cut => SpecCompiler.emptyVio // beyond-depth: the plan's depth: rule reports
+      case r: TypeShape.Record => recordValueVios(valStr, present, r.fields, path, spec, r.depth)
+      case v: TypeShape.Variant =>
+        // variant object: option JSON keys are the only legal keys; recurse
+        // into record-typed option payloads
+        val ms = v.options.map(o =>
+          Member(o.jsonKey, o.name, o.tpe.getOrElse(PBool), repeated = false))
+        val shape = SpecCompiler.vio(present && json_object_keys(valStr).isNull,
+          "parse:object-expected", path, valStr)
+        concat(shape, when(present && json_object_keys(valStr).isNotNull,
+          objectVios(valStr, ms, path, spec, v.depth))
+          .otherwise(SpecCompiler.emptyVio))
+      case l: TypeShape.ListOf => arrayVios(valStr, present, l.elem, path, spec, l.depth)
+      case TypeShape.Leaf(base, _) =>
         // numeric/bool scalars: present-but-unparseable raw text is a
         // conversion failure the PERMISSIVE parser would null silently —
         // semantic checks on the parsed value stay the compiler's job
         scalarParseVio(valStr, present, base, path)
+      case _: TypeShape.Enum => SpecCompiler.emptyVio // no key shape
     }
   }
 
@@ -208,18 +194,18 @@ object JsonShapeColumns {
       "parse:value", path, raw)
 
   private def recordValueVios(valStr: Column, present: Column, fields: Seq[PField],
-      path: String, spec: Spec, seen: Map[String, Int]): Column = {
+      path: String, spec: Spec, depth: UnrollDepth): Column = {
     val shape = SpecCompiler.vio(present && json_object_keys(valStr).isNull,
       "parse:object-expected", path, valStr)
     val inner = when(present && json_object_keys(valStr).isNotNull,
-      objectVios(valStr, members(fields), path, spec, seen))
+      objectVios(valStr, members(fields), path, spec, depth))
       .otherwise(SpecCompiler.emptyVio)
     concat(shape, inner)
   }
 
   /** Array value: shape check + per-element recursion with index-stamped paths. */
   private def arrayVios(valStr: Column, present: Column, elemType: PiqiType,
-      path: String, spec: Spec, seen: Map[String, Int]): Column = {
+      path: String, spec: Spec, depth: UnrollDepth): Column = {
     val elems = from_json(valStr, strArr)
     val shape = SpecCompiler.vio(present && elems.isNull,
       "parse:array-expected", path, valStr)
@@ -228,8 +214,8 @@ object JsonShapeColumns {
     // text parses fine — flags the field once (element indices are not
     // recoverable from the all-or-nothing typed parse). Disjoint from the
     // per-element raw-space probes by the all-raw-ok conjunct.
-    val quotedArr = unalias(elemType, spec) match {
-      case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) if spec.strict =>
+    val quotedArr = scalarBase(elemType, spec) match {
+      case Some(b) if spec.strict =>
         val typedArr = from_json(valStr, ArrayType(scalarSparkType(b)))
         val elemBad = (e: Column) =>
           rawBad(e, b).map(bc => e.isNotNull && bc).getOrElse(lit(false))
@@ -241,19 +227,14 @@ object JsonShapeColumns {
     }
     // recurse when elements can have key shape (and the element type is not
     // at its recursion cutoff), or carry a scalar parse probe
-    val needsRecursion = unalias(elemType, spec) match {
-      case TypeRef(n) => spec.defTable(n) match {
-        case _: RecordDef | _: VariantDef | _: ListDef =>
-          !spec.atDepthCutoff(n, seen)
-        case _ => false
-      }
-      case PBool | _: PInt | PUInt64 | PFloat | PFloat32 => true
-      case _ => false
+    val needsRecursion = spec.shape(elemType, depth) match {
+      case _: TypeShape.Record | _: TypeShape.Variant | _: TypeShape.ListOf => true
+      case _ => scalarBase(elemType, spec).isDefined
     }
     if (!needsRecursion) concat(shape, quotedArr)
     else {
       val stamped = transform(coalesce(elems, array().cast(strArr)), (e, i) =>
-        transform(valueVios(e, elemType, repeated = false, path, spec, seen), v =>
+        transform(valueVios(e, elemType, repeated = false, path, spec, depth), v =>
           struct(v.getField("rule").as("rule"),
             concat(lit(path), lit("["), i.cast(StringType), lit("]"),
               substring(v.getField("path"), path.length + 1, 1000000)).as("path"),
@@ -262,5 +243,9 @@ object JsonShapeColumns {
     }
   }
 
-  private def unalias(t: PiqiType, spec: Spec): PiqiType = JsonShape.unalias(t, spec)
+  /** The numeric/bool base type under `t`'s alias chain, if any. */
+  private def scalarBase(t: PiqiType, spec: Spec): Option[PiqiType] = spec.unalias(t)._1 match {
+    case b @ (PBool | PInt(_, _) | PUInt64 | PFloat | PFloat32) => Some(b)
+    case _ => None
+  }
 }

@@ -47,7 +47,7 @@ class JsonShapeWalkSpec extends SparkTestBase {
 
   private def forType(t: PiqiType, spec: Spec, depth: Int): Gen[J] =
     if (depth > spec.maxDepth + 2) Gen.const(JLit("null"))
-    else JsonShape.unalias(t, spec) match {
+    else spec.unalias(t)._1 match {
       case PInt(lo, hi) => Gen.frequency(6 -> Gen.choose(lo, hi).map(v => JLit(v.toString)),
         1 -> lit_((lo - 3).toString, (hi + 3).toString), 2 -> scalarJunk)
       case PUInt64 => Gen.frequency(3 -> lit_("5", "18446744073709551615", "0"),
